@@ -153,7 +153,10 @@ def host_concentration(df: DataFrame, host_col: str = "host") -> DataFrame:
     concentration index over integer ppm shares (hhi_e6: 10^6 = monopoly,
     ~10^6/n_hosts = uniform), and the hottest host itself (min host name on
     ties — a total order).  All integer arithmetic (truncating ``div``), so
-    any engine replays it bit-for-bit.
+    any engine replays it bit-for-bit.  That truncation biases ``hhi_e6``
+    LOW: each host's ppm share loses up to 1 ppm before squaring, so a long
+    tail of tiny hosts under-reports (10^6 hosts of one URL each give
+    hhi_e6 = 0, not ~1) — read it as a lower bound on concentration.
 
     Scale shape: one groupBy(host) hash aggregate with map-side combine —
     the frontier's URL rows cross exactly one exchange, as (host, count)

@@ -2326,13 +2326,14 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source", F.explode(F.split(F.trim("text"), r"\s+")).alias("word")
     )
     tf = words.groupBy("source", "word").agg(F.count("*").alias("tf"))
-    n_sources = d.select("source").distinct().count()
+    # the corpus' source count, as a one-row aggregate joined into the plan
+    ns = d.agg(F.countDistinct("source").cast("double").alias("__n"))
     dfreq = tf.groupBy("word").agg(
         F.countDistinct("source").alias("df")
     )
-    scored = tf.join(dfreq, "word").withColumn(
+    scored = tf.join(dfreq, "word").crossJoin(F.broadcast(ns)).withColumn(
         "score",
-        F.round(F.col("tf") * F.log(F.lit(float(n_sources)) / F.col("df")), 4),
+        F.round(F.col("tf") * F.log(F.col("__n") / F.col("df")), 4),
     )
     w = Window.partitionBy("source").orderBy(
         F.col("score").desc(), F.col("word").asc()
@@ -4590,12 +4591,15 @@ def q_link_anchor_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     count, distinct linking pages, distinct anchor texts."""
     from crawler_spark.operators.graph import link_anchor_edges
 
-    nodes = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("long").alias("node_id")
+    docs = _t(spark, sf_dir, "documents")
+    # the node count as a one-row aggregate joined into the plan (the
+    # oracle's nn CTE): no job while building, no modulo on an empty table
+    nn = docs.agg(F.count(F.lit(1)).alias("__n"))
+    nodes = docs.select(F.col("doc_id").cast("long").alias("node_id")).crossJoin(
+        F.broadcast(nn)
     )
-    n = nodes.count()
-    x = ((F.col("node_id") * 31 + 17) % n).cast("string")
-    y = ((F.col("node_id") * 31 + 34) % n).cast("string")
+    x = ((F.col("node_id") * 31 + 17) % F.col("__n")).cast("string")
+    y = ((F.col("node_id") * 31 + 34) % F.col("__n")).cast("string")
     desc = F.when(
         F.col("node_id") % 17 == 0, F.lit("archived page, links removed")
     ).otherwise(
@@ -4689,9 +4693,9 @@ def q_minhash_estimate_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash estimator self-evaluation (the dedup analog of
     ann_recall_eval): for every LSH candidate pair, the signature-agreement
     estimate vs the TRUE distinct-3-shingle Jaccard, both as exact integer
-    e4 ratios — est_e4 = 625·(matching sig positions) since
-    10000/num_perm = 625 exactly, true_e4 = (10000·|A∩B|) div |A∪B| —
-    plus the absolute estimator error.  This is the measurement a 100-TB
+    e4 ratios — est_e4 = (10000·eq) div num_perm over the eq matching
+    signature positions, true_e4 = (10000·|A∩B|) div |A∪B| — plus the
+    absolute estimator error.  This is the measurement a 100-TB
     dedup run uses to TUNE (num_perm, bands) before committing a
     corpus-wide pass: Broder's estimator is unbiased with σ =
     √(J(1−J)/P), so at P=16 errors up to ~1250 e4 are expected — the
@@ -4708,9 +4712,12 @@ def q_minhash_estimate_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = cand.select(
         F.col("a_id").cast("long").alias("a_id"),
         F.col("b_id").cast("long").alias("b_id"),
-        # est_jaccard = round(eq/16, 4) is binary-exact (denominator 16),
-        # so ×10000 is integer-exact: always a multiple of 625
-        (F.col("est_jaccard") * 10000).cast("long").alias("est_e4"),
+        # est_jaccard = round(eq/16, 4), so round(est·16) is the integer
+        # agreement count eq; integer arithmetic from there, as in the
+        # oracle, exact for any num_perm (not only divisors of 10000)
+        F.expr("(CAST(round(est_jaccard * 16) AS BIGINT) * 10000) div 16").alias(
+            "est_e4"
+        ),
     )
     dsh = DD.exploded_shingles(c, k=3, distinct=True).select("doc_id", "shingle")
     sizes = dsh.groupBy("doc_id").agg(F.count(F.lit(1)).cast("long").alias("n_sh"))
@@ -4752,7 +4759,6 @@ def _minhash_eval_sql(num_perm: int = 16, bands: int = 4) -> str:
     definition, zero drift), with the pair estimate as an exact integer
     and a true-Jaccard join tail."""
     prefix, eq_sum = _minhash_cte_prefix(num_perm, bands)
-    unit = 10000 // num_perm
     true_e4 = (
         "(10000 * coalesce(i.n_inter, 0)) // "
         "(za.n_sh + zb.n_sh - coalesce(i.n_inter, 0))"
@@ -4761,7 +4767,7 @@ def _minhash_eval_sql(num_perm: int = 16, bands: int = 4) -> str:
 {prefix},
 cand AS (
   SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id,
-         ({eq_sum}) * {unit} AS est_e4
+         (({eq_sum}) * 10000) // {num_perm} AS est_e4
   FROM banded a JOIN banded b
     ON a.band_id = b.band_id AND a.band_key = b.band_key
    AND a.doc_id < b.doc_id

@@ -1,4 +1,4 @@
-"""The generation loop — SURVEY §3.1 lifecycle, end to end.
+"""The generation loop — SURVEY §3.1 lifecycle, end to end, for every site.
 
 One generation = the reference's single `Update()` run
 (/root/reference/plugin/syzoj/main.go:73-141), for all judges at once:
@@ -9,6 +9,12 @@ One generation = the reference's single `Update()` run
   → rewrite links → ONE atomic commit (W1-W5): problems + images +
   fetch_log + lineage appends, url_seen + host_state snapshots.
 
+The loop is shared; what differs per site is the :class:`Site` contract —
+the reference's per-judge ``plugin/*`` over the shared
+``plugin/public/tools.go``.  A SynthWeb is crawled through
+:class:`_SynthSite` below; ``sources.adapterweb.AdapterWeb`` (the five real
+wire formats) implements the contract itself.
+
 Resume: the next run continues from max committed generation — the
 `GetProblemlist` recovery analog (main.go:132-153). Kill the process at any
 point and re-run: uncommitted staging is invisible, so the final state
@@ -17,14 +23,18 @@ equals the uninterrupted run (tested in tests/test_crawl_loop.py).
 CLI:
   python -m crawler_spark.plans.run --warehouse /tmp/wh --generations 2 \\
       --judges 4 --pids 40 --limit 20 --cores 8
+  python -m crawler_spark.plans.run --web adapter --warehouse /tmp/aw \\
+      --generations 2 --pids 6 --limit 4
 """
 
 from __future__ import annotations
 
 import argparse
 import time
+from dataclasses import dataclass
+from typing import Protocol
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from crawler_spark.functions.urls import canonicalize, url_hash64
@@ -65,10 +75,88 @@ def _empty_seen(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame([], SEEN_DDL)
 
 
+class Site(Protocol):
+    """What differs per site; everything else is the one loop below."""
+
+    def judge_rows(self) -> list[tuple[str, str, int]]:
+        """(judge, host, min_delay_ms) per judge."""
+
+    def fetcher(self):
+        """The fetcher every stage of the generation uses."""
+
+    def first_page_url(self) -> Column:
+        """Listing page 1's url over the (judge, host) columns."""
+
+    def listing_pages(self, first_res: DataFrame) -> DataFrame:
+        """Fetched page 1 rows → (url, host, judge) of every listing page."""
+
+    def parse_listing(self, listing_res: DataFrame) -> DataFrame:
+        """Fetched listing pages → (judge, host, pid, title, listing_pos)."""
+
+    def problem_url(self) -> Column:
+        """A problem page's url over the (judge, host, pid) columns."""
+
+    def parse_problem(self, prob_res: DataFrame) -> DataFrame:
+        """Fetched problem pages → problems rows: failed fetches keep their
+        listing title and status with NULL content (C3/W3)."""
+
+    def decode_assets(self, asset_res: DataFrame) -> DataFrame:
+        """Fetched assets → images rows (image_id, bytes, w, h, fmt,
+        caption, phash)."""
+
+
+@dataclass
+class _SynthSite:
+    """SynthWeb's side of :class:`Site`.  The operators are module globals
+    looked up when each method runs, so whatever patches
+    ``crawler_spark.plans.run.<operator>`` (e.g. a tracer) sees the call."""
+
+    web: SynthWeb
+
+    def judge_rows(self) -> list[tuple[str, str, int]]:
+        return [
+            (j, self.web.host(j), self.web.judges[j].min_delay_ms)
+            for j in sorted(self.web.judges)
+        ]
+
+    def fetcher(self):
+        return SyntheticFetcher(self.web)
+
+    def first_page_url(self) -> Column:
+        return F.concat(F.lit("http://"), "host", F.lit("/problems?page=1"))
+
+    def listing_pages(self, first_res: DataFrame) -> DataFrame:
+        maxp = extract_max_page(first_res)
+        if maxp.filter(F.col("max_page").isNull()).count() > 0:
+            raise ListingPhaseError("maxPage sanity bound violated (P2/C4)")
+        pages = maxp.select(
+            "judge",
+            "host",
+            F.explode(F.sequence(F.lit(1), F.col("max_page"))).alias("page"),
+        )
+        return pages.select(
+            F.format_string("http://%s/problems?page=%d", "host", "page").alias("url"),
+            "host",
+            "judge",
+        )
+
+    def parse_listing(self, listing_res: DataFrame) -> DataFrame:
+        return parse_listing(listing_res, page_size=10)
+
+    def problem_url(self) -> Column:
+        return F.format_string("http://%s/problem/%s", "host", "pid")
+
+    def parse_problem(self, prob_res: DataFrame) -> DataFrame:
+        return parse_problem(prob_res)
+
+    def decode_assets(self, asset_res: DataFrame) -> DataFrame:
+        return decode_assets(asset_res, self.web)
+
+
 def run_generation(
     spark: SparkSession,
     wh: ParquetWarehouse,
-    web: SynthWeb,
+    web: SynthWeb | Site,
     generation: int,
     limit: int = 20,
     num_buckets: int = 16,
@@ -76,12 +164,11 @@ def run_generation(
     base_ts: float = 1_700_000_000.0,
     seen_buckets: int = 0,
 ) -> dict:
-    fetcher = SyntheticFetcher(web)
+    site = _SynthSite(web) if isinstance(web, SynthWeb) else web
+    fetcher = site.fetcher()
     t0 = time.time()
-    judges = sorted(web.judges)
-    judge_rows = [(j, web.host(j), web.judges[j].min_delay_ms) for j in judges]
     judges_df = spark.createDataFrame(
-        judge_rows, "judge string, host string, min_delay_ms int"
+        site.judge_rows(), "judge string, host string, min_delay_ms int"
     )
     gen_base = base_ts + generation * 10_000  # simulated clock epoch per gen
 
@@ -121,7 +208,7 @@ def run_generation(
     first_frontier = apply_robots(
         judges_df.select(
             F.lit(None).cast("string").alias("kind"),
-            F.concat(F.lit("http://"), "host", F.lit("/problems?page=1")).alias("url"),
+            site.first_page_url().alias("url"),
             "host",
             "judge",
             F.lit(generation).alias("generation"),
@@ -137,27 +224,14 @@ def run_generation(
     ).localCheckpoint(eager=True)
     if first_res.filter(F.col("status") != "ok").count() > 0:
         raise ListingPhaseError("listing page 1 fetch failed (C4)")
-    maxp = extract_max_page(first_res)
-    if maxp.filter(F.col("max_page").isNull()).count() > 0:
-        raise ListingPhaseError("maxPage sanity bound violated (P2/C4)")
-    pages = maxp.select(
-        "judge",
-        "host",
-        F.explode(F.sequence(F.lit(1), F.col("max_page"))).alias("page"),
-    )
     listing_frontier = apply_robots(
-        pages.select(
-            F.format_string("http://%s/problems?page=%d", "host", "page").alias("url"),
-            "host",
-            "judge",
-            F.lit(generation).alias("generation"),
-        ),
+        site.listing_pages(first_res).withColumn("generation", F.lit(generation)),
         host_state,
     )
     listing_res = fetch_stage(listing_frontier, fetcher, num_buckets, gen_base).cache()
     if listing_res.filter(F.col("status") != "ok").count() > 0:
         raise ListingPhaseError("listing page fetch failed (C4)")
-    listing = parse_listing(listing_res, page_size=10).cache()
+    listing = site.parse_listing(listing_res).cache()
     host_state = next_host_state(
         listing_res.select("host", "fetched_at", "min_delay_ms"), host_state
     ).localCheckpoint(eager=True)
@@ -188,7 +262,7 @@ def run_generation(
 
     # -- 3. problem fetch + parse
     prob_frontier = batch.select(
-        F.format_string("http://%s/problem/%s", "host", "pid").alias("url"),
+        site.problem_url().alias("url"),
         "host",
         "judge",
         "pid",
@@ -199,7 +273,7 @@ def run_generation(
     )
     prob_frontier = apply_robots(prob_frontier, host_state)
     prob_res = fetch_stage(prob_frontier, fetcher, num_buckets, gen_base).cache()
-    problems = parse_problem(prob_res).cache()
+    problems = site.parse_problem(prob_res).cache()
     host_state = next_host_state(
         prob_res.select("host", "fetched_at", "min_delay_ms"), host_state
     ).localCheckpoint(eager=True)
@@ -216,7 +290,7 @@ def run_generation(
     asset_res = fetch_stage(
         assets.withColumnRenamed("asset_url", "url"), fetcher, num_buckets, gen_base
     ).withColumnRenamed("url", "asset_url").cache()
-    images = decode_assets(asset_res, web)
+    images = site.decode_assets(asset_res)
     link_status = links.join(
         asset_res.select("asset_url", "status"), on="asset_url", how="left"
     )
@@ -260,12 +334,8 @@ def run_generation(
     new_seen = listing.select(
         "judge",
         "pid",
-        canonicalize(F.format_string("http://%s/problem/%s", "host", "pid")).alias(
-            "canonical_url"
-        ),
-        url_hash64(F.format_string("http://%s/problem/%s", "host", "pid")).alias(
-            "url_hash"
-        ),
+        canonicalize(site.problem_url()).alias("canonical_url"),
+        url_hash64(site.problem_url()).alias("url_hash"),
         "title",
         F.lit(generation).alias("last_generation"),
     )
@@ -292,13 +362,14 @@ def run_generation(
     n_prob = problems_final.count()
     n_img = images.count()
     n_fetch = all_fetches.count()
+    wall = time.time() - t0  # one clock read: urls_per_s = fetches / wall_s
     metrics = {
         "generation": generation,
         "problems": n_prob,
         "images": n_img,
         "fetches": n_fetch,
-        "wall_s": round(time.time() - t0, 2),
-        "urls_per_s": round(n_fetch / max(time.time() - t0, 1e-9), 1),
+        "wall_s": round(wall, 2),
+        "urls_per_s": round(n_fetch / max(wall, 1e-9), 1),
     }
     wh.commit(generation, metrics)
     for df in (first_res, listing_res, prob_res, asset_res, listing, links,
@@ -352,7 +423,7 @@ def maintain_warehouse(wh: ParquetWarehouse, expire: bool = False) -> dict:
 def run_crawl(
     spark: SparkSession,
     warehouse_dir: str,
-    web: SynthWeb,
+    web: SynthWeb | Site,
     generations: int = 1,
     limit: int = 20,
     num_buckets: int = 16,
@@ -402,6 +473,11 @@ def run_crawl(
 
 def main() -> None:
     ap = argparse.ArgumentParser(description="crawler_spark generation loop")
+    ap.add_argument(
+        "--web", choices=("synth", "adapter"), default="synth",
+        help="site to crawl: the seeded SynthWeb, or the five real judge "
+             "wire formats (AdapterWeb; --judges and --seed do not apply)",
+    )
     ap.add_argument("--warehouse", required=True)
     ap.add_argument("--generations", type=int, default=1)
     ap.add_argument("--judges", type=int, default=4)
@@ -436,8 +512,13 @@ def main() -> None:
 
     spark = get_spark("crawler_spark.run", cores=args.cores,
                       shuffle_partitions=args.cores)
-    web = SynthWeb.default(n_judges=args.judges, n_pids=args.pids)
-    web.seed = args.seed
+    if args.web == "adapter":
+        from crawler_spark.sources.adapterweb import AdapterWeb
+
+        web = AdapterWeb(n_pids=args.pids)
+    else:
+        web = SynthWeb.default(n_judges=args.judges, n_pids=args.pids)
+        web.seed = args.seed
     metrics = run_crawl(
         spark, args.warehouse, web, args.generations, args.limit, args.buckets,
         seen_buckets=args.seen_buckets,

@@ -17,13 +17,12 @@ canonical problem columns, byte-identical to the Go normalizers:
   memory bytes → MB, html_final for non-Local sources).
 
 All parsing is ``from_json`` with these schemas + column expressions — no
-UDFs; a new judge = a new entry in ``ADAPTERS``.
+UDFs.  ``sources/adapterweb.py`` dispatches each judge to its parsers as
+that site's side of the generation loop's ``plans.run.Site`` contract; a new
+judge = its parsers here plus a dispatch entry there.
 """
 
 from __future__ import annotations
-
-from dataclasses import dataclass
-from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -620,27 +619,3 @@ def parse_bzoj_problem(
         F.lit("html").alias("description_type"),
     )
 
-
-@dataclass(frozen=True)
-class Adapter:
-    """§2.8 — the pluggable-source contract: listing parser + problem
-    parser, both (DataFrame, …) → DataFrame with fixed output columns.
-    ``login`` marks sources whose fetches must run through a
-    SessionFetcher (S11)."""
-
-    name: str
-    parse_listing: Callable[..., DataFrame]
-    parse_problem: Callable[..., DataFrame]
-    kind: str  # 'json' | 'graphql' | 'rest' | 'html'
-    login: bool = False
-
-
-ADAPTERS: dict[str, Adapter] = {
-    "syzoj": Adapter("syzoj", lambda df, **kw: df, parse_syzoj_problem, "json"),
-    "lutece": Adapter("lutece", parse_lutece_listing, parse_lutece_problem,
-                      "graphql"),
-    "joyoi": Adapter("joyoi", parse_joyoi_listing, parse_joyoi_problem, "rest"),
-    "uoj": Adapter("uoj", parse_uoj_listing, parse_uoj_problem, "html"),
-    "bzoj": Adapter("bzoj", parse_bzoj_listing, parse_bzoj_problem, "html",
-                    login=True),
-}

@@ -2167,20 +2167,14 @@ def test_link_anchor_edges_and_stats(spark):
     assert stats[9] == (1, 1, 1)
 
 
-def test_minhash_estimate_eval_matches_python_replay(spark):
-    """Full pure-Python replay of the estimator self-evaluation at
-    sf0.001: re-derive the 16-perm/4-band minhash pipeline (60-bit md5
-    prefixes, band keys, eq>=8 candidates) AND the true distinct-3-shingle
-    Jaccard per pair, then require row-exact agreement with the Spark
-    query — estimator output, ground truth, and error columns all integer
-    e4.  Also pins the headline property: every planted exact copy that
-    survives the LSH gate reports est_e4 = true_e4 = 10000, err 0."""
-    import hashlib
+def _minhash_eval_replay(spark, sf: str, num_perm: int, bands: int) -> dict:
+    """Pure-Python replay of the estimator self-evaluation: the
+    num_perm/bands minhash pipeline (60-bit md5 prefixes, band keys,
+    est >= 0.5 candidates) AND the true distinct-3-shingle Jaccard per
+    pair, as {(a_id, b_id): (est_e4, true_e4, err_e4)} with
+    est_e4 = (10000·eq) div num_perm."""
     from itertools import combinations
 
-    from crawler_spark.plans.analytics_queries import q_minhash_estimate_eval
-
-    sf = "/root/testdata/sf0.001"
     base = {
         int(r.doc_id): r.text
         for r in spark.read.parquet(f"{sf}/documents.parquet")
@@ -2205,12 +2199,16 @@ def test_minhash_estimate_eval_matches_python_replay(spark):
     sig = {
         d: [
             min(int(md5(f"{i}:{s}")[:15], 16) for s in shs)
-            for i in range(16)
+            for i in range(num_perm)
         ]
         for d, shs in sh.items()
     }
+    rows = num_perm // bands
     bkeys = {
-        d: {md5("|".join(str(x) for x in s[b * 4 : b * 4 + 4])) for b in range(4)}
+        d: {
+            md5("|".join(str(x) for x in s[b * rows : (b + 1) * rows]))
+            for b in range(bands)
+        }
         for d, s in sig.items()
     }
     want = {}
@@ -2218,12 +2216,25 @@ def test_minhash_estimate_eval_matches_python_replay(spark):
         if not (bkeys[a] & bkeys[b]):
             continue
         eq = sum(1 for x, y in zip(sig[a], sig[b]) if x == y)
-        if eq < 8:
+        if 2 * eq < num_perm:
             continue
         inter = len(sh[a] & sh[b])
+        est_e4 = (10000 * eq) // num_perm
         true_e4 = (10000 * inter) // (len(sh[a]) + len(sh[b]) - inter)
-        want[(a, b)] = (eq * 625, true_e4, abs(eq * 625 - true_e4))
+        want[(a, b)] = (est_e4, true_e4, abs(est_e4 - true_e4))
+    return want
 
+
+def test_minhash_estimate_eval_matches_python_replay(spark):
+    """Full pure-Python replay of the estimator self-evaluation at
+    sf0.001 (16 perms, 4 bands): row-exact agreement with the Spark
+    query — estimator output, ground truth, and error columns all integer
+    e4.  Also pins the headline property: every planted exact copy that
+    survives the LSH gate reports est_e4 = true_e4 = 10000, err 0."""
+    from crawler_spark.plans.analytics_queries import q_minhash_estimate_eval
+
+    sf = "/root/testdata/sf0.001"
+    want = _minhash_eval_replay(spark, sf, 16, 4)
     got = {
         (r.a_id, r.b_id): (r.est_e4, r.true_e4, r.err_e4)
         for r in q_minhash_estimate_eval(spark, sf).collect()
@@ -2231,3 +2242,51 @@ def test_minhash_estimate_eval_matches_python_replay(spark):
     assert got == want and len(got) > 0
     exact = {p: v for p, v in got.items() if p[1] == p[0] + 2000000}
     assert exact and all(v == (10000, 10000, 0) for v in exact.values())
+
+
+@pytest.mark.parametrize("num_perm,bands", [(10, 5), (12, 4)])
+def test_minhash_eval_sql_est_e4_integer_exact(spark, num_perm, bands):
+    """The DuckDB oracle helper matches the Python replay's
+    est_e4 = (10000·eq) div num_perm for any num_perm, not only a divisor
+    of 10000: at 12 perms a unit of 10000 // 12 = 833 reported a planted
+    exact copy as 9996."""
+    import duckdb
+
+    from crawler_spark.plans.analytics_queries import _minhash_eval_sql
+
+    sf = "/root/testdata/sf0.001"
+    want = _minhash_eval_replay(spark, sf, num_perm, bands)
+    exact = [v for p, v in want.items() if p[1] == p[0] + 2000000]
+    assert exact and all(v == (10000, 10000, 0) for v in exact)
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{sf}/documents.parquet')"
+    )
+    got = {
+        (a, b): (est, true, err)
+        for a, b, est, true, err in con.execute(
+            _minhash_eval_sql(num_perm, bands)
+        ).fetchall()
+    }
+    assert got == want
+
+
+@pytest.mark.parametrize("name", ["q_link_anchor_stats", "q_tfidf_top_terms"])
+def test_builder_is_lazy_and_empty_safe(spark, monkeypatch, name):
+    """Building the query starts no Spark job (its counts are one-row
+    aggregates inside the plan), and an empty documents table yields 0
+    rows rather than a modulo by zero.  ``_t`` is stubbed with a pre-read
+    empty frame because a parquet read runs its own schema-inference job."""
+    from crawler_spark.plans import analytics_queries as AQ
+
+    empty = spark.createDataFrame([], _docs(spark).schema)
+    monkeypatch.setattr(AQ, "_t", lambda _spark, _sf, _table: empty)
+    sc = spark.sparkContext
+    group = f"build-{name}"
+    sc.setJobGroup(group, "query build only")
+    try:
+        query = getattr(AQ, name)(spark, SF)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert query.count() == 0
