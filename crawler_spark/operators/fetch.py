@@ -33,6 +33,7 @@ from dataclasses import dataclass
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 FETCH_COLS = "status string, http_code int, attempts int, body binary, fetched_at double, wall_ms bigint"
 
@@ -166,11 +167,15 @@ class HttpFetcher:
         return False
 
 
+_CLOCK = "__clock_row"
+
+
 def fetch_stage(
     frontier: DataFrame,
     fetcher,
     num_buckets: int = 32,
     base_ts: float = 1_700_000_000.0,
+    clocks: DataFrame | None = None,
 ) -> DataFrame:
     """Run the fetch over a frontier batch.
 
@@ -180,13 +185,19 @@ def fetch_stage(
     One shuffle: ``repartition(num_buckets, 'host_bucket')`` so per-host
     politeness is a task-local property. Rows are sorted (host, url) inside
     the task for deterministic issue order.
+
+    ``clocks`` — (host, next_allowed_ts) rows, e.g. the host_state an
+    earlier stage left behind — ride the same shuffle as clock-only rows, so
+    each task reads its hosts' clocks without a join or a broadcast. A host
+    starts at the latest next_allowed_ts among its rows and clock rows.
     """
     df = frontier
-    if "min_delay_ms" not in df.columns:
+    cols = set(df.columns)
+    if "min_delay_ms" not in cols:
         df = df.withColumn("min_delay_ms", F.lit(200))
-    if "next_allowed_ts" not in df.columns:
+    if "next_allowed_ts" not in cols:
         df = df.withColumn("next_allowed_ts", F.lit(None).cast("double"))
-    if "host_bucket" not in df.columns:
+    if "host_bucket" not in cols:
         df = df.withColumn(
             "host_bucket", F.pmod(F.xxhash64("host"), F.lit(num_buckets)).cast("int")
         )
@@ -195,58 +206,83 @@ def fetch_stage(
         + ", "
         + FETCH_COLS
     )
+    df = df.withColumn(_CLOCK, F.lit(False))
+    if clocks is not None:
+        df = df.unionByName(_clock_rows(clocks, df, num_buckets))
 
     simulated = fetcher.simulated()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        frames = [b for b in batches if len(b)]
+        if not frames:
+            return
+        pdf = pd.concat(frames, ignore_index=True)
+        starts = pdf.groupby("host")["next_allowed_ts"].max()  # NaN: no clock
+        pdf = pdf[~pdf.pop(_CLOCK)]
+        pdf = pdf.sort_values(["host", "url"], kind="mergesort").reset_index(drop=True)
         # host → next-issue clock in INTEGER milliseconds: politeness gaps
         # must hold exactly; float-second accumulation drifts below min_delay
         clocks: dict[str, int] = {}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.sort_values(["host", "url"], kind="mergesort").reset_index(drop=True)
-            status, code, attempts, body, fetched, wall = [], [], [], [], [], []
-            for row in pdf.itertuples(index=False):
-                delay_ms = int(row.min_delay_ms)
-                start_ms = clocks.get(row.host)
-                if start_ms is None:
-                    nat = row.next_allowed_ts
-                    start_ms = (
-                        int(round(float(nat) * 1000))
-                        if nat is not None and nat == nat
-                        else int(base_ts * 1000)
-                    )
-                t0 = time.time()
-                try:
-                    st, c, att, b = fetcher.fetch(row.url, int(row.generation))
-                except Exception:  # noqa: BLE001 — C3 isolation
-                    st, c, att, b = "error", 0, 1, None
-                wall_ms = int((time.time() - t0) * 1000)
-                # politeness: the reference sleeps BEFORE every request and
-                # between retries (tools.go:58,67,73) → `att` delays total
-                issue_ms = start_ms + delay_ms * att
-                if not simulated:
-                    now = time.time()
-                    if issue_ms / 1000.0 > now:
-                        time.sleep(issue_ms / 1000.0 - now)
-                clocks[row.host] = issue_ms
-                status.append(st)
-                code.append(c)
-                attempts.append(att)
-                body.append(b)
-                fetched.append(issue_ms / 1000.0)
-                wall.append(wall_ms)
-            out = pdf.copy()
-            out["status"] = status
-            out["http_code"] = pd.array(code, dtype="int32")
-            out["attempts"] = pd.array(attempts, dtype="int32")
-            out["body"] = body
-            out["fetched_at"] = fetched
-            out["wall_ms"] = pd.array(wall, dtype="int64")
-            yield out
+        status, code, attempts, body, fetched, wall = [], [], [], [], [], []
+        for row in pdf.itertuples(index=False):
+            delay_ms = int(row.min_delay_ms)
+            start_ms = clocks.get(row.host)
+            if start_ms is None:
+                nat = starts[row.host]
+                start_ms = (
+                    int(round(float(nat) * 1000)) if nat == nat else int(base_ts * 1000)
+                )
+            t0 = time.time()
+            try:
+                st, c, att, b = fetcher.fetch(row.url, int(row.generation))
+            except Exception:  # noqa: BLE001 — C3 isolation
+                st, c, att, b = "error", 0, 1, None
+            wall_ms = int((time.time() - t0) * 1000)
+            # politeness: the reference sleeps BEFORE every request and
+            # between retries (tools.go:58,67,73) → `att` delays total
+            issue_ms = start_ms + delay_ms * att
+            if not simulated:
+                now = time.time()
+                if issue_ms / 1000.0 > now:
+                    time.sleep(issue_ms / 1000.0 - now)
+            clocks[row.host] = issue_ms
+            status.append(st)
+            code.append(c)
+            attempts.append(att)
+            body.append(b)
+            fetched.append(issue_ms / 1000.0)
+            wall.append(wall_ms)
+        out = pdf.copy()
+        out["status"] = status
+        out["http_code"] = pd.array(code, dtype="int32")
+        out["attempts"] = pd.array(attempts, dtype="int32")
+        out["body"] = body
+        out["fetched_at"] = fetched
+        out["wall_ms"] = pd.array(wall, dtype="int64")
+        yield out
 
     return df.repartition(num_buckets, "host_bucket").mapInPandas(run, out_schema)
+
+
+def _clock_rows(clocks: DataFrame, frontier: DataFrame, num_buckets: int) -> DataFrame:
+    """``clocks`` in the frontier's schema, flagged. Integral columns hold 0,
+    not NULL, so pandas keeps the frontier's integer columns integral."""
+    given = {
+        "host": "host",
+        "next_allowed_ts": "next_allowed_ts",
+        "host_bucket": f"pmod(xxhash64(host), {num_buckets})",
+        _CLOCK: "true",
+    }
+    return clocks.selectExpr(
+        *(
+            "CAST({} AS {}) AS `{}`".format(
+                given.get(f.name, "0" if isinstance(f.dataType, IntegralType) else "NULL"),
+                f.dataType.simpleString(),
+                f.name,
+            )
+            for f in frontier.schema
+        )
+    )
 
 
 def fetch_log_from(results: DataFrame, generation: int) -> DataFrame:
@@ -264,9 +300,12 @@ def fetch_log_from(results: DataFrame, generation: int) -> DataFrame:
 
 
 def lineage_from(results: DataFrame, run_id: str, generation: int) -> DataFrame:
-    """Per-partition lineage metrics (FIXTURES §A6b) — pure aggregation."""
+    """Per-partition lineage metrics (FIXTURES §A6b) — pure aggregation.
+    ``partition_id`` is the fetch stage's ``host_bucket``: the partition a
+    row was fetched in, stable across runs (``spark_partition_id()`` of the
+    post-shuffle plan is not)."""
     return (
-        results.withColumn("partition_id", F.spark_partition_id())
+        results.withColumnRenamed("host_bucket", "partition_id")
         .groupBy("partition_id")
         .agg(
             F.count("*").alias("urls_in"),

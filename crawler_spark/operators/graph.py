@@ -91,13 +91,16 @@ def pagerank_integer(
     ``localCheckpoint`` the rank frame every ~10 rounds exactly as
     dedup.connected_components does.
     """
-    n = nodes.count()
-    base = SCALE // n
-    teleport = ((100 - damping_pct) * base) // 100
+    # N as a one-row aggregate joined into the plan: no job while the plan
+    # is built, and an empty node set yields no ranks, not a division by 0
+    ids = nodes.select(F.col("node_id")).crossJoin(
+        F.broadcast(nodes.agg(F.count(F.lit(1)).alias("__n")))
+    )
+    base = F.expr(f"{SCALE}L div __n")
+    teleport = F.expr(f"((100 - {damping_pct}) * ({SCALE}L div __n)) div 100")
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("__deg"))
     e = edges.join(deg, "src")  # iteration-invariant; exchange reused
-    ids = nodes.select(F.col("node_id"))
-    ranks = ids.withColumn("rank_e12", F.lit(base).cast("long"))
+    ranks = ids.select("node_id", base.cast("long").alias("rank_e12"))
     for _ in range(iters):
         contrib = (
             e.join(ranks, e["src"] == ranks["node_id"], "inner")
@@ -111,8 +114,7 @@ def pagerank_integer(
         ranks = ids.join(contrib, "node_id", "left").select(
             "node_id",
             (
-                F.lit(teleport)
-                + F.expr(f"{damping_pct} * coalesce(__in, 0L) div 100")
+                teleport + F.expr(f"{damping_pct} * coalesce(__in, 0L) div 100")
             ).cast("long").alias("rank_e12"),
         )
     return ranks

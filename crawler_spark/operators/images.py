@@ -15,12 +15,13 @@ Split exactly as SURVEY T1 prescribes:
   binary bodies (the only Python, and it's the image codec itself);
 - **rewrite** = description links → ``/source/<judge>/<pid>/img/<key>.<ext>``
   (tools.go:240,280) for successfully-fetched assets only — image failure
-  leaves the original link intact (C3, tools.go:222-226).
+  leaves the original link intact (C3, tools.go:222-226) — pure SQL, a fold
+  of ``replace`` over each problem's ok links.
 
 Scale: ``bytes`` stays out of every shuffle except the single
 write-side exchange — extraction/keying runs on strings, the decode UDF runs
-*after* the asset fetch in the same stage, and the rewrite join moves only
-(src, new_path) string pairs.
+*after* the asset fetch in the same stage, and the rewrite's one groupBy
+moves problem rows and (src, new_path) string pairs, never image bytes.
 """
 
 from __future__ import annotations
@@ -123,44 +124,38 @@ def decode_assets(fetched_assets: DataFrame, web=None) -> DataFrame:
     return ok.mapInPandas(run, _DECODE_SCHEMA)
 
 
-_REWRITE_SCHEMA = "judge string, pid string, description string"
-
-
 def rewrite_descriptions(problems: DataFrame, links_with_status: DataFrame) -> DataFrame:
-    """Rewrite each successfully-fetched link to its /source path
-    (tools.go:240,280); failed links stay as-is (tools.go:222-226).
+    """``problems`` with each successfully-fetched link in ``description``
+    rewritten to its /source path (tools.go:240,280); failed links stay
+    as-is (tools.go:222-226).
 
-    The join moves only (src, new_path) pairs; the string replace is a
-    pandas batch op.
+    One shuffle: each problem row and its ok (src, new_path) links meet in
+    one groupBy on (judge, pid), and the replaces are a column fold — no
+    Python.
     """
-    ok_links = (
-        links_with_status.filter(F.col("status") == "ok")
+    ok_links = links_with_status.filter(F.col("status") == "ok").select(
+        "judge", "pid", F.struct("src", "new_path").alias("link")
+    )
+    grouped = (
+        problems.select("judge", "pid", F.struct(*problems.columns).alias("p"))
+        .unionByName(ok_links, allowMissingColumns=True)
         .groupBy("judge", "pid")
         .agg(
-            F.collect_list("src").alias("srcs"),
-            F.collect_list("new_path").alias("paths"),
+            F.first("p", ignorenulls=True).alias("p"),
+            F.collect_list("link").alias("links"),  # NULL on problem rows
         )
-    )
-    joined = problems.select("judge", "pid", "description").join(
-        ok_links, on=["judge", "pid"], how="left"
+        .filter(F.col("p").isNotNull())
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            descs = []
-            for row in pdf.itertuples(index=False):
-                d = row.description
-                srcs = row.srcs  # arrives as list/ndarray, or None for no links
-                if d is not None and srcs is not None and len(srcs) > 0:
-                    for s, p in zip(srcs, row.paths):
-                        d = d.replace(f"]({s})", f"]({p})").replace(
-                            f'src="{s}"', f'src="{p}"'
-                        )
-                descs.append(d)
-            yield pd.DataFrame(
-                {"judge": pdf["judge"], "pid": pdf["pid"], "description": descs}
-            )
+    def replace(desc, link):
+        return F.replace(
+            F.replace(desc, F.concat(F.lit("]("), link.src, F.lit(")")),
+                      F.concat(F.lit("]("), link.new_path, F.lit(")"))),
+            F.concat(F.lit('src="'), link.src, F.lit('"')),
+            F.concat(F.lit('src="'), link.new_path, F.lit('"')),
+        )
 
-    return joined.mapInPandas(run, _REWRITE_SCHEMA)
+    rewritten = F.aggregate("links", F.col("p.description"), replace)
+    return grouped.select(
+        F.col("p").withField("description", rewritten).alias("p")
+    ).select("p.*")

@@ -16,6 +16,8 @@ a first-class stage here:
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -38,8 +40,9 @@ def parse_robots(robots_results: DataFrame) -> DataFrame:
     )
     parsed = lines.select(
         "host",
-        F.regexp_extract("line", r"^Disallow:\s*(\S+)", 1).alias("disallow"),
-        F.regexp_extract("line", r"^Crawl-delay:\s*([0-9.]+)", 1).alias("delay_s"),
+        # field names are case-insensitive (RFC 9309 §2.2.2)
+        F.regexp_extract("line", r"(?i)^disallow:\s*(\S+)", 1).alias("disallow"),
+        F.regexp_extract("line", r"(?i)^crawl-delay:\s*([0-9.]+)", 1).alias("delay_s"),
     )
     return parsed.groupBy("host").agg(
         F.filter(F.collect_list("disallow"), lambda x: x != "").alias("robots_disallow"),
@@ -60,52 +63,100 @@ def robots_allowed(url, disallow_col) -> "F.Column":
     )
 
 
+_RULES_TYPE = (
+    "map<string, struct<disallow: array<string>, crawl_delay_ms: int, "
+    "min_delay_ms: int, next_allowed_ts: double>>"
+)
+
+
 def apply_robots(frontier: DataFrame, host_state: DataFrame) -> DataFrame:
     """C5 — drop frontier rows disallowed by their host's robots rules and
-    attach the effective politeness delay. host_state is per-host (tiny →
-    broadcast join)."""
-    hs = host_state.select(
-        "host",
-        "robots_disallow",
-        F.coalesce("crawl_delay_ms", F.lit(0)).alias("crawl_delay_ms"),
-        F.coalesce("min_delay_ms", F.lit(200)).alias("host_min_delay_ms"),
-        "next_allowed_ts",
+    attach the host's effective politeness delay and clock.
+
+    host_state is per-host and tiny: it is collected and compiled into the
+    plan as one literal host → rules map, so applying it is a projection —
+    no join and no broadcast job. Each row's lookup scans the map's keys,
+    which suits the tens of hosts a judge crawl has, not millions. A host
+    without a row keeps the default delay and no robots rules."""
+    rules = F.from_json(
+        F.lit(json.dumps({
+            r["host"]: {
+                "disallow": r["robots_disallow"],
+                "crawl_delay_ms": r["crawl_delay_ms"],
+                "min_delay_ms": r["min_delay_ms"],
+                "next_allowed_ts": r["next_allowed_ts"],
+            }
+            for r in host_state.collect()
+        })),
+        _RULES_TYPE,
     )
-    joined = frontier.drop("min_delay_ms", "next_allowed_ts").join(
-        F.broadcast(hs), on="host", how="left"
-    )
+    st = rules[F.col("host")]
     eff_delay = F.greatest(
-        F.coalesce(F.col("host_min_delay_ms"), F.lit(200)),
-        F.coalesce(F.col("crawl_delay_ms"), F.lit(0)),
+        F.coalesce(st["min_delay_ms"], F.lit(200)),
+        F.coalesce(st["crawl_delay_ms"], F.lit(0)),
     )
     return (
-        joined.filter(robots_allowed(F.col("url"), F.col("robots_disallow")))
+        frontier.drop("min_delay_ms", "next_allowed_ts")
+        .filter(robots_allowed(F.col("url"), st["disallow"]))
+        .withColumn("next_allowed_ts", st["next_allowed_ts"])
         .withColumn("min_delay_ms", eff_delay)
-        .drop("robots_disallow", "crawl_delay_ms", "host_min_delay_ms")
+    )
+
+
+def host_clocks(fetch_results: DataFrame) -> DataFrame:
+    """The clock each fetch leaves its host at: (host, next_allowed_ts =
+    fetched_at + the effective delay the fetch ran under)."""
+    return fetch_results.select(
+        "host",
+        (F.col("fetched_at") + F.col("min_delay_ms") / 1000.0).alias("next_allowed_ts"),
     )
 
 
 def next_host_state(
     fetch_results: DataFrame, prior_host_state: DataFrame
 ) -> DataFrame:
-    """Carry per-host clocks forward: next_allowed_ts = max(fetched_at) +
-    effective delay. Prior robots rules are kept (they are refetched on a
-    TTL in a real deployment)."""
-    last = fetch_results.groupBy("host").agg(
-        F.max("fetched_at").alias("last_ts"),
-        F.max("min_delay_ms").alias("eff_delay_ms"),
+    """Carry per-host clocks forward: a host's next_allowed_ts is the latest
+    of its prior clock and the :func:`host_clocks` of its fetches. Prior
+    robots rules are kept (they are refetched on a TTL in a real
+    deployment); hosts absent from the prior state are dropped.
+
+    One union + one per-host aggregate — no join, so no broadcast of the
+    prior state."""
+    prior = prior_host_state.select(
+        "host",
+        F.struct("min_delay_ms", "robots_disallow", "crawl_delay_ms").alias("p"),
+        "next_allowed_ts",
     )
     return (
-        prior_host_state.alias("p")
-        .join(last.alias("l"), on="host", how="left")
+        prior.unionByName(host_clocks(fetch_results), allowMissingColumns=True)
+        .groupBy("host")
+        .agg(
+            F.first("p", ignorenulls=True).alias("p"),
+            F.max("next_allowed_ts").alias("next_allowed_ts"),
+        )
+        .filter(F.col("p").isNotNull())
         .select(
+            "host", "p.min_delay_ms", "p.robots_disallow", "p.crawl_delay_ms",
+            "next_allowed_ts",
+        )
+    )
+
+
+def robots_host_state(hosts: DataFrame, robots_results: DataFrame) -> DataFrame:
+    """A first host_state: each (host, min_delay_ms) row with its parsed
+    robots rules — allow-all and no crawl delay when robots.txt is missing —
+    and its clock past the robots fetches, which spend politeness budget
+    like any other."""
+    rules = parse_robots(robots_results)
+    return next_host_state(
+        robots_results,
+        hosts.join(rules, on="host", how="left").select(
             "host",
             "min_delay_ms",
-            "robots_disallow",
-            "crawl_delay_ms",
-            F.coalesce(
-                F.col("l.last_ts") + F.col("l.eff_delay_ms") / 1000.0,
-                F.col("p.next_allowed_ts"),
-            ).alias("next_allowed_ts"),
-        )
+            F.coalesce("robots_disallow", F.array().cast("array<string>")).alias(
+                "robots_disallow"
+            ),
+            F.coalesce("crawl_delay_ms", F.lit(0)).alias("crawl_delay_ms"),
+            F.lit(None).cast("double").alias("next_allowed_ts"),
+        ),
     )

@@ -1355,15 +1355,18 @@ def q_link_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     back in)."""
     from crawler_spark.operators.graph import link_edges, pagerank_integer
 
-    nodes = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("long").alias("node_id")
+    docs = _t(spark, sf_dir, "documents")
+    # the node count as a one-row aggregate joined into the plan (the
+    # oracle's cnt CTE): no job while building, no modulo on an empty table
+    nn = docs.agg(F.count(F.lit(1)).alias("__n"))
+    nodes = docs.select(F.col("doc_id").cast("long").alias("node_id")).crossJoin(
+        F.broadcast(nn)
     )
-    n = nodes.count()
 
     def href(add: int):
         return F.concat(
             F.lit('<a href="/problem/'),
-            ((F.col("node_id") * 31 + add) % n).cast("string"),
+            ((F.col("node_id") * 31 + add) % F.col("__n")).cast("string"),
             F.lit('/view">t</a>'),
         )
 
@@ -1381,7 +1384,7 @@ def q_link_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = nodes.select(
         F.col("node_id").alias("doc_id"), desc.alias("description")
     )
-    pr = pagerank_integer(nodes, link_edges(pages), iters=3)
+    pr = pagerank_integer(nodes.select("node_id"), link_edges(pages), iters=3)
     return pr.select(
         F.col("node_id").alias("doc_id"),
         F.col("rank_e12").cast("long").alias("rank_e12"),

@@ -15,6 +15,13 @@ the reference's per-judge ``plugin/*`` over the shared
 :class:`_SynthSite` below; ``sources.adapterweb.AdapterWeb`` (the five real
 wire formats) implements the contract itself.
 
+Job budget: a recrawl generation is ~21 Spark jobs (at most 25, pinned by
+test_crawl_loop.py::test_recrawl_generation_job_budget). Each fetch stage is
+one shuffle whose results the first job reading them stores; host clocks
+(C1) ride the next stage's fetch shuffle as clock rows; robots rules are
+compiled into every frontier; the C4 guards and the manifest counts are
+``Observation``s on jobs that already run (the counts on the staging writes).
+
 Resume: the next run continues from max committed generation — the
 `GetProblemlist` recovery analog (main.go:132-153). Kill the process at any
 point and re-run: uncommitted staging is invisible, so the final state
@@ -32,9 +39,11 @@ from __future__ import annotations
 import argparse
 import time
 from dataclasses import dataclass
+from functools import reduce
 from typing import Protocol
 
-from pyspark.sql import Column, DataFrame, SparkSession
+import pandas as pd
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from crawler_spark.functions.urls import canonicalize, url_hash64
@@ -54,8 +63,9 @@ from crawler_spark.operators.images import (
 from crawler_spark.operators.parse import extract_max_page, parse_listing, parse_problem
 from crawler_spark.operators.politeness import (
     apply_robots,
+    host_clocks,
     next_host_state,
-    parse_robots,
+    robots_host_state,
 )
 from crawler_spark.sources.synthweb import SynthWeb
 from crawler_spark.sources.warehouse import ParquetWarehouse
@@ -68,6 +78,10 @@ class ListingPhaseError(RuntimeError):
 SEEN_DDL = (
     "judge string, pid string, canonical_url string, url_hash bigint, "
     "title string, last_generation int"
+)
+HOST_STATE_DDL = (
+    "host string, min_delay_ms int, robots_disallow array<string>, "
+    "crawl_delay_ms int, next_allowed_ts double"
 )
 
 
@@ -88,7 +102,9 @@ class Site(Protocol):
         """Listing page 1's url over the (judge, host) columns."""
 
     def listing_pages(self, first_res: DataFrame) -> DataFrame:
-        """Fetched page 1 rows → (url, host, judge) of every listing page."""
+        """Fetched page 1 rows → (url, host, judge) of every listing page.
+        A NULL url marks a listing the site could not expand (the P2
+        maxPage guard): the generation aborts with ListingPhaseError (C4)."""
 
     def parse_listing(self, listing_res: DataFrame) -> DataFrame:
         """Fetched listing pages → (judge, host, pid, title, listing_pos)."""
@@ -126,16 +142,17 @@ class _SynthSite:
         return F.concat(F.lit("http://"), "host", F.lit("/problems?page=1"))
 
     def listing_pages(self, first_res: DataFrame) -> DataFrame:
-        maxp = extract_max_page(first_res)
-        if maxp.filter(F.col("max_page").isNull()).count() > 0:
-            raise ListingPhaseError("maxPage sanity bound violated (P2/C4)")
-        pages = maxp.select(
+        pages = extract_max_page(first_res).select(
             "judge",
             "host",
-            F.explode(F.sequence(F.lit(1), F.col("max_page"))).alias("page"),
+            # a NULL max_page (P2 guard) explodes to one NULL page → NULL url
+            F.explode_outer(F.sequence(F.lit(1), F.col("max_page"))).alias("page"),
         )
         return pages.select(
-            F.format_string("http://%s/problems?page=%d", "host", "page").alias("url"),
+            F.when(
+                F.col("page").isNotNull(),
+                F.format_string("http://%s/problems?page=%d", "host", "page"),
+            ).alias("url"),
             "host",
             "judge",
         )
@@ -167,74 +184,67 @@ def run_generation(
     site = _SynthSite(web) if isinstance(web, SynthWeb) else web
     fetcher = site.fetcher()
     t0 = time.time()
+    # a local relation, so later plans are sized from it, not from 8 EiB
     judges_df = spark.createDataFrame(
-        site.judge_rows(), "judge string, host string, min_delay_ms int"
+        pd.DataFrame(site.judge_rows(), columns=["judge", "host", "min_delay_ms"]),
+        "judge string, host string, min_delay_ms int",
     )
     gen_base = base_ts + generation * 10_000  # simulated clock epoch per gen
 
     # -- 0. host_state: prior snapshot, or robots fetch on first run (C5)
-    host_state = wh.read_snapshot("host_state")
+    host_state = wh.read_snapshot("host_state", schema=HOST_STATE_DDL)
     if host_state is None:
-        robots_frontier = judges_df.select(
-            F.concat(F.lit("http://"), "host", F.lit("/robots.txt")).alias("url"),
-            "host",
-            "judge",
-            F.lit(generation).alias("generation"),
-            "min_delay_ms",
+        robots_res = fetch_stage(
+            judges_df.select(
+                F.concat(F.lit("http://"), "host", F.lit("/robots.txt")).alias("url"),
+                "host", "judge", F.lit(generation).alias("generation"), "min_delay_ms",
+            ),
+            fetcher, num_buckets, gen_base,
+        ).localCheckpoint(eager=False)  # read twice below, fetched once
+        host_state = robots_host_state(judges_df.drop("judge"), robots_res)
+    # robots rules and delays hold for the whole generation: collected once,
+    # apply_robots compiles them into every stage's frontier
+    rules = spark.createDataFrame(host_state.toPandas(), HOST_STATE_DDL)
+    clocks = rules.select("host", "next_allowed_ts")
+    fetched: list[DataFrame] = []  # every stage's results → fetch_log
+
+    def fetch(frontier: DataFrame) -> tuple[DataFrame, Observation]:
+        """One fetch stage. The clocks it leaves its hosts at (C1) ride the
+        next stage's fetch shuffle — the reference's plugin interleaves all
+        requests on one clock per host. The Observation counts the failed
+        rows (C4) once a later stage has read the results."""
+        nonlocal clocks
+        res = fetch_stage(
+            apply_robots(frontier, rules), fetcher, num_buckets, gen_base, clocks
+        ).localCheckpoint(eager=False)
+        failed = Observation()
+        clocks = clocks.unionByName(
+            host_clocks(res.observe(failed, _count(F.col("status") != "ok")))
         )
-        robots_res = fetch_stage(robots_frontier, fetcher, num_buckets, gen_base).cache()
-        rules = parse_robots(robots_res)
-        host_state = (
-            judges_df.join(rules, on="host", how="left")
-            .select(
-                "host",
-                "min_delay_ms",
-                F.coalesce("robots_disallow", F.array().cast("array<string>")).alias(
-                    "robots_disallow"
-                ),
-                F.coalesce("crawl_delay_ms", F.lit(0)).alias("crawl_delay_ms"),
-                F.lit(None).cast("double").alias("next_allowed_ts"),
-            )
-        )
-        # robots fetches consume politeness budget too — advance host clocks
-        host_state = next_host_state(
-            robots_res.select("host", "fetched_at", "min_delay_ms"), host_state
-        )
-    # host_state is tiny (one row per host); localCheckpoint truncates the
-    # growing plan so later stages re-broadcast a shallow relation
-    host_state = host_state.localCheckpoint(eager=True)
+        fetched.append(res)
+        return res, failed
 
     # -- 1. listing phase: page 1 → maxPage (A4/P2) → expand (S7) → parse
-    first_frontier = apply_robots(
+    first_res, first_failed = fetch(
         judges_df.select(
-            F.lit(None).cast("string").alias("kind"),
             site.first_page_url().alias("url"),
             "host",
             "judge",
             F.lit(generation).alias("generation"),
-        ),
-        host_state,
+        )
     )
-    first_res = fetch_stage(first_frontier, fetcher, num_buckets, gen_base).cache()
-    # per-host clocks carry through EVERY stage of the generation (C1): the
-    # reference's single-threaded plugin interleaves listing/problem/image
-    # requests on one clock — next_host_state reproduces that across stages.
-    host_state = next_host_state(
-        first_res.select("host", "fetched_at", "min_delay_ms"), host_state
-    ).localCheckpoint(eager=True)
-    if first_res.filter(F.col("status") != "ok").count() > 0:
+    unexpanded = Observation()
+    listing_res, listing_failed = fetch(
+        site.listing_pages(first_res)
+        .observe(unexpanded, _count(F.col("url").isNull()))
+        .filter(F.col("url").isNotNull())
+        .withColumn("generation", F.lit(generation))
+    )
+    if first_failed.get["n"]:
         raise ListingPhaseError("listing page 1 fetch failed (C4)")
-    listing_frontier = apply_robots(
-        site.listing_pages(first_res).withColumn("generation", F.lit(generation)),
-        host_state,
-    )
-    listing_res = fetch_stage(listing_frontier, fetcher, num_buckets, gen_base).cache()
-    if listing_res.filter(F.col("status") != "ok").count() > 0:
-        raise ListingPhaseError("listing page fetch failed (C4)")
-    listing = site.parse_listing(listing_res).cache()
-    host_state = next_host_state(
-        listing_res.select("host", "fetched_at", "min_delay_ms"), host_state
-    ).localCheckpoint(eager=True)
+    if unexpanded.get["n"]:
+        raise ListingPhaseError("maxPage sanity bound violated (P2/C4)")
+    listing = site.parse_listing(listing_res)
 
     # -- 2. selection (J1 + A1 + A3, §2.9 normative order)
     # seen_buckets > 0 → the co-located store: the snapshot is written
@@ -252,73 +262,60 @@ def run_generation(
             # pre---seen-buckets history (or a different layout): fall back
             # to the plain read — correct, just not co-located; this
             # generation's write below re-buckets the snapshot
-            seen = wh.read_snapshot("url_seen") or _empty_seen(spark)
+            seen = wh.read_snapshot("url_seen", schema=SEEN_DDL) or _empty_seen(spark)
     else:
-        seen = wh.read_snapshot("url_seen") or _empty_seen(spark)
+        seen = wh.read_snapshot("url_seen", schema=SEEN_DDL) or _empty_seen(spark)
     batch = select_generation(
         listing, seen.select("judge", "pid", "title"), limit=limit,
         seed=f"g{generation}",
     )
 
     # -- 3. problem fetch + parse
-    prob_frontier = batch.select(
-        site.problem_url().alias("url"),
-        "host",
-        "judge",
-        "pid",
-        "title",
-        "listing_pos",
-        "crawl_seq",
-        F.lit(generation).alias("generation"),
-    )
-    prob_frontier = apply_robots(prob_frontier, host_state)
-    prob_res = fetch_stage(prob_frontier, fetcher, num_buckets, gen_base).cache()
-    problems = site.parse_problem(prob_res).cache()
-    host_state = next_host_state(
-        prob_res.select("host", "fetched_at", "min_delay_ms"), host_state
-    ).localCheckpoint(eager=True)
+    prob_res, _ = fetch(batch.select(
+        site.problem_url().alias("url"), "host", "judge", "pid", "title",
+        "listing_pos", "crawl_seq", F.lit(generation).alias("generation"),
+    ))
+    if listing_failed.get["n"]:
+        raise ListingPhaseError("listing page fetch failed (C4)")
+    problems = site.parse_problem(prob_res)
 
     # -- 4. asset round (T1/S14): extract → dedupe → fetch → decode → rewrite
-    links = extract_image_links(problems).cache()
-    assets = dedupe_assets(links).withColumn(
-        "host",
-        F.regexp_extract("asset_url", r"^https?://([^/]+)", 1),
-    ).withColumn("generation", F.lit(generation))
-    assets = apply_robots(
-        assets.withColumnRenamed("asset_url", "url"), host_state
-    ).withColumnRenamed("url", "asset_url")
-    asset_res = fetch_stage(
-        assets.withColumnRenamed("asset_url", "url"), fetcher, num_buckets, gen_base
-    ).withColumnRenamed("url", "asset_url").cache()
-    images = site.decode_assets(asset_res)
-    link_status = links.join(
-        asset_res.select("asset_url", "status"), on="asset_url", how="left"
-    )
-    rewritten = rewrite_descriptions(problems, link_status)
-    problems_final = (
-        problems.drop("description")
-        .join(rewritten.withColumnRenamed("description", "description_rw"),
-              on=["judge", "pid"], how="left")
-        .select(
-            "judge", "pid", "title",
-            F.col("url").alias("url"),
-            "time_ms", "memory_mb", "judge_type",
-            F.col("description_rw").alias("description"),
-            "description_type", "status",
-            # crawl-order parity columns (§2.9 normative ordering)
-            "crawl_seq", "generation",
+    links = extract_image_links(problems)
+    asset_res, _ = fetch(
+        dedupe_assets(links).select(
+            F.col("asset_url").alias("url"),
+            "image_id",
+            "ext",
+            F.regexp_extract("asset_url", r"^https?://([^/]+)", 1).alias("host"),
+            F.lit(generation).alias("generation"),
         )
     )
+    images = site.decode_assets(asset_res.withColumnRenamed("url", "asset_url"))
+    link_status = links.join(
+        asset_res.select(F.col("url").alias("asset_url"), "status"),
+        on="asset_url", how="left",
+    )
+    problems_final = rewrite_descriptions(problems, link_status).select(
+        "judge", "pid", "title", "url",
+        "time_ms", "memory_mb", "judge_type", "description",
+        "description_type", "status",
+        # crawl-order parity columns (§2.9 normative ordering)
+        "crawl_seq", "generation",
+    )
 
-    # -- 5. atomic commit (W1-W5): everything staged, then one manifest
-    all_fetches = None
-    for res in (first_res, listing_res, prob_res,
-                asset_res.withColumnRenamed("asset_url", "url")):
-        proj = fetch_log_from(res, generation)
-        all_fetches = proj if all_fetches is None else all_fetches.unionByName(proj)
-    wh.stage_append("problems", problems_final, generation)
-    wh.stage_append("images", images, generation)
-    wh.stage_append("fetch_log", all_fetches, generation)
+    # -- 5. atomic commit (W1-W5): everything staged, then one manifest whose
+    # row counts are observed by the staging writes themselves
+    # every fetch of the generation, as many partitions as one stage's
+    all_fetches = reduce(
+        DataFrame.unionByName,
+        [r.select("url", "host", "attempts", "status", "wall_ms", "fetched_at",
+                  "min_delay_ms") for r in fetched],
+    ).coalesce(num_buckets)
+    rows = {}  # images first: the asset fetch and the decode run in one job
+    for table, df in (("images", images), ("problems", problems_final),
+                      ("fetch_log", fetch_log_from(all_fetches, generation))):
+        rows[table] = Observation()
+        wh.stage_append(table, df.observe(rows[table], _count(F.lit(True))), generation)
     wh.stage_append(
         "lineage",
         lineage_from(prob_res, run_id, generation),
@@ -350,32 +347,30 @@ def run_generation(
         )
     else:
         wh.stage_snapshot("url_seen", merged_seen, generation)
-    # host clocks already include robots/listing/problem stages; add assets
+    # host clocks after every stage of the generation, assets included
     wh.stage_snapshot(
         "host_state",
-        next_host_state(
-            asset_res.select("host", "fetched_at", "min_delay_ms"), host_state
-        ),
+        next_host_state(all_fetches, rules),
         generation,
     )
 
-    n_prob = problems_final.count()
-    n_img = images.count()
-    n_fetch = all_fetches.count()
+    n_fetch = rows["fetch_log"].get["n"]
     wall = time.time() - t0  # one clock read: urls_per_s = fetches / wall_s
     metrics = {
         "generation": generation,
-        "problems": n_prob,
-        "images": n_img,
+        "problems": rows["problems"].get["n"],
+        "images": rows["images"].get["n"],
         "fetches": n_fetch,
         "wall_s": round(wall, 2),
         "urls_per_s": round(n_fetch / max(wall, 1e-9), 1),
     }
     wh.commit(generation, metrics)
-    for df in (first_res, listing_res, prob_res, asset_res, listing, links,
-               problems):
-        df.unpersist()
     return metrics
+
+
+def _count(cond: Column) -> Column:
+    """Observed metric ``n``: rows where ``cond`` holds."""
+    return F.count(F.when(cond, 1)).alias("n")
 
 
 # Clustered-compaction keys per append table — chosen for the table's hot

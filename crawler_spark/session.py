@@ -72,6 +72,10 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # a crawl generation runs ~150 distinct generated classes; with the
+        # default 100-entry cache, LRU evicts each one before the next
+        # generation needs it, so every generation compiled all of them again
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -282,16 +282,21 @@ class ParquetWarehouse:
         return [f for d in dirs for f in d.glob("part-*.parquet")]
 
     def read_snapshot(
-        self, table: str, as_of_generation: int | None = None
+        self, table: str, as_of_generation: int | None = None,
+        schema: str | None = None,
     ) -> DataFrame | None:
         """Latest committed snapshot of a snapshot table, optionally as of a
-        past generation (time travel)."""
+        past generation (time travel).  A known ``schema`` (DDL) spares the
+        Spark job that infers it from the parquet footers."""
         for g in reversed(self.committed_generations()):
             if as_of_generation is not None and g > as_of_generation:
                 continue
             path = self.root / table / f"gen={g}"
             if path.exists():
-                return self.spark.read.parquet(str(path))
+                reader = self.spark.read
+                if schema is not None:
+                    reader = reader.schema(schema)
+                return reader.parquet(str(path))
         return None
 
     def snapshot_diff(

@@ -2271,7 +2271,9 @@ def test_minhash_eval_sql_est_e4_integer_exact(spark, num_perm, bands):
     assert got == want
 
 
-@pytest.mark.parametrize("name", ["q_link_anchor_stats", "q_tfidf_top_terms"])
+@pytest.mark.parametrize(
+    "name", ["q_link_anchor_stats", "q_tfidf_top_terms", "q_link_pagerank"]
+)
 def test_builder_is_lazy_and_empty_safe(spark, monkeypatch, name):
     """Building the query starts no Spark job (its counts are one-row
     aggregates inside the plan), and an empty documents table yields 0

@@ -259,9 +259,9 @@ def test_independent_runs_are_byte_deterministic(spark, web, crawled,
     run_crawl(spark, whdir2, web, generations=GENERATIONS, limit=LIMIT,
               num_buckets=4)
     wh2 = ParquetWarehouse(whdir2, spark)
-    for table in ("problems", "images", "fetch_log", "listing"):
+    for table in ("problems", "images", "fetch_log", "listing", "lineage"):
         x, y = wh1.read_appends(table), wh2.read_appends(table)
-        if table == "fetch_log":
+        if table in ("fetch_log", "lineage"):
             # wall_ms is MEASURED latency (real wall clock) — legitimate
             # telemetry nondeterminism; the guarantee covers content
             x, y = x.drop("wall_ms"), y.drop("wall_ms")
@@ -272,3 +272,41 @@ def test_independent_runs_are_byte_deterministic(spark, web, crawled,
         a = sorted(map(tuple, wh1.read_snapshot(table).collect()))
         b = sorted(map(tuple, wh2.read_snapshot(table).collect()))
         assert a == b, f"snapshot table {table} diverged between runs"
+
+
+# A recrawl generation's Spark jobs: each fetch stage is one shuffle whose
+# results the next stage's jobs store, C4 and the manifest counts are
+# Observations on jobs that already run, and the seven staged writes are one
+# job each plus their own shuffles.  Eager count()s and host
+# clock checkpoints per stage took a generation to ~70.
+JOB_BUDGET = 25
+
+
+def test_recrawl_generation_job_budget(spark, web, tmp_path_factory):
+    whdir = str(tmp_path_factory.mktemp("wh_jobs"))
+    run_crawl(spark, whdir, web, generations=1, limit=LIMIT, num_buckets=4)
+    sc = spark.sparkContext
+    group = "recrawl-job-budget"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        (m,) = run_crawl(spark, whdir, web, generations=2, limit=LIMIT,
+                         num_buckets=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert m["generation"] == 1
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= JOB_BUDGET, f"{len(jobs)} Spark jobs in one recrawl generation"
+
+
+def test_manifest_counts_equal_committed_rows(crawled):
+    """The manifest's counts are observed on the staging writes; they must
+    equal the rows each generation committed."""
+    wh, _, _ = crawled
+    gens = wh.committed_generations()
+    assert gens
+    for g in gens:
+        metrics = wh.manifest(g)["metrics"]
+        for key, table in (("problems", "problems"), ("images", "images"),
+                           ("fetches", "fetch_log")):
+            rows = wh.spark.read.parquet(str(wh.root / table / f"gen={g}")).count()
+            assert metrics[key] == rows, (g, table)

@@ -20,6 +20,20 @@ def test_parse_robots(spark):
     assert rows["fail.test"].robots_disallow == []
 
 
+def test_parse_robots_field_names_are_case_insensitive(spark):
+    """RFC 9309 §2.2.2: a lowercase or mixed-case field is the same field."""
+    body = (
+        b"user-agent: *\ndisallow: /a\nDISALLOW: /b\nDisAllow:/c\n"
+        b"crawl-DELAY: 0.5\n"
+    )
+    res = spark.createDataFrame(
+        [("h.test", "ok", body)], "host string, status string, body binary"
+    )
+    (row,) = parse_robots(res).collect()
+    assert sorted(row.robots_disallow) == ["/a", "/b", "/c"]
+    assert row.crawl_delay_ms == 500
+
+
 def test_apply_robots_filters_and_merges_delay(spark):
     frontier = spark.createDataFrame(
         [

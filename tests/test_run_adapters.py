@@ -127,6 +127,11 @@ def test_adapter_politeness_robots_and_lineage(adapter_crawl):
         assert lin.loc[g, "fetched"] + lin.loc[g, "failed"] == m["problems"]
 
 
+def test_adapter_manifest_counts_equal_committed_rows(adapter_crawl):
+    wh, _web, metrics = adapter_crawl
+    loop.test_manifest_counts_equal_committed_rows((wh, None, metrics))
+
+
 def test_adapter_resume_is_idempotent(spark, tmp_path_factory, adapter_crawl,
                                       monkeypatch):
     wh, web, metrics = adapter_crawl
