@@ -285,8 +285,9 @@ def _clock_rows(clocks: DataFrame, frontier: DataFrame, num_buckets: int) -> Dat
     )
 
 
-def fetch_log_from(results: DataFrame, generation: int) -> DataFrame:
-    """Project fetch results into the fetch_log table (FIXTURES §A6)."""
+def fetch_log_from(results: DataFrame) -> DataFrame:
+    """Project fetch results into the fetch_log table (FIXTURES §A6); the
+    generation is the frontier's ``generation`` column."""
     return results.select(
         F.xxhash64("url").alias("url_hash"),
         "url",
@@ -295,18 +296,18 @@ def fetch_log_from(results: DataFrame, generation: int) -> DataFrame:
         "status",
         F.col("wall_ms").cast("long").alias("wall_ms"),
         F.col("fetched_at").cast("double").alias("fetched_at"),
-        F.lit(generation).cast("int").alias("generation"),
+        F.col("generation").cast("int").alias("generation"),
     )
 
 
-def lineage_from(results: DataFrame, run_id: str, generation: int) -> DataFrame:
+def lineage_from(results: DataFrame, run_id: str) -> DataFrame:
     """Per-partition lineage metrics (FIXTURES §A6b) — pure aggregation.
     ``partition_id`` is the fetch stage's ``host_bucket``: the partition a
     row was fetched in, stable across runs (``spark_partition_id()`` of the
     post-shuffle plan is not)."""
     return (
         results.withColumnRenamed("host_bucket", "partition_id")
-        .groupBy("partition_id")
+        .groupBy("generation", "partition_id")
         .agg(
             F.count("*").alias("urls_in"),
             F.lit(0).cast("long").alias("deduped"),
@@ -317,7 +318,7 @@ def lineage_from(results: DataFrame, run_id: str, generation: int) -> DataFrame:
         )
         .select(
             F.lit(run_id).alias("run_id"),
-            F.lit(generation).cast("int").alias("generation"),
+            F.col("generation").cast("int"),
             F.col("partition_id").cast("int"),
             F.col("urls_in").cast("long"),
             F.col("deduped").cast("long"),

@@ -21,6 +21,8 @@ one shuffle whose results the first job reading them stores; host clocks
 (C1) ride the next stage's fetch shuffle as clock rows; robots rules are
 compiled into every frontier; the C4 guards and the manifest counts are
 ``Observation``s on jobs that already run (the counts on the staging writes).
+Generations run with whole-stage codegen off and no plan inlines the
+generation number, so a recrawl after the first compiles no code.
 
 Resume: the next run continues from max committed generation — the
 `GetProblemlist` recovery analog (main.go:132-153). Kill the process at any
@@ -67,6 +69,7 @@ from crawler_spark.operators.politeness import (
     next_host_state,
     robots_host_state,
 )
+from crawler_spark.session import session_conf
 from crawler_spark.sources.synthweb import SynthWeb
 from crawler_spark.sources.warehouse import ParquetWarehouse
 
@@ -186,9 +189,16 @@ def run_generation(
     t0 = time.time()
     # a local relation, so later plans are sized from it, not from 8 EiB
     judges_df = spark.createDataFrame(
-        pd.DataFrame(site.judge_rows(), columns=["judge", "host", "min_delay_ms"]),
-        "judge string, host string, min_delay_ms int",
+        pd.DataFrame(site.judge_rows(), columns=["judge", "host", "min_delay_ms"])
+        .assign(generation=generation),
+        "judge string, host string, min_delay_ms int, generation int",
     )
+    # not F.lit(generation): Spark writes int literals into generated code,
+    # so every plan would compile anew each generation; an array literal is
+    # passed by reference, and exploding it stamps the same value
+    def stamped(df: DataFrame) -> DataFrame:
+        return df.select("*", F.explode(F.array(F.lit(generation))).alias("generation"))
+
     gen_base = base_ts + generation * 10_000  # simulated clock epoch per gen
 
     # -- 0. host_state: prior snapshot, or robots fetch on first run (C5)
@@ -197,7 +207,7 @@ def run_generation(
         robots_res = fetch_stage(
             judges_df.select(
                 F.concat(F.lit("http://"), "host", F.lit("/robots.txt")).alias("url"),
-                "host", "judge", F.lit(generation).alias("generation"), "min_delay_ms",
+                "host", "judge", "generation", "min_delay_ms",
             ),
             fetcher, num_buckets, gen_base,
         ).localCheckpoint(eager=False)  # read twice below, fetched once
@@ -227,19 +237,15 @@ def run_generation(
     # -- 1. listing phase: page 1 → maxPage (A4/P2) → expand (S7) → parse
     first_res, first_failed = fetch(
         judges_df.select(
-            site.first_page_url().alias("url"),
-            "host",
-            "judge",
-            F.lit(generation).alias("generation"),
+            site.first_page_url().alias("url"), "host", "judge", "generation"
         )
     )
     unexpanded = Observation()
-    listing_res, listing_failed = fetch(
+    listing_res, listing_failed = fetch(stamped(
         site.listing_pages(first_res)
         .observe(unexpanded, _count(F.col("url").isNull()))
         .filter(F.col("url").isNotNull())
-        .withColumn("generation", F.lit(generation))
-    )
+    ))
     if first_failed.get["n"]:
         raise ListingPhaseError("listing page 1 fetch failed (C4)")
     if unexpanded.get["n"]:
@@ -271,25 +277,24 @@ def run_generation(
     )
 
     # -- 3. problem fetch + parse
-    prob_res, _ = fetch(batch.select(
+    prob_res, _ = fetch(stamped(batch.select(
         site.problem_url().alias("url"), "host", "judge", "pid", "title",
-        "listing_pos", "crawl_seq", F.lit(generation).alias("generation"),
-    ))
+        "listing_pos", "crawl_seq",
+    )))
     if listing_failed.get["n"]:
         raise ListingPhaseError("listing page fetch failed (C4)")
     problems = site.parse_problem(prob_res)
 
     # -- 4. asset round (T1/S14): extract → dedupe → fetch → decode → rewrite
     links = extract_image_links(problems)
-    asset_res, _ = fetch(
+    asset_res, _ = fetch(stamped(
         dedupe_assets(links).select(
             F.col("asset_url").alias("url"),
             "image_id",
             "ext",
             F.regexp_extract("asset_url", r"^https?://([^/]+)", 1).alias("host"),
-            F.lit(generation).alias("generation"),
         )
-    )
+    ))
     images = site.decode_assets(asset_res.withColumnRenamed("url", "asset_url"))
     link_status = links.join(
         asset_res.select(F.col("url").alias("asset_url"), "status"),
@@ -309,32 +314,29 @@ def run_generation(
     all_fetches = reduce(
         DataFrame.unionByName,
         [r.select("url", "host", "attempts", "status", "wall_ms", "fetched_at",
-                  "min_delay_ms") for r in fetched],
+                  "min_delay_ms", "generation") for r in fetched],
     ).coalesce(num_buckets)
     rows = {}  # images first: the asset fetch and the decode run in one job
     for table, df in (("images", images), ("problems", problems_final),
-                      ("fetch_log", fetch_log_from(all_fetches, generation))):
+                      ("fetch_log", fetch_log_from(all_fetches))):
         rows[table] = Observation()
         wh.stage_append(table, df.observe(rows[table], _count(F.lit(True))), generation)
     wh.stage_append(
         "lineage",
-        lineage_from(prob_res, run_id, generation),
+        lineage_from(prob_res, run_id),
         generation,
     )
-    wh.stage_append(
-        "listing",
-        listing.withColumn("generation", F.lit(generation)),
-        generation,
-    )
+    listed = stamped(listing)
+    wh.stage_append("listing", listed, generation)
     # A5 — seen-set refresh from the NEW listing regardless of fetch success
     # (syzoj/main.go:127-130), as a keyed upsert over the prior snapshot.
-    new_seen = listing.select(
+    new_seen = listed.select(
         "judge",
         "pid",
         canonicalize(site.problem_url()).alias("canonical_url"),
         url_hash64(site.problem_url()).alias("url_hash"),
         "title",
-        F.lit(generation).alias("last_generation"),
+        F.col("generation").alias("last_generation"),
     )
     merged_seen = (
         seen.join(new_seen.select("judge", "pid"), ["judge", "pid"], "left_anti")
@@ -442,12 +444,12 @@ def run_crawl(
     start = (wh.last_generation() + 1) if wh.last_generation() is not None else 0
     out = []
     for g in range(start, generations):
-        out.append(
-            run_generation(
-                spark, wh, web, g, limit, num_buckets, run_id,
-                seen_buckets=seen_buckets,
-            )
-        )
+        # a stage sees at most thousands of rows: compiling a class per stage
+        # costs more than the fused loop saves (expressions still compile)
+        with session_conf(spark, "spark.sql.codegen.wholeStage", "false"):
+            out.append(run_generation(
+                spark, wh, web, g, limit, num_buckets, run_id, seen_buckets=seen_buckets,
+            ))
         if seen_churn and g > 0:
             churn = (
                 wh.snapshot_diff(

@@ -9,7 +9,8 @@ stages, UTC session timezone so DuckDB oracle comparisons are stable.
 from __future__ import annotations
 
 import os
-from typing import Callable
+from contextlib import contextmanager
+from typing import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -28,21 +29,28 @@ def utc_analyzed(spark: SparkSession, build: Callable[[], DataFrame]) -> DataFra
     This replaces the earlier persistent ``conf.set`` pin, which leaked UTC
     into the grader's session for any later workload.
     """
-    prev = spark.conf.get("spark.sql.session.timeZone", None)
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
+    with session_conf(spark, "spark.sql.session.timeZone", "UTC"):
         df = build()
         df.schema  # force analysis under UTC
         return df
+
+
+@contextmanager
+def session_conf(spark: SparkSession, key: str, value: str) -> Iterator[None]:
+    """Set one session conf for the block, then restore the caller's value."""
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
     finally:
         # `prev is not None` (not truthiness): an empty-string prior value
         # must still be restored, and only a genuinely absent prior setting
-        # falls through to unset — otherwise the UTC pin would leak, the
-        # exact session-mutation bug this helper exists to remove.
+        # falls through to unset — otherwise the setting would leak into the
+        # caller's session.
         if prev is not None:
-            spark.conf.set("spark.sql.session.timeZone", prev)
+            spark.conf.set(key, prev)
         else:
-            spark.conf.unset("spark.sql.session.timeZone")
+            spark.conf.unset(key)
 
 
 def get_spark(

@@ -298,6 +298,25 @@ def test_recrawl_generation_job_budget(spark, web, tmp_path_factory):
     assert 0 < len(jobs) <= JOB_BUDGET, f"{len(jobs)} Spark jobs in one recrawl generation"
 
 
+def test_recrawl_generations_compile_no_new_code(spark, web, tmp_path_factory):
+    """Once one recrawl generation has run, the next compiles no generated
+    class: no plan carries the generation number as an inlined literal, so
+    every generated class is a codegen cache hit.  The generation turns
+    whole-stage codegen off for its own jobs only."""
+    whdir = str(tmp_path_factory.mktemp("wh_codegen"))
+    run_crawl(spark, whdir, web, generations=2, limit=LIMIT, num_buckets=4)
+    compiles = spark.sparkContext._jvm.org.apache.spark.metrics.source \
+        .CodegenMetrics.METRIC_COMPILATION_TIME()
+    before = compiles.getCount()
+    wscg = spark.conf.get("spark.sql.codegen.wholeStage", None)
+    (m,) = run_crawl(spark, whdir, web, generations=3, limit=LIMIT, num_buckets=4)
+    assert m["generation"] == 2
+    assert compiles.getCount() == before, (
+        f"{compiles.getCount() - before} classes compiled by generation 2"
+    )
+    assert spark.conf.get("spark.sql.codegen.wholeStage", None) == wscg
+
+
 def test_manifest_counts_equal_committed_rows(crawled):
     """The manifest's counts are observed on the staging writes; they must
     equal the rows each generation committed."""
