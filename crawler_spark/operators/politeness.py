@@ -8,7 +8,8 @@ a first-class stage here:
 - robots.txt bodies (fetched like any frontier row) are parsed into
   (host, robots_disallow[], crawl_delay_ms) — a tiny per-host table;
 - the frontier is filtered with a pure-column allow predicate
-  (``F.exists`` over the disallow prefixes — no Python);
+  (``F.exists`` over the disallow rules, ``*``/``$`` patterns included —
+  no Python);
 - the effective per-host delay is max(min_delay_ms, crawl_delay_ms) and the
   post-generation ``next_allowed_ts`` carries into the next generation's
   host_state (cross-batch politeness).
@@ -54,12 +55,39 @@ def parse_robots(robots_results: DataFrame) -> DataFrame:
     )
 
 
+def _rule_regex(rule) -> "F.Column":
+    """RFC 9309 §2.2.3 rule pattern as an anchored Java regex: ``*`` matches
+    any character sequence, a trailing ``$`` pins the end of the path, and
+    everything else is quoted literally (``\\Q…\\E``)."""
+    anchored = rule.endswith("$")
+    body = F.when(anchored, rule.substr(F.lit(1), F.length(rule) - 1)).otherwise(
+        rule
+    )
+    literal = F.transform(
+        F.split(body, r"\*"),
+        lambda piece: F.concat(
+            F.lit(r"\Q"),
+            F.replace(piece, F.lit(r"\E"), F.lit(r"\E\\E\Q")),
+            F.lit(r"\E"),
+        ),
+    )
+    return F.concat(
+        F.lit("^"),
+        F.array_join(literal, ".*"),
+        F.when(anchored, F.lit(r"\z")).otherwise(F.lit("")),
+    )
+
+
 def robots_allowed(url, disallow_col) -> "F.Column":
-    """Allow predicate: no disallow prefix matches the URL path."""
+    """Allow predicate: no disallow rule matches the URL path.  A plain rule
+    is a path prefix; a rule with ``*`` or a trailing ``$`` is matched as a
+    pattern (:func:`_rule_regex`)."""
     path = url_path(url)
     return ~F.exists(
         F.coalesce(disallow_col, F.array().cast("array<string>")),
-        lambda p: path.startswith(p),
+        lambda p: F.when(
+            p.contains("*") | p.endswith("$"), F.regexp_like(path, _rule_regex(p))
+        ).otherwise(path.startswith(p)),
     )
 
 

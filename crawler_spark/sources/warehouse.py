@@ -140,7 +140,6 @@ class ParquetWarehouse:
         target_file_bytes: int = 128 << 20,
         through_generation: int | None = None,
         sort_by: list[str] | None = None,
-        zorder_by: list[str] | None = None,
     ) -> dict:
         """Rewrite an append table's committed history into few
         target-sized files — Iceberg's ``rewrite_data_files``.
@@ -158,21 +157,15 @@ class ParquetWarehouse:
         a crash before the json lands leaves readers on the old view, and
         re-running restages.
 
-        Layout strategies (Iceberg's binpack / sort / z-order):
+        Layout strategies (Iceberg's binpack / sort):
         - default: coalesce — a width-only rewrite, NO shuffle;
         - ``sort_by``: range-repartition + sort, so output files hold
           DISJOINT key ranges and parquet footer min/max stats prune scans
           filtered on the sort key (one range shuffle now buys file-level
           skipping on every later read — the right trade for a table read
-          thousands of times per rewrite);
-        - ``zorder_by``: same, over the Morton interleave of >=2 roughly
-          uniform integer key columns (functions.zorder) — each file covers
-          a small RECTANGLE of the key space, so filters on ANY of the keys
-          prune, not just a lexicographic prefix."""
+          thousands of times per rewrite)."""
         import math
 
-        if sort_by and zorder_by:
-            raise ValueError("pass sort_by or zorder_by, not both")
         through = (
             self.last_generation()
             if through_generation is None
@@ -186,16 +179,7 @@ class ParquetWarehouse:
         src_files = self._data_files(table, through)
         src_bytes = sum(f.stat().st_size for f in src_files)
         n_files = max(1, math.ceil(src_bytes / target_file_bytes))
-        if zorder_by:
-            from crawler_spark.functions.zorder import zorder_expr
-
-            out = (
-                df.withColumn("__z", zorder_expr(zorder_by))
-                .repartitionByRange(n_files, "__z")
-                .sortWithinPartitions("__z")
-                .drop("__z")
-            )
-        elif sort_by:
+        if sort_by:
             out = df.repartitionByRange(n_files, *sort_by).sortWithinPartitions(
                 *sort_by
             )
@@ -223,7 +207,6 @@ class ParquetWarehouse:
             "through": through,
             "dir": dest.name,
             "sort_by": sort_by,
-            "zorder_by": zorder_by,
         }
         mtmp = self.root / table / ".compaction.json.tmp"
         mtmp.write_text(json.dumps(marker))

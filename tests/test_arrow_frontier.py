@@ -104,35 +104,3 @@ def test_dequeue_bloom_no_false_negatives(spark):
     out = dequeue_generation(frontier, seen, budget_per_host=10_000, num_buckets=8)
     got = {r.url_hash for r in out.collect()}
     assert not (got & seen_set)
-
-
-def test_bench_salting_flattens_adversarial_hot_host(spark):
-    """The bench's dequeue keying (bench._keyed — the salt_hot_hosts
-    semantics on the measured hot path) must flatten a 50%-hot-host
-    frontier: with the hot host salted into HOT_SALT (64) sub-streams over
-    128 buckets, no bucket may hold more than ~3x the uniform share of all
-    rows, while the UNSALTED host hash parks ~half the input on one bucket.
-    This pins the skew slice bench.py reports (skew_slowdown ~1.0; at salt
-    width 16 the r5 run still measured a 1.29x penalty — salts must scale
-    with bucket count x host share)."""
-    import bench
-    from crawler_spark.operators.arrow_frontier import canonicalize_stage
-
-    urls = bench._synth_urls(
-        spark, 0, 200_000, 1, 180_000, n_hosts=200, parts=8, hot_mod=2
-    )
-    canon = canonicalize_stage(urls)
-    n = canon.count()
-    buckets = (
-        bench._keyed(canon)
-        .select(F.pmod(F.col("host_hash"), F.lit(128)).alias("b"))
-        .groupBy("b").count().collect()
-    )
-    max_share = max(r["count"] for r in buckets) / n
-    assert max_share < 0.03, max_share  # ~50%/64 + background, with slack
-
-    unsalted = (
-        canon.select(F.pmod(F.xxhash64("host"), F.lit(128)).alias("b"))
-        .groupBy("b").count().collect()
-    )
-    assert max(r["count"] for r in unsalted) / n > 0.4

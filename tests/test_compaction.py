@@ -78,21 +78,24 @@ def test_expire_reclaims_superseded_dirs(spark, tmp_path):
     assert _rows(wh.read_appends("problems")) == current
 
 
-def test_zorder_expr_matches_python_reference(spark):
-    from crawler_spark.functions.zorder import zorder_expr, zorder_py
+def test_marker_with_zorder_key_still_loads(spark, tmp_path):
+    """Markers written while compaction still offered z-ordering carry a
+    ``zorder_by`` key; reads and re-compaction must accept them."""
+    import json
 
-    import random
-
-    rng = random.Random(11)
-    rows = [
-        (rng.getrandbits(16), rng.getrandbits(16)) for _ in range(50)
-    ] + [(0, 0), (65535, 65535), (-3, 7)]  # sign-extended input too
-    df = spark.createDataFrame(rows, "a long, b long")
-    got = (
-        df.withColumn("z", zorder_expr(["a", "b"])).select("a", "b", "z")
-    ).collect()
-    for r in got:
-        assert r.z == zorder_py([r.a, r.b]), (r.a, r.b)
+    wh = ParquetWarehouse(str(tmp_path), spark)
+    for g in range(2):
+        _stage_gen(spark, wh, g)
+    current = _rows(wh.read_appends("problems"))
+    wh.compact_appends("problems", target_file_bytes=1 << 30)
+    marker = tmp_path / "problems" / "_compaction.json"
+    old = dict(json.loads(marker.read_text()), zorder_by=None)
+    marker.write_text(json.dumps(old))
+    assert _rows(wh.read_appends("problems")) == current
+    m = wh.compact_appends("problems", target_file_bytes=1 << 30)
+    assert "zorder_by" not in json.loads(marker.read_text())
+    assert m["through"] == 1
+    assert _rows(wh.read_appends("problems")) == current
 
 
 def test_sorted_compaction_disjoint_file_ranges(spark, tmp_path):
@@ -134,49 +137,6 @@ def test_sorted_compaction_disjoint_file_ranges(spark, tmp_path):
     assert len(ranges) >= 3
     for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
         assert hi1 <= lo2, "sorted compaction produced overlapping files"
-
-
-def test_zorder_compaction_clusters_both_keys(spark, tmp_path):
-    """z-order compaction: every output file must cover a SMALL rectangle
-    of the (a, b) key space — per-file spans of BOTH keys well under the
-    global span — so filters on either key alone prune files."""
-    import pyarrow.parquet as pq
-
-    wh = ParquetWarehouse(str(tmp_path), spark)
-    df = spark.range(20000).selectExpr(
-        "CAST(pmod(hash(id), 65536) AS BIGINT) AS a",
-        "CAST(pmod(hash(id + 999983), 65536) AS BIGINT) AS b",
-    )
-    wh.stage_append("problems", df, 0)
-    wh.commit(0)
-    before = _rows(wh.read_appends("problems"))
-    m = wh.compact_appends(
-        "problems", target_file_bytes=24 << 10, zorder_by=["a", "b"]
-    )
-    assert m["files_after"] >= 8
-    assert _rows(wh.read_appends("problems")) == before
-
-    spans = {"a": [], "b": []}
-    for f in (tmp_path / "problems" / m["dir"]).glob("part-*.parquet"):
-        md = pq.ParquetFile(f).metadata
-        for col in ("a", "b"):
-            idx = md.schema.names.index(col)
-            mins = [
-                md.row_group(rg).column(idx).statistics.min
-                for rg in range(md.num_row_groups)
-            ]
-            maxs = [
-                md.row_group(rg).column(idx).statistics.max
-                for rg in range(md.num_row_groups)
-            ]
-            if mins:
-                spans[col].append(max(maxs) - min(mins))
-    for col in ("a", "b"):
-        assert spans[col], "no footer stats found"
-        mean_span = sum(spans[col]) / len(spans[col])
-        # 8+ z-ordered files over uniform 16-bit keys ⇒ per-file span
-        # ≈ global/2 or better on EACH axis; plain coalesce gives ≈ global.
-        assert mean_span < 0.62 * 65536, (col, mean_span)
 
 
 def test_unpublished_compaction_is_invisible(spark, tmp_path):

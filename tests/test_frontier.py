@@ -98,49 +98,6 @@ def test_subpartitioned_selection_equivalent(spark):
             assert sub == base, (limit, b)
 
 
-def test_salt_hot_hosts_bounds_bucket_skew(spark):
-    """The north-star skew kill: a host holding most of the frontier must
-    spread over up to max_salt buckets while (a) every (host, url) still
-    maps to exactly one bucket (politeness per sub-stream holds), (b) cold
-    hosts stay on a single bucket, (c) the hot host's max bucket share
-    drops by ~the salt factor."""
-    from pyspark.sql import functions as F
-
-    from crawler_spark.operators.frontier import salt_hot_hosts
-
-    n_hot, n_cold_hosts, per_cold = 60_000, 40, 500
-    rows = spark.range(n_hot).select(
-        F.lit("hot.test").alias("host"),
-        F.concat(F.lit("http://hot.test/p/"), F.col("id")).alias("url"),
-    ).unionByName(
-        spark.range(n_cold_hosts * per_cold).select(
-            F.concat(
-                F.lit("cold-"), (F.col("id") % n_cold_hosts), F.lit(".test")
-            ).alias("host"),
-            F.concat(F.lit("http://cold/p/"), F.col("id")).alias("url"),
-        )
-    )
-    out = salt_hot_hosts(
-        rows, num_buckets=64, hot_threshold=10_000, max_salt=8
-    ).cache()
-
-    # (a) deterministic: the same url always lands in the same bucket
-    assert out.groupBy("url").agg(
-        F.countDistinct("host_bucket").alias("n")
-    ).filter(F.col("n") > 1).count() == 0
-    # (b) cold hosts occupy exactly one bucket each
-    cold = out.filter(F.col("host") != "hot.test")
-    assert cold.groupBy("host").agg(
-        F.countDistinct("host_bucket").alias("n")
-    ).filter(F.col("n") > 1).count() == 0
-    # (c) the hot host spreads over >1 bucket and no single bucket holds
-    # more than ~2/max_salt of its rows (hash-uniformity slack of 2x)
-    hot = out.filter(F.col("host") == "hot.test")
-    buckets = hot.groupBy("host_bucket").count().collect()
-    assert len(buckets) > 1
-    assert max(r["count"] for r in buckets) <= 2 * n_hot // 8
-
-
 def test_host_concentration_matches_python_reference(spark):
     """The skew audit replays exactly in Python: a 50%-hot-host frontier
     reports the hot host, its ppm share, and the integer HHI bit-for-bit;

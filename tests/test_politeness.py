@@ -71,3 +71,25 @@ def test_unknown_host_passes_with_default_delay(spark):
     )
     out = apply_robots(frontier, host_state).collect()
     assert len(out) == 1 and out[0].min_delay_ms == 200
+
+
+def test_robots_wildcard_and_end_anchor_patterns(spark):
+    """RFC 9309 §2.2.3: ``*`` matches any sequence and a trailing ``$``
+    anchors the end of the path; other characters (regex metacharacters
+    included) match literally."""
+    paths = [
+        "/img/a.png", "/a/b/c.png", "/a.png.html",
+        "/private", "/private/x", "/privatex",
+        "/q+(1).txt", "/q+(1)xtxt", "/plain/prefix/1", "/open",
+    ]
+    frontier = spark.createDataFrame(
+        [(f"http://h.test{p}", "h.test") for p in paths],
+        "url string, host string",
+    )
+    host_state = spark.createDataFrame(
+        [("h.test", 100, ["/*.png$", "/private$", "/q+(1).txt", "/plain/"], 0, None)],
+        "host string, min_delay_ms int, robots_disallow array<string>, "
+        "crawl_delay_ms int, next_allowed_ts double",
+    )
+    kept = {r.url[len("http://h.test"):] for r in apply_robots(frontier, host_state).collect()}
+    assert kept == {"/a.png.html", "/private/x", "/privatex", "/q+(1)xtxt", "/open"}

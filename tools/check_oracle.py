@@ -25,8 +25,8 @@ TABLES = (
 # Output types that survive every comparator normalization.  Anything else —
 # above all HUGEINT (an uncast sum(CASE…), surfaced by Arrow as
 # decimal128(38,0) and stringified "1.0" vs Spark BIGINT's "1") — flips the
-# driver's value hash with rows and schema green; that exact bug kept
-# events_sessionize red for three rounds.  DESCRIBE every oracle and fail
+# driver's value hash with rows and schema green; that exact bug once kept
+# a registry query red for three rounds.  DESCRIBE every oracle and fail
 # locally on any non-portable output column so the class can never reach
 # the driver again.
 PORTABLE_DUCK_TYPES = {"BIGINT", "INTEGER", "VARCHAR", "DOUBLE", "BOOLEAN", "BLOB"}
