@@ -8,14 +8,14 @@ Layout
 - ``schemas``    StructTypes for frontier / url_seen / host_state / problems /
                  images / fetch_log / lineage (FIXTURES.md A1-A6).
 - ``functions/`` pure column-expression function library (URL canon, keys,
-                 hashing, parse normalization) — zero per-row Python.
+                 hashing, text) — zero per-row Python.
 - ``sources/``   synthetic web and the five real judge wire formats
                  (deterministic fetcher universes), warehouse (parquet-dir
                  table layer, Iceberg drop-in), image codecs, file ingest.
 - ``operators/`` frontier scheduling, membership (bloom/cuckoo + anti-join),
                  the Arrow dequeue kernel, fetch, parse, images, politeness,
-                 and the evaluated analytics variants: MinHash-LSH dedup and
-                 brute-force / sign-LSH / IVF similarity search.
+                 dedup (exact/minhash/simhash/jaccard/cosine), similarity
+                 search, multimodal, corpus assembly.
 - ``plans/``     the generation loop (select → fetch → parse → commit) with
                  resume-from-checkpoint, and the oracle-checked query registry.
 """

@@ -1,17 +1,31 @@
-"""MinHash + LSH near-duplicate detection for the analytics registry.
+"""Deduplication operators for the training-data pipeline.
 
 The reference deduplicates only by exact map-key idempotence
 (/root/reference/plugin/public/tools.go:239,279 — same image URL overwrites
 the same FileList key) and by the (pid,title) seen-set delta
-(tools.go:337-343).  The near-duplicate variant kept here is the one
-``minhash_estimate_eval`` scores: shingle → 16-perm minhash signature →
-4×4 banding → band-bucket self-join → candidate pairs.  The only shuffles
-are the signature groupBy and the band join (band_key is the join key, so
-the join is candidate-generating, never N²).
+(tools.go:337-343).  A 100-TB training-data pipeline needs the full dedup
+ladder, so this module adds, Spark-first:
+
+- **exact**        — hash-groupBy on md5(text); one shuffle, map-side partial
+                     aggregation collapses duplicates before they move.
+- **MinHash+LSH**  — shingle → 16-perm minhash signature → 4×4 banding →
+                     band-bucket self-join → candidate pairs.  The only
+                     shuffles are the signature groupBy and the band join
+                     (band_key is the join key, so the join is
+                     candidate-generating, never N²).
+- **SimHash**      — 32-bit simhash from per-word votes; near-pairs via the
+                     pigeonhole chunk join (4×8-bit chunks: any pair with
+                     hamming ≤ 3 shares ≥1 chunk), exact `bit_count(xor)`
+                     verify after the join.
+- **n-gram Jaccard** — exact jaccard via shingle-key self-join (inverted
+                     index join, not cartesian).
+- **embedding cosine** — blocked self-join + `zip_with`/`aggregate` dot
+                     product, all JVM-side.
 
 Everything is a pure Column expression — zero Python UDFs — so every operator
 here is whole-stage-codegen'd and mirrors 1:1 into the DuckDB oracle SQL
-(hashing is md5, compared as 60-bit integer prefixes in both engines).
+(hashing is md5-hex, min/compare on hex strings is binary collation in both
+engines).
 
 Scale notes (100 TB): shingle explosion is the big intermediate — it is
 produced and consumed map-side into the signature aggregation (one shuffle of
@@ -25,6 +39,30 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+HEX = "0123456789abcdef"
+
+
+# ---------------------------------------------------------------------------
+# exact dedup
+# ---------------------------------------------------------------------------
+
+
+def exact_dup_groups(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """Exact duplicate groups: md5(text) → (hash, n_dups, canonical doc_id).
+
+    The canonical representative is the min doc_id (deterministic).  One
+    shuffle; partial aggregation collapses dup groups map-side.
+    """
+    return (
+        docs.groupBy(F.md5(F.col(text_col)).alias("text_md5"))
+        .agg(
+            F.count("*").alias("n_dups"),
+            F.min("doc_id").alias("keep_doc_id"),
+            F.sort_array(F.collect_list("doc_id")).alias("doc_ids"),
+        )
+        .filter(F.col("n_dups") > 1)
+    )
+
 
 # ---------------------------------------------------------------------------
 # shingling
@@ -35,9 +73,10 @@ def exploded_shingles(
     docs: DataFrame,
     k: int = 3,
     text_col: str = "text",
+    extra_cols: list[str] | None = None,
     distinct: bool = True,
 ) -> DataFrame:
-    """(doc_id, shingle) rows — the inverted-index substrate.
+    """(doc_id[, extra…], shingle) rows — the inverted-index substrate.
 
     Shingling uses an overlapping-match lookahead regex
     (``(?:^|(?<=\\s))(?=(\\S+(?:\\s+\\S+){k-1}))``) + whitespace
@@ -45,10 +84,19 @@ def exploded_shingles(
     per element (~5× slower than this codegen'd regex path; measured on
     300k shingles).  ``distinct=False`` skips the per-doc dedupe shuffle for
     consumers where duplicate shingles are harmless (min-hash).
+
+    ``extra_cols`` must be PER-DOC CONSTANTS (blocking keys like lang or
+    source): the dedupe is a full-column ``distinct()`` — a pure
+    HashAggregate — rather than ``dropDuplicates([doc_id, shingle])``,
+    which Spark compiles to ``first(extra)`` per group, and ``first`` over
+    a string has no mutable buffer so the whole occurrence-exploded frame
+    gets a per-partition SortAggregate.  For doc-constant extras the two
+    are row-identical; the contract buys the hash plan.
     """
     pat = r"(?:^|(?<=\s))(?=(\S+(?:\s+\S+){" + str(k - 1) + r"}))"
     out = docs.select(
         "doc_id",
+        *(extra_cols or []),
         F.explode(F.regexp_extract_all(F.col(text_col), F.lit(pat), 1)).alias(
             "__s0"
         ),
@@ -149,23 +197,8 @@ def lsh_candidate_pairs(
     The self-join is keyed on (band_id, band_key) — an inverted-index join;
     md5 keys are uniform so there is no skew to salt.
     """
-    rows = num_perm // bands
-    band_cols = []
-    for b in range(bands):
-        # explicit cast: signature elements are BIGINT; the SQL mirror is
-        # CAST(s AS VARCHAR), identical decimal rendering in both engines
-        cols = [
-            F.col(f"s{b * rows + j}").cast("string") for j in range(rows)
-        ]
-        band_cols.append(
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.md5(F.concat_ws("|", *cols)).alias("band_key"),
-            )
-        )
-    banded = signatures.select(
-        "doc_id", "sig", F.explode(F.array(*band_cols)).alias("band")
-    ).select("doc_id", "sig", "band.band_id", "band.band_key")
+    banded = lsh_band_rows(signatures, num_perm, bands)
+
     a = banded.alias("a")
     b = banded.alias("b")
     est = F.expr(
@@ -188,3 +221,979 @@ def lsh_candidate_pairs(
         .distinct()
     )
     return pairs
+
+
+def lsh_band_rows(
+    signatures: DataFrame,
+    num_perm: int = 16,
+    bands: int = 4,
+    include_sig: bool = True,
+) -> DataFrame:
+    """(doc_id[, sig], band_id, band_key) rows — the persisted
+    inverted-index form of the LSH banding.  At corpus scale this is a
+    stored table, bucketed by (band_id, band_key) (sources/bucketed.py), so
+    incremental probes join co-located.
+
+    For a PERSISTED index pass ``include_sig=False``: carrying the full
+    num_perm-element signature in every band row stores each signature
+    ``bands``× (the dominant column, written and scanned 4× at defaults) —
+    the lean index holds only (doc_id, band_id, band_key) and
+    :func:`lsh_incremental_pairs` joins signatures back on the candidate
+    pairs, which are far fewer than index rows.  ``include_sig=True`` is
+    the inline shape :func:`lsh_candidate_pairs` consumes directly."""
+    rows = num_perm // bands
+    band_cols = []
+    for b in range(bands):
+        # explicit cast: signature elements are BIGINT; the SQL mirror is
+        # CAST(s AS VARCHAR), identical decimal rendering in both engines
+        cols = [
+            F.col(f"s{b * rows + j}").cast("string") for j in range(rows)
+        ]
+        band_cols.append(
+            F.struct(
+                F.lit(b).alias("band_id"),
+                F.md5(F.concat_ws("|", *cols)).alias("band_key"),
+            )
+        )
+    payload = ["doc_id", "sig"] if include_sig else ["doc_id"]
+    return signatures.select(
+        *payload, F.explode(F.array(*band_cols)).alias("band")
+    ).select(*payload, "band.band_id", "band.band_key")
+
+
+def lsh_incremental_pairs(
+    index: DataFrame,
+    new_sigs: DataFrame,
+    num_perm: int = 16,
+    bands: int = 4,
+    min_est_jaccard: float = 0.5,
+    old_sigs: DataFrame | None = None,
+) -> DataFrame:
+    """Incremental LSH dedup: candidate pairs involving at least one NEW
+    doc, by probing a pre-banded index — the production shape of
+    lsh_candidate_pairs at corpus scale, where re-shingling and re-joining
+    the whole corpus per crawl batch is the cost you must not pay.
+
+    ``index``: lsh_band_rows over the EXISTING corpus signatures (a stored
+    table; only appended to).  ``new_sigs``: minhash_signatures of the new
+    batch only — so the per-batch work is O(new·P) hashing plus a join whose
+    left side is the new batch's bands, not the corpus.  New-new pairs are
+    found too (the probe side joins against index ∪ new bands).  Same
+    est_jaccard and thresholds as the batch operator: the result equals
+    lsh_candidate_pairs(old ∪ new) restricted to pairs with a new side
+    (pinned by tests/test_analytics.py).
+
+    Two index shapes are accepted: a ``sig``-carrying index (inline
+    est_jaccard, no extra join) and the LEAN persisted index
+    (``lsh_band_rows(include_sig=False)``) — then ``old_sigs`` (doc_id,
+    sig) is required and signatures are joined back onto the candidate
+    pairs only, which is the at-scale shape (|pairs| ≪ |index rows|).
+    """
+    has_sig = "sig" in index.columns
+    bnew = lsh_band_rows(new_sigs, num_perm, bands, include_sig=has_sig)
+    ball = index.unionByName(bnew)
+    a, b = bnew.alias("a"), ball.alias("b")
+    cand = a.join(
+        b,
+        (F.col("a.band_id") == F.col("b.band_id"))
+        & (F.col("a.band_key") == F.col("b.band_key"))
+        & (F.col("a.doc_id") != F.col("b.doc_id")),
+    )
+    if has_sig:
+        pairs = cand.select(
+            F.least("a.doc_id", "b.doc_id").alias("a_id"),
+            F.greatest("a.doc_id", "b.doc_id").alias("b_id"),
+            F.col("a.sig").alias("a_sig"),
+            F.col("b.sig").alias("b_sig"),
+        )
+    else:
+        if old_sigs is None:
+            raise ValueError(
+                "a lean index (no sig column) requires old_sigs=(doc_id, sig)"
+            )
+        pairs = cand.select(
+            F.least("a.doc_id", "b.doc_id").alias("a_id"),
+            F.greatest("a.doc_id", "b.doc_id").alias("b_id"),
+        ).distinct()
+        all_sigs = old_sigs.select("doc_id", "sig").unionByName(
+            new_sigs.select("doc_id", "sig")
+        )
+        pairs = pairs.join(
+            all_sigs.select(
+                F.col("doc_id").alias("a_id"), F.col("sig").alias("a_sig")
+            ),
+            "a_id",
+        ).join(
+            all_sigs.select(
+                F.col("doc_id").alias("b_id"), F.col("sig").alias("b_sig")
+            ),
+            "b_id",
+        )
+    est = F.expr(
+        f"aggregate(zip_with(a_sig, b_sig, (x, y) -> CASE WHEN x = y THEN 1 ELSE 0 END), "
+        f"0, (acc, v) -> acc + v) / CAST({num_perm} AS DOUBLE)"
+    )
+    return (
+        pairs.select(
+            "a_id", "b_id", F.round(est, 4).alias("est_jaccard")
+        )
+        .filter(F.col("est_jaccard") >= min_est_jaccard)
+        .distinct()
+    )
+
+
+# ---------------------------------------------------------------------------
+# SimHash
+# ---------------------------------------------------------------------------
+
+
+def _bit_expr(hash_col: str, b: int) -> str:
+    """Spark-SQL expr for bit b (0 = MSB of first hex digit) of md5 hex."""
+    pos = b // 4 + 1
+    shift = 3 - b % 4
+    return (
+        f"((instr('{HEX}', substring({hash_col}, {pos}, 1)) - 1) >> {shift}) & 1"
+    )
+
+
+def simhash(docs: DataFrame, bits: int = 32, text_col: str = "text") -> DataFrame:
+    """32-bit SimHash: per-word md5 bit votes weighted by term count.
+
+    simhash = Σ_b [ Σ_words cnt·(2·bit_b−1) > 0 ] · 2^b.  Pure column math —
+    the per-bit sums are ``bits`` conditional aggregates over the exploded
+    words (one shuffle keyed by doc_id, partial sums map-side).
+    """
+    words = docs.select(
+        "doc_id", F.explode(F.split(F.col(text_col), r"\s+")).alias("word")
+    )
+    wc = words.groupBy("doc_id", "word").agg(F.count("*").alias("cnt"))
+    wh = wc.withColumn("h", F.md5("word"))
+    votes = [
+        F.sum(F.col("cnt") * (F.expr(_bit_expr("h", b)) * 2 - 1)).alias(f"v{b}")
+        for b in range(bits)
+    ]
+    v = wh.groupBy("doc_id").agg(*votes)
+    acc = " + ".join(
+        f"(CASE WHEN v{b} > 0 THEN 1 ELSE 0 END) * CAST({1 << b} AS BIGINT)"
+        for b in range(bits)
+    )
+    return v.select("doc_id", F.expr(acc).alias("simhash"))
+
+
+def hash_chunk_rows(
+    df: DataFrame,
+    keep_cols: list[str],
+    hash_col: str,
+    bits: int,
+    chunks: int,
+) -> DataFrame:
+    """Explode a ``bits``-bit integer hash column into its ``chunks``
+    pigeonhole chunks: one row per (input row, chunk position) carrying
+    ``chunk_id`` and ``chunk_val``.  The shared inverted-index row shape of
+    :func:`hamming_near_pairs` and the persisted incremental phash index
+    (operators.multimodal.phash_value_index).  Masking after the shift makes
+    the chunk values identical whether the engine's ``>>`` sign-extends."""
+    w = bits // chunks
+    mask = (1 << w) - 1
+    chunk_cols = [
+        F.struct(
+            F.lit(j).alias("chunk_id"),
+            F.expr(f"({hash_col} >> {j * w}) & {mask}").alias("chunk_val"),
+        )
+        for j in range(chunks)
+    ]
+    return df.select(
+        *keep_cols, hash_col, F.explode(F.array(*chunk_cols)).alias("c")
+    ).select(*keep_cols, hash_col, "c.chunk_id", "c.chunk_val")
+
+
+def hamming_near_pairs(
+    df: DataFrame,
+    id_col: str,
+    hash_col: str,
+    bits: int,
+    chunks: int,
+    max_hamming: int,
+    max_chunk_df: int | None = None,
+) -> DataFrame:
+    """Near-duplicate pairs of any ``bits``-bit hash by hamming distance.
+
+    Pigeonhole blocking: split the hash into ``chunks`` equal chunks — any
+    pair with hamming ≤ chunks−1 shares at least one chunk, so the
+    chunk-equality self-join is a complete candidate generator for
+    ``max_hamming ≤ chunks−1``; exact ``bit_count(xor)`` verifies after.
+    Masking after the shift makes the chunk values identical whether the
+    engine's ``>>`` sign-extends or not.  Shared by text SimHash
+    (:func:`simhash_near_pairs`) and image perceptual hashes
+    (operators.multimodal.phash_near_pairs).
+
+    ``max_chunk_df`` caps the inverted-list length per (chunk position,
+    chunk value): positions where a value occurs in more than that many rows
+    are dropped from candidate generation, bounding the join at
+    chunks·max_chunk_df² per value instead of quadratic in the hottest list
+    (same LOWER-BOUND semantics as ``ngram_jaccard_pairs(max_df=...)`` — a
+    pair is still found through any of its other ≤max_hamming shared-chunk
+    positions, but completeness is no longer guaranteed for pairs whose
+    every shared chunk is hot).
+    """
+    if max_hamming > chunks - 1:
+        raise ValueError("pigeonhole requires max_hamming <= chunks - 1")
+    chunked = hash_chunk_rows(df, [id_col], hash_col, bits, chunks)
+    if max_chunk_df is not None:
+        cold = (
+            chunked.groupBy("chunk_id", "chunk_val")
+            .agg(F.count("*").alias("__df"))
+            .filter(F.col("__df") <= max_chunk_df)
+            .select("chunk_id", "chunk_val")
+        )
+        chunked = chunked.join(cold, on=["chunk_id", "chunk_val"], how="left_semi")
+    a, b = chunked.alias("a"), chunked.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.chunk_id") == F.col("b.chunk_id"))
+            & (F.col("a.chunk_val") == F.col("b.chunk_val"))
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+        )
+        .select(
+            F.col(f"a.{id_col}").alias("a_id"),
+            F.col(f"b.{id_col}").alias("b_id"),
+            F.expr(f"bit_count(a.{hash_col} ^ b.{hash_col})").alias("hamming"),
+        )
+        .filter(F.col("hamming") <= max_hamming)
+        .distinct()
+    )
+
+
+def simhash_near_pairs(
+    sim: DataFrame, bits: int = 32, chunks: int = 4, max_hamming: int = 3
+) -> DataFrame:
+    """Near-duplicate pairs by SimHash hamming distance (pigeonhole-blocked
+    — see :func:`hamming_near_pairs`)."""
+    return hamming_near_pairs(
+        sim, "doc_id", "simhash", bits=bits, chunks=chunks,
+        max_hamming=max_hamming,
+    )
+
+
+# ---------------------------------------------------------------------------
+# exact n-gram Jaccard
+# ---------------------------------------------------------------------------
+
+
+def ngram_jaccard_pairs(
+    docs: DataFrame,
+    k: int = 3,
+    min_jaccard: float = 0.6,
+    text_col: str = "text",
+    block_col: str | None = None,
+    max_df: int | None = None,
+) -> DataFrame:
+    """Exact Jaccard over k-word shingle sets via inverted-index self-join.
+
+    |A∩B| from the shingle-key join (never cartesian), |A| and |B| from a
+    per-doc count, jaccard = inter / (|A|+|B|−inter).
+
+    ``block_col`` (e.g. source/domain) additionally restricts pairs to the
+    same block — the standard shard-by-domain dedup pattern.  With a small
+    shared vocabulary, hot shingles make the unblocked join quadratic in the
+    per-shingle document frequency; adding the block key to the join both
+    bounds that and lets the same column pre-partition the table at scale.
+
+    ``max_df`` is the corpus-scale skew guard: shingles appearing in more
+    than ``max_df`` docs (boilerplate — headers, license blurbs) are dropped
+    from the JOIN side only, capping every inverted list at max_df (the join
+    cost becomes Σ min(df, max_df)² instead of Σ df²).  Doc sizes stay exact,
+    so the reported jaccard is a LOWER BOUND of the true value (inter can
+    only shrink, and j is monotone in inter) — no false positives, and
+    exact for pairs whose shared shingles are all rare (near-duplicate pairs
+    share their *distinctive* text; pinned by tests/test_analytics.py).
+    """
+    sh = exploded_shingles(
+        docs, k, text_col, extra_cols=[block_col] if block_col else None
+    )
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
+    join_sh = sh
+    if max_df is not None:
+        rare = (
+            sh.groupBy("shingle")
+            .agg(F.count("*").alias("__df"))
+            .filter(F.col("__df") <= max_df)
+            .select("shingle")
+        )
+        join_sh = sh.join(rare, "shingle")
+    a, b = join_sh.alias("a"), join_sh.alias("b")
+    cond = (F.col("a.shingle") == F.col("b.shingle")) & (
+        F.col("a.doc_id") < F.col("b.doc_id")
+    )
+    if block_col:
+        cond = cond & (F.col(f"a.{block_col}") == F.col(f"b.{block_col}"))
+    inter = (
+        a.join(b, cond)
+        .groupBy(
+            F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id")
+        )
+        .agg(F.count("*").alias("inter"))
+    )
+    sa = sizes.select(F.col("doc_id").alias("a_id"), F.col("n_sh").alias("na"))
+    sb = sizes.select(F.col("doc_id").alias("b_id"), F.col("n_sh").alias("nb"))
+    jac = F.round(
+        F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")).cast("double"), 4
+    )
+    return (
+        inter.join(sa, "a_id")
+        .join(sb, "b_id")
+        .select("a_id", "b_id", jac.alias("jaccard"))
+        .filter(F.col("jaccard") >= min_jaccard)
+    )
+
+
+# ---------------------------------------------------------------------------
+# duplicate-cluster assignment (connected components over dup pairs)
+# ---------------------------------------------------------------------------
+
+
+def connected_components(
+    pairs: DataFrame, max_iter: int = 20
+) -> DataFrame:
+    """Cluster duplicate pairs into components: (doc_id, cluster_id) where
+    cluster_id = min doc_id reachable through the pair graph.
+
+    Iterative min-label propagation (the standard Spark shape for CC /
+    label propagation — a driver loop over DataFrame joins, converging in
+    O(graph diameter) rounds; near-dup clusters are shallow so 2-3 rounds
+    in practice).  Each round: label(v) ← min(label(v), min label of
+    neighbors); stop when no label changed.  Deterministic, so the DuckDB
+    recursive-CTE oracle computes identical labels.
+
+    Scale notes: each round is one shuffle (groupBy doc over the edge
+    list); the edge list stays fixed and small relative to the corpus
+    (bounded by the candidate-pair generator, not N²).  For graphs with
+    deep chains use the large-star/small-star variant; dup clusters don't
+    need it.
+    """
+    from pyspark import StorageLevel
+
+    # the edge list is re-joined every round — persist it once so the loop
+    # never recomputes the (possibly expensive) pair-generation upstream
+    edges = (
+        pairs.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
+        .unionByName(
+            pairs.select(
+                F.col("b_id").alias("src"), F.col("a_id").alias("dst")
+            )
+        )
+        .distinct()
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    labels = (
+        edges.select(F.col("src").alias("doc_id"))
+        .distinct()
+        .withColumn("cluster_id", F.col("doc_id"))
+    )
+    for _ in range(max_iter):
+        neighbor_min = (
+            edges.join(
+                labels.withColumnRenamed("doc_id", "dst"), on="dst"
+            )
+            .groupBy(F.col("src").alias("doc_id"))
+            .agg(F.min("cluster_id").alias("nbr_min"))
+        )
+        new_labels = (
+            labels.join(neighbor_min, on="doc_id", how="left")
+            .select(
+                "doc_id",
+                F.least(
+                    "cluster_id", F.coalesce("nbr_min", "cluster_id")
+                ).alias("cluster_id"),
+            )
+        )
+        changed = (
+            new_labels.alias("n")
+            .join(labels.alias("o"), on="doc_id")
+            .filter(F.col("n.cluster_id") != F.col("o.cluster_id"))
+            .limit(1)
+            .count()
+        )
+        labels = new_labels.localCheckpoint(eager=True)
+        if changed == 0:
+            break
+    return labels
+
+
+def connected_components_star(
+    pairs: DataFrame, max_iter: int = 12
+) -> DataFrame:
+    """Connected components via alternating large-star / small-star
+    (Kiveris et al., "Connected Components in MapReduce and Beyond") —
+    the deep-chain escape hatch :func:`connected_components`'s docstring
+    promises: min-label propagation needs O(diameter) rounds, this
+    converges in O(log² n) rounds regardless of chain depth, so a
+    pathological duplicate chain (A~B~C~…) costs ~8 rounds instead of
+    thousands.  Same output contract: (doc_id, cluster_id=min reachable
+    doc_id).  Each phase is one shuffle over the current edge list;
+    localCheckpoint per round keeps the plan shallow.
+    """
+    from pyspark import StorageLevel
+
+    def sym(e: DataFrame) -> DataFrame:
+        return e.unionByName(
+            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
+        )
+
+    def large_star(e: DataFrame) -> DataFrame:
+        # for each u: m = min(N(u) ∪ {u}); emit (v, m) for v ∈ N(u), v > u
+        nbrs = sym(e)
+        mins = nbrs.groupBy("u").agg(
+            F.least(F.min("v"), F.first("u")).alias("m")
+        )
+        return (
+            nbrs.join(mins, "u")
+            .filter(F.col("v") > F.col("u"))
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+            .distinct()
+        )
+
+    def small_star(e: DataFrame) -> DataFrame:
+        # orient u > v; for each u: m = min(N(u) ∪ {u}) = min(v);
+        # emit (x, m) for x ∈ N(u) ∪ {u}, x ≠ m
+        o = (
+            e.select(
+                F.greatest("u", "v").alias("gu"), F.least("u", "v").alias("gv")
+            )
+            .filter(F.col("gu") != F.col("gv"))
+            .select(F.col("gu").alias("u"), F.col("gv").alias("v"))
+            .distinct()
+        )
+        mins = o.groupBy("u").agg(F.min("v").alias("m"))
+        from_nbrs = (
+            o.join(mins, "u")
+            .filter(F.col("v") != F.col("m"))
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+        )
+        from_centers = mins.select(F.col("u"), F.col("m").alias("v"))
+        return from_nbrs.unionByName(from_centers).distinct()
+
+    edges = (
+        pairs.select(F.col("a_id").alias("u"), F.col("b_id").alias("v"))
+        .filter(F.col("u") != F.col("v"))
+        .distinct()
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    # checkpointed so the final join's plan scans a materialized node set
+    # instead of re-deriving the whole candidate-pair lineage
+    nodes = (
+        sym(edges)
+        .select(F.col("u").alias("doc_id"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+
+    def signature(e: DataFrame) -> tuple:
+        # one cheap agg instead of two exceptAll shuffles: the edge set is
+        # stable iff (count, XOR of xxhash64(u,v)) is stable (bit_xor never
+        # overflows under ANSI and is order-independent; an exact XOR
+        # collision across rounds is ~2^-64 — ignored)
+        row = e.agg(
+            F.count("*").alias("n"),
+            F.expr("bit_xor(xxhash64(u, v))").alias("h"),
+        ).first()
+        return (row.n, row.h)
+
+    cur = edges
+    prev_sig = None
+    converged = False
+    for _ in range(max_iter):
+        cur = small_star(large_star(cur)).localCheckpoint(eager=True)
+        sig = signature(cur)
+        if sig == prev_sig:
+            converged = True
+            break
+        prev_sig = sig
+    # at the fixed point every edge is (node, component-min)
+    labels = cur.select(
+        F.col("u").alias("doc_id"), F.col("v").alias("cluster_id")
+    )
+    if not converged:
+        # An unconverged edge set can hold several (doc_id, label) rows with
+        # conflicting non-minimum labels — never emit that silently: collapse
+        # to min(label) per doc (correct within each partially-merged piece)
+        # and tell the caller to raise max_iter.
+        import warnings
+
+        warnings.warn(
+            f"connected_components_star: no fixed point after {max_iter} "
+            "rounds — labels collapsed to min per doc_id; raise max_iter "
+            "(rounds needed grow ~log²(n))",
+            RuntimeWarning,
+            stacklevel=2,
+        )
+        labels = labels.groupBy("doc_id").agg(
+            F.min("cluster_id").alias("cluster_id")
+        )
+    return (
+        nodes.join(labels, "doc_id", "left")
+        .select(
+            "doc_id", F.coalesce("cluster_id", "doc_id").alias("cluster_id")
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# embedding-cosine near-dup
+# ---------------------------------------------------------------------------
+
+
+def cosine_expr(a: str, b: str) -> F.Column:
+    """cos(a,b) as dot/(‖a‖·‖b‖) — zip_with + aggregate folds, JVM-side,
+    double precision, left-to-right order (matches the DuckDB oracle)."""
+    def dot(x: str, y: str) -> str:
+        return (
+            f"aggregate(zip_with({x}, {y}, (p, q) -> CAST(p AS DOUBLE) * CAST(q AS DOUBLE)), "
+            f"CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
+        )
+
+    return F.expr(f"{dot(a, b)} / (sqrt({dot(a, a)}) * sqrt({dot(b, b)}))")
+
+
+def embedding_near_pairs(
+    emb: DataFrame,
+    min_cosine: float = 0.9,
+    block_col: str = "label",
+) -> DataFrame:
+    """Embedding near-duplicate pairs, blocked self-join on ``block_col``.
+
+    Blocking bounds the pair count to Σ block² instead of N²; at 100 TB the
+    block column is a coarse quantizer (IVF cell / LSH bucket — see
+    similarity.sign_lsh_bucket), here any low-cardinality partition key.
+
+    Norms are computed ONCE per vector before the join (N folds), so each
+    pair evaluates a single dot product instead of three — same result
+    bit-for-bit (the norm fold is unchanged), 3× less codegen work on the
+    O(pairs) side.
+    """
+    dot_self = (
+        "aggregate(zip_with(embedding, embedding, "
+        "(p, q) -> CAST(p AS DOUBLE) * CAST(q AS DOUBLE)), "
+        "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
+    )
+    normed = emb.withColumn("norm", F.expr(f"sqrt({dot_self})"))
+    a = normed.alias("a")
+    b = normed.alias("b")
+    dot_ab = (
+        "aggregate(zip_with(a.embedding, b.embedding, "
+        "(p, q) -> CAST(p AS DOUBLE) * CAST(q AS DOUBLE)), "
+        "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
+    )
+    cos = F.round(F.expr(dot_ab) / (F.col("a.norm") * F.col("b.norm")), 4)
+    return (
+        a.join(
+            b,
+            (F.col(f"a.{block_col}") == F.col(f"b.{block_col}"))
+            & (F.col("a.vec_id") < F.col("b.vec_id")),
+        )
+        .select(
+            F.col("a.vec_id").alias("a_id"),
+            F.col("b.vec_id").alias("b_id"),
+            cos.alias("cosine"),
+        )
+        .filter(F.col("cosine") >= min_cosine)
+    )
+
+
+def _lower_tokens(text_col: str) -> F.Column:
+    """Whitespace tokens of lower(trim(text)) — the shared tokenizer for
+    every token-window operator below (and their DuckDB oracles)."""
+    return F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
+
+
+def _gram_hash_sql(n: int, toks: str = "__toks", i: str = "i") -> str:
+    """60-bit md5-prefix hash of the ``n``-gram starting at 1-based token
+    index ``i`` — THE parity-critical gram-hash definition every DuckDB
+    oracle mirrors literally.  Single-sourced: a change to the prefix
+    width or join delimiter lands in every token-window operator at once
+    instead of silently drifting between four inlined copies."""
+    return (
+        f"CAST(conv(substring(md5(array_join("
+        f"slice({toks}, {i}, {n}), ' ')), 1, 15), 16, 10) AS BIGINT)"
+    )
+
+
+def _gram_hashes_expr(n: int, with_pos: bool = False) -> str:
+    """``transform(...)`` producing the array of window hashes over
+    ``__toks`` — plain BIGINTs, or (pos, gram) structs for positional
+    consumers (ExactSubstr removal)."""
+    body = (
+        f"struct(i AS pos, {_gram_hash_sql(n)} AS gram)"
+        if with_pos
+        else _gram_hash_sql(n)
+    )
+    return f"transform(sequence(1, size(__toks) - {n - 1}), i -> {body})"
+
+
+def duplicated_ngram_flags(
+    docs: DataFrame,
+    n: int = 8,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """Exact-substring duplication flags at n-gram granularity (the
+    ExactSubstr criterion of Lee et al. 2022, "Deduplicating Training Data
+    Makes Language Models Better", discretized to token n-grams): a
+    document is flagged when ANY of its n-token windows also appears in
+    another document.
+
+    Shape: windows hash to 60-bit longs map-side (codegen'd md5 over the
+    joined slice), per-doc DISTINCT windows bound the index to unique
+    (doc, gram) pairs, the document-frequency count is one hash aggregate
+    with map-side partials, and only (gram, df) longs flow through the
+    probe join — the inverted-index shape every corpus-scale substring
+    dedup builds.  Suffix-array spans collapse to this at fixed n; full
+    variable-length spans are a merge of adjacent flagged windows.
+
+    Returns one row per input document: (id, n_grams, n_dup_grams,
+    flagged) — n_grams counts the doc's DISTINCT windows; docs shorter
+    than ``n`` tokens have zero windows and are never flagged.
+    """
+    t = docs.select(F.col(id_col), _lower_tokens(text_col).alias("__toks"))
+    # sequence(a, b) steps DOWNWARD when a > b, so short docs must be
+    # filtered out before building the window range, not clamped inside it
+    grams = (
+        t.filter(F.size("__toks") >= n)
+        .select(
+            id_col,
+            F.explode(F.expr(_gram_hashes_expr(n))).alias("gram"),
+        )
+        .distinct()
+    )
+    df_counts = grams.groupBy("gram").agg(F.count("*").alias("__df"))
+    per_doc = (
+        grams.join(df_counts, "gram")
+        .groupBy(id_col)
+        .agg(
+            F.count("*").cast("long").alias("n_grams"),
+            F.sum((F.col("__df") >= 2).cast("long")).cast("long").alias(
+                "n_dup_grams"
+            ),
+        )
+    )
+    return (
+        docs.select(id_col)
+        .join(per_doc, id_col, "left")
+        .select(
+            id_col,
+            F.coalesce("n_grams", F.lit(0)).cast("long").alias("n_grams"),
+            F.coalesce("n_dup_grams", F.lit(0)).cast("long").alias(
+                "n_dup_grams"
+            ),
+            (F.coalesce("n_dup_grams", F.lit(0)) > 0).alias("flagged"),
+        )
+    )
+
+
+def duplicated_ngram_removal(
+    docs: DataFrame,
+    n: int = 8,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """Exact-substring REMOVAL at n-gram granularity — the second half of
+    Lee et al. 2022 ExactSubstr (``duplicated_ngram_flags`` only flags):
+    every non-first occurrence of a duplicated n-token window is removed,
+    and the document is rebuilt from the surviving words.  "First" is the
+    corpus-global minimum (doc_id, position) occurrence of the window, so
+    exactly one copy of every duplicated span survives — the original
+    keeps its text, later copies lose it, the Lee et al. contract.
+
+    Shape: positional window hashes are 60-bit longs built map-side
+    (codegen'd md5 over the joined slice); the first-occurrence table is
+    one hash aggregate of (gram → min struct) with map-side combine; the
+    probe join moves only (gram, doc, pos) longs; covered word indexes
+    explode to at most n rows per duplicated window and collapse with a
+    distinct + per-doc collect.  Per-doc rebuild cost is O(words x
+    removed-set lookup) inside one row — bounded by document length, never
+    corpus size.
+
+    Returns one row per input document: (id, n_words, n_removed,
+    text_clean) — text_clean is the lowercased surviving words joined by
+    single spaces (tokenization is lossy by design, as in the flags op).
+    """
+    t = docs.select(F.col(id_col), _lower_tokens(text_col).alias("__toks"))
+    # sequence(a, b) steps DOWNWARD when a > b — filter short docs first
+    pos_grams = (
+        t.filter(F.size("__toks") >= n)
+        .select(
+            id_col,
+            F.explode(F.expr(_gram_hashes_expr(n, with_pos=True))).alias("__s"),
+        )
+        .select(id_col, F.col("__s.pos").alias("pos"), F.col("__s.gram").alias("gram"))
+    )
+    firsts = pos_grams.groupBy("gram").agg(
+        F.min(F.struct(F.col(id_col).alias("d"), F.col("pos").alias("p"))).alias(
+            "__f"
+        )
+    )
+    dup_occurrences = pos_grams.join(firsts, "gram").filter(
+        ~(
+            (F.col(id_col) == F.col("__f.d"))
+            & (F.col("pos") == F.col("__f.p"))
+        )
+    )
+    # collect_set in ONE doc-keyed aggregate: a separate distinct() before
+    # the groupBy would shuffle the exploded (doc, rm_idx) stream twice —
+    # at the op's own 100-TB framing that stream is n× the duplicated
+    # window count, so the redundant exchange would dominate the stage
+    covered = (
+        dup_occurrences.select(
+            id_col,
+            F.explode(F.expr(f"sequence(pos, pos + {n - 1})")).alias("rm_idx"),
+        )
+        .groupBy(id_col)
+        .agg(F.array_sort(F.collect_set("rm_idx")).alias("__rm"))
+    )
+    out = (
+        t.join(covered, id_col, "left")
+        .withColumn(
+            "__rm", F.coalesce("__rm", F.expr("CAST(array() AS ARRAY<INT>)"))
+        )
+        .select(
+            id_col,
+            F.size("__toks").cast("long").alias("n_words"),
+            F.size("__rm").cast("long").alias("n_removed"),
+            F.expr(
+                "array_join(filter(transform(sequence(1, size(__toks)), i -> "
+                "IF(array_contains(__rm, i), NULL, __toks[i - 1])), "
+                "x -> x IS NOT NULL), ' ')"
+            ).alias("text_clean"),
+        )
+    )
+    return out
+
+
+# ---------------------------------------------------------------------------
+# paragraph-level dedup (CCNet)
+# ---------------------------------------------------------------------------
+
+
+def paragraph_dedup(
+    docs: DataFrame,
+    para_words: int = 8,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """CCNet-style paragraph-level deduplication (Wenzek et al. 2020,
+    "CCNet: Extracting High Quality Monolingual Datasets from Web Crawl
+    Data", §3.1 "Deduplication"): hash every paragraph, keep only the
+    FIRST corpus occurrence of each distinct paragraph, and rebuild each
+    document from its surviving paragraphs.  This is the pass that strips
+    boilerplate (nav bars, cookie banners, footers) repeated across pages
+    — duplicated *spans*, where document-level dedup sees distinct docs.
+
+    Paragraph boundary: fixed ``para_words``-word windows over the
+    whitespace token stream (the corpus is single-line text; on real crawl
+    output the split would be ``\\n`` and the rest of the plan is
+    unchanged).  First occurrence is the lexicographic min of
+    (doc_id, idx) over each paragraph hash — deterministic and
+    engine-independent.
+
+    Shape at 100 TB: paragraphs explode map-side; the first-occurrence
+    pass is ``groupBy(hash).agg(min(struct))`` — map-side combinable, so
+    a boilerplate paragraph repeated billions of times still contributes
+    one row per input partition to the exchange; the join back on the
+    hash is a shuffled hash join whose only skew risk (a hot boilerplate
+    hash) AQE's skew-join splitting handles; reassembly is one
+    ``groupBy(doc_id)``.  Three hash-partitioned shuffles total, no
+    sort-aggregates, URL/text strings cross an exchange only once
+    (the kept-paragraph reassembly).
+
+    Returns one row per input document:
+    (id, n_paras, n_dropped, text_clean) — ``text_clean`` is the
+    surviving paragraphs joined in original order ('' when every
+    paragraph of the doc occurred earlier somewhere else, i.e. the doc
+    is pure boilerplate/copy).
+    """
+    if para_words < 1:
+        raise ValueError(f"para_words must be >= 1, got {para_words}")
+    w = para_words
+    t = docs.select(id_col, F.split(F.col(text_col), r"\s+").alias("__w"))
+    # sequence(a, b) steps DOWNWARD when a > b — guard the empty-array case
+    # before building the window range (split never returns an empty array,
+    # but the guard keeps the plan safe for arbitrary upstream frames)
+    paras = (
+        t.filter(F.size("__w") >= 1)
+        .select(
+            id_col,
+            F.explode(
+                F.expr(
+                    f"transform(sequence(0, CAST(ceil(size(__w) / CAST({w} "
+                    f"AS DOUBLE)) AS INT) - 1), i -> struct(i AS idx, "
+                    f"array_join(slice(__w, i * {w} + 1, {w}), ' ') AS para))"
+                )
+            ).alias("__p"),
+        )
+        .select(
+            id_col,
+            F.col("__p.idx").cast("long").alias("idx"),
+            F.col("__p.para").alias("para"),
+        )
+        .withColumn("h", F.md5("para"))
+    )
+    firsts = paras.groupBy("h").agg(
+        F.min(F.struct(F.col(id_col), F.col("idx"))).alias("__first")
+    )
+    joined = paras.join(firsts, "h").withColumn(
+        "__kept",
+        (F.col(id_col) == F.col(f"__first.{id_col}"))
+        & (F.col("idx") == F.col("__first.idx")),
+    )
+    return joined.groupBy(id_col).agg(
+        F.count("*").cast("long").alias("n_paras"),
+        F.sum((~F.col("__kept")).cast("long")).cast("long").alias("n_dropped"),
+        F.coalesce(
+            F.array_join(
+                F.transform(
+                    F.sort_array(
+                        F.collect_list(
+                            F.when(
+                                F.col("__kept"),
+                                F.struct(F.col("idx"), F.col("para")),
+                            )
+                        )
+                    ),
+                    lambda x: x["para"],
+                ),
+                " ",
+            ),
+            F.lit(""),
+        ).alias("text_clean"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# soft deduplication (commonness reweighting)
+# ---------------------------------------------------------------------------
+
+
+def ngram_commonness_weights(
+    docs: DataFrame,
+    n: int = 8,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """Soft deduplication by n-gram commonness (He et al. 2024, "SoftDedup:
+    an Efficient Data Reweighting Method for Speeding Up Language Model
+    Pre-training"): instead of REMOVING duplicated documents, DOWN-WEIGHT
+    them in the sampling distribution proportionally to how duplicated
+    their content is — removal loses the unique remainder of a
+    partially-duplicated document; reweighting keeps it at reduced mass.
+
+    Commonness of a document = the mean corpus occurrence count of its
+    n-token windows (a doc whose every window appears 3x corpus-wide has
+    commonness 3), carried as the scaled integer
+
+        commonness_e4 = (10^4 * sum_window_counts) div n_windows  (>= 10^4)
+
+    and the sampling weight is its exact integer reciprocal
+
+        weight_e6 = 10^10 div commonness_e4   (== 10^6 / commonness),
+
+    so a never-duplicated document keeps weight 10^6 and an everywhere-
+    duplicated one is attenuated 1/commonness — the paper's reweighting
+    direction with integer-only arithmetic (engine-identical hashes).
+    Documents shorter than ``n`` tokens carry no duplication evidence and
+    keep full weight.
+
+    Shape at 100 TB: positional window hashes are 60-bit longs built
+    map-side; the global occurrence count is ONE hash aggregate with
+    map-side combine (the ExactSubstr inverted-index shape); the join back
+    moves only (gram, count) longs; the per-doc sum is a second narrow
+    aggregate.  No N^2 stage, no windows over the corpus.
+    """
+    t = docs.select(F.col(id_col), _lower_tokens(text_col).alias("__toks"))
+    # sequence(a, b) steps DOWNWARD when a > b — filter short docs first
+    grams = t.filter(F.size("__toks") >= n).select(
+        id_col,
+        F.explode(F.expr(_gram_hashes_expr(n))).alias("gram"),
+    )
+    counts = grams.groupBy("gram").agg(F.count("*").cast("long").alias("__c"))
+    per_doc = (
+        grams.join(counts, "gram")
+        .groupBy(id_col)
+        .agg(
+            F.count("*").cast("long").alias("n_windows"),
+            F.sum("__c").cast("long").alias("__sum_c"),
+        )
+    )
+    return (
+        docs.select(id_col)
+        .join(per_doc, id_col, "left")
+        .select(
+            id_col,
+            F.coalesce("n_windows", F.lit(0)).cast("long").alias("n_windows"),
+            F.expr(
+                "CAST(CASE WHEN n_windows IS NULL OR n_windows = 0 THEN 10000 "
+                "ELSE 10000 * __sum_c div n_windows END AS BIGINT)"
+            ).alias("commonness_e4"),
+        )
+        .withColumn(
+            "weight_e6",
+            F.expr("CAST(10000000000 div commonness_e4 AS BIGINT)"),
+        )
+    )
+
+
+def winnowing_fingerprint_pairs(
+    docs: DataFrame,
+    k: int = 4,
+    w: int = 4,
+    max_df: int = 50,
+    min_shared: int = 3,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """Winnowing document fingerprints (Schleimer, Wilkerson, Aiken 2003 —
+    the MOSS algorithm): hash every k-token window, then keep only the
+    MINIMUM hash of each sliding window of ``w`` consecutive gram hashes.
+    The selected values are the document's fingerprint set; the winnowing
+    guarantee is that any shared token run of length >= w + k - 1 puts at
+    least one IDENTICAL fingerprint in both documents, while storing only
+    ~2/(w+1) of the gram hashes — local, position-independent selection,
+    unlike MinHash's global signature.
+
+    Shape at scale: gram hashes are the map-side 60-bit md5-prefix longs
+    of ``duplicated_ngram_flags``; the window minimum is a PARTITIONED
+    window (one shuffle keyed by doc id — never a global sort) over
+    (doc, pos, hash) longs; the fingerprint inverted index joins on 8-byte
+    values with a ``max_df`` hot-list cap (boilerplate fingerprints are
+    dropped exactly like ngram_jaccard_pairs' hot shingles) so no posting
+    list explodes.  Output: candidate pairs (a_id, b_id, n_shared) with
+    n_shared >= ``min_shared`` shared fingerprints.
+    """
+    from pyspark.sql import Window
+
+    t = docs.select(F.col(id_col), _lower_tokens(text_col).alias("__toks"))
+    grams = t.filter(F.size("__toks") >= k).select(
+        id_col,
+        F.posexplode(F.expr(_gram_hashes_expr(k))).alias("pos", "h"),
+    )
+    win = Window.partitionBy(id_col).orderBy("pos")
+    fps = (
+        grams.select(
+            id_col,
+            F.min("h").over(win.rowsBetween(-(w - 1), 0)).alias("fp"),
+            F.row_number().over(win).alias("__rn"),
+        )
+        .filter(F.col("__rn") >= w)  # full windows only
+        .select(id_col, "fp")
+        .distinct()
+    )
+    dfc = fps.groupBy("fp").agg(F.count(F.lit(1)).alias("__df"))
+    idx = fps.join(dfc, "fp").filter(F.col("__df") <= max_df).select(id_col, "fp")
+    a = idx.select(F.col(id_col).alias("a_id"), "fp")
+    b = idx.select(F.col(id_col).alias("b_id"), "fp")
+    return (
+        a.join(b, (a["fp"] == b["fp"]) & (F.col("a_id") < F.col("b_id")))
+        .groupBy("a_id", "b_id")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
+        .filter(F.col("n_shared") >= min_shared)
+    )
