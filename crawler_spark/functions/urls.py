@@ -46,8 +46,10 @@ def url_scheme(col: Column) -> Column:
     return F.lower(F.regexp_extract(col, r"^([a-zA-Z][a-zA-Z0-9+.-]*)://", 1))
 
 
-def url_path(col: Column) -> Column:
-    return F.regexp_extract(col, r"^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*([^?#]*)", 1)
+def url_target(col: Column) -> Column:
+    """Path plus ``?query`` of an absolute URL, fragment dropped: what robots
+    rules are matched against (RFC 9309 §2.2.2)."""
+    return F.regexp_extract(col, r"^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*([^#]*)", 1)
 
 
 def canonicalize(col: Column) -> Column:

@@ -22,7 +22,7 @@ import json
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from crawler_spark.functions.urls import url_path
+from crawler_spark.functions.urls import url_target
 
 
 def parse_robots(robots_results: DataFrame) -> DataFrame:
@@ -57,8 +57,9 @@ def parse_robots(robots_results: DataFrame) -> DataFrame:
 
 def _rule_regex(rule) -> "F.Column":
     """RFC 9309 §2.2.3 rule pattern as an anchored Java regex: ``*`` matches
-    any character sequence, a trailing ``$`` pins the end of the path, and
-    everything else is quoted literally (``\\Q…\\E``)."""
+    any character sequence, a trailing ``$`` pins the end of the path and
+    query, and everything else is quoted literally (``\\Q…\\E``). A rule
+    without either is a plain prefix."""
     anchored = rule.endswith("$")
     body = F.when(anchored, rule.substr(F.lit(1), F.length(rule) - 1)).otherwise(
         rule
@@ -79,15 +80,12 @@ def _rule_regex(rule) -> "F.Column":
 
 
 def robots_allowed(url, disallow_col) -> "F.Column":
-    """Allow predicate: no disallow rule matches the URL path.  A plain rule
-    is a path prefix; a rule with ``*`` or a trailing ``$`` is matched as a
-    pattern (:func:`_rule_regex`)."""
-    path = url_path(url)
+    """Allow predicate: no disallow rule (:func:`_rule_regex`) matches the
+    URL's path and query."""
+    target = url_target(url)
     return ~F.exists(
         F.coalesce(disallow_col, F.array().cast("array<string>")),
-        lambda p: F.when(
-            p.contains("*") | p.endswith("$"), F.regexp_like(path, _rule_regex(p))
-        ).otherwise(path.startswith(p)),
+        lambda p: F.regexp_like(target, _rule_regex(p)),
     )
 
 

@@ -1027,35 +1027,6 @@ def test_hamming_near_pairs_randomized_completeness(spark):
     assert got == brute and len(brute) >= 8
 
 
-def test_ivf_candidates_share_query_cell(spark):
-    """ivf_topk only returns vectors assigned to the query's own cell, and
-    inside the cell it is the exact cosine ranking."""
-    from crawler_spark.plans.analytics_queries import _queries_df
-    from crawler_spark.operators.similarity import ivf_assign, ivf_topk
-
-    e = spark.read.parquet(f"{SF}/embeddings.parquet")
-    edf = e.select(
-        "vec_id",
-        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("embedding"),
-    )
-    cent = edf.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("centroid_id"),
-        F.col("embedding").alias("c_embedding"),
-    )
-    out = ivf_topk(edf, _queries_df(spark, SF), cent, k=5).collect()
-    cell = {r.vec_id: r.cell for r in ivf_assign(edf, cent).collect()}
-    emb = {
-        r.vec_id: np.array(r.embedding, dtype=np.float64) for r in e.collect()
-    }
-    assert out, "IVF returned nothing"
-    by_q: dict[int, list[int]] = {}
-    for r in sorted(out, key=lambda r: (r.query_id, r.rank)):
-        assert cell[r.vec_id] == cell[r.query_id]
-        by_q.setdefault(r.query_id, []).append(r.vec_id)
-    for qid, got in by_q.items():
-        in_cell = {v: x for v, x in emb.items() if cell[v] == cell[qid]}
-        assert got == _np_topk(in_cell, qid, 5)
-
 def test_ivf_assign_zero_norm_vector_deterministic(spark):
     """ADVICE-r3: a zero-norm embedding has no cosine; both ivf_assign paths
     must pin it to the LOWEST centroid_id (cos treated as -1) instead of

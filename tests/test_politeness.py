@@ -75,21 +75,41 @@ def test_unknown_host_passes_with_default_delay(spark):
 
 def test_robots_wildcard_and_end_anchor_patterns(spark):
     """RFC 9309 §2.2.3: ``*`` matches any sequence and a trailing ``$``
-    anchors the end of the path; other characters (regex metacharacters
-    included) match literally."""
-    paths = [
-        "/img/a.png", "/a/b/c.png", "/a.png.html",
-        "/private", "/private/x", "/privatex",
-        "/q+(1).txt", "/q+(1)xtxt", "/plain/prefix/1", "/open",
-    ]
+    anchors the end; rules match the path with its query, and every other
+    character (regex metacharacters and ``\\E`` included) matches literally."""
+    paths = {
+        "h.test": [
+            "/img/a.png", "/a/b/c.png", "/a.png.html", "/a.png?x=1",
+            "/private", "/private/x", "/privatex", "/private?x=1",
+            "/q+(1)ab.txt", "/qq1abxtxt", "/q+(1)abxtxt",
+            "/e\\Eq.z", "/eq.z", "/e\\E",
+            "/open?sid=7", "/open?x=1&sid=7", "/open?x=1",
+            "/plain/prefix/1", "/open",
+        ],
+        "g.test": ["/a?b", "/a", "/?"],
+    }
     frontier = spark.createDataFrame(
-        [(f"http://h.test{p}", "h.test") for p in paths],
+        [(f"http://{h}{p}#frag", h) for h, ps in paths.items() for p in ps],
         "url string, host string",
     )
     host_state = spark.createDataFrame(
-        [("h.test", 100, ["/*.png$", "/private$", "/q+(1).txt", "/plain/"], 0, None)],
+        [
+            ("h.test", 100, ["/*.png$", "/private$", "/q+(1)*.txt$",
+                             "/e\\E*z", "/*?sid=", "/*&sid=", "/plain/"], 0, None),
+            ("g.test", 100, ["/*?"], 0, None),
+        ],
         "host string, min_delay_ms int, robots_disallow array<string>, "
         "crawl_delay_ms int, next_allowed_ts double",
     )
-    kept = {r.url[len("http://h.test"):] for r in apply_robots(frontier, host_state).collect()}
-    assert kept == {"/a.png.html", "/private/x", "/privatex", "/q+(1)xtxt", "/open"}
+    kept = {
+        r.url[len("http://"):-len("#frag")]
+        for r in apply_robots(frontier, host_state).collect()
+    }
+    assert kept == {
+        "h.test/a.png.html", "h.test/a.png?x=1",
+        "h.test/private/x", "h.test/privatex", "h.test/private?x=1",
+        "h.test/qq1abxtxt", "h.test/q+(1)abxtxt",
+        "h.test/eq.z", "h.test/e\\E",
+        "h.test/open?x=1", "h.test/open",
+        "g.test/a",
+    }
