@@ -92,13 +92,9 @@ BENCH_QUERIES = [
     # its wall is the eager k-means/PQ training loop (index BUILD, a one-off
     # at production scale), not the serve path this slice tracks
     "dedup_semantic",
-    "quality_calibrated",
     "text_quality",
     "text_fingerprint",
     "mm_decode_features",
-    # the end-to-end training-mix flagship (funnel -> dedup -> gate ->
-    # split -> mix -> chunk -> pack as one fused plan)
-    "corpus_assembly",
 ]
 
 
@@ -283,8 +279,6 @@ def run_queries(spark: SparkSession) -> dict[str, float]:
     # first recorded query isn't charged the one-time costs
     next(iter(qs.values()))(spark, SF_DIR).count()
     for name in BENCH_QUERIES:
-        if name not in qs:
-            continue
         t0 = time.time()
         qs[name](spark, SF_DIR).count()
         out[name] = round(time.time() - t0, 2)

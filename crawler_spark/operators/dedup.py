@@ -141,11 +141,10 @@ def minhash_signatures(
 
     Returns (doc_id, s0..s{P-1}, sig:array<bigint>).
     """
-    from pyspark import StorageLevel
-
-    # sh is scanned twice (distinct-hash build + the join back) — persist it
-    sh = exploded_shingles(docs, k, text_col, distinct=False).persist(
-        StorageLevel.MEMORY_AND_DISK
+    # sh is scanned twice (distinct-hash build + the join back) — checkpoint
+    # it so the explode runs once
+    sh = exploded_shingles(docs, k, text_col, distinct=False).localCheckpoint(
+        eager=False
     )
     # hash each DISTINCT shingle once, then join back: corpora repeat
     # shingles heavily, so this cuts the md5 work from O(occurrences·P) to
@@ -165,7 +164,7 @@ def minhash_signatures(
     # when the distinct-hash table is tiny, so the hint must be explicit —
     # but an UNCONDITIONAL broadcast OOMs executors once the distinct-shingle
     # table outgrows memory (at 100-TB corpora it is many GB).  Gate it: one
-    # cheap HLL pass over the already-persisted shingles estimates the
+    # cheap HLL pass over the already-checkpointed shingles estimates the
     # broadcast payload (shingle + num_perm hex digests per row); above the
     # cap we leave the join unhinted and it degrades to a shuffle join.
     if broadcast_hashes is None:
@@ -572,9 +571,7 @@ def connected_components(
     deep chains use the large-star/small-star variant; dup clusters don't
     need it.
     """
-    from pyspark import StorageLevel
-
-    # the edge list is re-joined every round — persist it once so the loop
+    # the edge list is re-joined every round — checkpoint it so the loop
     # never recomputes the (possibly expensive) pair-generation upstream
     edges = (
         pairs.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
@@ -584,7 +581,7 @@ def connected_components(
             )
         )
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(eager=False)
     )
     labels = (
         edges.select(F.col("src").alias("doc_id"))
@@ -634,8 +631,6 @@ def connected_components_star(
     doc_id).  Each phase is one shuffle over the current edge list;
     localCheckpoint per round keeps the plan shallow.
     """
-    from pyspark import StorageLevel
-
     def sym(e: DataFrame) -> DataFrame:
         return e.unionByName(
             e.select(F.col("v").alias("u"), F.col("u").alias("v"))
@@ -678,7 +673,7 @@ def connected_components_star(
         pairs.select(F.col("a_id").alias("u"), F.col("b_id").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(eager=False)
     )
     # checkpointed so the final join's plan scans a materialized node set
     # instead of re-deriving the whole candidate-pair lineage

@@ -569,10 +569,6 @@ def _lut_for(
     return lut
 
 
-def _qid_type(queries: DataFrame) -> str:
-    return queries.schema["query_id"].dataType.simpleString()
-
-
 def _lut_udf(by_sub: dict, m: int, d: int):
     """Arrow-batched pandas UDF building one ADC LUT per input vector,
     EXECUTOR-side.  Each row runs the identical left-to-right Python float
@@ -851,7 +847,6 @@ def semantic_dedup(
     centroids: DataFrame,
     eps: float = 0.95,
     max_inline_centroids: int = 256,
-    persist_scored: bool = False,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): semantic deduplication in embedding
     space — cluster the corpus with a coarse quantizer, then inside each
@@ -899,11 +894,6 @@ def semantic_dedup(
         .join(cent, "cell")
         .select("vec_id", "embedding", "__n", "cell", cos_cent.alias("cent_cos"))
     )
-    # the plan reads `scored` three times (both self-join sides + the final
-    # keep join): unpersisted that is three corpus scans — at real scale set
-    # persist_scored=True to pay the assignment once
-    if persist_scored:
-        scored = scored.persist()
     a, b = scored.alias("a"), scored.alias("b")
     better = (F.col("b.cent_cos") < F.col("a.cent_cos")) | (
         (F.col("b.cent_cos") == F.col("a.cent_cos"))

@@ -1338,83 +1338,6 @@ FROM feat
 SQL_TEXT_QUALITY = _quality_sql()
 
 
-def q_corpus_card(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dataset-datasheet rollup (the "corpus card" a released training set
-    ships with): corpus-level metrics as (metric, value BIGINT) rows —
-    doc/source/token counts, exact-duplicate count, and the holdout split
-    sizes.  Each term is an already-oracle-verified aggregate; the card
-    fuses them into one plan (three independent partial-agg branches, each
-    output a single row, cross-joined driver-side — nothing wide ever
-    moves)."""
-    from crawler_spark.operators.assembly import assign_split
-
-    d = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("long").alias("doc_id"), "source", "text"
-    )
-    base = d.agg(
-        F.count("*").alias("n_docs"),
-        F.countDistinct("source").alias("n_sources"),
-        F.sum(
-            F.size(F.split(F.trim("text"), r"\s+")).cast("long")
-        ).alias("total_tokens"),
-    )
-    dup = (
-        d.groupBy(F.md5("text").alias("__h"))
-        .agg(F.count("*").alias("__c"))
-        .agg(F.sum(F.col("__c") - 1).alias("n_exact_dups"))
-    )
-    splits = (
-        assign_split(d.select("doc_id"), "doc_id")
-        .groupBy()
-        .pivot("split", ["train", "valid", "test"])
-        .count()
-        .select(
-            F.coalesce("train", F.lit(0)).alias("n_train"),
-            F.coalesce("valid", F.lit(0)).alias("n_valid"),
-            F.coalesce("test", F.lit(0)).alias("n_test"),
-        )
-    )
-    card = base.crossJoin(dup).crossJoin(splits)
-    return card.selectExpr(
-        """stack(7,
-           'n_docs',       CAST(n_docs AS BIGINT),
-           'n_sources',    CAST(n_sources AS BIGINT),
-           'total_tokens', CAST(total_tokens AS BIGINT),
-           'n_exact_dups', CAST(n_exact_dups AS BIGINT),
-           'n_train',      CAST(n_train AS BIGINT),
-           'n_valid',      CAST(n_valid AS BIGINT),
-           'n_test',       CAST(n_test AS BIGINT)) AS (metric, value)"""
-    )
-
-
-SQL_CORPUS_CARD = """
-WITH d AS (
-  SELECT CAST(doc_id AS BIGINT) AS doc_id, source, text FROM documents),
-base AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(count(DISTINCT source) AS BIGINT) AS n_sources,
-         CAST(sum(len(regexp_split_to_array(trim(text), '\\s+'))) AS BIGINT)
-           AS total_tokens
-  FROM d),
-dup AS (
-  SELECT CAST(sum(c - 1) AS BIGINT) AS n_exact_dups
-  FROM (SELECT count(*) AS c FROM d GROUP BY md5(text))),
-sp AS (
-  SELECT CAST(sum(CASE WHEN b >= 10 THEN 1 ELSE 0 END) AS BIGINT) AS n_train,
-         CAST(sum(CASE WHEN b >= 5 AND b < 10 THEN 1 ELSE 0 END) AS BIGINT) AS n_valid,
-         CAST(sum(CASE WHEN b < 5 THEN 1 ELSE 0 END) AS BIGINT) AS n_test
-  FROM (SELECT CAST(('0x' || substr(md5('split1:' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
-               % 100 AS INTEGER) AS b FROM d))
-SELECT 'n_docs' AS metric, n_docs AS value FROM base
-UNION ALL SELECT 'n_sources', n_sources FROM base
-UNION ALL SELECT 'total_tokens', total_tokens FROM base
-UNION ALL SELECT 'n_exact_dups', n_exact_dups FROM dup
-UNION ALL SELECT 'n_train', n_train FROM sp
-UNION ALL SELECT 'n_valid', n_valid FROM sp
-UNION ALL SELECT 'n_test', n_test FROM sp
-"""
-
-
 def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-substring duplication flags at 8-gram granularity (Lee et al.
     2022 ExactSubstr, discretized): a doc is flagged when any 8-token
@@ -2839,363 +2762,6 @@ FROM scored WHERE quality >= 0.7 GROUP BY source
 """
 
 
-def q_corpus_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """END-TO-END corpus assembly — the single plan a 100-TB training-mix
-    build actually ships (VERDICT-r4 #5), composing seven already-verified
-    stages into ONE declarative query:
-
-      funnel input (docs ∪ planted near/exact dups)
-      → exact dedup (md5 groups, keep min doc_id)
-      → near dedup (3-shingle Jaccard ≥ 0.6, source-blocked inverted index;
-        drop the higher id of each pair)
-      → calibrated quality gate (hashed linear model, per-source 70th-pct
-        threshold — CCNet-style)
-      → contamination-safe split (md5 bucket; train = bucket ≥ 10)
-      → temperature-½ source-mix sampling (quota = 100·√n_s div Σ√n, taken
-        in doc_id order — the mix table actually CUTS the pool here, not
-        just reports weights)
-      → 32/24 sliding-window chunking
-      → token-budget shard packing (≤256 tokens per shard, per source)
-
-    Output: one row per packed chunk (doc_id, chunk_idx, source,
-    n_chunk_tokens, chunk_md5, shard_idx).
-
-    Scale shape: every stage keeps its verified plan — the dedup joins are
-    key-hashed (never cartesian), the threshold/mix/quota tables are
-    bounded-cardinality broadcasts, the splits are map-side expressions,
-    and the only windows are partitioned by source (the parallel packing
-    unit).  The three REUSED stage outputs (post-exact-dedup corpus, the
-    scored table, the sampled id set) are persisted: a multi-stage corpus
-    build must materialize its stage boundaries — lazily re-expanding each
-    upstream at every reuse multiplies the plan combinatorially (the
-    un-persisted plan audit counted 3.7k scans) and recomputes the dedup
-    joins per consumer.  A production run writes these boundaries to
-    warehouse tables; ``persist`` is the in-session expression of the same
-    cut."""
-    from pyspark.sql import Window
-
-    from crawler_spark.operators.assembly import (
-        assign_split,
-        calibrated_quality_gate,
-        chunk_documents,
-        hashed_linear_score,
-        source_mix_weights,
-    )
-
-    c = _corpus(spark, sf_dir)
-    dups = DD.exact_dup_groups(c).select(
-        F.explode(F.expr("filter(doc_ids, x -> x != keep_doc_id)")).alias(
-            "doc_id"
-        )
-    )
-    kept = c.join(dups, "doc_id", "left_anti").persist()
-    near_drop = (
-        DD.ngram_jaccard_pairs(kept, k=3, min_jaccard=0.6, block_col="source")
-        .select(F.col("b_id").alias("doc_id"))
-        .distinct()
-    ).persist()  # id set only — without this the shingle join re-runs per consumer of uniq
-    uniq = kept.join(near_drop, "doc_id", "left_anti")
-    scored = hashed_linear_score(uniq.select("doc_id", "text")).join(
-        uniq.select("doc_id", "source"), "doc_id"
-    ).persist()
-    good = (
-        calibrated_quality_gate(scored, by="source", pct=0.7)
-        .filter(F.col("keep"))
-        .select("doc_id", "source")
-    )
-    train = assign_split(good, "doc_id").filter(F.col("split") == "train")
-    mix = source_mix_weights(train, "source", budget=100)
-    w_rn = Window.partitionBy("source").orderBy("doc_id")
-    sampled = (
-        train.join(F.broadcast(mix.select("source", "quota_docs")), "source")
-        .withColumn("__rn", F.row_number().over(w_rn))
-        .filter(F.col("__rn") <= F.col("quota_docs"))
-        .select("doc_id", "source")
-    ).persist()
-    chunks = chunk_documents(
-        sampled.join(c.select("doc_id", "text"), "doc_id"),
-        chunk_tokens=32,
-        stride=24,
-    )
-    packed = chunks.join(sampled, "doc_id")
-    w_pack = (
-        Window.partitionBy("source")
-        .orderBy("doc_id", "chunk_idx")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = F.sum("n_chunk_tokens").over(w_pack)
-    return packed.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("chunk_idx").cast("long").alias("chunk_idx"),
-        "source",
-        F.col("n_chunk_tokens").cast("long").alias("n_chunk_tokens"),
-        "chunk_md5",
-        F.floor((cum - F.col("n_chunk_tokens")) / 256)
-        .cast("long")
-        .alias("shard_idx"),
-    )
-
-
-SQL_CORPUS_ASSEMBLY = f"""
-WITH {CORPUS_SQL.strip()},
-dups AS (
-  SELECT c.doc_id
-  FROM corpus c JOIN (
-    SELECT md5(text) AS h, min(doc_id) AS min_id
-    FROM corpus GROUP BY md5(text) HAVING count(*) > 1
-  ) g ON md5(c.text) = g.h
-  WHERE c.doc_id != g.min_id),
-kept AS (
-  SELECT c.* FROM corpus c
-  WHERE NOT EXISTS (SELECT 1 FROM dups d WHERE d.doc_id = c.doc_id)),
-wordsv AS (
-  SELECT doc_id, source, regexp_split_to_array(text, '\\s+') AS w FROM kept),
-shingles AS (
-  SELECT DISTINCT doc_id, source,
-         unnest(list_transform(generate_series(1, len(w) - 2),
-                i -> w[i] || ' ' || w[i + 1] || ' ' || w[i + 2])) AS shingle
-  FROM wordsv WHERE len(w) >= 3),
-sizes AS (SELECT doc_id, count(*) AS n_sh FROM shingles GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS inter
-  FROM shingles a JOIN shingles b
-    ON a.shingle = b.shingle AND a.source = b.source AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id),
-near_drop AS (
-  SELECT DISTINCT i.b_id AS doc_id
-  FROM inter i
-  JOIN sizes sa ON sa.doc_id = i.a_id
-  JOIN sizes sb ON sb.doc_id = i.b_id
-  WHERE round(CAST(i.inter AS DOUBLE) / (sa.n_sh + sb.n_sh - i.inter), 4) >= 0.6),
-uniq AS (
-  SELECT k.* FROM kept k
-  WHERE NOT EXISTS (SELECT 1 FROM near_drop n WHERE n.doc_id = k.doc_id)),
-toks AS (
-  SELECT doc_id,
-         unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS token
-  FROM uniq),
-flt AS (SELECT doc_id, token FROM toks WHERE token <> ''),
-scored AS (
-  SELECT doc_id,
-         CAST(sum(('0x' || substr(md5(token), 1, 15))::BIGINT % 1997 - 998)
-              AS BIGINT) AS score
-  FROM flt GROUP BY doc_id),
-j AS (
-  SELECT s.doc_id, u.source, s.score
-  FROM scored s JOIN uniq u ON s.doc_id = u.doc_id),
-thr AS (
-  SELECT source,
-         CAST(round(CAST(quantile_cont(score, 0.7) AS DOUBLE) * 10000)
-              AS BIGINT) AS thr_e4
-  FROM j GROUP BY source),
-good AS (
-  SELECT j.doc_id, j.source
-  FROM j JOIN thr ON j.source = thr.source
-  WHERE j.score * 10000 >= thr.thr_e4),
-spl AS (
-  SELECT doc_id, source,
-         CAST(('0x' || substr(md5('split1:' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
-              % 100 AS INTEGER) AS bucket
-  FROM good),
-train AS (SELECT doc_id, source FROM spl WHERE bucket >= 10),
-per AS (
-  SELECT source,
-         CAST(floor(sqrt(CAST(count(*) AS DOUBLE))) AS BIGINT) AS sqrt_w
-  FROM train GROUP BY source),
-tot AS (SELECT CAST(sum(sqrt_w) AS BIGINT) AS total_w FROM per),
-mix AS (SELECT source, CAST(100 * sqrt_w // total_w AS BIGINT) AS quota_docs
-        FROM per, tot),
-rn AS (
-  SELECT t.doc_id, t.source,
-         row_number() OVER (PARTITION BY t.source ORDER BY t.doc_id) AS rn
-  FROM train t),
-sampled AS (
-  SELECT rn.doc_id, rn.source
-  FROM rn JOIN mix USING (source) WHERE rn.rn <= mix.quota_docs),
-st AS (
-  SELECT s.doc_id, s.source,
-         regexp_split_to_array(trim(c.text), '\\s+') AS toks
-  FROM sampled s JOIN corpus c ON s.doc_id = c.doc_id),
-stn AS (SELECT doc_id, source, toks, len(toks) AS n FROM st),
-cc AS (
-  SELECT doc_id, source, toks, n,
-         CASE WHEN n <= 32 THEN 1 ELSE 1 + ((n - 32) + 23) // 24 END AS n_chunks
-  FROM stn),
-ee AS (
-  SELECT doc_id, source, toks, n,
-         unnest(generate_series(0, CAST(n_chunks - 1 AS BIGINT))) AS chunk_idx
-  FROM cc),
-chunks AS (
-  SELECT doc_id, source, CAST(chunk_idx AS BIGINT) AS chunk_idx,
-         CAST(least(32, n - chunk_idx * 24) AS BIGINT) AS n_chunk_tokens,
-         md5(array_to_string(
-           toks[chunk_idx * 24 + 1 : chunk_idx * 24 + least(32, n - chunk_idx * 24)],
-           ' ')) AS chunk_md5
-  FROM ee)
-SELECT doc_id, chunk_idx, source, n_chunk_tokens, chunk_md5,
-       CAST(floor((sum(n_chunk_tokens) OVER (
-              PARTITION BY source ORDER BY doc_id, chunk_idx
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-            - n_chunk_tokens) / 256.0) AS BIGINT) AS shard_idx
-FROM chunks
-"""
-
-
-# ---------------------------------------------------------------------------
-# registry
-# ---------------------------------------------------------------------------
-
-def q_split_holdout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic train/valid/test holdout assignment: bucket =
-    60-bit md5('split1:' ‖ doc_id) mod 100; bucket<5 → test, <10 → valid.
-    The split is a pure function of (salt, key) — a document never moves
-    across splits when the corpus is rebuilt or grows, which is the
-    contamination-safety property an eval holdout needs.  Map-side only:
-    no shuffle, no state, scales trivially."""
-    from crawler_spark.operators.assembly import assign_split
-
-    d = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("long").alias("doc_id"), "source"
-    )
-    return assign_split(d, "doc_id", salt="split1", valid_pct=5, test_pct=5)
-
-
-SQL_SPLIT_HOLDOUT = """
-WITH b AS (
-  SELECT CAST(doc_id AS BIGINT) AS doc_id, source,
-         CAST(('0x' || substr(md5('split1:' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
-              % 100 AS INTEGER) AS bucket
-  FROM documents)
-SELECT doc_id, source, bucket,
-       CASE WHEN bucket < 5 THEN 'test'
-            WHEN bucket < 10 THEN 'valid'
-            ELSE 'train' END AS split
-FROM b
-"""
-
-
-def q_text_quality_model(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Model-based quality filtering (the fastText-classifier stage of a
-    GPT-3/LLaMA-style pipeline) with a hashed linear model: hashed
-    bag-of-words, signed integer weights derived from each token's own
-    60-bit md5 prefix, per-doc sum, keep ⇔ score>0.  Integer-only math —
-    exact cross-engine parity — and the scalable shape: codegen'd md5 per
-    token, map-side partial sums, one narrow (doc_id, long) exchange."""
-    from crawler_spark.operators.assembly import hashed_linear_score
-
-    d = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("long").alias("doc_id"), "text"
-    )
-    return hashed_linear_score(d)
-
-
-SQL_TEXT_QUALITY_MODEL = """
-WITH toks AS (
-  SELECT CAST(doc_id AS BIGINT) AS doc_id,
-         unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS token
-  FROM documents),
-flt AS (SELECT doc_id, token FROM toks WHERE token <> ''),
-scored AS (
-  SELECT doc_id,
-         CAST(count(*) AS BIGINT) AS n_tokens,
-         CAST(sum(('0x' || substr(md5(token), 1, 15))::BIGINT % 1997 - 998)
-              AS BIGINT) AS score
-  FROM flt GROUP BY doc_id)
-SELECT doc_id, n_tokens, score, score > 0 AS keep
-FROM scored
-"""
-
-
-def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Context-length chunking: 32-token windows advancing by 24 (8-token
-    overlap) per document — integer-exact window count, map-side
-    sequence+explode, md5 of each chunk's text as the narrow payload."""
-    from crawler_spark.operators.assembly import chunk_documents
-
-    d = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("long").alias("doc_id"), "text"
-    )
-    return chunk_documents(d, chunk_tokens=32, stride=24)
-
-
-SQL_CHUNK_DOCUMENTS = """
-WITH t AS (
-  SELECT CAST(doc_id AS BIGINT) AS doc_id,
-         regexp_split_to_array(trim(text), '\\s+') AS toks
-  FROM documents),
-n AS (SELECT doc_id, toks, len(toks) AS n FROM t),
-c AS (
-  SELECT doc_id, toks, n,
-         CASE WHEN n <= 32 THEN 1
-              ELSE 1 + ((n - 32) + 23) // 24 END AS n_chunks
-  FROM n),
-e AS (
-  SELECT doc_id, toks, n,
-         unnest(generate_series(0, CAST(n_chunks - 1 AS BIGINT))) AS chunk_idx
-  FROM c)
-SELECT doc_id, CAST(chunk_idx AS BIGINT) AS chunk_idx,
-       CAST(chunk_idx * 24 AS BIGINT) AS start_tok,
-       CAST(least(32, n - chunk_idx * 24) AS BIGINT) AS n_chunk_tokens,
-       md5(array_to_string(
-         toks[chunk_idx * 24 + 1 : chunk_idx * 24 + least(32, n - chunk_idx * 24)],
-         ' ')) AS chunk_md5
-FROM e
-"""
-
-
-def q_quality_calibrated(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source calibrated quality gate (CCNet-style): the hashed-model
-    score is thresholded at each SOURCE's own 70th percentile instead of a
-    global constant — raw quality scores are not comparable across
-    sources.  Threshold table is one bounded-key groupBy (broadcast-sized);
-    the corpus takes one narrow (doc_id, long) exchange for the scores and
-    a broadcast join for the gate."""
-    from crawler_spark.operators.assembly import (
-        calibrated_quality_gate,
-        hashed_linear_score,
-    )
-
-    d = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("long").alias("doc_id"), "source", "text"
-    )
-    scored = hashed_linear_score(d.select("doc_id", "text")).join(
-        d.select("doc_id", "source"), "doc_id"
-    )
-    out = calibrated_quality_gate(scored, by="source", pct=0.7)
-    return out.select(
-        "doc_id",
-        "source",
-        F.col("score").cast("long").alias("score"),
-        F.col("thr_e4").cast("long").alias("thr_e4"),
-        F.col("keep").cast("boolean").alias("keep"),
-    )
-
-
-SQL_QUALITY_CALIBRATED = """
-WITH toks AS (
-  SELECT CAST(doc_id AS BIGINT) AS doc_id,
-         unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS token
-  FROM documents),
-flt AS (SELECT doc_id, token FROM toks WHERE token <> ''),
-scored AS (
-  SELECT doc_id,
-         CAST(sum(('0x' || substr(md5(token), 1, 15))::BIGINT % 1997 - 998)
-              AS BIGINT) AS score
-  FROM flt GROUP BY doc_id),
-j AS (
-  SELECT s.doc_id, d.source, s.score
-  FROM scored s JOIN documents d ON s.doc_id = CAST(d.doc_id AS BIGINT)),
-thr AS (
-  SELECT source,
-         CAST(round(CAST(quantile_cont(score, 0.7) AS DOUBLE) * 10000)
-              AS BIGINT) AS thr_e4
-  FROM j GROUP BY source)
-SELECT j.doc_id, j.source, j.score, thr.thr_e4,
-       (j.score * 10000 >= thr.thr_e4) AS keep
-FROM j JOIN thr ON j.source = thr.source
-"""
-
-
 def q_image_text_alignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CLIP-score alignment gate (LAION-style, keep at cosine ≥ 0.28) over
     deterministic stand-in encoders: the caption embedding is the hashed
@@ -3296,158 +2862,6 @@ FROM scored
 
 
 SQL_IMAGE_TEXT_ALIGNMENT = _alignment_sql()
-
-
-def q_quality_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet perplexity buckets (Wenzek et al. 2020 §3.3): score every doc
-    by mean token NLL under an in-corpus unigram LM
-    (assembly.unigram_lm_scores — scaled-integer logprobs, so no
-    engine-ordered float sum exists), then split the corpus into the
-    head / middle / tail thirds CCNet ships as quality tiers.  The two
-    global cutoffs are type-7 percentiles over the integer scores computed
-    from identical interpolation arithmetic in both engines; they live in
-    a one-row broadcast frame, so bucketing adds zero shuffles."""
-    from crawler_spark.operators.assembly import unigram_lm_scores
-
-    # scored feeds both the percentile cutoffs and the output projection —
-    # persist the narrow (doc_id, 3×long) frame so the token pipeline
-    # (explode + LM train + per-doc aggregate) runs once, not per consumer
-    scored = unigram_lm_scores(
-        _t(spark, sf_dir, "documents").select("doc_id", "text")
-    ).persist()
-    cuts = scored.agg(
-        F.expr("percentile(mean_nll_e4, 0.33)").alias("c33"),
-        F.expr("percentile(mean_nll_e4, 0.67)").alias("c67"),
-    )
-    return scored.crossJoin(F.broadcast(cuts)).select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        "n_tokens",
-        "nll_sum_e4",
-        "mean_nll_e4",
-        F.when(F.col("mean_nll_e4") <= F.col("c33"), F.lit("head"))
-        .when(F.col("mean_nll_e4") <= F.col("c67"), F.lit("middle"))
-        .otherwise(F.lit("tail"))
-        .alias("ppl_bucket"),
-    )
-
-
-SQL_QUALITY_PERPLEXITY = """
-WITH toks AS (
-  SELECT CAST(doc_id AS BIGINT) AS doc_id,
-         unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS token
-  FROM documents),
-flt AS (SELECT doc_id, token FROM toks WHERE token <> ''),
-cnts AS (SELECT token, CAST(count(*) AS BIGINT) AS cnt FROM flt GROUP BY token),
-tot AS (SELECT CAST(sum(cnt) AS DOUBLE) AS t FROM cnts),
-lp AS (
-  SELECT token,
-         CAST(round(ln(CAST(cnt AS DOUBLE) / t) * 10000, 0) AS BIGINT)
-           AS logp_e4
-  FROM cnts CROSS JOIN tot),
-per AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-         CAST(-sum(logp_e4) AS BIGINT) AS nll_sum_e4
-  FROM flt JOIN lp USING (token) GROUP BY doc_id),
-scored AS (
-  SELECT *, CAST(nll_sum_e4 // n_tokens AS BIGINT) AS mean_nll_e4 FROM per),
-cuts AS (
-  SELECT quantile_cont(CAST(mean_nll_e4 AS DOUBLE), 0.33) AS c33,
-         quantile_cont(CAST(mean_nll_e4 AS DOUBLE), 0.67) AS c67
-  FROM scored)
-SELECT doc_id, n_tokens, nll_sum_e4, mean_nll_e4,
-       CASE WHEN mean_nll_e4 <= c33 THEN 'head'
-            WHEN mean_nll_e4 <= c67 THEN 'middle'
-            ELSE 'tail' END AS ppl_bucket
-FROM scored CROSS JOIN cuts
-"""
-
-
-def q_sample_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR data selection (assembly.dsir_importance): docs from source
-    'src0' act as the target domain; every document is weighted by the
-    unigram log-likelihood ratio target-vs-raw (add-one smoothed over the
-    union vocabulary, scaled-BIGINT per-token ratios so the per-doc sum is
-    exact integer arithmetic) and the top-20% by importance is kept via
-    the same broadcast type-7 percentile idiom the quality gates use.
-    scored feeds the cutoff and the projection — persisted, one token
-    pipeline."""
-    from crawler_spark.operators.assembly import dsir_importance
-
-    d = _t(spark, sf_dir, "documents")
-    raw = d.select(F.col("doc_id").cast("long").alias("doc_id"), "text")
-    tgt = d.filter(F.col("source") == "src0").select(
-        F.col("doc_id").cast("long").alias("doc_id"), "text"
-    )
-    scored = dsir_importance(raw, tgt).persist()
-    cut = scored.agg(F.expr("percentile(logw_e4, 0.8)").alias("c80"))
-    return scored.crossJoin(F.broadcast(cut)).select(
-        "doc_id",
-        "n_tokens",
-        "logw_e4",
-        (F.col("logw_e4") >= F.col("c80")).alias("keep"),
-    )
-
-
-SQL_SAMPLE_DSIR = """
-WITH tokr AS (
-  SELECT CAST(doc_id AS BIGINT) AS doc_id,
-         unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS token
-  FROM documents),
-fr AS (SELECT doc_id, token FROM tokr WHERE token <> ''),
-ft AS (
-  SELECT f.doc_id, f.token
-  FROM fr f JOIN documents d ON f.doc_id = CAST(d.doc_id AS BIGINT)
-  WHERE d.source = 'src0'),
-craw AS (SELECT token, CAST(count(*) AS BIGINT) AS c_raw FROM fr GROUP BY token),
-ctgt AS (SELECT token, CAST(count(*) AS BIGINT) AS c_tgt FROM ft GROUP BY token),
-voc AS (
-  SELECT c.token, c.c_raw, coalesce(t.c_tgt, 0) AS c_tgt
-  FROM craw c LEFT JOIN ctgt t USING (token)),
-tot AS (
-  SELECT CAST(sum(c_raw) AS DOUBLE) AS n_raw,
-         CAST(sum(c_tgt) AS DOUBLE) AS n_tgt,
-         CAST(count(*) AS DOUBLE) AS v
-  FROM voc),
-ratio AS (
-  SELECT token,
-         CAST(round((ln((CAST(c_tgt AS DOUBLE) + 1.0) / (n_tgt + v)) -
-                     ln((CAST(c_raw AS DOUBLE) + 1.0) / (n_raw + v)))
-                    * 10000, 0) AS BIGINT) AS logr_e4
-  FROM voc CROSS JOIN tot),
-per AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-         CAST(sum(logr_e4) AS BIGINT) AS logw_e4
-  FROM fr JOIN ratio USING (token) GROUP BY doc_id),
-cut AS (SELECT quantile_cont(CAST(logw_e4 AS DOUBLE), 0.8) AS c80 FROM per)
-SELECT doc_id, n_tokens, logw_e4, (logw_e4 >= c80) AS keep
-FROM per CROSS JOIN cut
-"""
-
-
-def q_sample_source_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature-½ source mixing (the Pile/LLaMA sampling-weights table):
-    w(s)=floor(sqrt(n_docs(s))), weight_e6 and a 1000-doc quota by
-    truncating integer division.  One groupBy on the bounded source key +
-    a broadcast one-row total; integer-exact cross-engine (IEEE sqrt is
-    correctly rounded everywhere, division stays integral)."""
-    from crawler_spark.operators.assembly import source_mix_weights
-
-    return source_mix_weights(
-        _t(spark, sf_dir, "documents"), "source", budget=1000
-    )
-
-
-SQL_SAMPLE_SOURCE_MIX = """
-WITH per AS (
-  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(floor(sqrt(CAST(count(*) AS DOUBLE))) AS BIGINT) AS sqrt_w
-  FROM documents GROUP BY source),
-tot AS (SELECT CAST(sum(sqrt_w) AS BIGINT) AS total_w FROM per)
-SELECT source, n_docs, sqrt_w,
-       CAST(sqrt_w * 1000000 // total_w AS BIGINT) AS weight_e6,
-       CAST(1000 * sqrt_w // total_w AS BIGINT) AS quota_docs
-FROM per, tot
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -3604,54 +3018,6 @@ FROM f
 """
 
 
-def q_sample_unimax(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UniMax epoch-capped language budget allocation (Chung et al. 2023)
-    over the documents table's lang column: budget 800 docs, cap 2 epochs
-    per language, closed-form integer waterfilling (see
-    assembly.unimax_allocation)."""
-    from crawler_spark.operators.assembly import unimax_allocation
-
-    return unimax_allocation(
-        _t(spark, sf_dir, "documents"), lang_col="lang", budget=800, max_epochs=2
-    )
-
-
-SQL_SAMPLE_UNIMAX = """
-WITH per AS (
-  SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(count(*) * 2 AS BIGINT) AS cap_docs
-  FROM documents GROUP BY lang),
-ranked AS (
-  SELECT a.lang, a.n_docs, a.cap_docs,
-         CAST(count(*) AS BIGINT) AS rn,
-         CAST(sum(b.cap_docs) AS BIGINT) AS cap_prefix
-  FROM per a JOIN per b
-    ON (b.cap_docs < a.cap_docs
-        OR (b.cap_docs = a.cap_docs AND b.lang <= a.lang))
-  GROUP BY a.lang, a.n_docs, a.cap_docs),
-tot AS (SELECT CAST(count(*) AS BIGINT) AS n_langs FROM per),
-flagged AS (
-  SELECT r.*, t.n_langs,
-         (r.cap_docs * (t.n_langs - r.rn + 1)
-          < 800 - (r.cap_prefix - r.cap_docs)) AS constrained
-  FROM ranked r, tot t),
-kk AS (
-  SELECT CAST(sum(CASE WHEN constrained THEN 1 ELSE 0 END) AS BIGINT) AS k,
-         CAST(coalesce(sum(CASE WHEN constrained THEN cap_docs END), 0)
-              AS BIGINT) AS cap_k
-  FROM flagged),
-alloc AS (
-  SELECT f.lang, f.n_docs, f.cap_docs,
-         CAST(CASE WHEN f.constrained THEN f.cap_docs
-                   ELSE (800 - kk.cap_k) // (f.n_langs - kk.k) END
-              AS BIGINT) AS alloc_docs
-  FROM flagged f, kk)
-SELECT lang, n_docs, cap_docs, alloc_docs,
-       CAST(alloc_docs * 10000 // n_docs AS BIGINT) AS epochs_e4
-FROM alloc
-"""
-
-
 def q_dedup_substring_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ExactSubstr span REMOVAL (Lee et al. 2022) on the planted corpus:
     every non-first occurrence of a duplicated 8-token window is cut and
@@ -3708,37 +3074,38 @@ def q_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall x10^4.  The truth side is 8 queries x 5 rows — broadcast-sized
     at any corpus scale; the expensive parts are the underlying ANN plans
     themselves, reused verbatim."""
-    # persist the 8x5-row truth set: it feeds qids plus one hit-join per
-    # variant — without this the full brute-force plan re-runs per consumer
-    bf = (
+    # each truth row is exploded once per variant and left-joined with the
+    # approximate hits, so the brute-force plan is read once and nothing is
+    # cached across consumers
+    truth = (
         q_ann_bruteforce(spark, sf_dir)
         .filter(F.col("rank") <= 5)
-        .select("query_id", "vec_id")
-        .persist()
+        .select(
+            F.explode(F.array(F.lit("lsh"), F.lit("ivf"))).alias("variant"),
+            "query_id",
+            "vec_id",
+        )
     )
-    qids = bf.select("query_id").distinct()
 
-    def rec(approx: DataFrame, name: str) -> DataFrame:
-        hits = (
-            approx.select("query_id", "vec_id")
-            .join(bf, ["query_id", "vec_id"])
-            .groupBy("query_id")
-            .agg(F.count("*").cast("long").alias("n_hits"))
-        )
-        return (
-            qids.join(hits, "query_id", "left")
-            .select(
-                F.lit(name).alias("variant"),
-                F.col("query_id").cast("long").alias("query_id"),
-                F.coalesce("n_hits", F.lit(0)).cast("long").alias("n_hits"),
-            )
-            .withColumn(
-                "recall_e4", F.expr("CAST(n_hits * 10000 div 5 AS BIGINT)")
-            )
+    def tagged(approx: DataFrame, name: str) -> DataFrame:
+        return approx.select(
+            F.lit(name).alias("variant"),
+            "query_id",
+            "vec_id",
+            F.lit(1).alias("__hit"),
         )
 
-    return rec(q_ann_lsh(spark, sf_dir), "lsh").unionByName(
-        rec(q_ann_ivf(spark, sf_dir), "ivf")
+    approx = tagged(q_ann_lsh(spark, sf_dir), "lsh").unionByName(
+        tagged(q_ann_ivf(spark, sf_dir), "ivf")
+    )
+    return (
+        truth.join(approx, ["variant", "query_id", "vec_id"], "left")
+        .groupBy("variant", "query_id")
+        .agg(F.count("__hit").cast("long").alias("n_hits"))
+        .select(
+            "variant", F.col("query_id").cast("long").alias("query_id"), "n_hits"
+        )
+        .withColumn("recall_e4", F.expr("CAST(n_hits * 10000 div 5 AS BIGINT)"))
     )
 
 
@@ -3764,7 +3131,7 @@ LEFT JOIN hits h ON h.variant = v.variant AND h.query_id = q.query_id
 
 
 # ---------------------------------------------------------------------------
-# soft dedup / representatives / DoReMi (round-5 additions)
+# soft dedup / representatives (round-5 additions)
 # ---------------------------------------------------------------------------
 
 
@@ -3874,61 +3241,6 @@ SELECT CAST(l.doc_id AS BIGINT) AS doc_id,
        CAST((r.m).b AS BIGINT) AS rep_id,
        l.doc_id = (r.m).b AS is_rep
 FROM lab l JOIN rep r USING (cluster_id)
-"""
-
-
-def q_sample_doremi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DoReMi domain-weight step (Xie et al. 2023) over the documents
-    table's source domains.  Proxy/reference losses are deterministic
-    md5-derived integers (a real run plugs in measured model losses; the
-    plan — one bounded-key aggregate, then k-row arithmetic — is
-    unchanged).  See assembly.doremi_weights."""
-    from crawler_spark.operators.assembly import doremi_weights
-
-    d = _t(spark, sf_dir, "documents").select(
-        "source",
-        (
-            F.conv(F.substring(F.md5(F.concat(F.lit("p:"), F.col("text"))), 1, 4), 16, 10)
-            .cast("long")
-            % 10000
-        ).alias("loss_proxy_e4"),
-        (
-            F.conv(F.substring(F.md5(F.concat(F.lit("r:"), F.col("text"))), 1, 4), 16, 10)
-            .cast("long")
-            % 10000
-        ).alias("loss_ref_e4"),
-    )
-    return doremi_weights(d)
-
-
-SQL_SAMPLE_DOREMI = """
-WITH l AS (
-  SELECT source AS domain,
-         ('0x' || substr(md5('p:' || text), 1, 4))::BIGINT % 10000 AS lp,
-         ('0x' || substr(md5('r:' || text), 1, 4))::BIGINT % 10000 AS lr
-  FROM documents),
-per AS (
-  SELECT domain, CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(sum(greatest(lp - lr, 0)) AS BIGINT) AS sum_excess
-  FROM l GROUP BY domain),
-e AS (
-  SELECT domain, n_docs,
-         CAST(sum_excess // n_docs AS BIGINT) AS excess_e4
-  FROM per),
-f AS (
-  SELECT *,
-         CAST(round(exp(CAST(excess_e4 AS DOUBLE) / 10000.0) * 1000000)
-              AS BIGINT) AS f_e6
-  FROM e),
-tot AS (
-  SELECT CAST(sum(f_e6) AS BIGINT) AS sum_f,
-         CAST(count(*) AS BIGINT) AS k
-  FROM f)
-SELECT f.domain, f.n_docs, f.excess_e4,
-       CAST(f.f_e6 * 1000000 // t.sum_f AS BIGINT) AS weight_e6,
-       CAST((1000000 - 100000) * (f.f_e6 * 1000000 // t.sum_f) // 1000000
-            + 100000 // t.k AS BIGINT) AS final_e6
-FROM f, tot t
 """
 
 
@@ -4227,36 +3539,6 @@ FROM pairs WHERE n_shared >= 3
 """
 
 
-def q_tokenizer_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer-training prep (operators/assembly.bpe_pair_counts): the
-    corpus-wide adjacent character-pair frequencies BPE's merge rounds
-    maximize (Sennrich et al. 2016), over the raw documents table — top 50
-    pairs under the strict (n_occ DESC, pair ASC) total order.  The one
-    corpus statistic every from-scratch tokenizer build starts from; at
-    100 TB the pair table stays alphabet²-bounded, so the groupBy's
-    map-side combine removes essentially all shuffle traffic."""
-    from crawler_spark.operators.assembly import bpe_pair_counts
-
-    return bpe_pair_counts(
-        _t(spark, sf_dir, "documents"), text_col="text", top_k=50
-    )
-
-
-SQL_TOKENIZER_BPE_PAIRS = """
-WITH words AS (
-  SELECT unnest(string_split_regex(lower(trim(text)), '\\s+')) AS w
-  FROM documents),
-pairs AS (
-  SELECT unnest(list_transform(generate_series(1, len(w) - 1),
-                i -> substr(w, i, 2))) AS pair
-  FROM words WHERE len(w) >= 2)
-SELECT pair, CAST(count(*) AS BIGINT) AS n_occ
-FROM pairs GROUP BY pair
-ORDER BY n_occ DESC, pair ASC
-LIMIT 50
-"""
-
-
 def q_minhash_estimate_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash estimator self-evaluation (the dedup analog of
     ann_recall_eval): for every LSH candidate pair, the signature-agreement
@@ -4419,14 +3701,12 @@ ANALYTICS_QUERIES: dict[str, tuple[QueryFn, str | None]] = {
     ),
     "quality_gopher_rules": (q_quality_gopher_rules, SQL_QUALITY_GOPHER_RULES),
     "c4_line_filter": (q_c4_line_filter, SQL_C4_LINE_FILTER),
-    "sample_unimax": (q_sample_unimax, SQL_SAMPLE_UNIMAX),
     "ann_recall_eval": (q_ann_recall_eval, SQL_ANN_RECALL_EVAL),
     "sample_soft_dedup": (q_sample_soft_dedup, SQL_SAMPLE_SOFT_DEDUP),
     "dedup_representatives": (
         q_dedup_representatives,
         SQL_DEDUP_REPRESENTATIVES,
     ),
-    "sample_doremi": (q_sample_doremi, SQL_SAMPLE_DOREMI),
     "ann_sq8": (q_ann_sq8, SQL_ANN_SQ8),
     "ann_ivf_sq8": (q_ann_ivf_sq8, SQL_ANN_IVF_SQ8),
     "image_aspect_buckets": (q_image_aspect_buckets, SQL_IMAGE_ASPECT_BUCKETS),
@@ -4443,26 +3723,16 @@ ANALYTICS_QUERIES: dict[str, tuple[QueryFn, str | None]] = {
         SQL_IMAGE_TEXT_ALIGNMENT,
     ),
     "pack_image_shards": (q_pack_image_shards, SQL_PACK_IMAGE_SHARDS),
-    "sample_source_mix": (q_sample_source_mix, SQL_SAMPLE_SOURCE_MIX),
-    "sample_dsir": (q_sample_dsir, SQL_SAMPLE_DSIR),
-    "split_holdout": (q_split_holdout, SQL_SPLIT_HOLDOUT),
-    "text_quality_model": (q_text_quality_model, SQL_TEXT_QUALITY_MODEL),
-    "quality_calibrated": (q_quality_calibrated, SQL_QUALITY_CALIBRATED),
-    "quality_perplexity": (q_quality_perplexity, SQL_QUALITY_PERPLEXITY),
-    "chunk_documents": (q_chunk_documents, SQL_CHUNK_DOCUMENTS),
     "filter_funnel": (q_filter_funnel, SQL_FILTER_FUNNEL),
     "image_filter_funnel": (q_image_filter_funnel, SQL_IMAGE_FILTER_FUNNEL),
-    "corpus_card": (q_corpus_card, SQL_CORPUS_CARD),
     "text_pii_scrub": (q_text_pii_scrub, SQL_TEXT_PII_SCRUB),
     "pack_token_shards": (q_pack_token_shards, SQL_PACK_TOKEN_SHARDS),
     "tfidf_top_terms": (q_tfidf_top_terms, SQL_TFIDF_TOP_TERMS),
     "vocab_oov": (q_vocab_oov, SQL_VOCAB_OOV),
     "corpus_curation": (q_corpus_curation, SQL_CORPUS_CURATION),
-    "corpus_assembly": (q_corpus_assembly, SQL_CORPUS_ASSEMBLY),
     "decontam_embedding": (q_decontam_embedding, SQL_DECONTAM_EMBEDDING),
     "text_ngram_diversity": (q_text_ngram_diversity, SQL_TEXT_NGRAM_DIVERSITY),
     "url_quality_gate": (q_url_quality_gate, SQL_URL_QUALITY_GATE),
     "dedup_winnowing": (q_dedup_winnowing, SQL_DEDUP_WINNOWING),
-    "tokenizer_bpe_pairs": (q_tokenizer_bpe_pairs, SQL_TOKENIZER_BPE_PAIRS),
     "minhash_estimate_eval": (q_minhash_estimate_eval, SQL_MINHASH_ESTIMATE_EVAL),
 }

@@ -75,3 +75,12 @@ def test_pooled_median_is_biased_by_fixed_order_drift():
 def test_variance_spread_max_unchanged():
     # the guard threshold is part of the declared policy
     assert bench.VARIANCE_SPREAD_MAX == 2.5
+
+
+def test_bench_queries_are_registered():
+    # run_queries looks every name up in the registry; a deleted query must
+    # fail here, not vanish from the bench slice
+    import __spark_entry__ as E
+
+    registered = E.queries()
+    assert [n for n in bench.BENCH_QUERIES if n not in registered] == []

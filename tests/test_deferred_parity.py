@@ -44,9 +44,12 @@ def test_deferred_query_matches_oracle(spark, duck, name):
     assert name in oracles, f"query {name} has no oracle"
     assert not type_guard(duck, {name: oracles[name]})
 
+    spark.catalog.clearCache()
     sdf = qs[name](spark, SF_DIR)
     s_cols = sdf.columns
     s_rows = [tuple(r) for r in sdf.collect()]
+    # a query leaves no cached frame behind in the caller's session
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     res = duck.execute(oracles[name])
     d_cols = [c[0] for c in res.description]
     d_rows = res.fetchall()

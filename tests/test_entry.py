@@ -69,7 +69,7 @@ def test_deferred_rows_are_long_stable():
         )
 
 
-def test_deferred_staleness_bounded():
+def _check_staleness(n: int, hist: dict[str, dict[int, bool]]) -> None:
     """MAX-staleness invariant (K=2, VERDICT-r4 #6): a deferred query must
     hold a hash-green driver row within the last two driver rounds
     recorded WHEN THE ROTATION WAS AUTHORED (E.ROTATION_AS_OF) — i.e. a
@@ -80,7 +80,6 @@ def test_deferred_staleness_bounded():
     retro-invalidate a decision that could only use r1..r{N} data; the
     companion assertion below caps that lag at the one in-flight round,
     so the rotation can never be pinned against stale history."""
-    n, hist = _round_history()
     as_of = E.ROTATION_AS_OF
     assert as_of >= n - 1, (
         f"ROTATION_AS_OF={as_of} but {n} driver rounds are recorded — "
@@ -95,6 +94,17 @@ def test_deferred_staleness_bounded():
             f"(rotation as of {as_of}) — staleness exceeds K=2; rotate it "
             "back into the checked window"
         )
+
+
+def test_deferred_staleness_bounded():
+    _check_staleness(*_round_history())
+
+
+def test_deferred_staleness_survives_next_round_file():
+    """The next driver round's correctness file lands in the repo after the
+    rotation is frozen; its arrival alone must not fail the invariant."""
+    n, hist = _round_history()
+    _check_staleness(n + 1, hist)
 
 
 def test_unproven_queries_inside_window():
