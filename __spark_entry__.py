@@ -3,7 +3,7 @@
 ``entry(spark)`` runs the flagship frontier-generation query at sf0.001;
 ``queries()`` / ``oracle_sql()`` expose every implemented operator from
 SURVEY.md §2 (crawl engine) plus the training-data-pipeline operators
-(dedup / similarity / text / multimodal) with DuckDB oracles.
+(dedup / similarity / text) with DuckDB oracles.
 """
 
 from __future__ import annotations
@@ -27,15 +27,17 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # The driver verifies only the FIRST 50 registry entries (CORRECTNESS_r01-r05
-# each hold exactly 50 rows), so the registry's 88 queries are split: the 50
+# each hold exactly 50 rows), so the registry's 74 queries are split: the 50
 # in the window come first and DEFER_TO_TAIL goes after them.  A query may be
 # deferred only with >=2 hash-green driver rounds, one of them among the two
 # newest rounds recorded when the rotation was authored (ROTATION_AS_OF);
-# tests/test_entry.py pins both rules, and that the rotation lags the recorded
-# rounds by at most one.  Deferred rows keep DuckDB parity in tier-1
-# (tests/test_deferred_parity.py).  As of r5, 40 queries are eligible; the
-# tail defers 38 of them and the window keeps dedup_minhash_incremental and
-# image_phash_neardup (newest green r4) so they get a driver row again.
+# tests/test_entry.py pins both rules, that the rotation lags the recorded
+# rounds by at most one, and that the window is full.  Deferred rows keep
+# DuckDB parity in tier-1 (tests/test_deferred_parity.py).  As of r5, 30
+# registered queries are eligible; the tail defers 24 of them and the window
+# keeps dedup_minhash_incremental, frontier_generation, j1_seen_antijoin,
+# j1_due_or_changed, a1_priority_topk and c3_failure_isolation (newest green
+# r4) so they get a driver row again.
 DRIVER_CHECK_WINDOW = 50
 ROTATION_AS_OF = 5
 DEFER_TO_TAIL = [
@@ -45,27 +47,15 @@ DEFER_TO_TAIL = [
     "ann_ivf_pq_residual",
     "text_decontaminate",
     "text_repetition",
-    "image_caption_joint_dedup",
-    "image_phash_incremental",
-    "image_dedup_representatives",
     "sample_host_cap",
     "dedup_semantic",
     "dedup_substring",
     "ann_sq8",
     "ann_ivf_sq8",
-    "image_aspect_buckets",
-    "image_caption_negatives",
-    "image_augmentation_params",
-    "pack_image_shards",
     "filter_funnel",
-    "image_filter_funnel",
     "text_pii_scrub",
     "vocab_oov",
     # newest green r4
-    "frontier_generation",
-    "j1_seen_antijoin",
-    "j1_due_or_changed",
-    "a1_priority_topk",
     "s10_fixed_range_scan",
     "p5_title_projection",
     "t5_sections",
@@ -73,11 +63,9 @@ DEFER_TO_TAIL = [
     "t9_t10_guards",
     "w2_main_json",
     "w3_write_files_skip",
-    "c3_failure_isolation",
     "c7_multi_tenant",
     "dedup_clusters",
     "dedup_clusters_star",
-    "image_corpus_curation",
     "corpus_curation",
 ]
 

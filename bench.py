@@ -83,8 +83,6 @@ BENCH_QUERIES = [
     "dedup_minhash_lsh",
     "dedup_minhash_incremental",
     "dedup_ngram_jaccard",
-    "image_phash_neardup",
-    "image_caption_joint_dedup",
     "dedup_embedding_cosine",
     "ann_bruteforce_topk",
     "ann_lsh_bucketed",
@@ -94,7 +92,6 @@ BENCH_QUERIES = [
     "dedup_semantic",
     "text_quality",
     "text_fingerprint",
-    "mm_decode_features",
 ]
 
 

@@ -15,7 +15,7 @@ Layout
 - ``operators/`` frontier scheduling, membership (bloom/cuckoo + anti-join),
                  the Arrow dequeue kernel, fetch, parse, images, politeness,
                  dedup (exact/minhash/simhash/jaccard/cosine), similarity
-                 search, multimodal.
+                 search.
 - ``plans/``     the generation loop (select → fetch → parse → commit) with
                  resume-from-checkpoint, and the oracle-checked query registry.
 """

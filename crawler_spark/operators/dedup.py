@@ -379,19 +379,26 @@ def simhash(docs: DataFrame, bits: int = 32, text_col: str = "text") -> DataFram
     return v.select("doc_id", F.expr(acc).alias("simhash"))
 
 
-def hash_chunk_rows(
+def hamming_near_pairs(
     df: DataFrame,
-    keep_cols: list[str],
+    id_col: str,
     hash_col: str,
     bits: int,
     chunks: int,
+    max_hamming: int,
 ) -> DataFrame:
-    """Explode a ``bits``-bit integer hash column into its ``chunks``
-    pigeonhole chunks: one row per (input row, chunk position) carrying
-    ``chunk_id`` and ``chunk_val``.  The shared inverted-index row shape of
-    :func:`hamming_near_pairs` and the persisted incremental phash index
-    (operators.multimodal.phash_value_index).  Masking after the shift makes
-    the chunk values identical whether the engine's ``>>`` sign-extends."""
+    """Near-duplicate pairs of any ``bits``-bit hash by hamming distance.
+
+    Pigeonhole blocking: split the hash into ``chunks`` equal chunks — any
+    pair with hamming ≤ chunks−1 shares at least one chunk, so the
+    chunk-equality self-join is a complete candidate generator for
+    ``max_hamming ≤ chunks−1``; exact ``bit_count(xor)`` verifies after.
+    Masking after the shift makes the chunk values identical whether the
+    engine's ``>>`` sign-extends or not.  Used by text SimHash
+    (:func:`simhash_near_pairs`).
+    """
+    if max_hamming > chunks - 1:
+        raise ValueError("pigeonhole requires max_hamming <= chunks - 1")
     w = bits // chunks
     mask = (1 << w) - 1
     chunk_cols = [
@@ -401,51 +408,9 @@ def hash_chunk_rows(
         )
         for j in range(chunks)
     ]
-    return df.select(
-        *keep_cols, hash_col, F.explode(F.array(*chunk_cols)).alias("c")
-    ).select(*keep_cols, hash_col, "c.chunk_id", "c.chunk_val")
-
-
-def hamming_near_pairs(
-    df: DataFrame,
-    id_col: str,
-    hash_col: str,
-    bits: int,
-    chunks: int,
-    max_hamming: int,
-    max_chunk_df: int | None = None,
-) -> DataFrame:
-    """Near-duplicate pairs of any ``bits``-bit hash by hamming distance.
-
-    Pigeonhole blocking: split the hash into ``chunks`` equal chunks — any
-    pair with hamming ≤ chunks−1 shares at least one chunk, so the
-    chunk-equality self-join is a complete candidate generator for
-    ``max_hamming ≤ chunks−1``; exact ``bit_count(xor)`` verifies after.
-    Masking after the shift makes the chunk values identical whether the
-    engine's ``>>`` sign-extends or not.  Shared by text SimHash
-    (:func:`simhash_near_pairs`) and image perceptual hashes
-    (operators.multimodal.phash_near_pairs).
-
-    ``max_chunk_df`` caps the inverted-list length per (chunk position,
-    chunk value): positions where a value occurs in more than that many rows
-    are dropped from candidate generation, bounding the join at
-    chunks·max_chunk_df² per value instead of quadratic in the hottest list
-    (same LOWER-BOUND semantics as ``ngram_jaccard_pairs(max_df=...)`` — a
-    pair is still found through any of its other ≤max_hamming shared-chunk
-    positions, but completeness is no longer guaranteed for pairs whose
-    every shared chunk is hot).
-    """
-    if max_hamming > chunks - 1:
-        raise ValueError("pigeonhole requires max_hamming <= chunks - 1")
-    chunked = hash_chunk_rows(df, [id_col], hash_col, bits, chunks)
-    if max_chunk_df is not None:
-        cold = (
-            chunked.groupBy("chunk_id", "chunk_val")
-            .agg(F.count("*").alias("__df"))
-            .filter(F.col("__df") <= max_chunk_df)
-            .select("chunk_id", "chunk_val")
-        )
-        chunked = chunked.join(cold, on=["chunk_id", "chunk_val"], how="left_semi")
+    chunked = df.select(
+        id_col, hash_col, F.explode(F.array(*chunk_cols)).alias("c")
+    ).select(id_col, hash_col, "c.chunk_id", "c.chunk_val")
     a, b = chunked.alias("a"), chunked.alias("b")
     return (
         a.join(

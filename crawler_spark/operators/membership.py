@@ -5,20 +5,17 @@ The reference's seen-set is a driver-local ``map[pid]title``
 tools.go:339,380. At 10^10-URL scale the seen set is a distributed table, so
 membership is:
 
-1. an (optional) partition-local **bloom prefilter** — kills the shuffle for
-   the overwhelmingly-common "already seen" rows before the exact join;
-2. an exact **left-anti / changed-title join** on the survivors — removes
-   bloom false positives (bloom has no false negatives, so correctness is
-   exactly the reference's semantics);
+1. in the Arrow frontier's per-bucket stage (operators/arrow_frontier.py), a
+   partition-local **bloom prefilter** (:class:`NumpyBloom`) whose positives
+   are verified exactly there — bloom has no false negatives;
+2. on the DataFrame path, an exact **changed-title join**
+   (:func:`due_or_changed`; :func:`exact_anti_join` is its not-seen half) —
+   exactly the reference's semantics;
 3. in-generation dedupe (``dropDuplicates`` on the canonical hash) — the
    reference got this from map-key idempotence (tools.go:239,279).
 
 Scale notes: the anti-join shuffles both sides on ``url_hash`` — with AQE on,
-skewed buckets split automatically; the bloom prefilter typically drops >90%
-of candidates map-side so the shuffle moves only the novel tail. The bloom
-aggregate itself is a single ~N·10bit bitmap reduced tree-wise; for 10^10
-seen URLs use ``num_partition_blooms`` host-bucket-sharded blooms joined
-map-side instead of one giant one.
+skewed buckets split automatically.
 """
 
 from __future__ import annotations
@@ -26,7 +23,6 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -79,131 +75,6 @@ def in_generation_dedupe(df: DataFrame, key: str = "url_hash") -> DataFrame:
     explicit. dropDuplicates = partial-agg per partition then shuffle, so
     duplicates collapse map-side before moving."""
     return df.dropDuplicates([key])
-
-
-def build_bloom(
-    seen: DataFrame,
-    key: str,
-    expected_items: int,
-    fpp: float = 0.01,
-    build_partitions: int = 16,
-    fanout: int = 4,
-) -> "NumpyBloom":
-    """Distributed bloom build over ``seen[key]`` (int64 keys).
-
-    Each of ``build_partitions`` partitions builds a local bitmap from its
-    Arrow batches (numpy, no per-row Python) and ships it as ONE binary row;
-    the bitmaps are then OR-reduced in a ``fanout``-ary tree of executor-side
-    mapInArrow rounds, so the driver ever receives at most ``fanout`` blobs
-    (≤ fanout·m/8 bytes) regardless of ``build_partitions`` — at 10^10 keys
-    / 1 % fpp one blob is ~1.5 GB, so a flat collect of 16 of them through
-    the driver would be the bottleneck this tree removes.  For frontier-scale
-    seen sets, shard by host_bucket and build one bloom per shard instead of
-    one global bitmap (same code, smaller ``m`` each) — the generation loop
-    and arrow_frontier already use that partition-local path.
-    """
-    import math as _math
-
-    import pyarrow as pa
-
-    if fanout < 2:
-        raise ValueError(
-            f"fanout must be >= 2 (got {fanout}): the OR-reduce tree halves "
-            "the row count by ceil(rows/fanout) per round, which never "
-            "terminates at fanout <= 1"
-        )
-    bloom = NumpyBloom(expected_items, fpp)
-    m, k = bloom.m, bloom.k
-    nwords = len(bloom.bits)
-
-    def build(batches):
-        local = NumpyBloom.__new__(NumpyBloom)
-        local.m, local.k = m, k
-        local.bits = np.zeros(nwords, dtype=np.uint64)
-        for batch in batches:
-            keys = batch.column(0).to_numpy(zero_copy_only=False)
-            if len(keys):
-                local.add(keys)
-        yield pa.RecordBatch.from_arrays(
-            [pa.array([local.bits.tobytes()], type=pa.binary())], names=["bits"]
-        )
-
-    def or_bitmaps(batches):
-        acc = None
-        for batch in batches:
-            for blob in batch.column(0).to_pylist():
-                b = np.frombuffer(blob, dtype=np.uint64)
-                acc = b.copy() if acc is None else acc | b
-        if acc is not None:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([acc.tobytes()], type=pa.binary())], names=["bits"]
-            )
-
-    # repartition (not coalesce): coalesce would cap the upstream scan's
-    # parallelism at build_partitions; the shuffle here moves only 8-byte
-    # keys, so full-width compute + narrow exchange wins.
-    bitmaps = (
-        seen.select(F.col(key).cast("long").alias("k"))
-        .repartition(build_partitions)
-        .mapInArrow(build, "bits binary")
-    )
-    n_rows = build_partitions  # build() yields exactly one row per partition
-    while n_rows > fanout:
-        n_parts = _math.ceil(n_rows / fanout)
-        bitmaps = bitmaps.repartition(n_parts).mapInArrow(
-            or_bitmaps, "bits binary"
-        )
-        n_rows = n_parts  # or_bitmaps yields ≤1 row per partition
-    for row in bitmaps.collect():
-        bloom.bits |= np.frombuffer(row.bits, dtype=np.uint64)
-    return bloom
-
-
-def bloom_prefiltered_anti_join(
-    candidates: DataFrame,
-    seen: DataFrame,
-    key: str,
-    expected_items: int | None = None,
-    fpp: float = 0.01,
-) -> DataFrame:
-    """Anti-join with a bloom prefilter (the 100-TB fast path).
-
-    Builds the bitmap with :func:`build_bloom`, broadcasts it, and probes it
-    map-side with an Arrow-batched pandas UDF.  Candidates whose probe is
-    negative are definitively new (no false negatives) and skip the join
-    shuffle entirely; only the bloom-positive minority (true seen + fpp
-    false positives) pays the exact anti-join that removes false positives.
-    Net effect: the shuffle moves ~|novel|·fpp + |seen∩batch| rows instead
-    of the whole batch.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    n = expected_items or seen.count() or 1
-    bloom = build_bloom(seen, key, n, fpp)
-    bc = candidates.sparkSession.sparkContext.broadcast(
-        (bloom.m, bloom.k, bloom.bits.tobytes())
-    )
-
-    @pandas_udf("boolean")
-    def might_contain(keys: pd.Series) -> pd.Series:
-        m, k, bits = bc.value
-        b = NumpyBloom.__new__(NumpyBloom)
-        b.m, b.k = m, k
-        b.bits = np.frombuffer(bits, dtype=np.uint64)
-        return pd.Series(b.might_contain(keys.to_numpy(dtype=np.int64)))
-
-    # The two output branches (fresh / maybe) would otherwise recompute the
-    # candidates' whole upstream lineage twice — persist the flagged frame so
-    # the probe and everything above it runs exactly once.
-    from pyspark import StorageLevel
-
-    flagged = candidates.withColumn(
-        "__bloom_maybe", might_contain(F.col(key))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    fresh = flagged.filter(~F.col("__bloom_maybe")).drop("__bloom_maybe")
-    maybe = flagged.filter(F.col("__bloom_maybe")).drop("__bloom_maybe")
-    survived = exact_anti_join(maybe, seen, key)
-    return fresh.unionByName(survived)
 
 
 def _num_bits(n: int, fpp: float) -> int:

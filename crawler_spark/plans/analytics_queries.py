@@ -1,8 +1,8 @@
-"""Training-data-pipeline queries (dedup / similarity / text / multimodal)
+"""Training-data-pipeline queries (dedup / similarity / text)
 with DuckDB oracles — the ANALYTICS_QUERIES half of the driver contract.
 
 Every Spark query here is built from crawler_spark.operators.{dedup,
-similarity, multimodal} and functions.textstats; every oracle is the same
+similarity} and functions.textstats; every oracle is the same
 computation in DuckDB SQL.  Engine parity rests on three deliberate choices:
 
 1. all content hashing is md5 (identical in both engines); compares are on
@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 
 from crawler_spark.functions import textstats as TS
 from crawler_spark.operators import dedup as DD
-from crawler_spark.operators import multimodal as MM
 from crawler_spark.operators import similarity as SIM
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -1630,135 +1629,6 @@ FROM wordsv WHERE len(w) >= 4
 
 
 # ---------------------------------------------------------------------------
-# multimodal
-# ---------------------------------------------------------------------------
-
-
-def q_mm_image_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    imgs = MM.synthesize_images(_t(spark, sf_dir, "documents"))
-    return (
-        imgs.groupBy("fmt")
-        .agg(
-            F.count("*").cast("long").alias("n_images"),
-            F.sum(F.length("bytes")).cast("long").alias("total_bytes"),
-            F.min("w").cast("int").alias("min_w"),
-            F.max("h").cast("int").alias("max_h"),
-            F.countDistinct("caption").cast("long").alias("n_captions"),
-        )
-    )
-
-
-SQL_MM_IMAGE_METADATA = """
-WITH imgs AS (
-  SELECT 'img-' || CAST(doc_id AS VARCHAR) AS image_id,
-         unhex(md5(text)) AS bytes,
-         CAST((strpos('0123456789abcdef', substr(md5(text), 1, 1))) * 16 + 16 AS INTEGER) AS w,
-         CAST((strpos('0123456789abcdef', substr(md5(text), 2, 1))) * 16 + 16 AS INTEGER) AS h,
-         (['png', 'jpeg', 'webp'])[CAST(doc_id % 3 AS INTEGER) + 1] AS fmt,
-         substr(text, 1, 40) AS caption
-  FROM documents
-)
-SELECT fmt, CAST(count(*) AS BIGINT) AS n_images,
-       CAST(sum(octet_length(bytes)) AS BIGINT) AS total_bytes,
-       CAST(min(w) AS INTEGER) AS min_w, CAST(max(h) AS INTEGER) AS max_h,
-       CAST(count(DISTINCT caption) AS BIGINT) AS n_captions
-FROM imgs GROUP BY fmt
-"""
-
-
-_IMGS_CTE = """
-  SELECT 'img-' || CAST(doc_id AS VARCHAR) AS image_id,
-         unhex(md5(text)) AS bytes,
-         CAST((strpos('0123456789abcdef', substr(md5(text), 1, 1))) * 16 + 16 AS INTEGER) AS w,
-         CAST((strpos('0123456789abcdef', substr(md5(text), 2, 1))) * 16 + 16 AS INTEGER) AS h,
-         (['png', 'jpeg', 'webp'])[CAST(doc_id % 3 AS INTEGER) + 1] AS fmt,
-         substr(text, 1, 40) AS caption
-  FROM documents
-"""
-
-
-def q_image_aspect_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SDXL/NaViT aspect-ratio bucketing: every image is assigned to its
-    nearest ratio bucket (square/4:3/3:4/16:9/9:16) with EXACT integer
-    cross-multiplied distances — the bucket CASE expression is the literal
-    same SQL string in Spark and the DuckDB oracle, so the assignment
-    cannot drift.  Map-side expr + one 5-key groupBy; output is
-    broadcast-sized at any corpus scale (the batching table a trainer
-    broadcasts back against the corpus)."""
-    imgs = MM.synthesize_images(_t(spark, sf_dir, "documents"))
-    return MM.aspect_bucket_rollup(imgs)
-
-
-def _aspect_buckets_sql() -> str:
-    from crawler_spark.operators.multimodal import aspect_bucket_case
-
-    return f"""
-WITH imgs AS ({_IMGS_CTE}),
-b AS (SELECT *, {aspect_bucket_case()} AS bucket FROM imgs)
-SELECT bucket, CAST(count(*) AS BIGINT) AS n_images,
-       CAST(sum(CAST(w AS BIGINT) * h) AS BIGINT) AS total_pixels,
-       CAST(min(w) AS INTEGER) AS min_w, CAST(max(w) AS INTEGER) AS max_w,
-       CAST(min(h) AS INTEGER) AS min_h, CAST(max(h) AS INTEGER) AS max_h
-FROM b GROUP BY bucket
-"""
-
-
-SQL_IMAGE_ASPECT_BUCKETS = _aspect_buckets_sql()
-
-
-def q_pack_image_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WebDataset-style image shard packing: per fmt (the parallel packing
-    unit), images in image_id order pack into shards of ≤1 MB DECODED size
-    (w·h·3) via a running sum with integer `div` — exact at any cumsum
-    magnitude.  One window shuffle on the bounded fmt key."""
-    imgs = MM.synthesize_images(_t(spark, sf_dir, "documents"))
-    return MM.pack_image_shards(imgs, budget_bytes=1_000_000)
-
-
-SQL_PACK_IMAGE_SHARDS = f"""
-WITH imgs AS ({_IMGS_CTE}),
-e AS (SELECT image_id, fmt, CAST(w AS BIGINT) * h * 3 AS est_bytes FROM imgs)
-SELECT image_id, fmt, CAST(est_bytes AS BIGINT) AS est_bytes,
-       CAST((sum(est_bytes) OVER (PARTITION BY fmt ORDER BY image_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-             - est_bytes) // 1000000 AS BIGINT) AS shard_idx
-FROM e
-"""
-
-
-def q_mm_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    imgs = MM.synthesize_images(_t(spark, sf_dir, "documents"))
-    return MM.decode_features(imgs)
-
-
-def _decode_features_sql() -> str:
-    bytes_exprs = [
-        f"((strpos('{HEX}', substr(h, {2 * j + 1}, 1)) - 1) * 16 + "
-        f"(strpos('{HEX}', substr(h, {2 * j + 2}, 1)) - 1))"
-        for j in range(16)
-    ]
-    total = " + ".join(bytes_exprs)
-    least = "least(" + ", ".join(bytes_exprs) + ")"
-    greatest = "greatest(" + ", ".join(bytes_exprs) + ")"
-    return f"""
-WITH imgs AS (
-  SELECT 'img-' || CAST(doc_id AS VARCHAR) AS image_id, md5(text) AS h
-  FROM documents
-)
-SELECT image_id,
-       CAST(16 AS INTEGER) AS n_bytes,
-       CAST({total} AS BIGINT) AS byte_sum,
-       CAST({least} AS INTEGER) AS byte_min,
-       CAST({greatest} AS INTEGER) AS byte_max,
-       CAST(({total}) * 1000 // 16 AS BIGINT) AS mean_millis
-FROM imgs
-"""
-
-
-SQL_MM_DECODE_FEATURES = _decode_features_sql()
-
-
-# ---------------------------------------------------------------------------
 # corpus-pipeline queries: stratified sampling, shard packing, tf-idf — the batch building blocks of a training-data mix
 # ---------------------------------------------------------------------------
 
@@ -2080,624 +1950,6 @@ FROM ranked WHERE rk <= 5
 """
 
 
-def q_mm_av_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio/video as opaque binary + typed metadata (the multimodal column
-    contract beyond images): payload bytes and duration derived
-    deterministically from events; per-kind rollup of count/bytes/duration.
-    The decode stages stay stubbed (operators.multimodal.sample_frames)."""
-    e = _t(spark, sf_dir, "events")
-    h1 = F.expr(
-        "instr('0123456789abcdef', substring(md5(cast(event_id as string)), 1, 1)) - 1"
-    )
-    media = e.select(
-        F.when(F.col("event_id") % 2 == 0, F.lit("audio"))
-        .otherwise(F.lit("video"))
-        .alias("kind"),
-        ((h1 + 1) * 500).cast("long").alias("duration_ms"),
-        F.unhex(F.md5("props")).alias("bytes"),
-    )
-    return media.groupBy("kind").agg(
-        F.count("*").cast("long").alias("n_media"),
-        F.sum(F.length("bytes")).cast("long").alias("total_bytes"),
-        F.sum("duration_ms").cast("long").alias("total_duration_ms"),
-        F.max("duration_ms").cast("long").alias("max_duration_ms"),
-    )
-
-
-SQL_MM_AV_METADATA = """
-WITH media AS (
-  SELECT CASE WHEN event_id % 2 = 0 THEN 'audio' ELSE 'video' END AS kind,
-         CAST((strpos('0123456789abcdef',
-                      substr(md5(CAST(event_id AS VARCHAR)), 1, 1)) - 1 + 1)
-              * 500 AS BIGINT) AS duration_ms,
-         unhex(md5(props)) AS bytes
-  FROM events)
-SELECT kind, CAST(count(*) AS BIGINT) AS n_media,
-       CAST(sum(octet_length(bytes)) AS BIGINT) AS total_bytes,
-       CAST(sum(duration_ms) AS BIGINT) AS total_duration_ms,
-       CAST(max(duration_ms) AS BIGINT) AS max_duration_ms
-FROM media GROUP BY kind
-"""
-
-
-def _phash_nib_sum(dialect: str) -> str:
-    """Portable 60-bit hash from the first 15 md5(text) nibbles — the
-    deterministic stand-in for a decoded-pixel perceptual hash, identical in
-    both engines (the REAL aHash path over decoded pixels is
-    operators.multimodal.ahash_images, pinned by tests/test_codecs.py)."""
-    pos = "instr" if dialect == "spark" else "strpos"
-    sub = "substring" if dialect == "spark" else "substr"
-    return " + ".join(
-        f"CAST(({pos}('0123456789abcdef', {sub}(md5(text), {i}, 1)) - 1) "
-        f"AS BIGINT) * CAST({16 ** (i - 1)} AS BIGINT)"
-        for i in range(1, 16)
-    )
-
-
-def q_image_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image near-duplicate pairs by perceptual-hash hamming distance — the
-    image-payload analog of dedup_simhash, over the input_hint table shape
-    (image_id, …, phash:int64).  Near-dup variants are planted inside the
-    query (phash XOR 3 for every 7th image — 2-bit hamming); candidate
-    generation is the pigeonhole chunk join (complete for hamming ≤ chunks−1)
-    shared with SimHash, verified by exact bit_count(xor).  The oracle runs
-    the identical algorithm relationally."""
-    d = _t(spark, sf_dir, "documents")
-    base = d.select(
-        "doc_id",
-        F.concat(F.lit("img-"), F.col("doc_id").cast("string")).alias(
-            "image_id"
-        ),
-        F.expr(_phash_nib_sum("spark")).alias("phash"),
-    )
-    variants = base.filter(F.col("doc_id") % 7 == 0).select(
-        F.concat("image_id", F.lit("-v")).alias("image_id"),
-        F.expr("phash ^ CAST(3 AS BIGINT)").alias("phash"),
-    )
-    imgs = base.select("image_id", "phash").unionByName(variants)
-    pairs = MM.phash_near_pairs(imgs, bits=60, chunks=10, max_hamming=4)
-    return pairs.select(
-        "a_id", "b_id", F.col("hamming").cast("int").alias("hamming")
-    )
-
-
-SQL_IMAGE_PHASH_NEARDUP = f"""
-WITH base AS (
-  SELECT doc_id, 'img-' || CAST(doc_id AS VARCHAR) AS image_id,
-         {_phash_nib_sum("duckdb")} AS phash
-  FROM documents),
-imgs AS (
-  SELECT image_id, phash FROM base
-  UNION ALL
-  SELECT image_id || '-v' AS image_id, xor(phash, CAST(3 AS BIGINT)) AS phash
-  FROM base WHERE doc_id % 7 = 0),
-chunked AS (
-  SELECT image_id, phash, j AS chunk_id, (phash >> (j * 6)) & 63 AS chunk_val
-  FROM imgs CROSS JOIN generate_series(0, 9) t(j)),
-cand AS (
-  SELECT DISTINCT a.image_id AS a_id, b.image_id AS b_id,
-         bit_count(xor(a.phash, b.phash)) AS hamming
-  FROM chunked a JOIN chunked b
-    ON a.chunk_id = b.chunk_id AND a.chunk_val = b.chunk_val
-   AND a.image_id < b.image_id)
-SELECT a_id, b_id, CAST(hamming AS INT) AS hamming
-FROM cand WHERE hamming <= 4
-"""
-
-
-def q_image_caption_joint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Joint image+caption near-duplicate pairs — the multimodal dedup gate
-    a LAION-style corpus needs: a pair is a TRUE duplicate only when the
-    images are visually near (phash hamming ≤ 4 via the pigeonhole chunk
-    join) AND the captions agree (token-set Jaccard ≥ 0.6, computed as an
-    exact integer gate 10·|∩| ≥ 6·|∪| so both engines compare identically).
-    Image reuse under a NEW caption is a different training sample and must
-    survive: the query plants both kinds — every 7th image gets a 2-bit
-    phash variant with the SAME caption (caught) and every 11th a 2-bit
-    variant captioned 'stock photo N' (visually near, caption-disjoint —
-    passes the hamming join, fails the caption gate).  The caption gate is
-    two image_id equi-joins + a projection after the bucketed hamming join,
-    so the scale shape stays phash_near_pairs'."""
-    d = _t(spark, sf_dir, "documents")
-    base = d.select(
-        "doc_id",
-        F.concat(F.lit("img-"), F.col("doc_id").cast("string")).alias(
-            "image_id"
-        ),
-        F.substring("text", 1, 120).alias("caption"),
-        F.expr(_phash_nib_sum("spark")).alias("phash"),
-    )
-    v_same = base.filter(F.col("doc_id") % 7 == 0).select(
-        F.concat("image_id", F.lit("-v")).alias("image_id"),
-        "caption",
-        F.expr("phash ^ CAST(3 AS BIGINT)").alias("phash"),
-    )
-    v_diff = base.filter(F.col("doc_id") % 11 == 0).select(
-        F.concat("image_id", F.lit("-w")).alias("image_id"),
-        F.concat(F.lit("stock photo "), F.col("doc_id").cast("string")).alias(
-            "caption"
-        ),
-        F.expr("phash ^ CAST(3 AS BIGINT)").alias("phash"),
-    )
-    imgs = (
-        base.select("image_id", "caption", "phash")
-        .unionByName(v_same)
-        .unionByName(v_diff)
-    )
-    pairs = MM.phash_near_pairs(
-        imgs.select("image_id", "phash"), bits=60, chunks=10, max_hamming=4
-    )
-    toks = imgs.select(
-        "image_id",
-        F.array_distinct(
-            F.split(F.lower(F.trim("caption")), r"\s+")
-        ).alias("t"),
-    )
-    inter = F.size(F.array_intersect("ta.t", "tb.t")).cast("long")
-    joined = (
-        pairs.join(toks.alias("ta"), F.col("a_id") == F.col("ta.image_id"))
-        .join(toks.alias("tb"), F.col("b_id") == F.col("tb.image_id"))
-        .select(
-            "a_id",
-            "b_id",
-            F.col("hamming").cast("int").alias("hamming"),
-            inter.alias("cap_inter"),
-            (
-                F.size("ta.t").cast("long")
-                + F.size("tb.t").cast("long")
-                - inter
-            ).alias("cap_union"),
-        )
-    )
-    return joined.filter(
-        F.lit(10) * F.col("cap_inter") >= F.lit(6) * F.col("cap_union")
-    )
-
-
-SQL_IMAGE_CAPTION_JOINT_DEDUP = f"""
-WITH base AS (
-  SELECT doc_id, 'img-' || CAST(doc_id AS VARCHAR) AS image_id,
-         substring(text, 1, 120) AS caption,
-         {_phash_nib_sum("duckdb")} AS phash
-  FROM documents),
-imgs AS (
-  SELECT image_id, caption, phash FROM base
-  UNION ALL
-  SELECT image_id || '-v', caption, xor(phash, CAST(3 AS BIGINT))
-  FROM base WHERE doc_id % 7 = 0
-  UNION ALL
-  SELECT image_id || '-w', 'stock photo ' || CAST(doc_id AS VARCHAR),
-         xor(phash, CAST(3 AS BIGINT))
-  FROM base WHERE doc_id % 11 = 0),
-chunked AS (
-  SELECT image_id, phash, j AS chunk_id, (phash >> (j * 6)) & 63 AS chunk_val
-  FROM imgs CROSS JOIN generate_series(0, 9) t(j)),
-near AS (
-  SELECT * FROM (
-    SELECT DISTINCT a.image_id AS a_id, b.image_id AS b_id,
-           bit_count(xor(a.phash, b.phash)) AS hamming
-    FROM chunked a JOIN chunked b
-      ON a.chunk_id = b.chunk_id AND a.chunk_val = b.chunk_val
-     AND a.image_id < b.image_id)
-  WHERE hamming <= 4),
-toks AS (
-  SELECT image_id,
-         list_distinct(string_split_regex(lower(trim(caption)), '\\s+')) AS t
-  FROM imgs),
-gated AS (
-  SELECT n.a_id, n.b_id, CAST(n.hamming AS INT) AS hamming,
-         CAST(len(list_intersect(ta.t, tb.t)) AS BIGINT) AS cap_inter,
-         CAST(len(ta.t) + len(tb.t) - len(list_intersect(ta.t, tb.t))
-              AS BIGINT) AS cap_union
-  FROM near n
-  JOIN toks ta ON ta.image_id = n.a_id
-  JOIN toks tb ON tb.image_id = n.b_id)
-SELECT a_id, b_id, hamming, cap_inter, cap_union
-FROM gated WHERE 10 * cap_inter >= 6 * cap_union
-"""
-
-
-def q_image_phash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental image phash dedup — probe a persisted value-level chunk
-    index with a new crawl batch only (operators.multimodal.
-    phash_incremental_pairs), the image analog of dedup_minhash_incremental.
-    Same planted corpus as image_phash_neardup, split old/new on doc_id % 3;
-    the result is the full near-pair set restricted to pairs with a new
-    side, which is exactly what the oracle computes relationally."""
-    d = _t(spark, sf_dir, "documents")
-    base = d.select(
-        "doc_id",
-        F.concat(F.lit("img-"), F.col("doc_id").cast("string")).alias(
-            "image_id"
-        ),
-        F.expr(_phash_nib_sum("spark")).alias("phash"),
-    )
-    variants = base.filter(F.col("doc_id") % 7 == 0).select(
-        "doc_id",
-        F.concat("image_id", F.lit("-v")).alias("image_id"),
-        F.expr("phash ^ CAST(3 AS BIGINT)").alias("phash"),
-    )
-    imgs = base.unionByName(variants)
-    old = imgs.filter(F.col("doc_id") % 3 != 0).select("image_id", "phash")
-    new = imgs.filter(F.col("doc_id") % 3 == 0).select("image_id", "phash")
-    index = MM.phash_value_index(old, bits=60, chunks=10)
-    pairs = MM.phash_incremental_pairs(
-        index, old, new, bits=60, chunks=10, max_hamming=4
-    )
-    return pairs.select(
-        "a_id", "b_id", F.col("hamming").cast("int").alias("hamming")
-    )
-
-
-SQL_IMAGE_PHASH_INCREMENTAL = f"""
-WITH base AS (
-  SELECT doc_id, 'img-' || CAST(doc_id AS VARCHAR) AS image_id,
-         {_phash_nib_sum("duckdb")} AS phash
-  FROM documents),
-imgs AS (
-  SELECT doc_id, image_id, phash FROM base
-  UNION ALL
-  SELECT doc_id, image_id || '-v' AS image_id,
-         xor(phash, CAST(3 AS BIGINT)) AS phash
-  FROM base WHERE doc_id % 7 = 0),
-flagged AS (
-  SELECT image_id, phash, (doc_id % 3 = 0) AS is_new FROM imgs),
-chunked AS (
-  SELECT image_id, phash, is_new, j AS chunk_id,
-         (phash >> (j * 6)) & 63 AS chunk_val
-  FROM flagged CROSS JOIN generate_series(0, 9) t(j)),
-cand AS (
-  SELECT DISTINCT a.image_id AS a_id, b.image_id AS b_id,
-         bit_count(xor(a.phash, b.phash)) AS hamming
-  FROM chunked a JOIN chunked b
-    ON a.chunk_id = b.chunk_id AND a.chunk_val = b.chunk_val
-   AND a.image_id < b.image_id AND (a.is_new OR b.is_new))
-SELECT a_id, b_id, CAST(hamming AS INT) AS hamming
-FROM cand WHERE hamming <= 4
-"""
-
-
-def q_image_dedup_representatives(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """End-to-end image dedup curation: phash near-pairs → connected
-    components → keep ONE best-resolution representative per duplicate
-    cluster — the pass a training-data pipeline runs after pair generation,
-    composing operators.multimodal.phash_near_pairs with
-    operators.dedup.connected_components.  Resolution is planted
-    deterministically (variants are always low-res, so the base image must
-    win its cluster); representative choice is total-ordered
-    (pixels DESC, image_id ASC) so both engines pick the same row.
-    Singleton images (no near-dup) form their own cluster via the left
-    join + coalesce, exactly like the oracle's LEFT JOIN on reachability."""
-    from pyspark.sql import Window
-
-    d = _t(spark, sf_dir, "documents")
-    base = d.select(
-        "doc_id",
-        F.concat(F.lit("img-"), F.col("doc_id").cast("string")).alias(
-            "image_id"
-        ),
-        F.expr(_phash_nib_sum("spark")).alias("phash"),
-        (F.lit(640) + (F.col("doc_id") % 5) * 160).cast("long").alias("w"),
-        (F.lit(480) + (F.col("doc_id") % 3) * 120).cast("long").alias("h"),
-    )
-    variants = base.filter(F.col("doc_id") % 7 == 0).select(
-        F.concat("image_id", F.lit("-v")).alias("image_id"),
-        F.expr("phash ^ CAST(3 AS BIGINT)").alias("phash"),
-        F.lit(320).cast("long").alias("w"),
-        F.lit(240).cast("long").alias("h"),
-    )
-    imgs = base.select("image_id", "phash", "w", "h").unionByName(variants)
-    pairs = MM.phash_near_pairs(
-        imgs.select("image_id", "phash"), bits=60, chunks=10, max_hamming=4
-    )
-    comp = DD.connected_components(pairs).withColumnRenamed(
-        "doc_id", "image_id"
-    )
-    labeled = (
-        imgs.join(comp, "image_id", "left")
-        .withColumn("cluster_id", F.coalesce("cluster_id", "image_id"))
-        .withColumn("pixels", (F.col("w") * F.col("h")).cast("long"))
-    )
-    w = Window.partitionBy("cluster_id").orderBy(
-        F.col("pixels").desc(), F.col("image_id").asc()
-    )
-    ranked = labeled.withColumn("rn", F.row_number().over(w))
-    return ranked.groupBy("cluster_id").agg(
-        F.count("*").cast("long").alias("n_images"),
-        F.min(F.when(F.col("rn") == 1, F.col("image_id"))).alias(
-            "kept_image_id"
-        ),
-        F.min(F.when(F.col("rn") == 1, F.col("pixels")))
-        .cast("long")
-        .alias("kept_pixels"),
-    )
-
-
-SQL_IMAGE_DEDUP_REPRESENTATIVES = f"""
-WITH RECURSIVE base AS (
-  SELECT doc_id, 'img-' || CAST(doc_id AS VARCHAR) AS image_id,
-         {_phash_nib_sum("duckdb")} AS phash,
-         CAST(640 + (doc_id % 5) * 160 AS BIGINT) AS w,
-         CAST(480 + (doc_id % 3) * 120 AS BIGINT) AS h
-  FROM documents),
-imgs AS (
-  SELECT image_id, phash, w, h FROM base
-  UNION ALL
-  SELECT image_id || '-v' AS image_id, xor(phash, CAST(3 AS BIGINT)) AS phash,
-         CAST(320 AS BIGINT) AS w, CAST(240 AS BIGINT) AS h
-  FROM base WHERE doc_id % 7 = 0),
-chunked AS (
-  SELECT image_id, phash, j AS chunk_id, (phash >> (j * 6)) & 63 AS chunk_val
-  FROM imgs CROSS JOIN generate_series(0, 9) t(j)),
-pairs AS (
-  SELECT DISTINCT a.image_id AS a_id, b.image_id AS b_id
-  FROM chunked a JOIN chunked b
-    ON a.chunk_id = b.chunk_id AND a.chunk_val = b.chunk_val
-   AND a.image_id < b.image_id
-  WHERE bit_count(xor(a.phash, b.phash)) <= 4),
-edges AS (
-  SELECT a_id AS src, b_id AS dst FROM pairs
-  UNION
-  SELECT b_id AS src, a_id AS dst FROM pairs),
-reach(src, dst) AS (
-  SELECT src, dst FROM edges
-  UNION
-  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-labels AS (
-  SELECT i.image_id,
-         coalesce(least(i.image_id, min(r.dst)), i.image_id) AS cluster_id
-  FROM imgs i LEFT JOIN reach r ON r.src = i.image_id
-  GROUP BY i.image_id),
-ranked AS (
-  SELECT l.cluster_id, i.image_id, i.w * i.h AS pixels,
-         row_number() OVER (PARTITION BY l.cluster_id
-                            ORDER BY i.w * i.h DESC, i.image_id ASC) AS rn
-  FROM imgs i JOIN labels l ON l.image_id = i.image_id)
-SELECT cluster_id,
-       CAST(count(*) AS BIGINT) AS n_images,
-       min(CASE WHEN rn = 1 THEN image_id END) AS kept_image_id,
-       CAST(min(CASE WHEN rn = 1 THEN pixels END) AS BIGINT) AS kept_pixels
-FROM ranked GROUP BY cluster_id
-"""
-
-
-def q_image_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image-corpus curation funnel (the image analog of filter_funnel):
-    survivors after each LAION-style stage — min-dimension ≥ 64, aspect
-    sanity max(w,h) ≤ 3·min(w,h), caption 3..40 tokens, phash-exact dedup
-    (min image_id canonical) — over the input_hint-shaped table with the
-    planted duplicate rows.  One pass: map-side gate indicators, the same
-    phash window shuffle the dedup runs, one 5-value aggregate unpivoted
-    with ``stack``."""
-    from pyspark.sql import Window
-
-    d = _t(spark, sf_dir, "documents")
-    base = d.select(
-        "doc_id",
-        F.concat(F.lit("img-"), F.col("doc_id").cast("string")).alias(
-            "image_id"
-        ),
-        (F.expr("instr('0123456789abcdef', substring(md5(text), 1, 1))") * 16
-         + 16).cast("int").alias("w"),
-        (F.expr("instr('0123456789abcdef', substring(md5(text), 2, 1))") * 16
-         + 16).cast("int").alias("h"),
-        F.substring("text", 1, 120).alias("caption"),
-        F.expr(_phash_nib_sum("spark")).alias("phash"),
-    )
-    dups = base.filter(F.col("doc_id") % 7 == 0).withColumn(
-        "image_id", F.concat("image_id", F.lit("-v"))
-    )
-    imgs = base.unionByName(dups)
-    imgs = imgs.withColumn(
-        "canon",
-        F.col("image_id")
-        == F.min("image_id").over(Window.partitionBy("phash")),
-    )
-    n_cap = F.size(F.split(F.trim("caption"), r"\s+"))
-    s1 = F.least("w", "h") >= 64
-    s2 = s1 & (
-        F.greatest("w", "h") <= 3 * F.least("w", "h")
-    )
-    s3 = s2 & (n_cap >= 3) & (n_cap <= 40)
-    s4 = s3 & F.col("canon")
-    agg = imgs.select(
-        *[s.cast("long").alias(f"__s{i}") for i, s in enumerate([s1, s2, s3, s4], 1)]
-    ).agg(
-        F.count("*").alias("c0"),
-        *[F.sum(f"__s{i}").alias(f"c{i}") for i in range(1, 5)],
-    )
-    return agg.selectExpr(
-        """stack(5,
-           0, 'total',       c0,
-           1, 'min_dim',     c1,
-           2, 'aspect',      c2,
-           3, 'caption',     c3,
-           4, 'phash_dedup', c4) AS (stage_idx, stage, n_images)"""
-    ).select(
-        F.col("stage_idx").cast("int").alias("stage_idx"),
-        "stage",
-        F.col("n_images").cast("long").alias("n_images"),
-    )
-
-
-def _image_filter_funnel_sql() -> str:
-    return f"""
-WITH base AS (
-  SELECT doc_id, 'img-' || CAST(doc_id AS VARCHAR) AS image_id,
-         CAST((strpos('0123456789abcdef', substr(md5(text), 1, 1))) * 16 + 16 AS INTEGER) AS w,
-         CAST((strpos('0123456789abcdef', substr(md5(text), 2, 1))) * 16 + 16 AS INTEGER) AS h,
-         substr(text, 1, 120) AS caption,
-         {_phash_nib_sum("duckdb")} AS phash
-  FROM documents),
-imgs AS (
-  SELECT image_id, w, h, caption, phash FROM base
-  UNION ALL
-  SELECT image_id || '-v', w, h, caption, phash FROM base WHERE doc_id % 7 = 0),
-k AS (
-  SELECT *,
-         (image_id = min(image_id) OVER (PARTITION BY phash)) AS canon,
-         len(regexp_split_to_array(trim(caption), '\\s+')) AS n_cap,
-         (least(w, h) >= 64) AS s1
-  FROM imgs),
-k2 AS (SELECT *, (s1 AND greatest(w, h) <= 3 * least(w, h)) AS s2 FROM k),
-k3 AS (SELECT *, (s2 AND n_cap BETWEEN 3 AND 40) AS s3 FROM k2),
-k4 AS (SELECT *, (s3 AND canon) AS s4 FROM k3),
-c AS (
-  SELECT CAST(count(*) AS BIGINT) AS c0,
-         CAST(sum(CASE WHEN s1 THEN 1 ELSE 0 END) AS BIGINT) AS c1,
-         CAST(sum(CASE WHEN s2 THEN 1 ELSE 0 END) AS BIGINT) AS c2,
-         CAST(sum(CASE WHEN s3 THEN 1 ELSE 0 END) AS BIGINT) AS c3,
-         CAST(sum(CASE WHEN s4 THEN 1 ELSE 0 END) AS BIGINT) AS c4
-  FROM k4)
-SELECT CAST(0 AS INTEGER) AS stage_idx, 'total' AS stage, c0 AS n_images FROM c
-UNION ALL SELECT 1, 'min_dim', c1 FROM c
-UNION ALL SELECT 2, 'aspect', c2 FROM c
-UNION ALL SELECT 3, 'caption', c3 FROM c
-UNION ALL SELECT 4, 'phash_dedup', c4 FROM c
-"""
-
-
-SQL_IMAGE_FILTER_FUNNEL = _image_filter_funnel_sql()
-
-
-def q_image_caption_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic in-shard negative mining for contrastive image-caption
-    training: k=2 mismatched captions per image from its md5 hash shard via
-    lead() — reproducible across reruns (unlike in-batch order), one window
-    shuffle on the bounded shard key, no N² pair stage."""
-    imgs = MM.synthesize_images(_t(spark, sf_dir, "documents"))
-    return MM.caption_negatives(imgs, k=2, buckets=16)
-
-
-SQL_IMAGE_CAPTION_NEGATIVES = f"""
-WITH imgs AS ({_IMGS_CTE}),
-d AS (
-  SELECT image_id, md5(caption) AS cap_md5,
-         ('0x' || substr(md5('neg1:' || image_id), 1, 15))::BIGINT AS h
-  FROM imgs),
-s AS (SELECT *, CAST(h % 16 AS INTEGER) AS shard FROM d),
-l AS (
-  SELECT image_id,
-         lead(image_id, 1) OVER w AS n1_id, lead(cap_md5, 1) OVER w AS n1_md5,
-         lead(image_id, 2) OVER w AS n2_id, lead(cap_md5, 2) OVER w AS n2_md5
-  FROM s WINDOW w AS (PARTITION BY shard ORDER BY h ASC, image_id ASC))
-SELECT image_id, CAST(1 AS INTEGER) AS neg_rank,
-       n1_id AS neg_image_id, n1_md5 AS neg_caption_md5
-FROM l WHERE n1_id IS NOT NULL
-UNION ALL
-SELECT image_id, CAST(2 AS INTEGER), n2_id, n2_md5
-FROM l WHERE n2_id IS NOT NULL
-"""
-
-
-def q_image_augmentation_params(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reproducible augmentation table: per image a seeded 80% crop box and
-    flip bit from md5(salt:tag:image_id) — a training run and its replay
-    see the identical augmented view without storing augmented pixels.
-    Integer-only, map-side."""
-    imgs = MM.synthesize_images(_t(spark, sf_dir, "documents"))
-    return MM.augmentation_params(imgs, crop_pct=80)
-
-
-SQL_IMAGE_AUGMENTATION_PARAMS = f"""
-WITH imgs AS ({_IMGS_CTE}),
-c AS (
-  SELECT image_id, w, h,
-         greatest(CAST(w * 80 // 100 AS INTEGER), 1) AS crop_w,
-         greatest(CAST(h * 80 // 100 AS INTEGER), 1) AS crop_h
-  FROM imgs)
-SELECT image_id, crop_w, crop_h,
-       CAST(('0x' || substr(md5('aug1:cx:' || image_id), 1, 15))::BIGINT
-            % (w - crop_w + 1) AS INTEGER) AS x0,
-       CAST(('0x' || substr(md5('aug1:cy:' || image_id), 1, 15))::BIGINT
-            % (h - crop_h + 1) AS INTEGER) AS y0,
-       (('0x' || substr(md5('aug1:fl:' || image_id), 1, 15))::BIGINT % 2 = 1)
-         AS flip
-FROM c
-"""
-
-
-def q_image_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flagship IMAGE-corpus curation (the north_star's image+caption
-    training-data pass, composed like q_corpus_curation): build the
-    input_hint-shaped table (image_id, w, h, fmt, caption, phash) with
-    planted duplicate rows → phash-exact dedup keeping the min image_id →
-    caption quality gate (3..40 tokens) → per-fmt rollup of survivors.
-    One declarative plan: Catalyst fuses dedup window, gate and rollup."""
-    from pyspark.sql import Window
-
-    d = _t(spark, sf_dir, "documents")
-    base = d.select(
-        "doc_id",
-        F.concat(F.lit("img-"), F.col("doc_id").cast("string")).alias(
-            "image_id"
-        ),
-        (F.expr("instr('0123456789abcdef', substring(md5(text), 1, 1))") * 16
-         + 16).cast("int").alias("w"),
-        (F.expr("instr('0123456789abcdef', substring(md5(text), 2, 1))") * 16
-         + 16).cast("int").alias("h"),
-        F.element_at(
-            F.array(F.lit("png"), F.lit("jpeg"), F.lit("webp")),
-            (F.col("doc_id") % 3 + 1).cast("int"),
-        ).alias("fmt"),
-        F.substring("text", 1, 120).alias("caption"),
-        F.expr(_phash_nib_sum("spark")).alias("phash"),
-    )
-    dups = base.filter(F.col("doc_id") % 7 == 0).withColumn(
-        "image_id", F.concat("image_id", F.lit("-v"))
-    )
-    imgs = base.unionByName(dups)
-    w_d = Window.partitionBy("phash").orderBy("image_id")
-    kept = (
-        imgs.withColumn("__rn", F.row_number().over(w_d))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-    toks = F.size(F.split(F.trim("caption"), r"\s+"))
-    gated = kept.withColumn("n_cap_tokens", toks.cast("long")).filter(
-        (F.col("n_cap_tokens") >= 3) & (F.col("n_cap_tokens") <= 40)
-    )
-    return gated.groupBy("fmt").agg(
-        F.count("*").cast("long").alias("n_images"),
-        F.sum("n_cap_tokens").cast("long").alias("total_cap_tokens"),
-        F.sum(F.col("w").cast("long") * F.col("h")).cast("long").alias(
-            "total_pixels"
-        ),
-    )
-
-
-SQL_IMAGE_CORPUS_CURATION = f"""
-WITH base AS (
-  SELECT doc_id, 'img-' || CAST(doc_id AS VARCHAR) AS image_id,
-         (strpos('0123456789abcdef', substr(md5(text), 1, 1)) * 16 + 16) AS w,
-         (strpos('0123456789abcdef', substr(md5(text), 2, 1)) * 16 + 16) AS h,
-         ['png', 'jpeg', 'webp'][CAST(doc_id % 3 + 1 AS INT)] AS fmt,
-         substr(text, 1, 120) AS caption,
-         {_phash_nib_sum("duckdb")} AS phash
-  FROM documents),
-imgs AS (
-  SELECT image_id, w, h, fmt, caption, phash FROM base
-  UNION ALL
-  SELECT image_id || '-v', w, h, fmt, caption, phash
-  FROM base WHERE doc_id % 7 = 0),
-kept AS (
-  SELECT *, row_number() OVER (PARTITION BY phash ORDER BY image_id) AS rn
-  FROM imgs),
-gated AS (
-  SELECT fmt, w, h,
-         CAST(len(regexp_split_to_array(trim(caption), '\\s+')) AS BIGINT)
-           AS n_cap_tokens
-  FROM kept WHERE rn = 1)
-SELECT fmt, CAST(count(*) AS BIGINT) AS n_images,
-       CAST(sum(n_cap_tokens) AS BIGINT) AS total_cap_tokens,
-       CAST(sum(CAST(w AS BIGINT) * h) AS BIGINT) AS total_pixels
-FROM gated WHERE n_cap_tokens BETWEEN 3 AND 40
-GROUP BY fmt
-"""
-
-
 def q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship pipeline composition: the full curation pass a training-data
     corpus gets — exact-dedup keep (drop non-canonical copies) → quality
@@ -2760,108 +2012,6 @@ SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
        round(avg(quality), 4) AS avg_quality
 FROM scored WHERE quality >= 0.7 GROUP BY source
 """
-
-
-def q_image_text_alignment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CLIP-score alignment gate (LAION-style, keep at cosine ≥ 0.28) over
-    deterministic stand-in encoders: the caption embedding is the hashed
-    ±1 bag-of-words of multimodal.caption_embedding, and the planted pairs
-    make the gate's behavior checkable — every image's aligned row reuses
-    its own caption's embedding as the image embedding (cosine ≈ 1), and
-    every 9th image also emits a '-m' row whose image embedding comes from
-    the NEXT document's caption (misaligned: cosine = whatever the two
-    captions' token bags share).  Real deployments swap the stand-in for
-    CLIP towers; the plan — embed once, two narrow (doc, emb) joins, a
-    map-side cosine — is the production shape."""
-    d = _t(spark, sf_dir, "documents")
-    caps = d.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.substring("text", 1, 120).alias("caption"),
-    )
-    tvec = MM.caption_embedding(
-        caps, key_col="doc_id", text_col="caption", dims=16
-    )
-    aligned = caps.select(
-        F.concat(F.lit("img-"), F.col("doc_id").cast("string")).alias(
-            "image_id"
-        ),
-        F.col("doc_id").alias("txt_doc"),
-        F.col("doc_id").alias("img_doc"),
-    )
-    mis = caps.filter(F.col("doc_id") % 9 == 0).select(
-        F.concat(
-            F.lit("img-"), F.col("doc_id").cast("string"), F.lit("-m")
-        ).alias("image_id"),
-        F.col("doc_id").alias("txt_doc"),
-        (F.col("doc_id") + 1).alias("img_doc"),
-    )
-    pairs = aligned.unionByName(mis)
-    t = tvec.select(
-        F.col("doc_id").alias("txt_doc"), F.col("emb").alias("txt_emb")
-    )
-    i = tvec.select(
-        F.col("doc_id").alias("img_doc"), F.col("emb").alias("img_emb")
-    )
-    out = MM.alignment_gate(
-        pairs.join(t, "txt_doc").join(i, "img_doc"), threshold_e4=2800
-    )
-    return out.select("image_id", "alignment_e4", "keep")
-
-
-def _alignment_sql(dims: int = 16, threshold_e4: int = 2800) -> str:
-    sums = ",\n         ".join(
-        f"CAST(sum(CASE WHEN (hh >> {d}) & 1 = 1 THEN 1 ELSE -1 END) "
-        f"AS BIGINT) AS s{d}"
-        for d in range(dims)
-    )
-    arr = ", ".join(f"s{d}" for d in range(dims))
-    return f"""
-WITH caps AS (
-  SELECT CAST(doc_id AS BIGINT) AS doc_id, substr(text, 1, 120) AS caption
-  FROM documents),
-tok AS (
-  SELECT doc_id,
-         unnest(regexp_split_to_array(trim(lower(caption)), '\\s+')) AS token
-  FROM caps),
-flt AS (SELECT doc_id, token FROM tok WHERE token <> ''),
-hs AS (
-  SELECT doc_id, ('0x' || substr(md5(token), 1, 15))::BIGINT AS hh FROM flt),
-tvec AS (
-  SELECT doc_id,
-         {sums}
-  FROM hs GROUP BY doc_id),
-emb AS (SELECT doc_id, [{arr}] AS emb FROM tvec),
-pairs AS (
-  SELECT 'img-' || CAST(doc_id AS VARCHAR) AS image_id,
-         doc_id AS txt_doc, doc_id AS img_doc
-  FROM caps
-  UNION ALL
-  SELECT 'img-' || CAST(doc_id AS VARCHAR) || '-m' AS image_id,
-         doc_id AS txt_doc, doc_id + 1 AS img_doc
-  FROM caps WHERE doc_id % 9 = 0),
-j AS (
-  SELECT p.image_id, t.emb AS txt_emb, i.emb AS img_emb
-  FROM pairs p
-  JOIN emb t ON p.txt_doc = t.doc_id
-  JOIN emb i ON p.img_doc = i.doc_id),
-scored AS (
-  SELECT image_id,
-         CASE WHEN list_dot_product(img_emb, img_emb) = 0
-                OR list_dot_product(txt_emb, txt_emb) = 0
-              THEN CAST(0 AS DOUBLE)
-              ELSE list_dot_product(img_emb, txt_emb) /
-                   (sqrt(list_dot_product(img_emb, img_emb)) *
-                    sqrt(list_dot_product(txt_emb, txt_emb)))
-         END AS cos
-  FROM j)
-SELECT image_id,
-       CAST(round(cos * 10000, 0) AS BIGINT) AS alignment_e4,
-       (CAST(round(cos * 10000, 0) AS BIGINT) >= {threshold_e4}) AS keep
-FROM scored
-"""
-
-
-SQL_IMAGE_TEXT_ALIGNMENT = _alignment_sql()
 
 
 # ---------------------------------------------------------------------------
@@ -3179,8 +2329,7 @@ FROM w
 
 
 def q_dedup_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Text near-dup cluster curation — the text twin of
-    image_dedup_representatives: MinHash-LSH pairs → connected components
+    """Text near-dup cluster curation: MinHash-LSH pairs → connected components
     → ONE representative per cluster under the total order (n_chars DESC,
     doc_id ASC); singleton docs represent themselves.  This is the "which
     copy do we keep" decision every dedup pipeline must make after
@@ -3671,26 +2820,6 @@ ANALYTICS_QUERIES: dict[str, tuple[QueryFn, str | None]] = {
     "text_fingerprint": (q_text_fingerprint, SQL_TEXT_FINGERPRINT),
     "text_decontaminate": (q_text_decontaminate, SQL_TEXT_DECONTAMINATE),
     "text_repetition": (q_text_repetition, SQL_TEXT_REPETITION),
-    "mm_image_metadata": (q_mm_image_metadata, SQL_MM_IMAGE_METADATA),
-    "mm_decode_features": (q_mm_decode_features, SQL_MM_DECODE_FEATURES),
-    "mm_av_metadata": (q_mm_av_metadata, SQL_MM_AV_METADATA),
-    "image_phash_neardup": (q_image_phash_neardup, SQL_IMAGE_PHASH_NEARDUP),
-    "image_caption_joint_dedup": (
-        q_image_caption_joint_dedup,
-        SQL_IMAGE_CAPTION_JOINT_DEDUP,
-    ),
-    "image_phash_incremental": (
-        q_image_phash_incremental,
-        SQL_IMAGE_PHASH_INCREMENTAL,
-    ),
-    "image_dedup_representatives": (
-        q_image_dedup_representatives,
-        SQL_IMAGE_DEDUP_REPRESENTATIVES,
-    ),
-    "image_corpus_curation": (
-        q_image_corpus_curation,
-        SQL_IMAGE_CORPUS_CURATION,
-    ),
     "sample_stratified": (q_sample_stratified, SQL_SAMPLE_STRATIFIED),
     "sample_host_cap": (q_sample_host_cap, SQL_SAMPLE_HOST_CAP),
     "dedup_semantic": (q_dedup_semantic, SQL_DEDUP_SEMANTIC),
@@ -3709,22 +2838,7 @@ ANALYTICS_QUERIES: dict[str, tuple[QueryFn, str | None]] = {
     ),
     "ann_sq8": (q_ann_sq8, SQL_ANN_SQ8),
     "ann_ivf_sq8": (q_ann_ivf_sq8, SQL_ANN_IVF_SQ8),
-    "image_aspect_buckets": (q_image_aspect_buckets, SQL_IMAGE_ASPECT_BUCKETS),
-    "image_caption_negatives": (
-        q_image_caption_negatives,
-        SQL_IMAGE_CAPTION_NEGATIVES,
-    ),
-    "image_augmentation_params": (
-        q_image_augmentation_params,
-        SQL_IMAGE_AUGMENTATION_PARAMS,
-    ),
-    "image_text_alignment": (
-        q_image_text_alignment,
-        SQL_IMAGE_TEXT_ALIGNMENT,
-    ),
-    "pack_image_shards": (q_pack_image_shards, SQL_PACK_IMAGE_SHARDS),
     "filter_funnel": (q_filter_funnel, SQL_FILTER_FUNNEL),
-    "image_filter_funnel": (q_image_filter_funnel, SQL_IMAGE_FILTER_FUNNEL),
     "text_pii_scrub": (q_text_pii_scrub, SQL_TEXT_PII_SCRUB),
     "pack_token_shards": (q_pack_token_shards, SQL_PACK_TOKEN_SHARDS),
     "tfidf_top_terms": (q_tfidf_top_terms, SQL_TFIDF_TOP_TERMS),

@@ -1,10 +1,11 @@
 """Property tests for the training-data-pipeline operators (dedup /
-similarity / text / multimodal) over the sf0.001 driver testdata.
+similarity / text, and the crawl's image decode/phash stage) over the
+sf0.001 driver testdata.
 
 Engine-vs-oracle parity is covered by tools/check_oracle.py and the driver
 gate; these tests check the *semantics*: planted duplicates are recovered,
 LSH candidates are supersets/subsets of the exact answers where theory says
-so, and the Arrow plumbing round-trips bytes faithfully.
+so.
 """
 
 from __future__ import annotations
@@ -486,34 +487,6 @@ def test_ivf_pq_probe_pruning_and_full_probe_equivalence(spark):
         )
 
 
-def test_image_caption_joint_dedup_gates_on_both_modalities(spark):
-    """The joint gate keeps visually-near pairs only when captions agree:
-    every planted same-caption 2-bit variant ('-v') is caught against its
-    base image, and no caption-disjoint variant ('-w', visually identical
-    hamming-wise) survives the caption gate."""
-    from crawler_spark.plans.analytics_queries import (
-        q_image_caption_joint_dedup,
-    )
-
-    res = q_image_caption_joint_dedup(spark, SF).collect()
-    assert res, "no pairs at all"
-    pairs = {(r.a_id, r.b_id) for r in res}
-    planted = [
-        r.doc_id
-        for r in spark.read.parquet(f"{SF}/documents.parquet")
-        .filter(F.col("doc_id") % 7 == 0)
-        .select("doc_id")
-        .collect()
-    ]
-    assert planted
-    for doc in planted:
-        assert (f"img-{doc}", f"img-{doc}-v") in pairs, (
-            f"same-caption variant of doc {doc} not caught"
-        )
-    leaked = [p for p in pairs if p[0].endswith("-w") or p[1].endswith("-w")]
-    assert not leaked, f"caption-disjoint variants survived: {leaked[:5]}"
-
-
 def test_ivf_pq_residual_single_cell_equals_centered_flat_pq(spark):
     """With a k=1 coarse quantizer the residual is just x − mean, so
     residual IVF-PQ must be EXACTLY flat PQ-ADC over the centered data —
@@ -658,92 +631,6 @@ def test_fingerprint_is_min_shingle_md5(spark):
         assert got[r.doc_id] == mins
 
 
-# ---------------------------------------------------------------------------
-# multimodal
-# ---------------------------------------------------------------------------
-
-
-def test_decode_features_match_bytes(spark):
-    from crawler_spark.operators.multimodal import decode_features, synthesize_images
-
-    imgs = synthesize_images(_docs(spark))
-    feats = {r.image_id: r for r in decode_features(imgs).collect()}
-    for r in imgs.limit(20).collect():
-        arr = np.frombuffer(bytes(r.bytes), dtype=np.uint8)
-        f = feats[r.image_id]
-        assert f.n_bytes == 16
-        assert f.byte_sum == int(arr.sum())
-        assert f.byte_min == int(arr.min())
-        assert f.byte_max == int(arr.max())
-        assert f.mean_millis == int(arr.sum()) * 1000 // 16
-
-
-def _rgb(seed: int, h: int = 48, w: int = 64) -> np.ndarray:
-    rng = np.random.default_rng(seed)
-    return rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-
-
-def test_resize_real_roundtrip(spark):
-    from crawler_spark.operators.multimodal import _nn_resize, resize_images
-    from crawler_spark.sources import codecs
-
-    srcs = {f"img-{i}": _rgb(i) for i in range(6)}
-    rows = [
-        (k, bytearray(codecs.encode_png(v)), v.shape[1], v.shape[0], "png")
-        for k, v in srcs.items()
-    ]
-    df = spark.createDataFrame(
-        rows, "image_id string, bytes binary, w int, h int, fmt string"
-    )
-    out = {r.image_id: r for r in resize_images(df, max_side=16).collect()}
-    assert len(out) == 6
-    for k, src in srcs.items():
-        r = out[k]
-        assert r.status == "ok"
-        got = codecs.decode_png(bytes(r.bytes))
-        want = _nn_resize(src, 16)
-        assert got.shape == want.shape == (r.h, r.w, 3)
-        assert (got == want).all()
-        assert max(r.h, r.w) <= 16
-
-
-def test_resize_failure_isolation(spark):
-    from crawler_spark.operators.multimodal import resize_images
-    from crawler_spark.sources import codecs
-
-    good = codecs.encode_png(_rgb(1))
-    rows = [
-        ("ok-img", bytearray(good), 64, 48, "png"),
-        ("bad-img", bytearray(b"not an image"), 0, 0, "png"),
-    ]
-    df = spark.createDataFrame(
-        rows, "image_id string, bytes binary, w int, h int, fmt string"
-    )
-    out = {r.image_id: r for r in resize_images(df, max_side=16).collect()}
-    assert out["ok-img"].status == "ok"
-    assert out["bad-img"].status == "error" and out["bad-img"].bytes is None
-
-
-def test_sample_frames_every_nth(spark):
-    from crawler_spark.operators.multimodal import (
-        encode_video,
-        sample_frames,
-    )
-    from crawler_spark.sources import codecs
-
-    frames = [_rgb(100 + i, h=8, w=8) for i in range(10)]
-    vid = encode_video(frames)
-    df = spark.createDataFrame(
-        [("vid-0", bytearray(vid)), ("vid-bad", bytearray(b"junk"))],
-        "video_id string, bytes binary",
-    )
-    out = sample_frames(df, every_n=3).collect()
-    got = {(r.video_id, r.frame_idx) for r in out}
-    assert got == {("vid-0", 0), ("vid-0", 3), ("vid-0", 6), ("vid-0", 9)}
-    for r in out:
-        assert (codecs.decode_png(bytes(r.bytes)) == frames[r.frame_idx]).all()
-
-
 def test_connected_components_match_union_find(spark):
     from crawler_spark.operators.dedup import (
         connected_components,
@@ -806,104 +693,6 @@ def test_connected_components_star_deep_chain(spark):
     want = {i: 100 for i in range(100, 221)}
     want.update({500: 500, 501: 500, 502: 500, 900: 900, 901: 900})
     assert got == want
-
-
-def test_image_phash_near_dup_end_to_end(spark):
-    """Image near-dup over REAL decoded pixels: encode distinct random PNGs,
-    plant a lossy re-encode variant per image, hash with ahash_images
-    (codecs.phash64 over decoded RGB), pair with the pigeonhole chunk join.
-    Expect exactly the planted (orig, variant) pairs; banded candidates must
-    equal the brute-force hamming scan (completeness for
-    max_hamming <= chunks-1); an undecodable row isolates as status=error."""
-    from crawler_spark.operators.multimodal import ahash_images, phash_near_pairs
-    from crawler_spark.sources import codecs
-
-    rng_rows = []
-    for k in range(12):
-        rng = np.random.default_rng(1000 + k)
-        # block-structured content (like real photos, unlike iid noise —
-        # noise puts every aHash cell AT the mean, the degenerate case):
-        # an 8x8 coarse pattern upsampled 4x, plus mild sensor-ish noise
-        coarse = rng.integers(0, 256, size=(8, 8, 3), dtype=np.int16)
-        rgb = np.kron(coarse, np.ones((4, 4, 1), dtype=np.int16))
-        rgb = (rgb + rng.integers(-8, 9, size=rgb.shape)).clip(0, 255)
-        rgb = rgb.astype(np.uint8)
-        rng_rows.append((f"i{k:02d}", bytearray(codecs.encode_png(rgb)), "png"))
-        rng_rows.append(
-            (f"i{k:02d}-v", bytearray(codecs.encode_jpeg(rgb)), "jpeg")
-        )
-    rng_rows.append(("broken", bytearray(b"not an image"), "png"))
-    imgs = spark.createDataFrame(
-        rng_rows, "image_id string, bytes binary, fmt string"
-    )
-    hashed = ahash_images(imgs)
-    rows = hashed.collect()
-    status = {r.image_id: r.status for r in rows}
-    assert status["broken"] == "error"
-    assert all(v == "ok" for k, v in status.items() if k != "broken")
-
-    ok = hashed.filter(F.col("status") == "ok").select("image_id", "phash")
-    got = {
-        (r.a_id, r.b_id): r.hamming
-        for r in phash_near_pairs(ok, bits=64, chunks=8, max_hamming=6).collect()
-    }
-    want_pairs = {(f"i{k:02d}", f"i{k:02d}-v") for k in range(12)}
-    # every planted lossy variant is found within the aHash robustness bound
-    assert want_pairs <= set(got)
-    assert all(h <= 6 for h in got.values())
-
-    # completeness: banded pairs == brute-force hamming scan
-    ph = {r.image_id: r.phash for r in ok.collect()}
-    mask = (1 << 64) - 1
-    brute = {
-        (a, b)
-        for a in ph
-        for b in ph
-        if a < b and bin((ph[a] ^ ph[b]) & mask).count("1") <= 6
-    }
-    assert set(got) == brute
-
-
-def test_phash_near_pairs_exact_dup_skew_stays_linear(spark):
-    """1k images sharing ONE phash (the all-identical crawl-dup worst case
-    aHash skew): the chunk-join candidate stage must see distinct VALUES
-    only — its pair count is independent of duplicate multiplicity — while
-    the expanded output still contains every intra-group hamming-0 pair and
-    every cross-value near pair."""
-    from crawler_spark.operators.multimodal import (
-        phash_near_pairs,
-        phash_value_pairs,
-    )
-
-    H = 0x5A5A_1234_ABCD_0F0F
-    rows = [(f"h{i:04d}", H) for i in range(1000)]
-    rows += [
-        ("v-one", H ^ 0x1),                       # hamming 1 from H
-        ("v-two", H ^ ((1 << 10) | (1 << 20))),   # hamming 2 from H
-        ("far", ((~H) & ((1 << 64) - 1)) - (1 << 64)),  # bitwise-not of H as
-        # signed i64 (phash columns are Spark LONG) — differs in every chunk
-    ]
-    imgs = spark.createDataFrame(rows, "image_id string, phash long")
-
-    # candidate stage: 3 value pairs (H~v-one, H~v-two, v-one~v-two),
-    # whether the hot value has 1 member or 1000
-    assert phash_value_pairs(imgs, bits=64, chunks=8, max_hamming=6).count() == 3
-
-    pairs = phash_near_pairs(imgs, bits=64, chunks=8, max_hamming=6)
-    # C(1000,2) intra hamming-0 + 1000 (H,v-one) + 1000 (H,v-two) + (v-one,v-two)
-    assert pairs.count() == 499500 + 1000 + 1000 + 1
-    by_h = pairs.groupBy("hamming").count().collect()
-    assert {r.hamming: r["count"] for r in by_h} == {
-        0: 499500, 1: 1000, 2: 1000, 3: 1,
-    }
-
-    # max_chunk_df cap applies at the VALUE level (lower-bound semantics)
-    # every chunk list shared by >=2 of the three near values has df >= 2,
-    # so a value-level cap of 1 drops all of them
-    capped = phash_value_pairs(
-        imgs, bits=64, chunks=8, max_hamming=6, max_chunk_df=1
-    )
-    assert capped.count() == 0
 
 
 def test_incremental_lsh_equals_full_restricted(spark):
@@ -993,10 +782,117 @@ def test_ngram_jaccard_max_df_lower_bound(spark):
     assert boiler_pairs and not (boiler_pairs & set(capped))
 
 
+def _fetched_assets(spark, rows):
+    """Rows of (image_id, body, ext) shaped as the crawl's asset-fetch
+    output, the input of ``images.decode_assets``."""
+    return spark.createDataFrame(
+        [(i, f"http://img.test/{i}.{e}", bytearray(b), e, "ok") for i, b, e in rows],
+        "image_id string, asset_url string, body binary, ext string, status string",
+    )
+
+
+def _blocky_rgb(seed: int) -> np.ndarray:
+    """Block-structured content (like real photos, unlike iid noise, which
+    puts every aHash cell AT the mean): an 8x8 coarse pattern upsampled 4x,
+    plus mild sensor-ish noise."""
+    rng = np.random.default_rng(seed)
+    coarse = rng.integers(0, 256, size=(8, 8, 3), dtype=np.int16)
+    rgb = np.kron(coarse, np.ones((4, 4, 1), dtype=np.int16))
+    return (rgb + rng.integers(-8, 9, size=rgb.shape)).clip(0, 255).astype(np.uint8)
+
+
+def test_decode_features_match_bytes(spark):
+    """The crawl's decode stage: every images-table feature (w, h, fmt,
+    phash) is what the codec computes from that row's own bytes, and the
+    bytes pass through unchanged."""
+    from crawler_spark.operators.images import decode_assets
+    from crawler_spark.sources import codecs
+
+    srcs = {f"img-{i}": _blocky_rgb(i) for i in range(6)}
+    rows = []
+    for k, rgb in srcs.items():
+        ext = "png" if k[-1] in "024" else "jpg"
+        body = codecs.encode_png(rgb) if ext == "png" else codecs.encode_jpeg(rgb)
+        rows.append((k, body, ext))
+    bodies = {k: b for k, b, _ in rows}
+    out = {r.image_id: r for r in decode_assets(_fetched_assets(spark, rows)).collect()}
+    assert set(out) == set(srcs)
+    for k, r in out.items():
+        assert bytes(r.bytes) == bodies[k]
+        assert r.fmt == ("png" if k[-1] in "024" else "jpeg")
+        rgb = codecs.decode_image(bodies[k], r.fmt)
+        assert (r.h, r.w) == rgb.shape[:2] == srcs[k].shape[:2]
+        assert r.phash == codecs.phash64(rgb)
+
+
+def test_resize_failure_isolation(spark):
+    """The crawl's image stage stores fetched bytes as-is (no resize); its
+    failure isolation (C3) is the decode's: an undecodable body becomes an
+    error row (w = h = 0, phash 0) and never fails the batch its good
+    neighbours decode in."""
+    from crawler_spark.operators.images import decode_assets
+    from crawler_spark.sources import codecs
+
+    good = codecs.encode_png(_blocky_rgb(1))
+    rows = [("ok-img", good, "png"), ("bad-img", b"not an image", "png")]
+    out = {r.image_id: r for r in decode_assets(_fetched_assets(spark, rows)).collect()}
+    assert (out["ok-img"].w, out["ok-img"].h) == (32, 32)
+    assert out["ok-img"].phash != 0
+    bad = out["bad-img"]
+    assert (bad.w, bad.h, bad.phash) == (0, 0, 0)
+    assert bytes(bad.bytes) == b"not an image"
+
+
+def test_image_phash_near_dup_end_to_end(spark):
+    """Image near-dup over REAL decoded pixels: encode distinct PNGs, plant
+    a lossy JPEG re-encode per image, hash with the crawl's decode stage
+    (codecs.phash64 over decoded RGB), pair with the pigeonhole chunk join.
+    Every planted (orig, variant) pair is found; banded candidates equal the
+    brute-force hamming scan (completeness for max_hamming <= chunks-1); an
+    undecodable row isolates as an error row (w = 0)."""
+    from crawler_spark.operators.dedup import hamming_near_pairs
+    from crawler_spark.operators.images import decode_assets
+    from crawler_spark.sources import codecs
+
+    rows = []
+    for k in range(12):
+        rgb = _blocky_rgb(1000 + k)
+        rows.append((f"i{k:02d}", codecs.encode_png(rgb), "png"))
+        rows.append((f"i{k:02d}-v", codecs.encode_jpeg(rgb), "jpg"))
+    rows.append(("broken", b"not an image", "png"))
+    hashed = decode_assets(_fetched_assets(spark, rows))
+    w = {r.image_id: r.w for r in hashed.collect()}
+    assert w["broken"] == 0
+    assert all(v > 0 for k, v in w.items() if k != "broken")
+
+    ok = hashed.filter(F.col("w") > 0).select("image_id", "phash")
+    got = {
+        (r.a_id, r.b_id): r.hamming
+        for r in hamming_near_pairs(
+            ok, "image_id", "phash", bits=64, chunks=8, max_hamming=6
+        ).collect()
+    }
+    want_pairs = {(f"i{k:02d}", f"i{k:02d}-v") for k in range(12)}
+    # every planted lossy variant is found within the aHash robustness bound
+    assert want_pairs <= set(got)
+    assert all(h <= 6 for h in got.values())
+
+    # completeness: banded pairs == brute-force hamming scan
+    ph = {r.image_id: r.phash for r in ok.collect()}
+    mask = (1 << 64) - 1
+    brute = {
+        (a, b)
+        for a in ph
+        for b in ph
+        if a < b and bin((ph[a] ^ ph[b]) & mask).count("1") <= 6
+    }
+    assert set(got) == brute
+
+
 def test_hamming_near_pairs_randomized_completeness(spark):
-    """hamming_near_pairs at the oracle query's shape (60-bit, 10 chunks,
-    max_hamming=4): banded candidates == brute force on a randomized set
-    with planted near pairs."""
+    """hamming_near_pairs at a 60-bit, 10-chunk, max_hamming=4 shape:
+    banded candidates == brute force on a randomized set with planted near
+    pairs."""
     import numpy as np
 
     from crawler_spark.operators.dedup import hamming_near_pairs
@@ -1065,74 +961,6 @@ def test_ivf_assign_zero_norm_vector_deterministic(spark):
     assert kmeans_centroids(emb, k=2, iters=2, seed="km1").count() >= 1
 
 
-def test_phash_incremental_equals_full_restricted(spark):
-    """phash_incremental_pairs over (index(old), old, new) must equal the
-    full phash_near_pairs over old ∪ new restricted to pairs with a new
-    side — including hamming-0 pairs that straddle the batch boundary and
-    a NEW image whose phash value already exists in the index (the probe
-    side must carry every value the new batch touches, seen or not)."""
-    import random
-
-    from crawler_spark.operators.multimodal import (
-        phash_incremental_pairs,
-        phash_near_pairs,
-        phash_value_index,
-    )
-
-    rng = random.Random(7)
-    base_vals = [rng.getrandbits(59) for _ in range(30)]
-    rows = []
-    for i, v in enumerate(base_vals):
-        rows.append((f"i{i:03d}", v))
-        if i % 5 == 0:
-            rows.append((f"i{i:03d}-near", v ^ (1 << (i % 59))))  # hamming 1
-        if i % 7 == 0:
-            rows.append((f"i{i:03d}-dup", v))  # exact dup, hamming 0
-    # forced boundary case: a new-batch image carrying an OLD value
-    rows.append(("zz-new-oldval", base_vals[1]))
-
-    def is_new(image_id: str) -> bool:
-        return image_id.startswith("zz-") or (hash_det(image_id) % 3 == 0)
-
-    def hash_det(s: str) -> int:
-        import hashlib
-
-        return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
-
-    old_rows = [r for r in rows if not is_new(r[0])]
-    new_rows = [r for r in rows if is_new(r[0])]
-    assert old_rows and new_rows
-    schema = "image_id string, phash long"
-    all_df = spark.createDataFrame(rows, schema)
-    old_df = spark.createDataFrame(old_rows, schema)
-    new_df = spark.createDataFrame(new_rows, schema)
-
-    full = {
-        (r.a_id, r.b_id): r.hamming
-        for r in phash_near_pairs(
-            all_df, bits=60, chunks=10, max_hamming=4
-        ).collect()
-    }
-    new_ids = {r[0] for r in new_rows}
-    want = {
-        k: v for k, v in full.items() if k[0] in new_ids or k[1] in new_ids
-    }
-    got = {
-        (r.a_id, r.b_id): r.hamming
-        for r in phash_incremental_pairs(
-            phash_value_index(old_df, bits=60, chunks=10),
-            old_df,
-            new_df,
-            bits=60,
-            chunks=10,
-            max_hamming=4,
-        ).collect()
-    }
-    assert got == want and any(v == 0 for v in want.values())
-    # the boundary image found its old-value exact dup
-    assert any("zz-new-oldval" in k and v == 0 for k, v in got.items())
-
-
 def test_tz_pinned_queries_do_not_mutate_session(spark):
     """The timezone-sensitive crawl query analyzes under a UTC pin but must
     RESTORE the caller's session TZ (ADVICE r3: the old persistent conf.set
@@ -1184,65 +1012,6 @@ def test_semantic_dedup_keeps_farthest_from_centroid(spark):
     assert rows[3].cent_cos < rows[1].cent_cos
 
 
-def test_aspect_bucket_assignment_exact(spark):
-    """Hand-checked nearest-ratio assignments, including an off-ratio image
-    and the exact-tie rule (earliest bucket in the list wins)."""
-    from crawler_spark.operators.multimodal import aspect_bucket_case
-
-    imgs = spark.createDataFrame(
-        [
-            (1, 100, 100),   # exactly 1:1
-            (2, 160, 90),    # exactly 16:9
-            (3, 90, 160),    # exactly 9:16
-            (4, 400, 300),   # exactly 4:3
-            (5, 300, 400),   # exactly 3:4
-            (6, 110, 100),   # 1.10 -> nearest 1:1 (vs 4/3=1.33)
-            (7, 150, 100),   # 1.50 -> nearest 16:9? |1.5-1.33|=.17 < |1.5-1.78|=.28 -> 4:3
-        ],
-        "id long, w int, h int",
-    )
-    got = {
-        r.id: r.bucket
-        for r in imgs.selectExpr("id", aspect_bucket_case() + " AS bucket").collect()
-    }
-    assert got == {
-        1: "square_1_1",
-        2: "wide_16_9",
-        3: "tall_9_16",
-        4: "landscape_4_3",
-        5: "portrait_3_4",
-        6: "square_1_1",
-        7: "landscape_4_3",
-    }
-
-
-def test_pack_image_shards_budget_and_order(spark):
-    """Packing invariants: shard indices are contiguous from 0 per group in
-    image_id order; every shard's first member starts below the budget
-    boundary (the floor rule); an oversized image gets its own shard."""
-    from crawler_spark.operators.multimodal import pack_image_shards
-
-    imgs = spark.createDataFrame(
-        [
-            ("a", "png", 300, 1),    # est 900
-            ("b", "png", 300, 1),    # est 900
-            ("c", "png", 2000, 1),   # est 6000 - oversized vs budget 1000
-            ("d", "png", 300, 1),    # est 900
-            ("e", "jpeg", 10, 10),   # separate group
-        ],
-        "image_id string, fmt string, w int, h int",
-    )
-    rows = sorted(
-        pack_image_shards(imgs, budget_bytes=1000).collect(),
-        key=lambda r: (r.fmt, r.image_id),
-    )
-    png = [(r.image_id, r.shard_idx) for r in rows if r.fmt == "png"]
-    # a starts shard 0; b's cumsum-before=900 < 1000 -> still shard 0;
-    # c starts at 1800 -> shard 1 (alone, oversized); d at 7800 -> shard 7
-    assert png == [("a", 0), ("b", 0), ("c", 1), ("d", 7)]
-    assert [r.shard_idx for r in rows if r.fmt == "jpeg"] == [0]
-
-
 def test_filter_funnel_is_monotone(spark):
     """Funnel invariant: stage survivor counts are non-increasing in stage
     order and stage 0 equals the corpus size."""
@@ -1254,24 +1023,6 @@ def test_filter_funnel_is_monotone(spark):
     counts = [r.n_docs for r in rows]
     assert all(a >= b for a, b in zip(counts, counts[1:]))
     assert len(rows) == 6
-
-
-def test_image_filter_funnel_monotone_and_dedups_planted(spark):
-    """Image funnel: counts non-increasing; total includes the planted
-    duplicate rows; the dedup stage removes at least that many."""
-    from crawler_spark.plans.analytics_queries import q_image_filter_funnel
-
-    rows = sorted(
-        q_image_filter_funnel(spark, SF).collect(), key=lambda r: r.stage_idx
-    )
-    counts = [r.n_images for r in rows]
-    assert all(a >= b for a, b in zip(counts, counts[1:]))
-    n_docs = _docs(spark).count()
-    n_planted = _docs(spark).filter(F.col("doc_id") % 7 == 0).count()
-    assert rows[0].n_images == n_docs + n_planted
-    caption_stage = next(r for r in rows if r.stage == "caption")
-    dedup_stage = next(r for r in rows if r.stage == "phash_dedup")
-    assert caption_stage.n_images - dedup_stage.n_images >= 0
 
 
 def test_duplicated_ngram_flags_exact_substr(spark):
@@ -1518,33 +1269,6 @@ def test_sq8_quantization_error_and_topk(spark):
     assert top[0].vec_id == 4  # nearest non-self under L2, exactly recovered
 
 
-def test_caption_negatives_are_mismatched_and_deterministic(spark):
-    """Negative-mining invariants: a negative never pairs an image with its
-    own caption, every image in a big-enough shard gets k negatives, and
-    the assignment is identical across runs."""
-    from crawler_spark.operators.multimodal import (
-        caption_negatives,
-        synthesize_images,
-    )
-
-    imgs = synthesize_images(_docs(spark))
-    a = sorted(map(tuple, caption_negatives(imgs, k=2, buckets=4).collect()))
-    b = sorted(map(tuple, caption_negatives(imgs, k=2, buckets=4).collect()))
-    assert a == b and a
-    own = {r.image_id: r for r in imgs.collect()}
-    import hashlib
-
-    for image_id, neg_rank, neg_image_id, neg_caption_md5 in a:
-        assert neg_image_id != image_id
-        own_md5 = hashlib.md5(own[image_id].caption.encode()).hexdigest()
-        # captions are unique per doc in this corpus, so md5 mismatch holds
-        assert neg_caption_md5 != own_md5
-    per_img = {}
-    for image_id, neg_rank, *_ in a:
-        per_img.setdefault(image_id, []).append(neg_rank)
-    assert max(len(v) for v in per_img.values()) == 2
-
-
 def test_ivf_sq8_single_cell_equals_flat_sq8(spark):
     """With a single-cell quantizer (k=1, nprobe=1) IVF-SQ8 degenerates to
     flat SQ8 — the probed cell IS the corpus, so results must be
@@ -1564,30 +1288,6 @@ def test_ivf_sq8_single_cell_equals_flat_sq8(spark):
     flat = sorted(map(tuple, sq8_adc_topk(e, q, k=5).collect()))
     ivf = sorted(map(tuple, ivf_sq8_topk(e, q, one_cell, k=5).collect()))
     assert ivf == flat
-
-
-def test_augmentation_params_in_bounds_and_deterministic(spark):
-    """Augmentation invariants: crop box always inside the image, flip is a
-    bit, and the whole table replays identically."""
-    from crawler_spark.operators.multimodal import (
-        augmentation_params,
-        synthesize_images,
-    )
-
-    imgs = synthesize_images(_docs(spark))
-    a = sorted(map(tuple, augmentation_params(imgs).collect()))
-    b = sorted(map(tuple, augmentation_params(imgs).collect()))
-    assert a == b and a
-    dims = {r.image_id: (r.w, r.h) for r in imgs.collect()}
-    for image_id, crop_w, crop_h, x0, y0, flip in a:
-        w, h = dims[image_id]
-        assert 1 <= crop_w <= w and 1 <= crop_h <= h
-        assert 0 <= x0 <= w - crop_w and 0 <= y0 <= h - crop_h
-        assert isinstance(flip, bool)
-    # out-of-range crop_pct is an error, never silent NULL/negative offsets
-    for bad in (0, -5, 101, 150):
-        with pytest.raises(ValueError):
-            augmentation_params(imgs, crop_pct=bad)
 
 
 def test_vocab_oov_counts_are_consistent(spark):
@@ -1610,55 +1310,6 @@ def test_vocab_oov_counts_are_consistent(spark):
         .count()
     )
     assert total == corpus_tokens
-
-
-def test_caption_embedding_and_alignment_gate(spark):
-    """caption_embedding replays a Python ±1 hashed bag-of-words; the
-    alignment gate passes self-pairs at cosine 1.0 and scores pairs by the
-    real cosine of the integer embeddings; zero-norm inputs score 0."""
-    import hashlib
-    import math
-
-    from crawler_spark.operators.multimodal import (
-        alignment_gate,
-        caption_embedding,
-    )
-
-    rows = [(1, "red cat on mat"), (2, "red cat on mat rug"), (3, "zq")]
-    df = spark.createDataFrame(rows, ["doc_id", "caption"])
-    emb = {
-        r.doc_id: list(r.emb)
-        for r in caption_embedding(df, dims=16).collect()
-    }
-
-    def py_emb(text):
-        v = [0] * 16
-        for tok in text.lower().split():
-            h = int(hashlib.md5(tok.encode()).hexdigest()[:15], 16)
-            for d in range(16):
-                v[d] += 1 if (h >> d) & 1 else -1
-        return v
-
-    for did, cap in rows:
-        assert emb[did] == py_emb(cap), did
-
-    pairs = spark.createDataFrame(
-        [
-            ("self", emb[1], emb[1]),
-            ("near", emb[1], emb[2]),
-            ("zero", [0] * 16, emb[1]),
-        ],
-        "pair_id string, img_emb array<long>, txt_emb array<long>",
-    )
-    got = {r.pair_id: r for r in alignment_gate(pairs).collect()}
-    assert got["self"].alignment_e4 == 10000 and got["self"].keep
-    dot = sum(a * b for a, b in zip(emb[1], emb[2]))
-    na = math.sqrt(sum(a * a for a in emb[1]))
-    nb = math.sqrt(sum(b * b for b in emb[2]))
-    assert got["near"].alignment_e4 == round(dot / (na * nb) * 10000)
-    assert got["zero"].alignment_e4 == 0 and not got["zero"].keep
-    with pytest.raises(ValueError):
-        caption_embedding(df, dims=61)
 
 
 def test_ngram_commonness_weights(spark):

@@ -26,6 +26,10 @@ def test_registry_fits_driver_window():
         "registry outgrew the driver's checked window — extend DEFER_TO_TAIL "
         "with long-stable (multi-round hash-green) rows before adding queries"
     )
+    if len(names) > E.DRIVER_CHECK_WINDOW:
+        assert len(names) - len(E.DEFER_TO_TAIL) == E.DRIVER_CHECK_WINDOW, (
+            "driver window not full — move deferred rows back into it"
+        )
     checked = set(names[: E.DRIVER_CHECK_WINDOW])
     for deferred in E.DEFER_TO_TAIL:
         assert deferred in names, f"DEFER_TO_TAIL names unknown query {deferred}"

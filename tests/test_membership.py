@@ -1,5 +1,6 @@
-"""Membership invariants — bloom no-false-negatives, cuckoo delete, and the
-bloom-prefiltered anti-join equivalence (SURVEY §5.3)."""
+"""Membership invariants — bloom no-false-negatives, cuckoo delete,
+bloom-prefiltered anti-join equivalence and the due-or-changed predicate
+(SURVEY §5.3)."""
 
 from __future__ import annotations
 
@@ -8,7 +9,6 @@ import numpy as np
 from crawler_spark.operators.membership import (
     NumpyBloom,
     NumpyCuckoo,
-    bloom_prefiltered_anti_join,
     exact_anti_join,
 )
 
@@ -47,13 +47,20 @@ def test_cuckoo_insert_contains_delete():
 
 
 def test_bloom_prefiltered_anti_join_equals_exact(spark):
-    new = spark.range(0, 5_000).selectExpr("id as k", "id % 7 as v")
-    seen = spark.range(0, 5_000, 3).selectExpr("id as k")
-    fast = bloom_prefiltered_anti_join(new, seen, "k")
-    slow = exact_anti_join(new, seen, "k")
-    assert sorted(r.k for r in fast.collect()) == sorted(r.k for r in slow.collect())
+    """The dequeue's not-seen half (NumpyBloom prefilter + exact check of
+    the bloom's maybes) keeps exactly the rows the exact anti-join keeps."""
+    from crawler_spark.operators.arrow_frontier import dequeue_keys
+
+    new = spark.range(0, 5_000).selectExpr("id as url_hash", "id % 7 as host_hash")
+    seen = spark.range(0, 5_000, 3).selectExpr(
+        "id as url_hash", "id % 7 as host_hash"
+    )
+    fast = dequeue_keys(new, seen, budget_per_host=10_000, num_buckets=4)
+    slow = exact_anti_join(new, seen, "url_hash")
+    got = sorted(r.url_hash for r in fast.collect())
+    assert got == sorted(r.url_hash for r in slow.collect())
     expected = [i for i in range(5_000) if i % 3 != 0]
-    assert sorted(r.k for r in slow.collect()) == expected
+    assert got == expected
 
 
 def test_due_or_changed_duplicate_key_last_wins_deterministic(spark):
