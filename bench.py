@@ -90,8 +90,6 @@ BENCH_QUERIES = [
     # its wall is the eager k-means/PQ training loop (index BUILD, a one-off
     # at production scale), not the serve path this slice tracks
     "dedup_semantic",
-    "text_quality",
-    "text_fingerprint",
 ]
 
 

@@ -8,7 +8,7 @@ Layout
 - ``schemas``    StructTypes for frontier / url_seen / host_state / problems /
                  images / fetch_log / lineage (FIXTURES.md A1-A6).
 - ``functions/`` pure column-expression function library (URL canon, keys,
-                 hashing, text) — zero per-row Python.
+                 hashing, parse-stage normalization) — zero per-row Python.
 - ``sources/``   synthetic web and the five real judge wire formats
                  (deterministic fetcher universes), warehouse (parquet-dir
                  table layer, Iceberg drop-in), image codecs, file ingest.

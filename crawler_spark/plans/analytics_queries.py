@@ -1,9 +1,9 @@
-"""Training-data-pipeline queries (dedup / similarity / text)
-with DuckDB oracles — the ANALYTICS_QUERIES half of the driver contract.
+"""Training-data-pipeline queries (dedup / similarity) with DuckDB
+oracles — the ANALYTICS_QUERIES half of the driver contract.
 
 Every Spark query here is built from crawler_spark.operators.{dedup,
-similarity} and functions.textstats; every oracle is the same
-computation in DuckDB SQL.  Engine parity rests on three deliberate choices:
+similarity}; every oracle is the same computation in DuckDB SQL.
+Engine parity rests on three deliberate choices:
 
 1. all content hashing is md5 (identical in both engines); compares are on
    hex strings (binary collation in both) or on 60-bit integer prefixes
@@ -28,7 +28,6 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from crawler_spark.functions import textstats as TS
 from crawler_spark.operators import dedup as DD
 from crawler_spark.operators import similarity as SIM
 
@@ -149,56 +148,6 @@ SELECT md5(text) AS text_md5, CAST(count(*) AS BIGINT) AS n_dups,
        array_to_string(list_transform(list_sort(list(doc_id)),
                                       x -> CAST(x AS VARCHAR)), '|') AS doc_ids
 FROM corpus GROUP BY md5(text) HAVING count(*) > 1
-"""
-
-
-def q_dedup_paragraph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet paragraph-level dedup (operators/dedup.paragraph_dedup): keep
-    only the first corpus occurrence of every 8-word paragraph and rebuild
-    each document.  The planted exact copies (doc_id+2000000) come back
-    fully stripped (text_clean = ''), and the tiny synthetic vocabulary
-    makes cross-document paragraph collisions common — the operator does
-    real span-level work on this corpus, not just copy removal."""
-    out = DD.paragraph_dedup(_corpus(spark, sf_dir), para_words=8)
-    return out.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("n_paras").cast("long").alias("n_paras"),
-        F.col("n_dropped").cast("long").alias("n_dropped"),
-        "text_clean",
-    )
-
-
-SQL_DEDUP_PARAGRAPH = f"""
-WITH {CORPUS_SQL.strip()},
-wordsv AS (
-  SELECT doc_id, regexp_split_to_array(text, '\\s+') AS w FROM corpus
-),
-paras0 AS (
-  SELECT doc_id,
-         unnest(list_transform(
-           generate_series(0, CAST(ceil(len(w) / 8.0) AS BIGINT) - 1),
-           i -> struct_pack(idx := i,
-                            para := array_to_string(
-                              list_slice(w, i * 8 + 1, i * 8 + 8), ' ')))) AS s
-  FROM wordsv WHERE len(w) >= 1
-),
-p AS (
-  SELECT doc_id, CAST(s.idx AS BIGINT) AS idx, s.para AS para,
-         md5(s.para) AS h
-  FROM paras0
-),
-firsts AS (
-  SELECT h, min(struct_pack(d := doc_id, i := idx)) AS f FROM p GROUP BY h
-)
-SELECT CAST(p.doc_id AS BIGINT) AS doc_id,
-       CAST(count(*) AS BIGINT) AS n_paras,
-       CAST(sum(CASE WHEN p.doc_id = (f).d AND p.idx = (f).i
-                     THEN 0 ELSE 1 END) AS BIGINT) AS n_dropped,
-       coalesce(string_agg(CASE WHEN p.doc_id = (f).d AND p.idx = (f).i
-                                THEN p.para END, ' ' ORDER BY p.idx),
-                '') AS text_clean
-FROM p JOIN firsts USING (h)
-GROUP BY p.doc_id
 """
 
 
@@ -742,11 +691,6 @@ FROM ranked WHERE rank <= {_IVF_TOPK}
 SQL_ANN_IVF_NPROBE = _ivf_nprobe_sql()
 
 
-# ---------------------------------------------------------------------------
-# text analysis
-# ---------------------------------------------------------------------------
-
-
 def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings").select(
         "vec_id",
@@ -1259,963 +1203,6 @@ def q_ann_ivf_pq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_ANN_IVF_PQ_RESIDUAL = _ivf_pq_sql(residual=True)
 
 
-def q_text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents").select(
-        "doc_id", "lang", *TS.lang_scores("text")
-    )
-    return d.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("lang").alias("actual_lang"),
-        TS.lang_predict().alias("pred_lang"),
-        *[
-            F.col(f"score_{lang}").cast("int").alias(f"score_{lang}")
-            for lang in TS.LANG_MARKERS
-        ],
-    )
-
-
-def _langid_sql() -> str:
-    score_exprs = ",\n       ".join(
-        "CAST(len(regexp_extract_all(text, '\\b("
-        + "|".join(markers)
-        + ")\\b')) AS INTEGER) AS score_"
-        + lang
-        for lang, markers in TS.LANG_MARKERS.items()
-    )
-    langs = list(TS.LANG_MARKERS)
-    best = "greatest(" + ", ".join(f"score_{lang}" for lang in langs) + ")"
-    case = "CASE " + " ".join(
-        f"WHEN score_{lang} = {best} THEN '{lang}'" for lang in langs
-    ) + " ELSE 'und' END"
-    cols = ", ".join(f"score_{lang}" for lang in langs)
-    return f"""
-WITH scored AS (
-  SELECT doc_id, lang,
-       {score_exprs}
-  FROM documents
-)
-SELECT CAST(doc_id AS BIGINT) AS doc_id, lang AS actual_lang,
-       {case} AS pred_lang, {cols}
-FROM scored
-"""
-
-
-SQL_TEXT_LANGID = _langid_sql()
-
-
-def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("long").alias("doc_id"), *TS.quality_features("text")
-    )
-    return d.withColumn("quality", TS.quality_score())
-
-
-def _quality_sql() -> str:
-    stop_pat = r"\b(" + "|".join(TS.STOPWORDS) + r")\b"
-    return f"""
-WITH feat AS (
-  SELECT CAST(doc_id AS BIGINT) AS doc_id,
-         CAST(length(text) AS BIGINT) AS n_chars,
-         CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT) AS n_tokens,
-         round((CAST(length(text) AS DOUBLE) - len(regexp_split_to_array(trim(text), '\\s+')) + 1)
-               / len(regexp_split_to_array(trim(text), '\\s+')), 4) AS mean_word_len,
-         round(CAST(len(regexp_extract_all(text, '[^A-Za-z0-9 ]')) AS DOUBLE)
-               / length(text), 4) AS punct_ratio,
-         round(CAST(len(regexp_extract_all(text, '{stop_pat}')) AS DOUBLE)
-               / len(regexp_split_to_array(trim(text), '\\s+')), 4) AS stopword_ratio
-  FROM documents
-)
-SELECT *,
-       round((CASE WHEN n_tokens BETWEEN 10 AND 1000 THEN 1 ELSE 0 END) * CAST(0.4 AS DOUBLE)
-           + (CASE WHEN mean_word_len BETWEEN 2.0 AND 12.0 THEN 1 ELSE 0 END) * CAST(0.3 AS DOUBLE)
-           + (CASE WHEN stopword_ratio > 0 THEN 1 ELSE 0 END) * CAST(0.2 AS DOUBLE)
-           + (CASE WHEN punct_ratio < 0.3 THEN 1 ELSE 0 END) * CAST(0.1 AS DOUBLE), 4) AS quality
-FROM feat
-"""
-
-
-SQL_TEXT_QUALITY = _quality_sql()
-
-
-def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-substring duplication flags at 8-gram granularity (Lee et al.
-    2022 ExactSubstr, discretized): a doc is flagged when any 8-token
-    window of it appears in another document.  Inverted-index shape: 60-bit
-    window hashes, distinct (doc, gram), one df hash-aggregate, narrow
-    probe join."""
-    from crawler_spark.operators.dedup import duplicated_ngram_flags
-
-    d = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("long").alias("doc_id"), "text"
-    )
-    return duplicated_ngram_flags(d, n=8)
-
-
-SQL_DEDUP_SUBSTRING = """
-WITH t AS (
-  SELECT CAST(doc_id AS BIGINT) AS doc_id,
-         regexp_split_to_array(trim(lower(text)), '\\s+') AS toks
-  FROM documents),
-g AS (
-  SELECT DISTINCT doc_id,
-         ('0x' || substr(md5(array_to_string(toks[i : i + 7], ' ')), 1, 15))::BIGINT AS gram
-  FROM t, LATERAL unnest(generate_series(1, len(toks) - 7)) s(i)
-  WHERE len(toks) >= 8),
-dfc AS (SELECT gram, count(*) AS df FROM g GROUP BY gram),
-per AS (
-  SELECT g.doc_id,
-         CAST(count(*) AS BIGINT) AS n_grams,
-         CAST(sum(CASE WHEN dfc.df >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_grams
-  FROM g JOIN dfc USING (gram) GROUP BY g.doc_id)
-SELECT t.doc_id,
-       COALESCE(per.n_grams, 0) AS n_grams,
-       COALESCE(per.n_dup_grams, 0) AS n_dup_grams,
-       (COALESCE(per.n_dup_grams, 0) > 0) AS flagged
-FROM t LEFT JOIN per ON t.doc_id = per.doc_id
-"""
-
-
-def q_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Curation-funnel observability: survivors after each pipeline stage
-    (length → word-length → stopword → punctuation gates → exact dedup) as
-    one row per stage.  At 100 TB this is the report a curation run ships
-    with — WHICH gate ate the corpus, not just the end count.  One pass:
-    gate indicators are map-side exprs, the dedup stage is the same
-    md5-groupBy shuffle dedup_exact runs, and the rollup is a single
-    6-value aggregate unpivoted with ``stack``."""
-    from pyspark.sql import Window
-
-    d = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        "text",
-        *TS.quality_features("text"),
-    )
-    d = d.withColumn(
-        "canon",
-        F.col("doc_id")
-        == F.min("doc_id").over(Window.partitionBy(F.md5("text"))),
-    )
-    s1 = (F.col("n_tokens") >= 10) & (F.col("n_tokens") <= 1000)
-    s2 = s1 & (F.col("mean_word_len") >= 2.0) & (F.col("mean_word_len") <= 12.0)
-    s3 = s2 & (F.col("stopword_ratio") > 0)
-    s4 = s3 & (F.col("punct_ratio") < 0.3)
-    s5 = s4 & F.col("canon")
-    stages = [s1, s2, s3, s4, s5]
-    agg = d.select(
-        *[s.cast("long").alias(f"__s{i}") for i, s in enumerate(stages, 1)]
-    ).agg(
-        F.count("*").alias("c0"),
-        *[F.sum(f"__s{i}").alias(f"c{i}") for i in range(1, 6)],
-    )
-    return agg.selectExpr(
-        """stack(6,
-           0, 'total',       c0,
-           1, 'length',      c1,
-           2, 'word_len',    c2,
-           3, 'stopwords',   c3,
-           4, 'punctuation', c4,
-           5, 'exact_dedup', c5) AS (stage_idx, stage, n_docs)"""
-    ).select(
-        F.col("stage_idx").cast("int").alias("stage_idx"),
-        "stage",
-        F.col("n_docs").cast("long").alias("n_docs"),
-    )
-
-
-def _filter_funnel_sql() -> str:
-    stop_pat = r"\b(" + "|".join(TS.STOPWORDS) + r")\b"
-    return f"""
-WITH feat AS (
-  SELECT CAST(doc_id AS BIGINT) AS doc_id, md5(text) AS t_md5,
-         CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT) AS n_tokens,
-         round((CAST(length(text) AS DOUBLE) - len(regexp_split_to_array(trim(text), '\\s+')) + 1)
-               / len(regexp_split_to_array(trim(text), '\\s+')), 4) AS mean_word_len,
-         round(CAST(len(regexp_extract_all(text, '[^A-Za-z0-9 ]')) AS DOUBLE)
-               / length(text), 4) AS punct_ratio,
-         round(CAST(len(regexp_extract_all(text, '{stop_pat}')) AS DOUBLE)
-               / len(regexp_split_to_array(trim(text), '\\s+')), 4) AS stopword_ratio
-  FROM documents),
-g AS (
-  SELECT *,
-         (doc_id = min(doc_id) OVER (PARTITION BY t_md5)) AS canon,
-         (n_tokens BETWEEN 10 AND 1000) AS s1
-  FROM feat),
-g2 AS (
-  SELECT *,
-         (s1 AND mean_word_len BETWEEN 2.0 AND 12.0) AS s2
-  FROM g),
-g3 AS (SELECT *, (s2 AND stopword_ratio > 0) AS s3 FROM g2),
-g4 AS (SELECT *, (s3 AND punct_ratio < 0.3) AS s4 FROM g3),
-g5 AS (SELECT *, (s4 AND canon) AS s5 FROM g4),
-c AS (
-  SELECT CAST(count(*) AS BIGINT) AS c0,
-         CAST(sum(CASE WHEN s1 THEN 1 ELSE 0 END) AS BIGINT) AS c1,
-         CAST(sum(CASE WHEN s2 THEN 1 ELSE 0 END) AS BIGINT) AS c2,
-         CAST(sum(CASE WHEN s3 THEN 1 ELSE 0 END) AS BIGINT) AS c3,
-         CAST(sum(CASE WHEN s4 THEN 1 ELSE 0 END) AS BIGINT) AS c4,
-         CAST(sum(CASE WHEN s5 THEN 1 ELSE 0 END) AS BIGINT) AS c5
-  FROM g5)
-SELECT CAST(0 AS INTEGER) AS stage_idx, 'total' AS stage, c0 AS n_docs FROM c
-UNION ALL SELECT 1, 'length', c1 FROM c
-UNION ALL SELECT 2, 'word_len', c2 FROM c
-UNION ALL SELECT 3, 'stopwords', c3 FROM c
-UNION ALL SELECT 4, 'punctuation', c4 FROM c
-UNION ALL SELECT 5, 'exact_dedup', c5 FROM c
-"""
-
-
-SQL_FILTER_FUNNEL = _filter_funnel_sql()
-
-
-def q_text_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = F.col("text")
-    d = _t(spark, sf_dir, "documents")
-    return d.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        TS.ws_token_count(t).cast("long").alias("ws_tokens"),
-        TS.bpe_ish_token_count(t).cast("long").alias("bpe_tokens"),
-        F.round(
-            F.length(t).cast("double") / TS.bpe_ish_token_count(t), 4
-        ).alias("chars_per_token"),
-    )
-
-
-SQL_TEXT_TOKENS = f"""
-SELECT CAST(doc_id AS BIGINT) AS doc_id,
-       CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT) AS ws_tokens,
-       CAST(len(regexp_extract_all(text, '{TS.BPE_TOKEN_RE}')) AS BIGINT) AS bpe_tokens,
-       round(CAST(length(text) AS DOUBLE)
-             / len(regexp_extract_all(text, '{TS.BPE_TOKEN_RE}')), 4) AS chars_per_token
-FROM documents
-"""
-
-
-def q_text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination — the standard test-set-contamination
-    filter of an LLM training pipeline (GPT-3 §C / Gopher / The Pile all
-    run a variant): flag every corpus document sharing at least one word
-    n-gram (n=3 here, sized to the synthetic vocabulary) with a held-out
-    benchmark set, reporting the count of DISTINCT shared n-grams.  The
-    benchmark side (docs with doc_id % 97 == 0) is tiny by nature — a
-    benchmark suite is millions of n-grams — so it BROADCASTS into the
-    probe join and the corpus side never shuffles; at 100 TB the only other
-    change is joining on xxhash64(n-gram) instead of the string (same
-    plan, 8-byte keys).  Output: (doc_id, n_hits) for contaminated
-    corpus docs."""
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select(
-            "doc_id", F.split(F.lower(F.trim("text")), r"\s+").alias("t")
-        )
-        .filter(F.size("t") >= 3)
-    )
-    ng = d.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(t) - 2), "
-                "i -> concat_ws(' ', slice(t, i, 3)))"
-            )
-        ).alias("g"),
-    )
-    bench = ng.filter(F.col("doc_id") % 97 == 0).select("g").distinct()
-    return (
-        ng.filter(F.col("doc_id") % 97 != 0)
-        .join(F.broadcast(bench), "g", "left_semi")
-        .groupBy("doc_id")
-        .agg(F.countDistinct("g").cast("long").alias("n_hits"))
-        .select(F.col("doc_id").cast("long").alias("doc_id"), "n_hits")
-    )
-
-
-SQL_TEXT_DECONTAMINATE = """
-WITH d AS (
-  SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t
-  FROM documents),
-ng AS (
-  SELECT doc_id,
-         unnest(list_transform(generate_series(1, len(t) - 2),
-                i -> array_to_string(list_slice(t, i, i + 2), ' '))) AS g
-  FROM d WHERE len(t) >= 3),
-bench AS (SELECT DISTINCT g FROM ng WHERE doc_id % 97 = 0)
-SELECT CAST(ng.doc_id AS BIGINT) AS doc_id,
-       CAST(count(DISTINCT ng.g) AS BIGINT) AS n_hits
-FROM ng JOIN bench USING (g)
-WHERE ng.doc_id % 97 <> 0
-GROUP BY ng.doc_id
-"""
-
-
-def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style within-document repetition features (Rae et al. 2021
-    table A1): per document, total bigram occurrences, the most frequent
-    bigram's count, and the mass of bigrams occurring more than once — the
-    signals behind the top-n-gram-fraction and duplicate-n-gram-fraction
-    quality gates.  Emitted as exact BIGINT numerators/denominator (the
-    gate is a ratio; integer outputs keep both engines bit-identical, the
-    caller divides).  Pure explode + two-level aggregation — scales as a
-    map-side-combinable groupBy."""
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select(
-            "doc_id", F.split(F.lower(F.trim("text")), r"\s+").alias("t")
-        )
-        .filter(F.size("t") >= 2)
-    )
-    bg = d.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(t) - 1), "
-                "i -> concat_ws(' ', slice(t, i, 2)))"
-            )
-        ).alias("g"),
-    )
-    per_bg = bg.groupBy("doc_id", "g").agg(F.count("*").alias("c"))
-    return (
-        per_bg.groupBy("doc_id")
-        .agg(
-            F.sum("c").cast("long").alias("n_bigrams"),
-            F.max("c").cast("long").alias("top_bigram_n"),
-            F.sum(F.when(F.col("c") > 1, F.col("c")).otherwise(0))
-            .cast("long")
-            .alias("dup_bigram_n"),
-        )
-        .select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            "n_bigrams",
-            "top_bigram_n",
-            "dup_bigram_n",
-        )
-    )
-
-
-SQL_TEXT_REPETITION = """
-WITH d AS (
-  SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t
-  FROM documents),
-bg AS (
-  SELECT doc_id,
-         unnest(list_transform(generate_series(1, len(t) - 1),
-                i -> array_to_string(list_slice(t, i, i + 1), ' '))) AS g
-  FROM d WHERE len(t) >= 2),
-per_bg AS (
-  SELECT doc_id, g, count(*) AS c FROM bg GROUP BY doc_id, g)
-SELECT CAST(doc_id AS BIGINT) AS doc_id,
-       CAST(sum(c) AS BIGINT) AS n_bigrams,
-       CAST(max(c) AS BIGINT) AS top_bigram_n,
-       CAST(sum(CASE WHEN c > 1 THEN c ELSE 0 END) AS BIGINT) AS dup_bigram_n
-FROM per_bg GROUP BY doc_id
-"""
-
-
-def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = TS.with_fingerprint(_t(spark, sf_dir, "documents"), "text", k=4)
-    return d.select(
-        F.col("doc_id").cast("long").alias("doc_id"), F.col("fingerprint")
-    )
-
-
-SQL_TEXT_FINGERPRINT = """
-WITH wordsv AS (
-  SELECT doc_id, regexp_split_to_array(text, '\\s+') AS w FROM documents
-)
-SELECT CAST(doc_id AS BIGINT) AS doc_id,
-       list_min(list_transform(generate_series(1, len(w) - 3),
-         i -> md5(w[i] || ' ' || w[i + 1] || ' ' || w[i + 2] || ' ' || w[i + 3])))
-       AS fingerprint
-FROM wordsv WHERE len(w) >= 4
-"""
-
-
-# ---------------------------------------------------------------------------
-# corpus-pipeline queries: stratified sampling, shard packing, tf-idf — the batch building blocks of a training-data mix
-# ---------------------------------------------------------------------------
-
-
-def q_sample_host_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source document cap — the C4/RefinedWeb-style guard against
-    over-represented hosts dominating a training mix: keep at most K docs
-    per source, chosen as the K smallest seeded-md5 ranks (a deterministic
-    uniform sample per source, reproducible across engines unlike rand()).
-    The window partitions by source, so at corpus scale this is one
-    shuffle on the (bounded-cardinality) source key; a skewed giant source
-    pre-prunes with the same subpartition trick frontier selection uses."""
-    from pyspark.sql import Window
-
-    cap = 40
-    d = _t(spark, sf_dir, "documents")
-    h = F.md5(F.concat(F.lit("cap1:"), F.col("doc_id").cast("string")))
-    w = Window.partitionBy("source").orderBy(h.asc(), F.col("doc_id").asc())
-    return (
-        d.select("doc_id", "source", h.alias("__h"))
-        .withColumn("rank_in_source", F.row_number().over(w))
-        .filter(F.col("rank_in_source") <= cap)
-        .select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            "source",
-            F.col("rank_in_source").cast("int").alias("rank_in_source"),
-        )
-    )
-
-
-SQL_SAMPLE_HOST_CAP = """
-WITH ranked AS (
-  SELECT doc_id, source,
-         row_number() OVER (
-           PARTITION BY source
-           ORDER BY md5('cap1:' || CAST(doc_id AS VARCHAR)) ASC,
-                    doc_id ASC) AS rank_in_source
-  FROM documents)
-SELECT CAST(doc_id AS BIGINT) AS doc_id, source,
-       CAST(rank_in_source AS INTEGER) AS rank_in_source
-FROM ranked WHERE rank_in_source <= 40
-"""
-
-
-_PII_EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
-_PII_PHONE_RE = r"\d{3}-\d{4}"
-
-
-def q_text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII scrubbing — the redaction pass a training pipeline runs before
-    tokenization: count and replace email addresses and phone-shaped
-    spans with placeholder tokens.  PII is PLANTED deterministically (every
-    13th doc gains an email, every 17th a phone) since the synthetic corpus
-    contains none; the patterns stay in the RE2∩Java common regex subset so
-    Spark and DuckDB match identically, and the output carries exact match
-    counts plus md5 of the redacted text so the oracle verifies the full
-    rewritten payload, not just the counts.  Pure regexp column exprs —
-    map-side, no shuffle."""
-    d = _t(spark, sf_dir, "documents")
-    planted = F.concat(
-        F.col("text"),
-        F.when(
-            F.col("doc_id") % 13 == 0,
-            F.concat(
-                F.lit(" contact user"),
-                F.col("doc_id").cast("string"),
-                F.lit("@example.com now"),
-            ),
-        ).otherwise(F.lit("")),
-        F.when(F.col("doc_id") % 17 == 0, F.lit(" call 555-0142")).otherwise(
-            F.lit("")
-        ),
-    )
-    t = d.select("doc_id", planted.alias("t"))
-    # column API, not F.expr: SQL string literals eat the regex backslashes
-    n_emails = F.size(
-        F.regexp_extract_all(F.col("t"), F.lit(_PII_EMAIL_RE), F.lit(0))
-    )
-    n_phones = F.size(
-        F.regexp_extract_all(F.col("t"), F.lit(_PII_PHONE_RE), F.lit(0))
-    )
-    clean = F.regexp_replace(
-        F.regexp_replace("t", _PII_EMAIL_RE, "<EMAIL>"),
-        _PII_PHONE_RE,
-        "<PHONE>",
-    )
-    return t.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        n_emails.cast("long").alias("n_emails"),
-        n_phones.cast("long").alias("n_phones"),
-        F.md5(clean).alias("clean_md5"),
-    )
-
-
-SQL_TEXT_PII_SCRUB = f"""
-WITH t AS (
-  SELECT doc_id,
-         text
-         || CASE WHEN doc_id % 13 = 0
-                 THEN ' contact user' || CAST(doc_id AS VARCHAR)
-                      || '@example.com now'
-                 ELSE '' END
-         || CASE WHEN doc_id % 17 = 0 THEN ' call 555-0142' ELSE '' END
-           AS t
-  FROM documents)
-SELECT CAST(doc_id AS BIGINT) AS doc_id,
-       CAST(len(regexp_extract_all(t, '{_PII_EMAIL_RE}')) AS BIGINT)
-         AS n_emails,
-       CAST(len(regexp_extract_all(t, '{_PII_PHONE_RE}')) AS BIGINT)
-         AS n_phones,
-       md5(regexp_replace(regexp_replace(t, '{_PII_EMAIL_RE}', '<EMAIL>',
-                                         'g'),
-                          '{_PII_PHONE_RE}', '<PHONE>', 'g')) AS clean_md5
-FROM t
-"""
-
-
-def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic stratified sampling for a training mix: per-language
-    keep-rates applied via a seeded md5 coin (byte value < rate·256/100) —
-    reproducible and engine-portable, unlike rand()."""
-    rates = {"en": 50, "de": 20, "fr": 20, "es": 20, "zh": 10}
-    d = _t(spark, sf_dir, "documents")
-    coin = F.expr(
-        "(instr('0123456789abcdef', substring(md5(concat('smp1:', "
-        "cast(doc_id as string))), 1, 1)) - 1) * 16 + "
-        "(instr('0123456789abcdef', substring(md5(concat('smp1:', "
-        "cast(doc_id as string))), 2, 1)) - 1)"
-    )
-    thr = None
-    for lang, pct in rates.items():
-        t = pct * 256 // 100
-        thr = (
-            F.when(F.col("lang") == lang, F.lit(t))
-            if thr is None
-            else thr.when(F.col("lang") == lang, F.lit(t))
-        )
-    thr = thr.otherwise(F.lit(0))
-    kept = d.withColumn("__keep", (coin < thr).cast("long"))
-    return kept.groupBy("lang").agg(
-        F.count("*").cast("long").alias("n_total"),
-        F.sum("__keep").cast("long").alias("n_kept"),
-        F.round(F.sum("__keep") / F.count("*").cast("double"), 4).alias(
-            "keep_ratio"
-        ),
-    )
-
-
-def _sample_sql() -> str:
-    rates = {"en": 50, "de": 20, "fr": 20, "es": 20, "zh": 10}
-    case = "CASE " + " ".join(
-        f"WHEN lang = '{lang}' THEN {pct * 256 // 100}"
-        for lang, pct in rates.items()
-    ) + " ELSE 0 END"
-    coin = (
-        "(strpos('0123456789abcdef', substr(md5('smp1:' || CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 16 + "
-        "(strpos('0123456789abcdef', substr(md5('smp1:' || CAST(doc_id AS VARCHAR)), 2, 1)) - 1)"
-    )
-    return f"""
-WITH k AS (
-  SELECT lang, CASE WHEN ({coin}) < ({case}) THEN 1 ELSE 0 END AS keep_
-  FROM documents)
-SELECT lang, CAST(count(*) AS BIGINT) AS n_total,
-       CAST(sum(keep_) AS BIGINT) AS n_kept,
-       round(CAST(sum(keep_) AS DOUBLE) / count(*), 4) AS keep_ratio
-FROM k GROUP BY lang
-"""
-
-
-SQL_SAMPLE_STRATIFIED = _sample_sql()
-
-
-def q_pack_token_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-budget shard packing: within each source (the parallel packing
-    unit at scale), docs in doc_id order are packed into shards of ≤5000
-    tokens via a running sum — shard_idx = floor((cumsum − n_tok)/budget)."""
-    from pyspark.sql import Window
-
-    budget = 5000
-    d = _t(spark, sf_dir, "documents").select(
-        "doc_id", "source", TS.ws_token_count(F.col("text")).alias("n_tokens")
-    )
-    w = (
-        Window.partitionBy("source")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = F.sum("n_tokens").over(w)
-    return d.select(
-        "doc_id",
-        "source",
-        F.col("n_tokens").cast("long").alias("n_tokens"),
-        F.floor((cum - F.col("n_tokens")) / budget).cast("long").alias(
-            "shard_idx"
-        ),
-    )
-
-
-SQL_PACK_TOKEN_SHARDS = """
-WITH t AS (
-  SELECT doc_id, source,
-         len(regexp_split_to_array(trim(text), '\\s+')) AS n_tokens
-  FROM documents)
-SELECT doc_id, source, CAST(n_tokens AS BIGINT) AS n_tokens,
-       CAST(floor((sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   - n_tokens) / 5000.0) AS BIGINT) AS shard_idx
-FROM t
-"""
-
-
-def q_vocab_oov(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer-coverage report: vocabulary = the corpus's top-K tokens (K=20 here, sized to the synthetic vocabulary)
-    (count DESC, token ASC — deterministic), per-doc out-of-vocab counts
-    and an integer OOV per-mille.  The vocab build is a TakeOrdered over
-    DISTINCT-token counts (map-side partials, top-k never a full sort of
-    the corpus); membership is a broadcast semi-join — the shape a
-    tokenizer-coverage audit runs at any corpus scale."""
-    toks = (
-        _t(spark, sf_dir, "documents")
-        .select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            F.explode(
-                F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-            ).alias("token"),
-        )
-        .filter(F.col("token") != "")
-    )
-    vocab = (
-        toks.groupBy("token")
-        .agg(F.count("*").alias("__c"))
-        .orderBy(F.col("__c").desc(), F.col("token").asc())
-        .limit(20)
-        .select("token", F.lit(True).alias("__in_vocab"))
-    )
-    joined = toks.join(F.broadcast(vocab), "token", "left")
-    return joined.groupBy("doc_id").agg(
-        F.count("*").cast("long").alias("n_tokens"),
-        F.sum(F.col("__in_vocab").isNull().cast("long")).cast("long").alias(
-            "n_oov"
-        ),
-    ).withColumn(
-        "oov_permille",
-        F.expr("CAST(n_oov * 1000 div n_tokens AS BIGINT)"),
-    )
-
-
-SQL_VOCAB_OOV = """
-WITH toks AS (
-  SELECT CAST(doc_id AS BIGINT) AS doc_id,
-         unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS token
-  FROM documents),
-flt AS (SELECT doc_id, token FROM toks WHERE token <> ''),
-vocab AS (
-  SELECT token FROM (
-    SELECT token, count(*) AS c,
-           row_number() OVER (ORDER BY count(*) DESC, token ASC) AS rn
-    FROM flt GROUP BY token) WHERE rn <= 20),
-j AS (
-  SELECT f.doc_id, (v.token IS NOT NULL) AS in_vocab
-  FROM flt f LEFT JOIN vocab v ON f.token = v.token)
-SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-       CAST(sum(CASE WHEN in_vocab THEN 0 ELSE 1 END) AS BIGINT) AS n_oov,
-       CAST(sum(CASE WHEN in_vocab THEN 0 ELSE 1 END) * 1000
-            // count(*) AS BIGINT) AS oov_permille
-FROM j GROUP BY doc_id
-"""
-
-
-def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """tf-idf over (source, word): classic corpus-analysis rollup; top-5
-    terms per source by (score desc, word asc)."""
-    from pyspark.sql import Window
-
-    d = _t(spark, sf_dir, "documents")
-    words = d.select(
-        "source", F.explode(F.split(F.trim("text"), r"\s+")).alias("word")
-    )
-    tf = words.groupBy("source", "word").agg(F.count("*").alias("tf"))
-    # the corpus' source count, as a one-row aggregate joined into the plan
-    ns = d.agg(F.countDistinct("source").cast("double").alias("__n"))
-    dfreq = tf.groupBy("word").agg(
-        F.countDistinct("source").alias("df")
-    )
-    scored = tf.join(dfreq, "word").crossJoin(F.broadcast(ns)).withColumn(
-        "score",
-        F.round(F.col("tf") * F.log(F.col("__n") / F.col("df")), 4),
-    )
-    w = Window.partitionBy("source").orderBy(
-        F.col("score").desc(), F.col("word").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rk") <= 5)
-        .select("source", "word", F.col("tf").cast("long").alias("tf"),
-                F.col("score").cast("double").alias("score"), "rk")
-    )
-
-
-SQL_TFIDF_TOP_TERMS = """
-WITH words AS (
-  SELECT source, unnest(regexp_split_to_array(trim(text), '\\s+')) AS word
-  FROM documents),
-tf AS (SELECT source, word, count(*) AS tf FROM words GROUP BY source, word),
-dfreq AS (SELECT word, count(DISTINCT source) AS df FROM tf GROUP BY word),
-ns AS (SELECT CAST(count(DISTINCT source) AS DOUBLE) AS n FROM documents),
-scored AS (
-  SELECT tf.source, tf.word, tf.tf,
-         round(tf.tf * ln(ns.n / dfreq.df), 4) AS score
-  FROM tf JOIN dfreq USING (word) CROSS JOIN ns),
-ranked AS (
-  SELECT source, word, tf, score,
-         row_number() OVER (PARTITION BY source
-                            ORDER BY score DESC, word ASC) AS rk
-  FROM scored)
-SELECT source, word, CAST(tf AS BIGINT) AS tf, CAST(score AS DOUBLE) AS score,
-       CAST(rk AS INTEGER) AS rk
-FROM ranked WHERE rk <= 5
-"""
-
-
-def q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flagship pipeline composition: the full curation pass a training-data
-    corpus gets — exact-dedup keep (drop non-canonical copies) → quality
-    gate (score ≥ 0.7) → per-language rollup of survivors with token
-    budget.  One declarative plan: Catalyst fuses the dedup anti-join, the
-    quality projection and the rollup; nothing materializes in between."""
-    c = _corpus(spark, sf_dir)
-    dups = DD.exact_dup_groups(c).select(
-        F.explode(
-            F.expr("filter(doc_ids, x -> x != keep_doc_id)")
-        ).alias("doc_id")
-    )
-    kept = c.join(dups, "doc_id", "left_anti")
-    feat = kept.select("doc_id", "source", *TS.quality_features("text"))
-    scored = feat.withColumn("quality", TS.quality_score())
-    good = scored.filter(F.col("quality") >= 0.7)
-    return good.groupBy("source").agg(
-        F.count("*").cast("long").alias("n_docs"),
-        F.sum("n_tokens").cast("long").alias("total_tokens"),
-        F.round(F.avg("quality"), 4).alias("avg_quality"),
-    )
-
-
-SQL_CORPUS_CURATION = f"""
-WITH {CORPUS_SQL.strip()},
-dups AS (
-  SELECT c.doc_id
-  FROM corpus c JOIN (
-    SELECT md5(text) AS h, min(doc_id) AS min_id
-    FROM corpus GROUP BY md5(text) HAVING count(*) > 1
-  ) g ON md5(c.text) = g.h
-  WHERE c.doc_id != g.min_id
-),
-kept AS (
-  SELECT c.* FROM corpus c
-  WHERE NOT EXISTS (SELECT 1 FROM dups d WHERE d.doc_id = c.doc_id)
-),
-feat AS (
-  SELECT doc_id, source,
-         CAST(length(text) AS BIGINT) AS n_chars,
-         CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT) AS n_tokens,
-         round((CAST(length(text) AS DOUBLE) - len(regexp_split_to_array(trim(text), '\\s+')) + 1)
-               / len(regexp_split_to_array(trim(text), '\\s+')), 4) AS mean_word_len,
-         round(CAST(len(regexp_extract_all(text, '[^A-Za-z0-9 ]')) AS DOUBLE)
-               / length(text), 4) AS punct_ratio,
-         round(CAST(len(regexp_extract_all(text, '\\b({"|".join(TS.STOPWORDS)})\\b')) AS DOUBLE)
-               / len(regexp_split_to_array(trim(text), '\\s+')), 4) AS stopword_ratio
-  FROM kept
-),
-scored AS (
-  SELECT *,
-       round((CASE WHEN n_tokens BETWEEN 10 AND 1000 THEN 1 ELSE 0 END) * CAST(0.4 AS DOUBLE)
-           + (CASE WHEN mean_word_len BETWEEN 2.0 AND 12.0 THEN 1 ELSE 0 END) * CAST(0.3 AS DOUBLE)
-           + (CASE WHEN stopword_ratio > 0 THEN 1 ELSE 0 END) * CAST(0.2 AS DOUBLE)
-           + (CASE WHEN punct_ratio < 0.3 THEN 1 ELSE 0 END) * CAST(0.1 AS DOUBLE), 4) AS quality
-  FROM feat
-)
-SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
-       round(avg(quality), 4) AS avg_quality
-FROM scored WHERE quality >= 0.7 GROUP BY source
-"""
-
-
-# ---------------------------------------------------------------------------
-# lined-corpus view (planted line structure + dirt for Gopher / C4 gates)
-# ---------------------------------------------------------------------------
-#
-# The synthetic documents are single-line word soup, so the line-level rules
-# of Gopher (bullet / ellipsis lines) and C4 (terminal punctuation, short
-# lines, 'javascript' lines, 'lorem ipsum' / '{' docs) would be vacuous on
-# the raw table.  This view deterministically re-lines every document into
-# 6-word lines and plants each class of dirt by (doc_id, line_idx) modulus —
-# identically in both dialects, so the gates do real discriminating work.
-
-_LINE_EXPR_SPARK = """
-transform(sequence(CAST(0 AS BIGINT), CAST(ceil(size(__w) / 6.0) AS BIGINT) - 1), i ->
-  CASE WHEN doc_id % 13 = 0 AND i = 1 THEN 'please enable javascript to view.'
-  ELSE concat(
-    CASE WHEN (doc_id + i) % 7 = 0 THEN '- ' ELSE '' END,
-    array_join(slice(__w, CAST(i * 6 + 1 AS INT),
-                     CASE WHEN i % 11 = 10 THEN 2 ELSE 6 END), ' '),
-    CASE WHEN (doc_id + i) % 9 = 2 THEN ' 12345 678' ELSE '' END,
-    CASE WHEN (doc_id + i) % 8 = 1 THEN ' #tag' ELSE '' END,
-    CASE WHEN doc_id % 17 = 3 AND i = 0 THEN ' lorem ipsum' ELSE '' END,
-    CASE WHEN doc_id % 19 = 5 AND i = 0 THEN ' { config }' ELSE '' END,
-    CASE WHEN (doc_id + i) % 5 = 3 THEN '...'
-         WHEN (doc_id + i) % 3 = 0 THEN '.' ELSE '' END)
-  END)
-"""
-
-
-def _lined_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            "source",
-            F.split(F.trim(F.col("text")), r"\s+").alias("__w"),
-        )
-        .filter(F.size("__w") >= 1)
-    )
-    return d.select(
-        "doc_id",
-        "source",
-        F.array_join(F.expr(_LINE_EXPR_SPARK), "\n").alias("text"),
-    )
-
-
-LINED_CORPUS_SQL = """
-lined AS (
-  SELECT doc_id, source,
-         array_to_string(list_transform(
-           generate_series(0, CAST(ceil(len(w) / 6.0) AS BIGINT) - 1), i ->
-           CASE WHEN doc_id % 13 = 0 AND i = 1
-                THEN 'please enable javascript to view.'
-           ELSE concat(
-             CASE WHEN (doc_id + i) % 7 = 0 THEN '- ' ELSE '' END,
-             array_to_string(list_slice(w, i * 6 + 1,
-               i * 6 + CASE WHEN i % 11 = 10 THEN 2 ELSE 6 END), ' '),
-             CASE WHEN (doc_id + i) % 9 = 2 THEN ' 12345 678' ELSE '' END,
-             CASE WHEN (doc_id + i) % 8 = 1 THEN ' #tag' ELSE '' END,
-             CASE WHEN doc_id % 17 = 3 AND i = 0 THEN ' lorem ipsum' ELSE '' END,
-             CASE WHEN doc_id % 19 = 5 AND i = 0 THEN ' { config }' ELSE '' END,
-             CASE WHEN (doc_id + i) % 5 = 3 THEN '...'
-                  WHEN (doc_id + i) % 3 = 0 THEN '.' ELSE '' END)
-           END), chr(10)) AS text
-  FROM (SELECT CAST(doc_id AS BIGINT) AS doc_id, source,
-               regexp_split_to_array(trim(text), '\\s+') AS w
-        FROM documents)
-  WHERE len(w) >= 1
-)"""
-
-
-def q_quality_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The named Gopher quality-filter rule set (Rae et al. 2021 Table A1)
-    over the lined corpus: per-document flags for every rule plus the
-    conjunctive keep.  Distinct from text_quality's composite score — this
-    is the exact published gate a Gopher-style 100-TB curation run applies,
-    and it is a pure map-only Column pass (no shuffle, no UDF)."""
-    return TS.gopher_quality_flags(_lined_corpus(spark, sf_dir))
-
-
-_GOPHER_STOP_SQL = " + ".join(
-    f"(CASE WHEN regexp_matches(lower(t), '\\b{s}\\b') THEN 1 ELSE 0 END)"
-    for s in TS.GOPHER_STOPWORDS
-)
-
-SQL_QUALITY_GOPHER_RULES = f"""
-WITH {LINED_CORPUS_SQL.strip()},
-feat AS (
-  SELECT doc_id, text AS t,
-         regexp_split_to_array(trim(text), '\\s+') AS w,
-         string_split(text, chr(10)) AS l
-  FROM lined),
-agg AS (
-  SELECT doc_id,
-         CAST(len(w) AS BIGINT) AS n_words,
-         CAST(list_sum(list_transform(w, x -> length(x))) AS BIGINT) AS sum_len,
-         CAST(len(l) AS BIGINT) AS n_lines,
-         CAST(len(list_filter(l, x -> starts_with(x, '- '))) AS BIGINT) AS n_bullet,
-         CAST(len(list_filter(l, x -> ends_with(x, '...'))) AS BIGINT) AS n_ellipsis,
-         CAST(len(list_filter(w, x -> regexp_matches(x, '[A-Za-z]'))) AS BIGINT) AS n_alpha,
-         CAST(len(regexp_extract_all(t, '#|\\.\\.\\.')) AS BIGINT) AS n_sym,
-         CAST({_GOPHER_STOP_SQL} AS BIGINT) AS n_stopwords
-  FROM feat),
-flags AS (
-  SELECT doc_id, n_words, n_lines, n_stopwords,
-         CAST(sum_len * 10000 // n_words AS BIGINT) AS mean_word_len_e4,
-         CAST(n_sym * 10000 // n_words AS BIGINT) AS symbol_ratio_e4,
-         (n_words >= 50 AND n_words <= 100000) AS r_word_count,
-         (n_bullet * 10 <= n_lines * 9) AS r_bullet_lines,
-         (n_ellipsis * 10 <= n_lines * 3) AS r_ellipsis_lines,
-         (n_alpha * 10 >= n_words * 8) AS r_alpha_words,
-         (n_stopwords >= 2) AS r_stopwords
-  FROM agg)
-SELECT *,
-       (mean_word_len_e4 >= 30000 AND mean_word_len_e4 <= 100000) AS r_mean_word_len,
-       (symbol_ratio_e4 <= 1000) AS r_symbol_ratio,
-       (r_word_count
-        AND (mean_word_len_e4 >= 30000 AND mean_word_len_e4 <= 100000)
-        AND (symbol_ratio_e4 <= 1000)
-        AND r_bullet_lines AND r_ellipsis_lines
-        AND r_alpha_words AND r_stopwords) AS keep
-FROM flags
-"""
-
-
-def q_c4_line_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C4 line-level cleaning (Raffel et al. 2020 §2.2) over the lined
-    corpus: terminal-punctuation / >=3-word / no-'javascript' line gates,
-    whole-doc drops for 'lorem ipsum' and '{', and the rebuilt clean text.
-    Map-only Column pass — the C4 stage of a 100-TB curation run."""
-    return TS.c4_line_clean(_lined_corpus(spark, sf_dir))
-
-
-SQL_C4_LINE_FILTER = f"""
-WITH {LINED_CORPUS_SQL.strip()},
-f AS (
-  SELECT doc_id,
-         string_split(text, chr(10)) AS l,
-         list_filter(string_split(text, chr(10)), x ->
-           regexp_matches(x, '[.!?"]$')
-           AND len(string_split(x, ' ')) >= 3
-           AND NOT contains(lower(x), 'javascript')) AS kept,
-         contains(lower(text), 'lorem ipsum') AS has_lorem,
-         contains(text, '{{') AS has_brace
-  FROM lined)
-SELECT doc_id,
-       CAST(len(l) AS BIGINT) AS n_lines,
-       CAST(len(kept) AS BIGINT) AS n_kept_lines,
-       has_lorem, has_brace,
-       (NOT has_lorem AND NOT has_brace AND len(kept) >= 3) AS keep,
-       coalesce(array_to_string(kept, chr(10)), '') AS text_clean
-FROM f
-"""
-
-
-def q_dedup_substring_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ExactSubstr span REMOVAL (Lee et al. 2022) on the planted corpus:
-    every non-first occurrence of a duplicated 8-token window is cut and
-    the document rebuilt — the planted exact copies come back empty while
-    their originals survive intact, and near-dup variants lose exactly
-    their shared spans.  See dedup.duplicated_ngram_removal for the
-    inverted-index shape."""
-    out = DD.duplicated_ngram_removal(_corpus(spark, sf_dir), n=8)
-    return out.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("n_words").cast("long").alias("n_words"),
-        F.col("n_removed").cast("long").alias("n_removed"),
-        "text_clean",
-    )
-
-
-SQL_DEDUP_SUBSTRING_REMOVAL = f"""
-WITH {CORPUS_SQL.strip()},
-t AS (
-  SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\\s+') AS toks
-  FROM corpus),
-pg AS (
-  SELECT doc_id, CAST(i AS BIGINT) AS pos,
-         ('0x' || substr(md5(array_to_string(toks[i : i + 7], ' ')), 1, 15))::BIGINT AS gram
-  FROM t, LATERAL unnest(generate_series(1, len(toks) - 7)) s(i)
-  WHERE len(toks) >= 8),
-firsts AS (
-  SELECT gram, min(struct_pack(d := doc_id, p := pos)) AS f
-  FROM pg GROUP BY gram),
-dups AS (
-  SELECT pg.doc_id, pg.pos FROM pg JOIN firsts USING (gram)
-  WHERE NOT (pg.doc_id = (f).d AND pg.pos = (f).p)),
-cov AS (
-  SELECT DISTINCT doc_id, CAST(j AS BIGINT) AS idx
-  FROM dups, LATERAL unnest(generate_series(pos, pos + 7)) s(j)),
-words AS (
-  SELECT doc_id, CAST(i AS BIGINT) AS idx, toks[i] AS word
-  FROM t, LATERAL unnest(generate_series(1, len(toks))) s(i))
-SELECT w.doc_id,
-       CAST(count(*) AS BIGINT) AS n_words,
-       CAST(sum(CASE WHEN c.idx IS NULL THEN 0 ELSE 1 END) AS BIGINT) AS n_removed,
-       coalesce(string_agg(CASE WHEN c.idx IS NULL THEN w.word END,
-                           ' ' ORDER BY w.idx), '') AS text_clean
-FROM words w LEFT JOIN cov c ON w.doc_id = c.doc_id AND w.idx = c.idx
-GROUP BY w.doc_id
-"""
-
-
 def q_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@5 evaluation of the approximate ANN variants against the
     brute-force ground truth — the self-measuring harness a 100-TB vector
@@ -2277,54 +1264,6 @@ SELECT v.variant, CAST(q.query_id AS BIGINT) AS query_id,
        CAST(coalesce(h.n_hits, 0) * 10000 // 5 AS BIGINT) AS recall_e4
 FROM variants v CROSS JOIN qids q
 LEFT JOIN hits h ON h.variant = v.variant AND h.query_id = q.query_id
-"""
-
-
-# ---------------------------------------------------------------------------
-# soft dedup / representatives (round-5 additions)
-# ---------------------------------------------------------------------------
-
-
-def q_sample_soft_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SoftDedup commonness reweighting (He et al. 2024) on the planted
-    corpus: documents are DOWN-WEIGHTED by the mean corpus occurrence
-    count of their 8-token windows instead of removed — the planted exact
-    copies land at commonness ~2 (weight ~0.5e6) while unique docs keep
-    weight 10^6.  See dedup.ngram_commonness_weights."""
-    out = DD.ngram_commonness_weights(_corpus(spark, sf_dir), n=8)
-    return out.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("n_windows").cast("long").alias("n_windows"),
-        F.col("commonness_e4").cast("long").alias("commonness_e4"),
-        F.col("weight_e6").cast("long").alias("weight_e6"),
-    )
-
-
-SQL_SAMPLE_SOFT_DEDUP = f"""
-WITH {CORPUS_SQL.strip()},
-t AS (
-  SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\\s+') AS toks
-  FROM corpus),
-grams AS (
-  SELECT doc_id,
-         ('0x' || substr(md5(array_to_string(toks[i : i + 7], ' ')), 1, 15))::BIGINT AS gram
-  FROM t, LATERAL unnest(generate_series(1, len(toks) - 7)) s(i)
-  WHERE len(toks) >= 8),
-counts AS (SELECT gram, CAST(count(*) AS BIGINT) AS c FROM grams GROUP BY gram),
-per AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_windows,
-         CAST(sum(c) AS BIGINT) AS sum_c
-  FROM grams JOIN counts USING (gram) GROUP BY doc_id),
-w AS (
-  SELECT c.doc_id,
-         CAST(coalesce(p.n_windows, 0) AS BIGINT) AS n_windows,
-         CAST(CASE WHEN p.n_windows IS NULL OR p.n_windows = 0 THEN 10000
-                   ELSE 10000 * p.sum_c // p.n_windows END AS BIGINT)
-           AS commonness_e4
-  FROM corpus c LEFT JOIN per p USING (doc_id))
-SELECT doc_id, n_windows, commonness_e4,
-       CAST(10000000000 // commonness_e4 AS BIGINT) AS weight_e6
-FROM w
 """
 
 
@@ -2390,301 +1329,6 @@ SELECT CAST(l.doc_id AS BIGINT) AS doc_id,
        CAST((r.m).b AS BIGINT) AS rep_id,
        l.doc_id = (r.m).b AS is_rep
 FROM lab l JOIN rep r USING (cluster_id)
-"""
-
-
-def q_decontam_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-space benchmark decontamination — the semantic complement
-    of ``text_decontaminate``'s n-gram filter: flag every corpus vector
-    whose cosine similarity to ANY held-out benchmark vector reaches 0.8
-    (paraphrased test-set leakage that shares no n-grams; the
-    embedding-similarity decontamination pass of modern pipelines, cf.
-    GPT-3 §C's spirit and SemDeDup-style semantic matching).  The
-    benchmark side is tiny by nature, so it BROADCASTS and the corpus side
-    never shuffles: the scan is one map-side pass computing N·B dot
-    products (hoisted norms — each vector's norm is folded once, not once
-    per pair), followed by a single (vec_id) hash aggregate.  At 100 TB
-    the only change is pre-bucketing candidates with the coarse quantizer
-    (``similarity.ivf_assign``) so each corpus vector meets only the
-    benchmark vectors of its probed cells — same plan shape as
-    ``dedup_semantic``.  Benchmark = the planted-near-dup SEED vectors
-    (vec_id % 25 == 0 originals), so the vcorpus's +1000000 perturbed
-    twins are guaranteed contaminated rows.  Output: (vec_id, n_close,
-    max_cosine) per contaminated vector."""
-    dot_self = (
-        "aggregate(zip_with(embedding, embedding, "
-        "(p, q) -> CAST(p AS DOUBLE) * CAST(q AS DOUBLE)), "
-        "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-    nv = _vcorpus(spark, sf_dir).withColumn("norm", F.expr(f"sqrt({dot_self})"))
-    is_bench = (F.col("vec_id") % 25 == 0) & (F.col("vec_id") < 1000000)
-    bench = nv.filter(is_bench).select(
-        F.col("embedding").alias("b_emb"), F.col("norm").alias("b_norm")
-    )
-    cand = nv.filter(~is_bench)
-    dot_ab = (
-        "aggregate(zip_with(embedding, b_emb, "
-        "(p, q) -> CAST(p AS DOUBLE) * CAST(q AS DOUBLE)), "
-        "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-    cos = F.round(F.expr(dot_ab) / (F.col("norm") * F.col("b_norm")), 4)
-    return (
-        cand.crossJoin(F.broadcast(bench))
-        .withColumn("cosine", cos)
-        .filter(F.col("cosine") >= 0.8)
-        .groupBy("vec_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_close"),
-            F.max("cosine").cast("double").alias("max_cosine"),
-        )
-        .select(F.col("vec_id").cast("long").alias("vec_id"), "n_close", "max_cosine")
-    )
-
-
-SQL_DECONTAM_EMBEDDING = f"""
-WITH {VCORPUS_SQL.strip()},
-nv AS (
-  SELECT vec_id, embedding,
-         sqrt(list_dot_product(embedding, embedding)) AS norm
-  FROM vcorpus),
-bench AS (
-  SELECT embedding AS b_emb, norm AS b_norm FROM nv
-  WHERE vec_id % 25 = 0 AND vec_id < 1000000),
-cand AS (
-  SELECT * FROM nv WHERE NOT (vec_id % 25 = 0 AND vec_id < 1000000)),
-p AS (
-  SELECT c.vec_id,
-         round(list_dot_product(c.embedding, b.b_emb) / (c.norm * b.b_norm),
-               4) AS cosine
-  FROM cand c, bench b)
-SELECT CAST(vec_id AS BIGINT) AS vec_id,
-       CAST(count(*) AS BIGINT) AS n_close,
-       CAST(max(cosine) AS DOUBLE) AS max_cosine
-FROM p WHERE cosine >= 0.8 GROUP BY vec_id
-"""
-
-
-def q_text_ngram_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source corpus n-gram diversity (the corpus-level distinct-n
-    metric, Li et al. 2016): distinct 3-gram count over total 3-gram
-    occurrences, as an exact integer per-mille-of-10k ratio.  The corpus
-    health gauge a 100-TB curation run tracks per snapshot — a source
-    whose diversity collapses is being flooded by templated/duplicated
-    text (the signal behind C4's boilerplate findings).  Shape: one
-    map-side explode, then a two-level (source, gram) hash aggregate —
-    the exact distinct count is itself a map-side-combinable aggregate on
-    the (source, gram) pair; at petabyte scale the documented knob is
-    ``approx_count_distinct`` (HLL) in the same plan."""
-    d = (
-        _corpus(spark, sf_dir)
-        .select("source", F.split(F.lower(F.trim("text")), r"\s+").alias("t"))
-        .filter(F.size("t") >= 3)
-    )
-    ng = d.select(
-        "source",
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(t) - 2), "
-                "i -> concat_ws(' ', slice(t, i, 3)))"
-            )
-        ).alias("g"),
-    )
-    return (
-        ng.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_shingles"),
-            F.countDistinct("g").cast("long").alias("n_distinct"),
-        )
-        .select(
-            "source",
-            "n_shingles",
-            "n_distinct",
-            F.expr("(10000 * n_distinct) div n_shingles")
-            .cast("long")
-            .alias("diversity_e4"),
-        )
-    )
-
-
-SQL_TEXT_NGRAM_DIVERSITY = f"""
-WITH {CORPUS_SQL.strip()},
-d AS (
-  SELECT source, string_split_regex(lower(trim(text)), '\\s+') AS t
-  FROM corpus),
-ng AS (
-  SELECT source,
-         unnest(list_transform(generate_series(1, len(t) - 2),
-                i -> array_to_string(list_slice(t, i, i + 2), ' '))) AS g
-  FROM d WHERE len(t) >= 3)
-SELECT source,
-       CAST(count(*) AS BIGINT) AS n_shingles,
-       CAST(count(DISTINCT g) AS BIGINT) AS n_distinct,
-       CAST((10000 * count(DISTINCT g)) // count(*) AS BIGINT) AS diversity_e4
-FROM ng GROUP BY source
-"""
-
-
-def q_url_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RefinedWeb-style URL filtering (Penedo et al. 2023 §3.1): score
-    every frontier URL on (a) blocklist-word hits anywhere in the URL,
-    (b) excess path depth, (c) digit-heaviness — the pre-fetch gate that
-    drops adult/spam/link-farm URLs BEFORE spending a fetch on them (at
-    crawl scale the cheapest byte is the one never downloaded).  All
-    three features are pure string arithmetic (instr / length-delta /
-    regexp_replace), so the gate is a zero-shuffle map-side projection
-    that composes with P1's validity predicate in the same stage.  URL
-    mix is synthesized per doc_id residue (the q_p1_url_validity
-    convention) so every feature class is planted: %5==0 plants a
-    blocklist path word, %5==1 a blocklist subdomain, %5==2 a 9-deep
-    path, %5==3 a digit-heavy id, else a clean /p/<id>/view page.
-    Output: per-URL features + keep flag (score < 5 — one blocklist hit
-    alone rejects)."""
-    d = _t(spark, sf_dir, "documents").select("doc_id", "source")
-    sid = F.col("doc_id").cast("string")
-    url = (
-        F.when(
-            F.col("doc_id") % 5 == 0,
-            F.concat(F.lit("http://"), F.col("source"),
-                     F.lit(".test/casino/bonus-"), sid),
-        )
-        .when(
-            F.col("doc_id") % 5 == 1,
-            F.concat(F.lit("http://xxx."), F.col("source"),
-                     F.lit(".test/p/"), sid),
-        )
-        .when(
-            F.col("doc_id") % 5 == 2,
-            F.concat(F.lit("http://"), F.col("source"),
-                     F.lit(".test/a/b/c/d/e/f/g/"), sid),
-        )
-        .when(
-            F.col("doc_id") % 5 == 3,
-            F.concat(F.lit("http://"), F.col("source"), F.lit(".test/id/"),
-                     (F.col("doc_id") * 1234567).cast("string")),
-        )
-        .otherwise(
-            F.concat(F.lit("http://"), F.col("source"), F.lit(".test/p/"),
-                     sid, F.lit("/view"))
-        )
-    )
-    u = d.select(F.col("doc_id").cast("long").alias("doc_id"), url.alias("url"))
-    hit = lambda w: F.expr(  # noqa: E731
-        f"CASE WHEN instr(url, '{w}') > 0 THEN 1 ELSE 0 END"
-    )
-    feats = u.select(
-        "doc_id",
-        "url",
-        (hit("casino") + hit("xxx") + hit("webcam"))
-        .cast("int")
-        .alias("blocklist_hits"),
-        (F.length("url") - F.length(F.expr("replace(url, '/', '')")))
-        .cast("int")
-        .alias("path_depth"),
-        (F.length("url") - F.length(F.regexp_replace("url", "[0-9]", "")))
-        .cast("int")
-        .alias("digit_count"),
-    )
-    return feats.select(
-        "doc_id",
-        "url",
-        "blocklist_hits",
-        "path_depth",
-        "digit_count",
-        (
-            F.col("blocklist_hits") * 5
-            + F.greatest(F.col("path_depth") - 7, F.lit(0))
-            + F.when(F.col("digit_count") >= 6, 1).otherwise(0)
-        )
-        .cast("int")
-        .alias("score"),
-    ).withColumn("keep", (F.col("score") < 5).cast("int"))
-
-
-SQL_URL_QUALITY_GATE = """
-WITH u AS (
-  SELECT CAST(doc_id AS BIGINT) AS doc_id,
-         CASE
-           WHEN doc_id % 5 = 0 THEN 'http://' || source
-                || '.test/casino/bonus-' || CAST(doc_id AS VARCHAR)
-           WHEN doc_id % 5 = 1 THEN 'http://xxx.' || source
-                || '.test/p/' || CAST(doc_id AS VARCHAR)
-           WHEN doc_id % 5 = 2 THEN 'http://' || source
-                || '.test/a/b/c/d/e/f/g/' || CAST(doc_id AS VARCHAR)
-           WHEN doc_id % 5 = 3 THEN 'http://' || source
-                || '.test/id/' || CAST(doc_id * 1234567 AS VARCHAR)
-           ELSE 'http://' || source || '.test/p/'
-                || CAST(doc_id AS VARCHAR) || '/view'
-         END AS url
-  FROM documents),
-f AS (
-  SELECT doc_id, url,
-         CAST((CASE WHEN instr(url, 'casino') > 0 THEN 1 ELSE 0 END)
-            + (CASE WHEN instr(url, 'xxx') > 0 THEN 1 ELSE 0 END)
-            + (CASE WHEN instr(url, 'webcam') > 0 THEN 1 ELSE 0 END)
-            AS INTEGER) AS blocklist_hits,
-         CAST(length(url) - length(replace(url, '/', ''))
-            AS INTEGER) AS path_depth,
-         CAST(length(url) - length(regexp_replace(url, '[0-9]', '', 'g'))
-            AS INTEGER) AS digit_count
-  FROM u)
-SELECT doc_id, url, blocklist_hits, path_depth, digit_count,
-       CAST(blocklist_hits * 5 + greatest(path_depth - 7, 0)
-          + (CASE WHEN digit_count >= 6 THEN 1 ELSE 0 END)
-          AS INTEGER) AS score,
-       CAST(CASE WHEN blocklist_hits * 5 + greatest(path_depth - 7, 0)
-                    + (CASE WHEN digit_count >= 6 THEN 1 ELSE 0 END) < 5
-            THEN 1 ELSE 0 END AS INTEGER) AS keep
-FROM f
-"""
-
-
-def q_dedup_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnowing-fingerprint near-dup candidates (Schleimer et al. 2003,
-    MOSS) over the planted corpus — the locality-based entry in the dedup
-    ladder: unlike MinHash's whole-document signature, winnowing selects
-    per-window minimum gram hashes, so a long shared PASSAGE inside
-    otherwise-different documents is guaranteed a shared fingerprint.
-    The planted near-dups (first word dropped) and exact copies must both
-    surface.  Plan shape: one doc-keyed partitioned window (never global),
-    then the capped inverted-index join of the other dedup ops."""
-    pairs = DD.winnowing_fingerprint_pairs(
-        _corpus(spark, sf_dir), k=4, w=4, max_df=50, min_shared=3
-    )
-    return pairs.select(
-        F.col("a_id").cast("long").alias("a_id"),
-        F.col("b_id").cast("long").alias("b_id"),
-        F.col("n_shared").cast("long").alias("n_shared"),
-    )
-
-
-SQL_DEDUP_WINNOWING = f"""
-WITH {CORPUS_SQL.strip()},
-t AS (
-  SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\\s+') AS toks
-  FROM corpus),
-g AS (
-  SELECT doc_id, i AS pos,
-         ('0x' || substr(md5(array_to_string(toks[i : i + 3], ' ')),
-          1, 15))::BIGINT AS h
-  FROM t, LATERAL unnest(generate_series(1, len(toks) - 3)) s(i)
-  WHERE len(toks) >= 4),
-wm AS (
-  SELECT doc_id,
-         min(h) OVER (PARTITION BY doc_id ORDER BY pos
-                      ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS fp,
-         row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS rn
-  FROM g),
-fps AS (SELECT DISTINCT doc_id, fp FROM wm WHERE rn >= 4),
-dfc AS (SELECT fp, count(*) AS df FROM fps GROUP BY fp),
-idx AS (
-  SELECT f.doc_id, f.fp FROM fps f JOIN dfc USING (fp) WHERE dfc.df <= 50),
-pairs AS (
-  SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS n_shared
-  FROM idx a JOIN idx b ON a.fp = b.fp AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id)
-SELECT CAST(a_id AS BIGINT) AS a_id, CAST(b_id AS BIGINT) AS b_id,
-       CAST(n_shared AS BIGINT) AS n_shared
-FROM pairs WHERE n_shared >= 3
 """
 
 
@@ -2796,7 +1440,6 @@ SQL_MINHASH_ESTIMATE_EVAL = _minhash_eval_sql()
 
 ANALYTICS_QUERIES: dict[str, tuple[QueryFn, str | None]] = {
     "dedup_exact": (q_dedup_exact, SQL_DEDUP_EXACT),
-    "dedup_paragraph": (q_dedup_paragraph, SQL_DEDUP_PARAGRAPH),
     "dedup_minhash_lsh": (q_dedup_minhash_lsh, SQL_DEDUP_MINHASH),
     "dedup_minhash_incremental": (
         q_dedup_minhash_incremental,
@@ -2814,39 +1457,13 @@ ANALYTICS_QUERIES: dict[str, tuple[QueryFn, str | None]] = {
     "ann_pq_adc": (q_ann_pq_adc, SQL_ANN_PQ_ADC),
     "ann_ivf_pq": (q_ann_ivf_pq, SQL_ANN_IVF_PQ),
     "ann_ivf_pq_residual": (q_ann_ivf_pq_residual, SQL_ANN_IVF_PQ_RESIDUAL),
-    "text_langid": (q_text_langid, SQL_TEXT_LANGID),
-    "text_quality": (q_text_quality, SQL_TEXT_QUALITY),
-    "text_tokens": (q_text_tokens, SQL_TEXT_TOKENS),
-    "text_fingerprint": (q_text_fingerprint, SQL_TEXT_FINGERPRINT),
-    "text_decontaminate": (q_text_decontaminate, SQL_TEXT_DECONTAMINATE),
-    "text_repetition": (q_text_repetition, SQL_TEXT_REPETITION),
-    "sample_stratified": (q_sample_stratified, SQL_SAMPLE_STRATIFIED),
-    "sample_host_cap": (q_sample_host_cap, SQL_SAMPLE_HOST_CAP),
     "dedup_semantic": (q_dedup_semantic, SQL_DEDUP_SEMANTIC),
-    "dedup_substring": (q_dedup_substring, SQL_DEDUP_SUBSTRING),
-    "dedup_substring_removal": (
-        q_dedup_substring_removal,
-        SQL_DEDUP_SUBSTRING_REMOVAL,
-    ),
-    "quality_gopher_rules": (q_quality_gopher_rules, SQL_QUALITY_GOPHER_RULES),
-    "c4_line_filter": (q_c4_line_filter, SQL_C4_LINE_FILTER),
     "ann_recall_eval": (q_ann_recall_eval, SQL_ANN_RECALL_EVAL),
-    "sample_soft_dedup": (q_sample_soft_dedup, SQL_SAMPLE_SOFT_DEDUP),
     "dedup_representatives": (
         q_dedup_representatives,
         SQL_DEDUP_REPRESENTATIVES,
     ),
     "ann_sq8": (q_ann_sq8, SQL_ANN_SQ8),
     "ann_ivf_sq8": (q_ann_ivf_sq8, SQL_ANN_IVF_SQ8),
-    "filter_funnel": (q_filter_funnel, SQL_FILTER_FUNNEL),
-    "text_pii_scrub": (q_text_pii_scrub, SQL_TEXT_PII_SCRUB),
-    "pack_token_shards": (q_pack_token_shards, SQL_PACK_TOKEN_SHARDS),
-    "tfidf_top_terms": (q_tfidf_top_terms, SQL_TFIDF_TOP_TERMS),
-    "vocab_oov": (q_vocab_oov, SQL_VOCAB_OOV),
-    "corpus_curation": (q_corpus_curation, SQL_CORPUS_CURATION),
-    "decontam_embedding": (q_decontam_embedding, SQL_DECONTAM_EMBEDDING),
-    "text_ngram_diversity": (q_text_ngram_diversity, SQL_TEXT_NGRAM_DIVERSITY),
-    "url_quality_gate": (q_url_quality_gate, SQL_URL_QUALITY_GATE),
-    "dedup_winnowing": (q_dedup_winnowing, SQL_DEDUP_WINNOWING),
     "minhash_estimate_eval": (q_minhash_estimate_eval, SQL_MINHASH_ESTIMATE_EVAL),
 }

@@ -3,9 +3,7 @@
 Runs each ``queries()`` entry in Spark and its ``oracle_sql()`` in DuckDB at
 sf0.01 and compares row count, column names and the order-insensitive value
 hash of the correctness check (via tools/check_oracle.py helpers), so a
-regression in any query fails pytest locally.  It began as the check for
-the rows in ``DEFER_TO_TAIL``, which fall outside the checked window in a
-round, and keeps that test's name; it now covers the whole registry.
+regression in any query fails pytest locally.
 """
 
 from __future__ import annotations
