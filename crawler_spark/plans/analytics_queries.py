@@ -1,5 +1,6 @@
 """Training-data-pipeline queries (dedup / similarity) with DuckDB
-oracles — the ANALYTICS_QUERIES half of the driver contract.
+oracles — the ANALYTICS_QUERIES half of the driver contract, plus the
+DEFERRED_QUERIES kept outside it (checked in tier-1 only).
 
 Every Spark query here is built from crawler_spark.operators.{dedup,
 similarity}; every oracle is the same computation in DuckDB SQL.
@@ -1466,4 +1467,546 @@ ANALYTICS_QUERIES: dict[str, tuple[QueryFn, str | None]] = {
     "ann_sq8": (q_ann_sq8, SQL_ANN_SQ8),
     "ann_ivf_sq8": (q_ann_ivf_sq8, SQL_ANN_IVF_SQ8),
     "minhash_estimate_eval": (q_minhash_estimate_eval, SQL_MINHASH_ESTIMATE_EVAL),
+}
+
+
+# ---------------------------------------------------------------------------
+# queries outside the driver registry
+# ---------------------------------------------------------------------------
+# The crawl and the ANN/MinHash families fill the driver's 50-row window, so
+# these queries are not offered to it: tests/test_deferred_parity.py checks
+# them against their DuckDB oracles in tier-1, the same as every driver row.
+
+
+def q_dedup_paragraph(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CCNet paragraph-level dedup (operators/dedup.paragraph_dedup): keep
+    only the first corpus occurrence of every 8-word paragraph and rebuild
+    each document.  The planted exact copies (doc_id+2000000) come back
+    fully stripped (text_clean = ''), and the tiny synthetic vocabulary
+    makes cross-document paragraph collisions common — the operator does
+    real span-level work on this corpus, not just copy removal."""
+    out = DD.paragraph_dedup(_corpus(spark, sf_dir), para_words=8)
+    return out.select(
+        F.col("doc_id").cast("long").alias("doc_id"),
+        F.col("n_paras").cast("long").alias("n_paras"),
+        F.col("n_dropped").cast("long").alias("n_dropped"),
+        "text_clean",
+    )
+
+
+SQL_DEDUP_PARAGRAPH = f"""
+WITH {CORPUS_SQL.strip()},
+wordsv AS (
+  SELECT doc_id, regexp_split_to_array(text, '\\s+') AS w FROM corpus
+),
+paras0 AS (
+  SELECT doc_id,
+         unnest(list_transform(
+           generate_series(0, CAST(ceil(len(w) / 8.0) AS BIGINT) - 1),
+           i -> struct_pack(idx := i,
+                            para := array_to_string(
+                              list_slice(w, i * 8 + 1, i * 8 + 8), ' ')))) AS s
+  FROM wordsv WHERE len(w) >= 1
+),
+p AS (
+  SELECT doc_id, CAST(s.idx AS BIGINT) AS idx, s.para AS para,
+         md5(s.para) AS h
+  FROM paras0
+),
+firsts AS (
+  SELECT h, min(struct_pack(d := doc_id, i := idx)) AS f FROM p GROUP BY h
+)
+SELECT CAST(p.doc_id AS BIGINT) AS doc_id,
+       CAST(count(*) AS BIGINT) AS n_paras,
+       CAST(sum(CASE WHEN p.doc_id = (f).d AND p.idx = (f).i
+                     THEN 0 ELSE 1 END) AS BIGINT) AS n_dropped,
+       coalesce(string_agg(CASE WHEN p.doc_id = (f).d AND p.idx = (f).i
+                                THEN p.para END, ' ' ORDER BY p.idx),
+                '') AS text_clean
+FROM p JOIN firsts USING (h)
+GROUP BY p.doc_id
+"""
+def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact-substring duplication flags at 8-gram granularity (Lee et al.
+    2022 ExactSubstr, discretized): a doc is flagged when any 8-token
+    window of it appears in another document.  Inverted-index shape: 60-bit
+    window hashes, distinct (doc, gram), one df hash-aggregate, narrow
+    probe join."""
+    d = _t(spark, sf_dir, "documents").select(
+        F.col("doc_id").cast("long").alias("doc_id"), "text"
+    )
+    return DD.duplicated_ngram_flags(d, n=8)
+
+
+SQL_DEDUP_SUBSTRING = """
+WITH t AS (
+  SELECT CAST(doc_id AS BIGINT) AS doc_id,
+         regexp_split_to_array(trim(lower(text)), '\\s+') AS toks
+  FROM documents),
+g AS (
+  SELECT DISTINCT doc_id,
+         ('0x' || substr(md5(array_to_string(toks[i : i + 7], ' ')), 1, 15))::BIGINT AS gram
+  FROM t, LATERAL unnest(generate_series(1, len(toks) - 7)) s(i)
+  WHERE len(toks) >= 8),
+dfc AS (SELECT gram, count(*) AS df FROM g GROUP BY gram),
+per AS (
+  SELECT g.doc_id,
+         CAST(count(*) AS BIGINT) AS n_grams,
+         CAST(sum(CASE WHEN dfc.df >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_grams
+  FROM g JOIN dfc USING (gram) GROUP BY g.doc_id)
+SELECT t.doc_id,
+       COALESCE(per.n_grams, 0) AS n_grams,
+       COALESCE(per.n_dup_grams, 0) AS n_dup_grams,
+       (COALESCE(per.n_dup_grams, 0) > 0) AS flagged
+FROM t LEFT JOIN per ON t.doc_id = per.doc_id
+"""
+
+def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """tf-idf over (source, word): classic corpus-analysis rollup; top-5
+    terms per source by (score desc, word asc)."""
+    from pyspark.sql import Window
+
+    d = _t(spark, sf_dir, "documents")
+    words = d.select(
+        "source", F.explode(F.split(F.trim("text"), r"\s+")).alias("word")
+    )
+    tf = words.groupBy("source", "word").agg(F.count("*").alias("tf"))
+    # the corpus' source count, as a one-row aggregate joined into the plan
+    ns = d.agg(F.countDistinct("source").cast("double").alias("__n"))
+    dfreq = tf.groupBy("word").agg(
+        F.countDistinct("source").alias("df")
+    )
+    scored = tf.join(dfreq, "word").crossJoin(F.broadcast(ns)).withColumn(
+        "score",
+        F.round(F.col("tf") * F.log(F.col("__n") / F.col("df")), 4),
+    )
+    w = Window.partitionBy("source").orderBy(
+        F.col("score").desc(), F.col("word").asc()
+    )
+    return (
+        scored.withColumn("rk", F.row_number().over(w).cast("int"))
+        .filter(F.col("rk") <= 5)
+        .select("source", "word", F.col("tf").cast("long").alias("tf"),
+                F.col("score").cast("double").alias("score"), "rk")
+    )
+
+
+SQL_TFIDF_TOP_TERMS = """
+WITH words AS (
+  SELECT source, unnest(regexp_split_to_array(trim(text), '\\s+')) AS word
+  FROM documents),
+tf AS (SELECT source, word, count(*) AS tf FROM words GROUP BY source, word),
+dfreq AS (SELECT word, count(DISTINCT source) AS df FROM tf GROUP BY word),
+ns AS (SELECT CAST(count(DISTINCT source) AS DOUBLE) AS n FROM documents),
+scored AS (
+  SELECT tf.source, tf.word, tf.tf,
+         round(tf.tf * ln(ns.n / dfreq.df), 4) AS score
+  FROM tf JOIN dfreq USING (word) CROSS JOIN ns),
+ranked AS (
+  SELECT source, word, tf, score,
+         row_number() OVER (PARTITION BY source
+                            ORDER BY score DESC, word ASC) AS rk
+  FROM scored)
+SELECT source, word, CAST(tf AS BIGINT) AS tf, CAST(score AS DOUBLE) AS score,
+       CAST(rk AS INTEGER) AS rk
+FROM ranked WHERE rk <= 5
+"""
+
+def q_dedup_substring_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ExactSubstr span REMOVAL (Lee et al. 2022) on the planted corpus:
+    every non-first occurrence of a duplicated 8-token window is cut and
+    the document rebuilt — the planted exact copies come back empty while
+    their originals survive intact, and near-dup variants lose exactly
+    their shared spans.  See dedup.duplicated_ngram_removal for the
+    inverted-index shape."""
+    out = DD.duplicated_ngram_removal(_corpus(spark, sf_dir), n=8)
+    return out.select(
+        F.col("doc_id").cast("long").alias("doc_id"),
+        F.col("n_words").cast("long").alias("n_words"),
+        F.col("n_removed").cast("long").alias("n_removed"),
+        "text_clean",
+    )
+
+
+SQL_DEDUP_SUBSTRING_REMOVAL = f"""
+WITH {CORPUS_SQL.strip()},
+t AS (
+  SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\\s+') AS toks
+  FROM corpus),
+pg AS (
+  SELECT doc_id, CAST(i AS BIGINT) AS pos,
+         ('0x' || substr(md5(array_to_string(toks[i : i + 7], ' ')), 1, 15))::BIGINT AS gram
+  FROM t, LATERAL unnest(generate_series(1, len(toks) - 7)) s(i)
+  WHERE len(toks) >= 8),
+firsts AS (
+  SELECT gram, min(struct_pack(d := doc_id, p := pos)) AS f
+  FROM pg GROUP BY gram),
+dups AS (
+  SELECT pg.doc_id, pg.pos FROM pg JOIN firsts USING (gram)
+  WHERE NOT (pg.doc_id = (f).d AND pg.pos = (f).p)),
+cov AS (
+  SELECT DISTINCT doc_id, CAST(j AS BIGINT) AS idx
+  FROM dups, LATERAL unnest(generate_series(pos, pos + 7)) s(j)),
+words AS (
+  SELECT doc_id, CAST(i AS BIGINT) AS idx, toks[i] AS word
+  FROM t, LATERAL unnest(generate_series(1, len(toks))) s(i))
+SELECT w.doc_id,
+       CAST(count(*) AS BIGINT) AS n_words,
+       CAST(sum(CASE WHEN c.idx IS NULL THEN 0 ELSE 1 END) AS BIGINT) AS n_removed,
+       coalesce(string_agg(CASE WHEN c.idx IS NULL THEN w.word END,
+                           ' ' ORDER BY w.idx), '') AS text_clean
+FROM words w LEFT JOIN cov c ON w.doc_id = c.doc_id AND w.idx = c.idx
+GROUP BY w.doc_id
+"""
+
+def q_sample_soft_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SoftDedup commonness reweighting (He et al. 2024) on the planted
+    corpus: documents are DOWN-WEIGHTED by the mean corpus occurrence
+    count of their 8-token windows instead of removed — the planted exact
+    copies land at commonness ~2 (weight ~0.5e6) while unique docs keep
+    weight 10^6.  See dedup.ngram_commonness_weights."""
+    out = DD.ngram_commonness_weights(_corpus(spark, sf_dir), n=8)
+    return out.select(
+        F.col("doc_id").cast("long").alias("doc_id"),
+        F.col("n_windows").cast("long").alias("n_windows"),
+        F.col("commonness_e4").cast("long").alias("commonness_e4"),
+        F.col("weight_e6").cast("long").alias("weight_e6"),
+    )
+
+
+SQL_SAMPLE_SOFT_DEDUP = f"""
+WITH {CORPUS_SQL.strip()},
+t AS (
+  SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\\s+') AS toks
+  FROM corpus),
+grams AS (
+  SELECT doc_id,
+         ('0x' || substr(md5(array_to_string(toks[i : i + 7], ' ')), 1, 15))::BIGINT AS gram
+  FROM t, LATERAL unnest(generate_series(1, len(toks) - 7)) s(i)
+  WHERE len(toks) >= 8),
+counts AS (SELECT gram, CAST(count(*) AS BIGINT) AS c FROM grams GROUP BY gram),
+per AS (
+  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_windows,
+         CAST(sum(c) AS BIGINT) AS sum_c
+  FROM grams JOIN counts USING (gram) GROUP BY doc_id),
+w AS (
+  SELECT c.doc_id,
+         CAST(coalesce(p.n_windows, 0) AS BIGINT) AS n_windows,
+         CAST(CASE WHEN p.n_windows IS NULL OR p.n_windows = 0 THEN 10000
+                   ELSE 10000 * p.sum_c // p.n_windows END AS BIGINT)
+           AS commonness_e4
+  FROM corpus c LEFT JOIN per p USING (doc_id))
+SELECT doc_id, n_windows, commonness_e4,
+       CAST(10000000000 // commonness_e4 AS BIGINT) AS weight_e6
+FROM w
+"""
+
+def q_decontam_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding-space benchmark decontamination — the semantic complement
+    of an n-gram overlap filter: flag every corpus vector
+    whose cosine similarity to ANY held-out benchmark vector reaches 0.8
+    (paraphrased test-set leakage that shares no n-grams; the
+    embedding-similarity decontamination pass of modern pipelines, cf.
+    GPT-3 §C's spirit and SemDeDup-style semantic matching).  The
+    benchmark side is tiny by nature, so it BROADCASTS and the corpus side
+    never shuffles: the scan is one map-side pass computing N·B dot
+    products (hoisted norms — each vector's norm is folded once, not once
+    per pair), followed by a single (vec_id) hash aggregate.  At 100 TB
+    the only change is pre-bucketing candidates with the coarse quantizer
+    (``similarity.ivf_assign``) so each corpus vector meets only the
+    benchmark vectors of its probed cells — same plan shape as
+    ``dedup_semantic``.  Benchmark = the planted-near-dup SEED vectors
+    (vec_id % 25 == 0 originals), so the vcorpus's +1000000 perturbed
+    twins are guaranteed contaminated rows.  Output: (vec_id, n_close,
+    max_cosine) per contaminated vector."""
+    dot_self = (
+        "aggregate(zip_with(embedding, embedding, "
+        "(p, q) -> CAST(p AS DOUBLE) * CAST(q AS DOUBLE)), "
+        "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
+    )
+    nv = _vcorpus(spark, sf_dir).withColumn("norm", F.expr(f"sqrt({dot_self})"))
+    is_bench = (F.col("vec_id") % 25 == 0) & (F.col("vec_id") < 1000000)
+    bench = nv.filter(is_bench).select(
+        F.col("embedding").alias("b_emb"), F.col("norm").alias("b_norm")
+    )
+    cand = nv.filter(~is_bench)
+    dot_ab = (
+        "aggregate(zip_with(embedding, b_emb, "
+        "(p, q) -> CAST(p AS DOUBLE) * CAST(q AS DOUBLE)), "
+        "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
+    )
+    cos = F.round(F.expr(dot_ab) / (F.col("norm") * F.col("b_norm")), 4)
+    return (
+        cand.crossJoin(F.broadcast(bench))
+        .withColumn("cosine", cos)
+        .filter(F.col("cosine") >= 0.8)
+        .groupBy("vec_id")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_close"),
+            F.max("cosine").cast("double").alias("max_cosine"),
+        )
+        .select(F.col("vec_id").cast("long").alias("vec_id"), "n_close", "max_cosine")
+    )
+
+
+SQL_DECONTAM_EMBEDDING = f"""
+WITH {VCORPUS_SQL.strip()},
+nv AS (
+  SELECT vec_id, embedding,
+         sqrt(list_dot_product(embedding, embedding)) AS norm
+  FROM vcorpus),
+bench AS (
+  SELECT embedding AS b_emb, norm AS b_norm FROM nv
+  WHERE vec_id % 25 = 0 AND vec_id < 1000000),
+cand AS (
+  SELECT * FROM nv WHERE NOT (vec_id % 25 = 0 AND vec_id < 1000000)),
+p AS (
+  SELECT c.vec_id,
+         round(list_dot_product(c.embedding, b.b_emb) / (c.norm * b.b_norm),
+               4) AS cosine
+  FROM cand c, bench b)
+SELECT CAST(vec_id AS BIGINT) AS vec_id,
+       CAST(count(*) AS BIGINT) AS n_close,
+       CAST(max(cosine) AS DOUBLE) AS max_cosine
+FROM p WHERE cosine >= 0.8 GROUP BY vec_id
+"""
+
+
+def q_text_ngram_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source corpus n-gram diversity (the corpus-level distinct-n
+    metric, Li et al. 2016): distinct 3-gram count over total 3-gram
+    occurrences, as an exact integer per-mille-of-10k ratio.  The corpus
+    health gauge a 100-TB curation run tracks per snapshot — a source
+    whose diversity collapses is being flooded by templated/duplicated
+    text (the signal behind C4's boilerplate findings).  Shape: one
+    map-side explode, then a two-level (source, gram) hash aggregate —
+    the exact distinct count is itself a map-side-combinable aggregate on
+    the (source, gram) pair; at petabyte scale the documented knob is
+    ``approx_count_distinct`` (HLL) in the same plan."""
+    d = (
+        _corpus(spark, sf_dir)
+        .select("source", F.split(F.lower(F.trim("text")), r"\s+").alias("t"))
+        .filter(F.size("t") >= 3)
+    )
+    ng = d.select(
+        "source",
+        F.explode(
+            F.expr(
+                "transform(sequence(1, size(t) - 2), "
+                "i -> concat_ws(' ', slice(t, i, 3)))"
+            )
+        ).alias("g"),
+    )
+    return (
+        ng.groupBy("source")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_shingles"),
+            F.countDistinct("g").cast("long").alias("n_distinct"),
+        )
+        .select(
+            "source",
+            "n_shingles",
+            "n_distinct",
+            F.expr("(10000 * n_distinct) div n_shingles")
+            .cast("long")
+            .alias("diversity_e4"),
+        )
+    )
+
+
+SQL_TEXT_NGRAM_DIVERSITY = f"""
+WITH {CORPUS_SQL.strip()},
+d AS (
+  SELECT source, string_split_regex(lower(trim(text)), '\\s+') AS t
+  FROM corpus),
+ng AS (
+  SELECT source,
+         unnest(list_transform(generate_series(1, len(t) - 2),
+                i -> array_to_string(list_slice(t, i, i + 2), ' '))) AS g
+  FROM d WHERE len(t) >= 3)
+SELECT source,
+       CAST(count(*) AS BIGINT) AS n_shingles,
+       CAST(count(DISTINCT g) AS BIGINT) AS n_distinct,
+       CAST((10000 * count(DISTINCT g)) // count(*) AS BIGINT) AS diversity_e4
+FROM ng GROUP BY source
+"""
+
+
+def q_url_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """RefinedWeb-style URL filtering (Penedo et al. 2023 §3.1): score
+    every frontier URL on (a) blocklist-word hits anywhere in the URL,
+    (b) excess path depth, (c) digit-heaviness — the pre-fetch gate that
+    drops adult/spam/link-farm URLs BEFORE spending a fetch on them (at
+    crawl scale the cheapest byte is the one never downloaded).  All
+    three features are pure string arithmetic (instr / length-delta /
+    regexp_replace), so the gate is a zero-shuffle map-side projection
+    that composes with P1's validity predicate in the same stage.  URL
+    mix is synthesized per doc_id residue (the q_p1_url_validity
+    convention) so every feature class is planted: %5==0 plants a
+    blocklist path word, %5==1 a blocklist subdomain, %5==2 a 9-deep
+    path, %5==3 a digit-heavy id, else a clean /p/<id>/view page.
+    Output: per-URL features + keep flag (score < 5 — one blocklist hit
+    alone rejects)."""
+    d = _t(spark, sf_dir, "documents").select("doc_id", "source")
+    sid = F.col("doc_id").cast("string")
+    url = (
+        F.when(
+            F.col("doc_id") % 5 == 0,
+            F.concat(F.lit("http://"), F.col("source"),
+                     F.lit(".test/casino/bonus-"), sid),
+        )
+        .when(
+            F.col("doc_id") % 5 == 1,
+            F.concat(F.lit("http://xxx."), F.col("source"),
+                     F.lit(".test/p/"), sid),
+        )
+        .when(
+            F.col("doc_id") % 5 == 2,
+            F.concat(F.lit("http://"), F.col("source"),
+                     F.lit(".test/a/b/c/d/e/f/g/"), sid),
+        )
+        .when(
+            F.col("doc_id") % 5 == 3,
+            F.concat(F.lit("http://"), F.col("source"), F.lit(".test/id/"),
+                     (F.col("doc_id") * 1234567).cast("string")),
+        )
+        .otherwise(
+            F.concat(F.lit("http://"), F.col("source"), F.lit(".test/p/"),
+                     sid, F.lit("/view"))
+        )
+    )
+    u = d.select(F.col("doc_id").cast("long").alias("doc_id"), url.alias("url"))
+    hit = lambda w: F.expr(  # noqa: E731
+        f"CASE WHEN instr(url, '{w}') > 0 THEN 1 ELSE 0 END"
+    )
+    feats = u.select(
+        "doc_id",
+        "url",
+        (hit("casino") + hit("xxx") + hit("webcam"))
+        .cast("int")
+        .alias("blocklist_hits"),
+        (F.length("url") - F.length(F.expr("replace(url, '/', '')")))
+        .cast("int")
+        .alias("path_depth"),
+        (F.length("url") - F.length(F.regexp_replace("url", "[0-9]", "")))
+        .cast("int")
+        .alias("digit_count"),
+    )
+    return feats.select(
+        "doc_id",
+        "url",
+        "blocklist_hits",
+        "path_depth",
+        "digit_count",
+        (
+            F.col("blocklist_hits") * 5
+            + F.greatest(F.col("path_depth") - 7, F.lit(0))
+            + F.when(F.col("digit_count") >= 6, 1).otherwise(0)
+        )
+        .cast("int")
+        .alias("score"),
+    ).withColumn("keep", (F.col("score") < 5).cast("int"))
+
+
+SQL_URL_QUALITY_GATE = """
+WITH u AS (
+  SELECT CAST(doc_id AS BIGINT) AS doc_id,
+         CASE
+           WHEN doc_id % 5 = 0 THEN 'http://' || source
+                || '.test/casino/bonus-' || CAST(doc_id AS VARCHAR)
+           WHEN doc_id % 5 = 1 THEN 'http://xxx.' || source
+                || '.test/p/' || CAST(doc_id AS VARCHAR)
+           WHEN doc_id % 5 = 2 THEN 'http://' || source
+                || '.test/a/b/c/d/e/f/g/' || CAST(doc_id AS VARCHAR)
+           WHEN doc_id % 5 = 3 THEN 'http://' || source
+                || '.test/id/' || CAST(doc_id * 1234567 AS VARCHAR)
+           ELSE 'http://' || source || '.test/p/'
+                || CAST(doc_id AS VARCHAR) || '/view'
+         END AS url
+  FROM documents),
+f AS (
+  SELECT doc_id, url,
+         CAST((CASE WHEN instr(url, 'casino') > 0 THEN 1 ELSE 0 END)
+            + (CASE WHEN instr(url, 'xxx') > 0 THEN 1 ELSE 0 END)
+            + (CASE WHEN instr(url, 'webcam') > 0 THEN 1 ELSE 0 END)
+            AS INTEGER) AS blocklist_hits,
+         CAST(length(url) - length(replace(url, '/', ''))
+            AS INTEGER) AS path_depth,
+         CAST(length(url) - length(regexp_replace(url, '[0-9]', '', 'g'))
+            AS INTEGER) AS digit_count
+  FROM u)
+SELECT doc_id, url, blocklist_hits, path_depth, digit_count,
+       CAST(blocklist_hits * 5 + greatest(path_depth - 7, 0)
+          + (CASE WHEN digit_count >= 6 THEN 1 ELSE 0 END)
+          AS INTEGER) AS score,
+       CAST(CASE WHEN blocklist_hits * 5 + greatest(path_depth - 7, 0)
+                    + (CASE WHEN digit_count >= 6 THEN 1 ELSE 0 END) < 5
+            THEN 1 ELSE 0 END AS INTEGER) AS keep
+FROM f
+"""
+
+
+def q_dedup_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Winnowing-fingerprint near-dup candidates (Schleimer et al. 2003,
+    MOSS) over the planted corpus — the locality-based entry in the dedup
+    ladder: unlike MinHash's whole-document signature, winnowing selects
+    per-window minimum gram hashes, so a long shared PASSAGE inside
+    otherwise-different documents is guaranteed a shared fingerprint.
+    The planted near-dups (first word dropped) and exact copies must both
+    surface.  Plan shape: one doc-keyed partitioned window (never global),
+    then the capped inverted-index join of the other dedup ops."""
+    pairs = DD.winnowing_fingerprint_pairs(
+        _corpus(spark, sf_dir), k=4, w=4, max_df=50, min_shared=3
+    )
+    return pairs.select(
+        F.col("a_id").cast("long").alias("a_id"),
+        F.col("b_id").cast("long").alias("b_id"),
+        F.col("n_shared").cast("long").alias("n_shared"),
+    )
+
+
+SQL_DEDUP_WINNOWING = f"""
+WITH {CORPUS_SQL.strip()},
+t AS (
+  SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\\s+') AS toks
+  FROM corpus),
+g AS (
+  SELECT doc_id, i AS pos,
+         ('0x' || substr(md5(array_to_string(toks[i : i + 3], ' ')),
+          1, 15))::BIGINT AS h
+  FROM t, LATERAL unnest(generate_series(1, len(toks) - 3)) s(i)
+  WHERE len(toks) >= 4),
+wm AS (
+  SELECT doc_id,
+         min(h) OVER (PARTITION BY doc_id ORDER BY pos
+                      ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS fp,
+         row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS rn
+  FROM g),
+fps AS (SELECT DISTINCT doc_id, fp FROM wm WHERE rn >= 4),
+dfc AS (SELECT fp, count(*) AS df FROM fps GROUP BY fp),
+idx AS (
+  SELECT f.doc_id, f.fp FROM fps f JOIN dfc USING (fp) WHERE dfc.df <= 50),
+pairs AS (
+  SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS n_shared
+  FROM idx a JOIN idx b ON a.fp = b.fp AND a.doc_id < b.doc_id
+  GROUP BY a.doc_id, b.doc_id)
+SELECT CAST(a_id AS BIGINT) AS a_id, CAST(b_id AS BIGINT) AS b_id,
+       CAST(n_shared AS BIGINT) AS n_shared
+FROM pairs WHERE n_shared >= 3
+"""
+
+
+DEFERRED_QUERIES: dict[str, tuple[QueryFn, str]] = {
+    "dedup_paragraph": (q_dedup_paragraph, SQL_DEDUP_PARAGRAPH),
+    "dedup_substring": (q_dedup_substring, SQL_DEDUP_SUBSTRING),
+    "dedup_substring_removal": (
+        q_dedup_substring_removal,
+        SQL_DEDUP_SUBSTRING_REMOVAL,
+    ),
+    "dedup_winnowing": (q_dedup_winnowing, SQL_DEDUP_WINNOWING),
+    "sample_soft_dedup": (q_sample_soft_dedup, SQL_SAMPLE_SOFT_DEDUP),
+    "decontam_embedding": (q_decontam_embedding, SQL_DECONTAM_EMBEDDING),
+    "text_ngram_diversity": (q_text_ngram_diversity, SQL_TEXT_NGRAM_DIVERSITY),
+    "url_quality_gate": (q_url_quality_gate, SQL_URL_QUALITY_GATE),
+    "tfidf_top_terms": (q_tfidf_top_terms, SQL_TFIDF_TOP_TERMS),
 }

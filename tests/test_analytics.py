@@ -50,6 +50,60 @@ def test_exact_dedup_recovers_planted_copies(spark):
             assert r.keep_doc_id + 2000000 in r.doc_ids
 
 
+def test_paragraph_dedup_matches_python_reference(spark):
+    """paragraph_dedup == a literal Python first-occurrence pass: split each
+    doc into 3-word windows, keep a window only at its lexicographically
+    first (doc_id, idx) corpus occurrence, rebuild in order."""
+    from crawler_spark.operators.dedup import paragraph_dedup
+
+    import pytest as _pytest
+
+    docs = [
+        (1, "a b c d e f g"),          # 3 paras: 'a b c' 'd e f' 'g'
+        (2, "a b c x y z"),            # 'a b c' duplicates doc 1 idx 0
+        (3, "a b c d e f g"),          # exact copy of doc 1 → all dropped
+        (4, "d e f d e f"),            # self-dup: idx1 dups idx0? no —
+        #                                'd e f' first seen at doc 1 idx 1
+        (5, "q"),                      # single short para, unique
+    ]
+    df = spark.createDataFrame(docs, ["doc_id", "text"])
+    out = {
+        r.doc_id: r
+        for r in paragraph_dedup(df, para_words=3).collect()
+    }
+
+    # python reference
+    W = 3
+    paras = []
+    for did, text in docs:
+        w = text.split()
+        for i in range(0, (len(w) + W - 1) // W):
+            paras.append((did, i, " ".join(w[i * W : i * W + W])))
+    first = {}
+    for did, i, p in sorted(paras, key=lambda t: (t[0], t[1])):
+        first.setdefault(p, (did, i))
+    expect = {}
+    for did, _ in docs:
+        mine = [(i, p) for d, i, p in paras if d == did]
+        kept = [p for i, p in mine if first[p] == (did, i)]
+        expect[did] = (len(mine), len(mine) - len(kept), " ".join(kept))
+
+    assert set(out) == set(expect)
+    for did, (n_paras, n_dropped, clean) in expect.items():
+        r = out[did]
+        assert (r.n_paras, r.n_dropped, r.text_clean) == (
+            n_paras,
+            n_dropped,
+            clean,
+        ), f"doc {did}"
+    # the hand-checkable anchors the reference encodes
+    assert out[3].text_clean == "" and out[3].n_dropped == 3
+    assert out[2].text_clean == "x y z"
+    assert out[4].n_dropped == 2  # both 'd e f' windows seen at doc 1
+    with _pytest.raises(ValueError):
+        paragraph_dedup(df, para_words=0)
+
+
 def test_minhash_est_tracks_exact_jaccard(spark):
     from crawler_spark.operators.dedup import (
         lsh_candidate_pairs,
@@ -540,6 +594,11 @@ def test_ivf_pq_residual_recovers_planted_twin(spark):
         )
 
 
+# ---------------------------------------------------------------------------
+# text analysis
+# ---------------------------------------------------------------------------
+
+
 def test_connected_components_match_union_find(spark):
     from crawler_spark.operators.dedup import (
         connected_components,
@@ -921,6 +980,85 @@ def test_semantic_dedup_keeps_farthest_from_centroid(spark):
     assert rows[3].cent_cos < rows[1].cent_cos
 
 
+def test_duplicated_ngram_flags_exact_substr(spark):
+    """ExactSubstr semantics: docs sharing ANY 8-token window flag, docs
+    without one don't, and sub-8-token docs have zero windows."""
+    from crawler_spark.operators.dedup import duplicated_ngram_flags
+
+    span = "one two three four five six seven eight"
+    docs = spark.createDataFrame(
+        [
+            (1, f"prefix a b {span} suffix c"),
+            (2, f"other opening words {span} and a different tail"),
+            (3, "no shared window here at all nine ten eleven twelve"),
+            (4, "tiny doc"),
+        ],
+        "doc_id long, text string",
+    )
+    out = {r.doc_id: r for r in duplicated_ngram_flags(docs, n=8).collect()}
+    assert out[1].flagged and out[2].flagged
+    assert not out[3].flagged
+    assert out[4].n_grams == 0 and not out[4].flagged
+    # the planted exact copies in the test corpus flag too
+    corpus = _corpus(spark).select("doc_id", "text")
+    flags = {r.doc_id: r.flagged for r in duplicated_ngram_flags(corpus).collect()}
+    planted = [d for d in flags if d >= 2000000]
+    assert planted and all(flags[d] for d in planted)
+    assert all(flags[d - 2000000] for d in planted)
+
+
+def test_duplicated_ngram_removal_matches_python_reference(spark):
+    """ExactSubstr removal == a literal Python keep-first pass: every
+    non-first occurrence of a duplicated 8-token window is cut; exact
+    copies come back empty, the drop-first-word near-variant comes back
+    empty (every window shifts onto the original), the original is
+    untouched."""
+    from crawler_spark.operators.dedup import duplicated_ngram_removal
+
+    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    docs = [
+        (1, base),                                # original (first)
+        (2, base),                                # exact copy
+        (3, " ".join(base.split()[1:])),          # near-variant, all covered
+        (4, f"lead in words {base} tail words"),  # partial overlap
+        (5, "unique content with no shared window present here at all"),
+        (6, "short doc"),
+    ]
+    out = {
+        r.doc_id: r
+        for r in duplicated_ngram_removal(
+            spark.createDataFrame(docs, "doc_id long, text string"), n=8
+        ).collect()
+    }
+
+    # literal reference: gram -> min (doc, pos); non-first occurrences
+    # cover words [pos, pos+7]
+    toks = {d: t.lower().split() for d, t in docs}
+    first: dict[tuple, tuple] = {}
+    for d in sorted(toks):
+        w = toks[d]
+        for p in range(1, len(w) - 6):
+            g = tuple(w[p - 1 : p + 7])
+            if g not in first:
+                first[g] = (d, p)
+    removed: dict[int, set] = {d: set() for d in toks}
+    for d in sorted(toks):
+        w = toks[d]
+        for p in range(1, len(w) - 6):
+            if first[tuple(w[p - 1 : p + 7])] != (d, p):
+                removed[d].update(range(p, p + 8))
+    for d, w in toks.items():
+        keep = [x for i, x in enumerate(w, 1) if i not in removed[d]]
+        assert (out[d].n_words, out[d].n_removed, out[d].text_clean) == (
+            len(w),
+            len(removed[d]),
+            " ".join(keep),
+        ), d
+    assert out[1].text_clean == base and out[1].n_removed == 0
+    assert out[2].text_clean == "" and out[3].text_clean == ""
+    assert out[5].n_removed == 0 and out[6].n_removed == 0
+
+
 def test_sq8_quantization_error_and_topk(spark):
     """SQ8 invariants: codes lie in [0,255]; per-dim reconstruction error is
     within half a quantization step; top-1 recovers a well-separated
@@ -974,6 +1112,28 @@ def test_ivf_sq8_single_cell_equals_flat_sq8(spark):
     assert ivf == flat
 
 
+def test_ngram_commonness_weights(spark):
+    """SoftDedup commonness: an exact-copy pair sits at commonness 2 /
+    weight 0.5e6, a unique doc keeps full weight, a short doc carries no
+    evidence and keeps full weight."""
+    from crawler_spark.operators.dedup import ngram_commonness_weights
+
+    base = "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10"
+    docs = [
+        (1, base),
+        (2, base),  # exact copy: every window appears twice
+        (3, "u1 u2 u3 u4 u5 u6 u7 u8 u9"),  # unique
+        (4, "short doc"),  # < 8 tokens: no windows
+    ]
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    out = {r.doc_id: r for r in ngram_commonness_weights(df, n=8).collect()}
+    assert out[1].n_windows == 3 and out[2].n_windows == 3
+    assert out[1].commonness_e4 == 20000 and out[1].weight_e6 == 500000
+    assert out[2].commonness_e4 == 20000 and out[2].weight_e6 == 500000
+    assert out[3].commonness_e4 == 10000 and out[3].weight_e6 == 1000000
+    assert out[4].n_windows == 0 and out[4].weight_e6 == 1000000
+
+
 def test_dedup_representatives_keep_longest(spark):
     """Representative selection over a hand-built cluster structure: the
     longest text wins, doc_id breaks ties, singletons self-represent."""
@@ -1017,6 +1177,169 @@ def test_dedup_representatives_keep_longest(spark):
         assert out[d].is_rep == (d == 2)
     assert out[7].cluster_id == 7 and out[7].cluster_size == 1
     assert out[7].rep_id == 7 and out[7].is_rep
+
+
+def test_decontam_embedding_matches_numpy_reference(spark):
+    """Literal numpy restatement of the embedding-decontamination gate over
+    the sf0.001 vcorpus: benchmark = planted-near-dup seed vectors, every
+    perturbed +1000000 twin MUST be flagged, and (n_close, max_cosine)
+    match the brute-force answer row for row."""
+    from crawler_spark.plans.analytics_queries import q_decontam_embedding
+
+    raw = spark.read.parquet(f"{SF}/embeddings.parquet").select(
+        "vec_id", "embedding"
+    ).collect()
+    vecs = {r.vec_id: np.asarray(r.embedding, dtype=np.float64) for r in raw}
+    vcorpus = dict(vecs)
+    for vid, v in vecs.items():
+        if vid % 25 == 0:
+            t = v.copy()
+            t[0] += 0.25
+            vcorpus[vid + 1000000] = t
+    bench = {vid: v for vid, v in vcorpus.items() if vid % 25 == 0 and vid < 1000000}
+    want: dict[int, tuple[int, float]] = {}
+    for vid, v in vcorpus.items():
+        if vid in bench:
+            continue
+        close = []
+        for b in bench.values():
+            c = round(float(v @ b) / (np.linalg.norm(v) * np.linalg.norm(b)), 4)
+            if c >= 0.8:
+                close.append(c)
+        if close:
+            want[vid] = (len(close), max(close))
+
+    got = {
+        r.vec_id: (r.n_close, r.max_cosine)
+        for r in q_decontam_embedding(spark, SF).collect()
+    }
+    assert got == want
+    # every planted twin is contaminated by construction
+    planted = {vid for vid in vcorpus if vid >= 1000000}
+    assert planted <= set(got)
+    for vid in planted:
+        assert got[vid][1] > 0.9
+
+
+def test_text_ngram_diversity_matches_python_reference(spark):
+    """Literal Python restatement over the sf0.001 corpus view (with its
+    planted exact copies, which depress diversity): per-source total and
+    distinct 3-gram counts plus the integer-div ratio match exactly."""
+    from collections import defaultdict
+
+    from crawler_spark.plans.analytics_queries import q_text_ngram_diversity
+
+    rows = _corpus(spark).select("source", "text").collect()
+    tot: dict[str, int] = defaultdict(int)
+    dis: dict[str, set] = defaultdict(set)
+    for r in rows:
+        t = [w for w in r.text.strip().lower().split() if w]
+        if len(t) < 3:
+            continue
+        for i in range(len(t) - 2):
+            g = " ".join(t[i : i + 3])
+            tot[r.source] += 1
+            dis[r.source].add(g)
+
+    got = {r.source: r for r in q_text_ngram_diversity(spark, SF).collect()}
+    assert set(got) == set(tot)
+    for s in tot:
+        assert got[s].n_shingles == tot[s], s
+        assert got[s].n_distinct == len(dis[s]), s
+        assert got[s].diversity_e4 == (10000 * len(dis[s])) // tot[s], s
+
+
+def test_url_quality_gate_matches_python_reference(spark):
+    """Literal Python restatement of the RefinedWeb-style URL gate: every
+    synthesized residue class gets the features the plant guarantees —
+    blocklist paths and subdomains reject, deep paths and digit-heavy ids
+    score but survive alone, clean pages keep score 0."""
+    from crawler_spark.plans.analytics_queries import q_url_quality_gate
+
+    docs = _docs(spark).select("doc_id", "source").collect()
+    want = {}
+    for r in docs:
+        m = r.doc_id % 5
+        if m == 0:
+            url = f"http://{r.source}.test/casino/bonus-{r.doc_id}"
+        elif m == 1:
+            url = f"http://xxx.{r.source}.test/p/{r.doc_id}"
+        elif m == 2:
+            url = f"http://{r.source}.test/a/b/c/d/e/f/g/{r.doc_id}"
+        elif m == 3:
+            url = f"http://{r.source}.test/id/{r.doc_id * 1234567}"
+        else:
+            url = f"http://{r.source}.test/p/{r.doc_id}/view"
+        hits = sum(w in url for w in ("casino", "xxx", "webcam"))
+        depth = url.count("/")
+        digits = sum(ch.isdigit() for ch in url)
+        score = hits * 5 + max(depth - 7, 0) + (1 if digits >= 6 else 0)
+        want[r.doc_id] = (url, hits, depth, digits, score, int(score < 5))
+
+    got = {
+        r.doc_id: (
+            r.url, r.blocklist_hits, r.path_depth, r.digit_count, r.score, r.keep
+        )
+        for r in q_url_quality_gate(spark, SF).collect()
+    }
+    assert got == want
+    # class-level guarantees the plant is for
+    for d, (url, hits, _dep, _dig, _sc, keep) in want.items():
+        if d % 5 in (0, 1):
+            assert hits >= 1 and keep == 0, url
+        if d % 5 == 2:
+            assert _dep >= 9 and keep == 1, url
+        if d % 5 == 4:
+            assert _sc == 0 and keep == 1, url
+
+
+def test_winnowing_fingerprint_pairs_matches_python_reference(spark):
+    """Literal restatement of robust-winnowing candidate generation
+    (Schleimer et al. 2003) on hand-built docs: a long shared passage
+    embedded in otherwise-different documents MUST share fingerprints
+    (the w+k-1 guarantee), unrelated docs share none, and the pair counts
+    match a brute-force Python winnow exactly."""
+    from crawler_spark.operators.dedup import winnowing_fingerprint_pairs
+
+    k, w = 4, 4
+    passage = "the quick brown fox jumps over the lazy dog again and again"
+    docs = [
+        (1, f"alpha beta gamma {passage} delta epsilon zeta eta theta"),
+        (2, f"one two three four five {passage} six seven eight nine ten"),
+        (3, "totally unrelated words nothing shared here at all by design"),
+        (4, f"alpha beta gamma {passage} delta epsilon zeta eta theta"),  # copy of 1
+        (5, "shortdoc"),  # < k tokens: no grams
+    ]
+
+    def fingerprints(text: str) -> set[int]:
+        toks = text.strip().lower().split()
+        if len(toks) < k:
+            return set()
+        hs = [
+            int(hashlib.md5(" ".join(toks[i : i + k]).encode()).hexdigest()[:15], 16)
+            for i in range(len(toks) - k + 1)
+        ]
+        return {min(hs[i - w + 1 : i + 1]) for i in range(w - 1, len(hs))}
+
+    fps = {d: fingerprints(t) for d, t in docs}
+    want = {}
+    ids = sorted(fps)
+    for i, a in enumerate(ids):
+        for b in ids[i + 1 :]:
+            n = len(fps[a] & fps[b])
+            if n >= 3:
+                want[(a, b)] = n
+
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    got = {
+        (r.a_id, r.b_id): r.n_shared
+        for r in winnowing_fingerprint_pairs(df, k=k, w=w, min_shared=3).collect()
+    }
+    assert got == want
+    assert (1, 2) in got and (1, 4) in got and (2, 4) in got  # shared passage
+    assert not any(3 in p or 5 in p for p in got)  # unrelated/short never pair
+    # exact copies share their entire fingerprint set
+    assert got[(1, 4)] == len(fps[1])
 
 
 def _minhash_eval_replay(spark, sf: str, num_perm: int, bands: int) -> dict:
@@ -1123,13 +1446,13 @@ def test_minhash_eval_sql_est_e4_integer_exact(spark, num_perm, bands):
     assert got == want
 
 
-@pytest.mark.parametrize("name", ["q_dedup_ngram_jaccard"])
+@pytest.mark.parametrize("name", ["q_tfidf_top_terms", "q_dedup_ngram_jaccard"])
 def test_builder_is_lazy_and_empty_safe(spark, monkeypatch, name):
-    """Building the query starts no Spark job (the per-doc shingle counts
-    it divides by are joined inside the plan, never collected), and an
-    empty documents table yields 0 rows rather than a failed Jaccard
-    ratio.  ``_t`` is stubbed with a pre-read empty frame because a
-    parquet read runs its own schema-inference job."""
+    """Building the query starts no Spark job (its corpus-wide counts are
+    aggregates joined inside the plan, never collected), and an empty
+    documents table yields 0 rows rather than a division by zero.  ``_t``
+    is stubbed with a pre-read empty frame because a parquet read runs its
+    own schema-inference job."""
     from crawler_spark.plans import analytics_queries as AQ
 
     empty = spark.createDataFrame([], _docs(spark).schema)

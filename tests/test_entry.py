@@ -30,3 +30,35 @@ def test_queries_and_oracle_keys_align():
     # rows-only queries (no oracle) must be a deliberate, short list
     rows_only = set(qs) - set(sqls)
     assert rows_only == set(), f"unexpected oracle-less queries: {rows_only}"
+
+
+def test_deferred_queries_stay_out_of_driver_registry():
+    from crawler_spark.plans.analytics_queries import DEFERRED_QUERIES
+
+    assert not set(DEFERRED_QUERIES) & set(E.queries())
+
+
+def _round_history() -> dict[str, dict[int, bool]]:
+    """Round-indexed hash_match history per query: CORRECTNESS_r{i}.json →
+    hist[q][i].  Absent (query, round) pairs mean the query sat outside the
+    driver's checked window that round."""
+    import json
+
+    files = sorted(Path(__file__).resolve().parents[1].glob("CORRECTNESS_r*.json"))
+    hist: dict[str, dict[int, bool]] = {}
+    for i, p in enumerate(files, 1):
+        for q, row in json.loads(p.read_text()).items():
+            hist.setdefault(q, {})[i] = bool(row.get("hash_match"))
+    return hist
+
+
+def test_unproven_queries_inside_window():
+    """Every query that has never been driver-green (including brand-new
+    registrations with no history at all) must sit inside the checked
+    window so it gets a driver row this round."""
+    hist = _round_history()
+    checked = set(list(E.queries())[: E.DRIVER_CHECK_WINDOW])
+    never_green = {q for q, rounds in hist.items() if not any(rounds.values())}
+    never_green |= set(E.queries()) - set(hist)  # brand-new queries
+    missing = never_green - checked
+    assert not missing, f"never-green queries outside the driver window: {missing}"
