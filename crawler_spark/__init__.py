@@ -12,7 +12,7 @@ Layout
 - ``sources/``   synthetic web and the five real judge wire formats
                  (deterministic fetcher universes), warehouse (parquet-dir
                  table layer, Iceberg drop-in), image codecs, file ingest.
-- ``operators/`` frontier scheduling, membership (bloom/cuckoo + anti-join),
+- ``operators/`` frontier scheduling, membership (bloom + anti-join),
                  the Arrow dequeue kernel, fetch, parse, images, politeness,
                  dedup (exact/minhash/simhash/jaccard/cosine), similarity
                  search.

@@ -759,401 +759,3 @@ def embedding_near_pairs(
         )
         .filter(F.col("cosine") >= min_cosine)
     )
-
-
-def _lower_tokens(text_col: str) -> F.Column:
-    """Whitespace tokens of lower(trim(text)) — the shared tokenizer for
-    every token-window operator below (and their DuckDB oracles)."""
-    return F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-
-
-def _gram_hash_sql(n: int, toks: str = "__toks", i: str = "i") -> str:
-    """60-bit md5-prefix hash of the ``n``-gram starting at 1-based token
-    index ``i`` — THE parity-critical gram-hash definition every DuckDB
-    oracle mirrors literally.  Single-sourced: a change to the prefix
-    width or join delimiter lands in every token-window operator at once
-    instead of silently drifting between four inlined copies."""
-    return (
-        f"CAST(conv(substring(md5(array_join("
-        f"slice({toks}, {i}, {n}), ' ')), 1, 15), 16, 10) AS BIGINT)"
-    )
-
-
-def _gram_hashes_expr(n: int, with_pos: bool = False) -> str:
-    """``transform(...)`` producing the array of window hashes over
-    ``__toks`` — plain BIGINTs, or (pos, gram) structs for positional
-    consumers (ExactSubstr removal)."""
-    body = (
-        f"struct(i AS pos, {_gram_hash_sql(n)} AS gram)"
-        if with_pos
-        else _gram_hash_sql(n)
-    )
-    return f"transform(sequence(1, size(__toks) - {n - 1}), i -> {body})"
-
-
-def duplicated_ngram_flags(
-    docs: DataFrame,
-    n: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Exact-substring duplication flags at n-gram granularity (the
-    ExactSubstr criterion of Lee et al. 2022, "Deduplicating Training Data
-    Makes Language Models Better", discretized to token n-grams): a
-    document is flagged when ANY of its n-token windows also appears in
-    another document.
-
-    Shape: windows hash to 60-bit longs map-side (codegen'd md5 over the
-    joined slice), per-doc DISTINCT windows bound the index to unique
-    (doc, gram) pairs, the document-frequency count is one hash aggregate
-    with map-side partials, and only (gram, df) longs flow through the
-    probe join — the inverted-index shape every corpus-scale substring
-    dedup builds.  Suffix-array spans collapse to this at fixed n; full
-    variable-length spans are a merge of adjacent flagged windows.
-
-    Returns one row per input document: (id, n_grams, n_dup_grams,
-    flagged) — n_grams counts the doc's DISTINCT windows; docs shorter
-    than ``n`` tokens have zero windows and are never flagged.
-    """
-    t = docs.select(F.col(id_col), _lower_tokens(text_col).alias("__toks"))
-    # sequence(a, b) steps DOWNWARD when a > b, so short docs must be
-    # filtered out before building the window range, not clamped inside it
-    grams = (
-        t.filter(F.size("__toks") >= n)
-        .select(
-            id_col,
-            F.explode(F.expr(_gram_hashes_expr(n))).alias("gram"),
-        )
-        .distinct()
-    )
-    df_counts = grams.groupBy("gram").agg(F.count("*").alias("__df"))
-    per_doc = (
-        grams.join(df_counts, "gram")
-        .groupBy(id_col)
-        .agg(
-            F.count("*").cast("long").alias("n_grams"),
-            F.sum((F.col("__df") >= 2).cast("long")).cast("long").alias(
-                "n_dup_grams"
-            ),
-        )
-    )
-    return (
-        docs.select(id_col)
-        .join(per_doc, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("n_grams", F.lit(0)).cast("long").alias("n_grams"),
-            F.coalesce("n_dup_grams", F.lit(0)).cast("long").alias(
-                "n_dup_grams"
-            ),
-            (F.coalesce("n_dup_grams", F.lit(0)) > 0).alias("flagged"),
-        )
-    )
-
-
-def duplicated_ngram_removal(
-    docs: DataFrame,
-    n: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Exact-substring REMOVAL at n-gram granularity — the second half of
-    Lee et al. 2022 ExactSubstr (``duplicated_ngram_flags`` only flags):
-    every non-first occurrence of a duplicated n-token window is removed,
-    and the document is rebuilt from the surviving words.  "First" is the
-    corpus-global minimum (doc_id, position) occurrence of the window, so
-    exactly one copy of every duplicated span survives — the original
-    keeps its text, later copies lose it, the Lee et al. contract.
-
-    Shape: positional window hashes are 60-bit longs built map-side
-    (codegen'd md5 over the joined slice); the first-occurrence table is
-    one hash aggregate of (gram → min struct) with map-side combine; the
-    probe join moves only (gram, doc, pos) longs; covered word indexes
-    explode to at most n rows per duplicated window and collapse with a
-    distinct + per-doc collect.  Per-doc rebuild cost is O(words x
-    removed-set lookup) inside one row — bounded by document length, never
-    corpus size.
-
-    Returns one row per input document: (id, n_words, n_removed,
-    text_clean) — text_clean is the lowercased surviving words joined by
-    single spaces (tokenization is lossy by design, as in the flags op).
-    """
-    t = docs.select(F.col(id_col), _lower_tokens(text_col).alias("__toks"))
-    # sequence(a, b) steps DOWNWARD when a > b — filter short docs first
-    pos_grams = (
-        t.filter(F.size("__toks") >= n)
-        .select(
-            id_col,
-            F.explode(F.expr(_gram_hashes_expr(n, with_pos=True))).alias("__s"),
-        )
-        .select(id_col, F.col("__s.pos").alias("pos"), F.col("__s.gram").alias("gram"))
-    )
-    firsts = pos_grams.groupBy("gram").agg(
-        F.min(F.struct(F.col(id_col).alias("d"), F.col("pos").alias("p"))).alias(
-            "__f"
-        )
-    )
-    dup_occurrences = pos_grams.join(firsts, "gram").filter(
-        ~(
-            (F.col(id_col) == F.col("__f.d"))
-            & (F.col("pos") == F.col("__f.p"))
-        )
-    )
-    # collect_set in ONE doc-keyed aggregate: a separate distinct() before
-    # the groupBy would shuffle the exploded (doc, rm_idx) stream twice —
-    # at the op's own 100-TB framing that stream is n× the duplicated
-    # window count, so the redundant exchange would dominate the stage
-    covered = (
-        dup_occurrences.select(
-            id_col,
-            F.explode(F.expr(f"sequence(pos, pos + {n - 1})")).alias("rm_idx"),
-        )
-        .groupBy(id_col)
-        .agg(F.array_sort(F.collect_set("rm_idx")).alias("__rm"))
-    )
-    out = (
-        t.join(covered, id_col, "left")
-        .withColumn(
-            "__rm", F.coalesce("__rm", F.expr("CAST(array() AS ARRAY<INT>)"))
-        )
-        .select(
-            id_col,
-            F.size("__toks").cast("long").alias("n_words"),
-            F.size("__rm").cast("long").alias("n_removed"),
-            F.expr(
-                "array_join(filter(transform(sequence(1, size(__toks)), i -> "
-                "IF(array_contains(__rm, i), NULL, __toks[i - 1])), "
-                "x -> x IS NOT NULL), ' ')"
-            ).alias("text_clean"),
-        )
-    )
-    return out
-
-
-# ---------------------------------------------------------------------------
-# paragraph-level dedup (CCNet)
-# ---------------------------------------------------------------------------
-
-
-def paragraph_dedup(
-    docs: DataFrame,
-    para_words: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """CCNet-style paragraph-level deduplication (Wenzek et al. 2020,
-    "CCNet: Extracting High Quality Monolingual Datasets from Web Crawl
-    Data", §3.1 "Deduplication"): hash every paragraph, keep only the
-    FIRST corpus occurrence of each distinct paragraph, and rebuild each
-    document from its surviving paragraphs.  This is the pass that strips
-    boilerplate (nav bars, cookie banners, footers) repeated across pages
-    — duplicated *spans*, where document-level dedup sees distinct docs.
-
-    Paragraph boundary: fixed ``para_words``-word windows over the
-    whitespace token stream (the corpus is single-line text; on real crawl
-    output the split would be ``\\n`` and the rest of the plan is
-    unchanged).  First occurrence is the lexicographic min of
-    (doc_id, idx) over each paragraph hash — deterministic and
-    engine-independent.
-
-    Shape at 100 TB: paragraphs explode map-side; the first-occurrence
-    pass is ``groupBy(hash).agg(min(struct))`` — map-side combinable, so
-    a boilerplate paragraph repeated billions of times still contributes
-    one row per input partition to the exchange; the join back on the
-    hash is a shuffled hash join whose only skew risk (a hot boilerplate
-    hash) AQE's skew-join splitting handles; reassembly is one
-    ``groupBy(doc_id)``.  Three hash-partitioned shuffles total, no
-    sort-aggregates, URL/text strings cross an exchange only once
-    (the kept-paragraph reassembly).
-
-    Returns one row per input document:
-    (id, n_paras, n_dropped, text_clean) — ``text_clean`` is the
-    surviving paragraphs joined in original order ('' when every
-    paragraph of the doc occurred earlier somewhere else, i.e. the doc
-    is pure boilerplate/copy).
-    """
-    if para_words < 1:
-        raise ValueError(f"para_words must be >= 1, got {para_words}")
-    w = para_words
-    t = docs.select(id_col, F.split(F.col(text_col), r"\s+").alias("__w"))
-    # sequence(a, b) steps DOWNWARD when a > b — guard the empty-array case
-    # before building the window range (split never returns an empty array,
-    # but the guard keeps the plan safe for arbitrary upstream frames)
-    paras = (
-        t.filter(F.size("__w") >= 1)
-        .select(
-            id_col,
-            F.explode(
-                F.expr(
-                    f"transform(sequence(0, CAST(ceil(size(__w) / CAST({w} "
-                    f"AS DOUBLE)) AS INT) - 1), i -> struct(i AS idx, "
-                    f"array_join(slice(__w, i * {w} + 1, {w}), ' ') AS para))"
-                )
-            ).alias("__p"),
-        )
-        .select(
-            id_col,
-            F.col("__p.idx").cast("long").alias("idx"),
-            F.col("__p.para").alias("para"),
-        )
-        .withColumn("h", F.md5("para"))
-    )
-    firsts = paras.groupBy("h").agg(
-        F.min(F.struct(F.col(id_col), F.col("idx"))).alias("__first")
-    )
-    joined = paras.join(firsts, "h").withColumn(
-        "__kept",
-        (F.col(id_col) == F.col(f"__first.{id_col}"))
-        & (F.col("idx") == F.col("__first.idx")),
-    )
-    return joined.groupBy(id_col).agg(
-        F.count("*").cast("long").alias("n_paras"),
-        F.sum((~F.col("__kept")).cast("long")).cast("long").alias("n_dropped"),
-        F.coalesce(
-            F.array_join(
-                F.transform(
-                    F.sort_array(
-                        F.collect_list(
-                            F.when(
-                                F.col("__kept"),
-                                F.struct(F.col("idx"), F.col("para")),
-                            )
-                        )
-                    ),
-                    lambda x: x["para"],
-                ),
-                " ",
-            ),
-            F.lit(""),
-        ).alias("text_clean"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# soft deduplication (commonness reweighting)
-# ---------------------------------------------------------------------------
-
-
-def ngram_commonness_weights(
-    docs: DataFrame,
-    n: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Soft deduplication by n-gram commonness (He et al. 2024, "SoftDedup:
-    an Efficient Data Reweighting Method for Speeding Up Language Model
-    Pre-training"): instead of REMOVING duplicated documents, DOWN-WEIGHT
-    them in the sampling distribution proportionally to how duplicated
-    their content is — removal loses the unique remainder of a
-    partially-duplicated document; reweighting keeps it at reduced mass.
-
-    Commonness of a document = the mean corpus occurrence count of its
-    n-token windows (a doc whose every window appears 3x corpus-wide has
-    commonness 3), carried as the scaled integer
-
-        commonness_e4 = (10^4 * sum_window_counts) div n_windows  (>= 10^4)
-
-    and the sampling weight is its exact integer reciprocal
-
-        weight_e6 = 10^10 div commonness_e4   (== 10^6 / commonness),
-
-    so a never-duplicated document keeps weight 10^6 and an everywhere-
-    duplicated one is attenuated 1/commonness — the paper's reweighting
-    direction with integer-only arithmetic (engine-identical hashes).
-    Documents shorter than ``n`` tokens carry no duplication evidence and
-    keep full weight.
-
-    Shape at 100 TB: positional window hashes are 60-bit longs built
-    map-side; the global occurrence count is ONE hash aggregate with
-    map-side combine (the ExactSubstr inverted-index shape); the join back
-    moves only (gram, count) longs; the per-doc sum is a second narrow
-    aggregate.  No N^2 stage, no windows over the corpus.
-    """
-    t = docs.select(F.col(id_col), _lower_tokens(text_col).alias("__toks"))
-    # sequence(a, b) steps DOWNWARD when a > b — filter short docs first
-    grams = t.filter(F.size("__toks") >= n).select(
-        id_col,
-        F.explode(F.expr(_gram_hashes_expr(n))).alias("gram"),
-    )
-    counts = grams.groupBy("gram").agg(F.count("*").cast("long").alias("__c"))
-    per_doc = (
-        grams.join(counts, "gram")
-        .groupBy(id_col)
-        .agg(
-            F.count("*").cast("long").alias("n_windows"),
-            F.sum("__c").cast("long").alias("__sum_c"),
-        )
-    )
-    return (
-        docs.select(id_col)
-        .join(per_doc, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("n_windows", F.lit(0)).cast("long").alias("n_windows"),
-            F.expr(
-                "CAST(CASE WHEN n_windows IS NULL OR n_windows = 0 THEN 10000 "
-                "ELSE 10000 * __sum_c div n_windows END AS BIGINT)"
-            ).alias("commonness_e4"),
-        )
-        .withColumn(
-            "weight_e6",
-            F.expr("CAST(10000000000 div commonness_e4 AS BIGINT)"),
-        )
-    )
-
-
-def winnowing_fingerprint_pairs(
-    docs: DataFrame,
-    k: int = 4,
-    w: int = 4,
-    max_df: int = 50,
-    min_shared: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Winnowing document fingerprints (Schleimer, Wilkerson, Aiken 2003 —
-    the MOSS algorithm): hash every k-token window, then keep only the
-    MINIMUM hash of each sliding window of ``w`` consecutive gram hashes.
-    The selected values are the document's fingerprint set; the winnowing
-    guarantee is that any shared token run of length >= w + k - 1 puts at
-    least one IDENTICAL fingerprint in both documents, while storing only
-    ~2/(w+1) of the gram hashes — local, position-independent selection,
-    unlike MinHash's global signature.
-
-    Shape at scale: gram hashes are the map-side 60-bit md5-prefix longs
-    of ``duplicated_ngram_flags``; the window minimum is a PARTITIONED
-    window (one shuffle keyed by doc id — never a global sort) over
-    (doc, pos, hash) longs; the fingerprint inverted index joins on 8-byte
-    values with a ``max_df`` hot-list cap (boilerplate fingerprints are
-    dropped exactly like ngram_jaccard_pairs' hot shingles) so no posting
-    list explodes.  Output: candidate pairs (a_id, b_id, n_shared) with
-    n_shared >= ``min_shared`` shared fingerprints.
-    """
-    from pyspark.sql import Window
-
-    t = docs.select(F.col(id_col), _lower_tokens(text_col).alias("__toks"))
-    grams = t.filter(F.size("__toks") >= k).select(
-        id_col,
-        F.posexplode(F.expr(_gram_hashes_expr(k))).alias("pos", "h"),
-    )
-    win = Window.partitionBy(id_col).orderBy("pos")
-    fps = (
-        grams.select(
-            id_col,
-            F.min("h").over(win.rowsBetween(-(w - 1), 0)).alias("fp"),
-            F.row_number().over(win).alias("__rn"),
-        )
-        .filter(F.col("__rn") >= w)  # full windows only
-        .select(id_col, "fp")
-        .distinct()
-    )
-    dfc = fps.groupBy("fp").agg(F.count(F.lit(1)).alias("__df"))
-    idx = fps.join(dfc, "fp").filter(F.col("__df") <= max_df).select(id_col, "fp")
-    a = idx.select(F.col(id_col).alias("a_id"), "fp")
-    b = idx.select(F.col(id_col).alias("b_id"), "fp")
-    return (
-        a.join(b, (a["fp"] == b["fp"]) & (F.col("a_id") < F.col("b_id")))
-        .groupBy("a_id", "b_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
-    )

@@ -9,10 +9,9 @@ membership is:
    partition-local **bloom prefilter** (:class:`NumpyBloom`) whose positives
    are verified exactly there — bloom has no false negatives;
 2. on the DataFrame path, an exact **changed-title join**
-   (:func:`due_or_changed`; :func:`exact_anti_join` is its not-seen half) —
-   exactly the reference's semantics;
-3. in-generation dedupe (``dropDuplicates`` on the canonical hash) — the
-   reference got this from map-key idempotence (tools.go:239,279).
+   (:func:`due_or_changed`; :func:`exact_anti_join` is its not-seen half,
+   which the Arrow dequeue's tests compare against) — exactly the
+   reference's semantics.
 
 Scale notes: the anti-join shuffles both sides on ``url_hash`` — with AQE on,
 skewed buckets split automatically.
@@ -70,19 +69,12 @@ def due_or_changed(
     return joined.withColumn("is_due", is_due).drop("__seen_cmp")
 
 
-def in_generation_dedupe(df: DataFrame, key: str = "url_hash") -> DataFrame:
-    """Within-batch dedupe (map-key idempotence of tools.go:239,279), made
-    explicit. dropDuplicates = partial-agg per partition then shuffle, so
-    duplicates collapse map-side before moving."""
-    return df.dropDuplicates([key])
-
-
 def _num_bits(n: int, fpp: float) -> int:
     return max(64, int(-n * math.log(fpp) / (math.log(2) ** 2)))
 
 
 # ---------------------------------------------------------------------------
-# numpy bloom + cuckoo — partition-local membership inside pandas UDF stages
+# numpy bloom — partition-local membership inside pandas UDF stages
 # (the in-generation / per-bucket path where a DataFrame join is overkill).
 # ---------------------------------------------------------------------------
 
@@ -118,65 +110,3 @@ class NumpyBloom:
             self.bits[pos // 64] >> (pos % 64).astype(np.uint64) & np.uint64(1)
         ).astype(bool)
         return hit.all(axis=0)
-
-
-class NumpyCuckoo:
-    """Cuckoo filter over int64 keys — supports delete, used for the
-    in-generation working set (insert on enqueue, delete on commit).
-
-    Buckets of 4 × 16-bit fingerprints; partial-key cuckoo displacement.
-    """
-
-    SLOTS = 4
-    MAX_KICKS = 500
-
-    def __init__(self, capacity: int):
-        self.nbuckets = 1 << max(4, math.ceil(math.log2(max(capacity, 1) / self.SLOTS + 1)))
-        self.table = np.zeros((self.nbuckets, self.SLOTS), dtype=np.uint16)
-
-    def _fp_and_buckets(self, key: int) -> tuple[int, int, int]:
-        k = key & 0xFFFFFFFFFFFFFFFF
-        h = ((k ^ (k >> 33)) * 0xFF51AFD7ED558CCD) & 0xFFFFFFFFFFFFFFFF
-        fp = (h & 0xFFFF) or 1
-        b1 = (h >> 16) % self.nbuckets
-        b2 = (b1 ^ (fp * 0x5BD1E995)) % self.nbuckets
-        return fp, b1, b2
-
-    def _alt(self, bucket: int, fp: int) -> int:
-        return (bucket ^ (fp * 0x5BD1E995)) % self.nbuckets
-
-    def insert(self, key: int) -> bool:
-        fp, b1, b2 = self._fp_and_buckets(key)
-        for b in (b1, b2):
-            row = self.table[b]
-            empty = np.where(row == 0)[0]
-            if len(empty):
-                row[empty[0]] = fp
-                return True
-        b = b1
-        rng_state = fp
-        for _ in range(self.MAX_KICKS):
-            rng_state = (rng_state * 1103515245 + 12345) & 0x7FFFFFFF
-            slot = rng_state % self.SLOTS
-            fp, self.table[b][slot] = int(self.table[b][slot]), fp
-            b = self._alt(b, fp)
-            row = self.table[b]
-            empty = np.where(row == 0)[0]
-            if len(empty):
-                row[empty[0]] = fp
-                return True
-        return False  # table full
-
-    def contains(self, key: int) -> bool:
-        fp, b1, b2 = self._fp_and_buckets(key)
-        return bool((self.table[b1] == fp).any() or (self.table[b2] == fp).any())
-
-    def delete(self, key: int) -> bool:
-        fp, b1, b2 = self._fp_and_buckets(key)
-        for b in (b1, b2):
-            idx = np.where(self.table[b] == fp)[0]
-            if len(idx):
-                self.table[b][idx[0]] = 0
-                return True
-        return False
-

@@ -6,7 +6,8 @@ ABSENT in the reference (SURVEY C5) but required by the north_rule, so it is
 a first-class stage here:
 
 - robots.txt bodies (fetched like any frontier row) are parsed into
-  (host, robots_disallow[], crawl_delay_ms) — a tiny per-host table;
+  (host, robots_disallow[], crawl_delay_ms) — a tiny per-host table — from
+  the groups naming our product token, else the ``*`` groups;
 - the frontier is filtered with a pure-column allow predicate
   (``F.exists`` over the disallow rules, ``*``/``$`` patterns included —
   no Python);
@@ -19,37 +20,62 @@ from __future__ import annotations
 
 import json
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from crawler_spark.functions.urls import url_target
+
+PRODUCT_TOKEN = "crawler-spark"  # the User-agent name our groups match
 
 
 def parse_robots(robots_results: DataFrame) -> DataFrame:
     """Parse fetched robots.txt bodies → host_state columns.
 
     Input: fetch-stage output rows for the robots URLs (host, status, body).
-    Pure column ops: split lines, filter directives, aggregate per host.
-    A missing/failed robots.txt ⇒ allow-all, no crawl delay (standard
-    robots semantics).
+    Pure column ops: split lines, number the groups, aggregate per host.
+    A group (RFC 9309 §2.2.1) is a run of ``User-agent`` lines and the rule
+    lines after it; only the groups naming :data:`PRODUCT_TOKEN` apply, or
+    the ``*`` groups when none does. A missing/failed robots.txt ⇒
+    allow-all, no crawl delay (standard robots semantics).
     """
     lines = robots_results.select(
         "host",
-        F.explode(
+        F.posexplode(
             F.split(F.coalesce(F.col("body").cast("string"), F.lit("")), "\n")
-        ).alias("line"),
+        ).alias("pos", "line"),
     )
+    # field names are case-insensitive (RFC 9309 §2.2.2)
+    agent = F.lower(F.regexp_extract("line", r"(?i)^\s*user-agent\s*:\s*([a-z_*-]+)", 1))
+    is_rule = F.col("line").rlike(r"(?i)^\s*(allow|disallow|crawl-delay)\s*:")
     parsed = lines.select(
         "host",
-        # field names are case-insensitive (RFC 9309 §2.2.2)
-        F.regexp_extract("line", r"(?i)^disallow:\s*(\S+)", 1).alias("disallow"),
-        F.regexp_extract("line", r"(?i)^crawl-delay:\s*([0-9.]+)", 1).alias("delay_s"),
+        "pos",
+        agent.alias("agent"),
+        F.when(agent != "", "agent").when(is_rule, "rule").alias("kind"),
+        F.regexp_extract("line", r"(?i)^\s*disallow\s*:\s*(\S+)", 1).alias("disallow"),
+        F.regexp_extract("line", r"(?i)^\s*crawl-delay\s*:\s*([0-9.]+)", 1).alias("delay_s"),
     )
-    return parsed.groupBy("host").agg(
-        F.filter(F.collect_list("disallow"), lambda x: x != "").alias("robots_disallow"),
+    # a User-agent line opens a group unless the directive before it is one
+    by_line = Window.partitionBy("host").orderBy("pos")
+    prev_kind = F.last("kind", ignorenulls=True).over(
+        by_line.rowsBetween(Window.unboundedPreceding, -1)
+    )
+    opens = (F.col("kind") == "agent") & (F.coalesce(prev_kind, F.lit("")) != "agent")
+    numbered = parsed.withColumn("group", F.sum(opens.cast("int")).over(by_line))
+
+    def names(token: str, window) -> "F.Column":
+        return F.bool_or(F.col("agent") == token).over(window)
+
+    group, host = Window.partitionBy("host", "group"), Window.partitionBy("host")
+    applies = names(PRODUCT_TOKEN, group) | (
+        names("*", group) & ~names(PRODUCT_TOKEN, host)
+    )
+    rules = F.when(F.col("applies"), F.col("disallow"))
+    delay_s = F.when(F.col("applies") & (F.col("delay_s") != ""), F.col("delay_s"))
+    return numbered.withColumn("applies", applies).groupBy("host").agg(
+        F.filter(F.collect_list(rules), lambda x: x != "").alias("robots_disallow"),
         F.coalesce(
-            (F.max(F.when(F.col("delay_s") != "", F.col("delay_s")).cast("double")) * 1000)
-            .cast("int"),
+            (F.max(delay_s.cast("double")) * 1000).cast("int"),
             F.lit(0),
         ).alias("crawl_delay_ms"),
     )

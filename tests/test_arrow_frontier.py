@@ -53,10 +53,7 @@ def test_dequeue_matches_relational_path(spark):
         canonicalize_stage,
         dequeue_generation,
     )
-    from crawler_spark.operators.membership import (
-        exact_anti_join,
-        in_generation_dedupe,
-    )
+    from crawler_spark.operators.membership import exact_anti_join
 
     urls = _synth_urls(spark, 5000)
     frontier = canonicalize_stage(urls)
@@ -75,7 +72,7 @@ def test_dequeue_matches_relational_path(spark):
     # relational reference: dedupe -> anti-join -> per-host window top-k
     from pyspark.sql import Window
 
-    ded = in_generation_dedupe(frontier, "url_hash")
+    ded = frontier.dropDuplicates(["url_hash"])
     novel = exact_anti_join(ded, seen, "url_hash")
     w = Window.partitionBy("host").orderBy(F.col("url_hash").asc())
     want = (

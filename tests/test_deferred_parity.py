@@ -1,11 +1,9 @@
 """DuckDB parity for every registered query.
 
-Runs each ``queries()`` entry and each ``DEFERRED_QUERIES`` entry (the
-queries kept out of the driver's window, for which this is the only
-check) in Spark and its oracle in DuckDB at sf0.01, and compares row count,
-column names and the order-insensitive value hash of the correctness check
-(via tools/check_oracle.py helpers), so a regression in any query fails
-pytest locally.
+Runs each ``queries()`` entry in Spark and its oracle in DuckDB at sf0.01,
+and compares row count, column names and the order-insensitive value hash
+of the correctness check (via tools/check_oracle.py helpers), so a
+regression in any query fails pytest locally.
 """
 
 from __future__ import annotations
@@ -22,16 +20,8 @@ sys.path.insert(0, str(_REPO / "tools"))
 
 import __spark_entry__ as E  # noqa: E402
 from check_oracle import TABLES, type_guard, value_hash  # noqa: E402
-from crawler_spark.plans.analytics_queries import DEFERRED_QUERIES  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.01"
-
-
-def _registry() -> tuple[dict, dict]:
-    qs, oracles = E.queries(), E.oracle_sql()
-    for name, (fn, sql) in DEFERRED_QUERIES.items():
-        qs[name], oracles[name] = fn, sql
-    return qs, oracles
 
 
 @pytest.fixture(scope="module")
@@ -46,9 +36,9 @@ def duck():
     con.close()
 
 
-@pytest.mark.parametrize("name", list(_registry()[0]))
+@pytest.mark.parametrize("name", list(E.queries()))
 def test_deferred_query_matches_oracle(spark, duck, name):
-    qs, oracles = _registry()
+    qs, oracles = E.queries(), E.oracle_sql()
     assert name in oracles, f"query {name} has no oracle"
     assert not type_guard(duck, {name: oracles[name]})
 

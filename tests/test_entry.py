@@ -32,12 +32,6 @@ def test_queries_and_oracle_keys_align():
     assert rows_only == set(), f"unexpected oracle-less queries: {rows_only}"
 
 
-def test_deferred_queries_stay_out_of_driver_registry():
-    from crawler_spark.plans.analytics_queries import DEFERRED_QUERIES
-
-    assert not set(DEFERRED_QUERIES) & set(E.queries())
-
-
 def _round_history() -> dict[str, dict[int, bool]]:
     """Round-indexed hash_match history per query: CORRECTNESS_r{i}.json →
     hist[q][i].  Absent (query, round) pairs mean the query sat outside the

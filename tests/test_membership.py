@@ -1,16 +1,11 @@
-"""Membership invariants — bloom no-false-negatives, cuckoo delete,
-bloom-prefiltered anti-join equivalence and the due-or-changed predicate
-(SURVEY §5.3)."""
+"""Membership invariants — bloom no-false-negatives, bloom-prefiltered
+anti-join equivalence and the due-or-changed predicate (SURVEY §5.3)."""
 
 from __future__ import annotations
 
 import numpy as np
 
-from crawler_spark.operators.membership import (
-    NumpyBloom,
-    NumpyCuckoo,
-    exact_anti_join,
-)
+from crawler_spark.operators.membership import NumpyBloom, exact_anti_join
 
 
 def test_bloom_no_false_negatives():
@@ -29,21 +24,6 @@ def test_bloom_false_positive_rate_reasonable():
     bloom.add(keys)
     fpr = bloom.might_contain(other).mean()
     assert fpr < 0.05, fpr
-
-
-def test_cuckoo_insert_contains_delete():
-    cf = NumpyCuckoo(capacity=5_000)
-    keys = list(range(1, 3_000, 3))
-    for k in keys:
-        assert cf.insert(k)
-    assert all(cf.contains(k) for k in keys)
-    for k in keys[: len(keys) // 2]:
-        assert cf.delete(k)
-    # deleted keys gone (cuckoo deletes are exact for inserted keys)
-    still = [k for k in keys[: len(keys) // 2] if cf.contains(k)]
-    # fingerprint collisions may leave a few phantom hits, but never many
-    assert len(still) < len(keys) // 20
-    assert all(cf.contains(k) for k in keys[len(keys) // 2 :])
 
 
 def test_bloom_prefiltered_anti_join_equals_exact(spark):

@@ -8,29 +8,43 @@ from crawler_spark.operators.politeness import apply_robots, parse_robots
 
 
 def test_parse_robots(spark):
+    """Only the groups naming us apply, else the ``*`` groups (RFC 9309
+    §2.2.1); a group's header may span several User-agent lines."""
     body = b"User-agent: *\nDisallow: /private\nDisallow: /tmp\nCrawl-delay: 0.35\n"
+    two_groups = b"User-agent: otherbot\nDisallow: /\n\nUser-agent: *\nDisallow: /private\n"
+    named = (
+        b"User-agent: otherbot\nUser-agent: Crawler-Spark\nDisallow: /mine\n"
+        b"Crawl-delay: 2\n\nUser-agent: *\nDisallow: /\nCrawl-delay: 9\n"
+    )
     res = spark.createDataFrame(
-        [("h.test", "ok", body), ("empty.test", "ok", b""), ("fail.test", "error", None)],
+        [("h.test", "ok", body), ("two.test", "ok", two_groups),
+         ("named.test", "ok", named), ("empty.test", "ok", b""),
+         ("fail.test", "error", None)],
         "host string, status string, body binary",
     )
     rows = {r.host: r for r in parse_robots(res).collect()}
     assert sorted(rows["h.test"].robots_disallow) == ["/private", "/tmp"]
     assert rows["h.test"].crawl_delay_ms == 350
+    assert rows["two.test"].robots_disallow == ["/private"]
+    assert rows["two.test"].crawl_delay_ms == 0
+    assert rows["named.test"].robots_disallow == ["/mine"]
+    assert rows["named.test"].crawl_delay_ms == 2000
     assert rows["empty.test"].robots_disallow == [] and rows["empty.test"].crawl_delay_ms == 0
     assert rows["fail.test"].robots_disallow == []
 
 
 def test_parse_robots_field_names_are_case_insensitive(spark):
-    """RFC 9309 §2.2.2: a lowercase or mixed-case field is the same field."""
+    """RFC 9309 §2.2.2: a lowercase or mixed-case field is the same field,
+    and whitespace may surround the field name."""
     body = (
         b"user-agent: *\ndisallow: /a\nDISALLOW: /b\nDisAllow:/c\n"
-        b"crawl-DELAY: 0.5\n"
+        b" Disallow : /d\ncrawl-DELAY: 0.5\n"
     )
     res = spark.createDataFrame(
         [("h.test", "ok", body)], "host string, status string, body binary"
     )
     (row,) = parse_robots(res).collect()
-    assert sorted(row.robots_disallow) == ["/a", "/b", "/c"]
+    assert sorted(row.robots_disallow) == ["/a", "/b", "/c", "/d"]
     assert row.crawl_delay_ms == 500
 
 
